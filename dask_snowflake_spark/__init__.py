@@ -12,6 +12,12 @@ Two layers (SURVEY.md):
    streaming).
 """
 
+from ._zipimport import install_in_worker as _install_zipimport_shim
+
+# first import in a reused Spark Python worker: stop every later task from
+# re-reading unchanged zip archives (see _zipimport)
+_install_zipimport_shim()
+
 from .session import get_session, load_table, register_tables
 from .sources.snowflake import SnowflakeNativeDataSource, read_snowflake, to_snowflake
 

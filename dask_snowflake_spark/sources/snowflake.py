@@ -91,6 +91,7 @@ class SnowflakeNativeDataSource(DataSource):
     def __init__(self, options: dict[str, str]):
         super().__init__(options)
         self._planned: _PlannedRead | None = None
+        self._spark_schema: StructType | None = None
 
     def _plan(self) -> "_PlannedRead":
         if self._planned is None:
@@ -106,13 +107,22 @@ class SnowflakeNativeDataSource(DataSource):
                 partition_size=partition_size,
                 partner=opts.get("partner", DEFAULT_PARTNER),
             )
+            self._spark_schema = self._planned.spark_schema
         return self._planned
 
     def schema(self) -> StructType:
-        return self._plan().spark_schema
+        if self._spark_schema is None:
+            self._plan()
+        return self._spark_schema
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return _SnowflakeNativeReader(self._plan())
+        # Spark's per-task read function closes over this data source as
+        # well as the reader, so the descriptors must leave it here: kept
+        # on the data source, every task would receive every partition's
+        # batches (the duckdb stub embeds payload bytes). Only the schema
+        # stays behind; a second reader() call plans afresh.
+        planned, self._planned = self._plan(), None
+        return _SnowflakeNativeReader(planned)
 
 
 @dataclass
@@ -157,12 +167,16 @@ class _SnowflakeNativeReader(DataSourceReader):
         return [_BatchGroupPartition(batches=g) for g in groups]
 
     def read(self, partition: _BatchGroupPartition) -> Iterator[pa.RecordBatch]:
-        target = self._arrow_schema
-        for descriptor in partition.batches:
-            table = descriptor.to_arrow()
-            if table.schema != target:
-                table = table.cast(target)
-            yield from table.to_batches()
+        return _decode(partition.batches, self._arrow_schema)
+
+
+def _decode(descriptors: list[Any], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Download and decode one partition's batches as the planned schema."""
+    for descriptor in descriptors:
+        table = descriptor.to_arrow()
+        if table.schema != schema:
+            table = table.cast(schema)
+        yield from table.to_batches()
 
 
 def _plan_read(
@@ -275,11 +289,7 @@ def read_snowflake(
     def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             for pid in rb.column(0).to_pylist():
-                for descriptor in groups_bc.value[pid]:
-                    table = descriptor.to_arrow()
-                    if table.schema != arrow_schema:
-                        table = table.cast(arrow_schema)
-                    yield from table.to_batches()
+                yield from _decode(groups_bc.value[pid], arrow_schema)
 
     return apply_cast(seed.mapInArrow(fetch, planned.spark_schema))
 

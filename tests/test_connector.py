@@ -354,6 +354,35 @@ def test_datasource_reader_does_not_pickle_descriptors(spark):
     assert clone._groups is None
 
 
+def test_datasource_does_not_pickle_descriptors_after_reader(warehouse):
+    """Spark's per-task read function closes over the data source too, not
+    just the reader: after reader() the data source must keep only the
+    schema, or every task receives the whole result (44.8 MiB task
+    binaries and a heap OOM at sf0.1 lineitem)."""
+    import json
+    import pickle
+
+    from dask_snowflake_spark.sources.snowflake import SnowflakeNativeDataSource
+
+    def pickled_size(limit: int) -> int:
+        ds = SnowflakeNativeDataSource(
+            {
+                "query": f"SELECT * FROM big WHERE id < {limit}",
+                "backend": "duckdb",
+                "connection_kwargs": json.dumps({"database": warehouse["database"]}),
+                "npartitions": "4",
+            }
+        )
+        schema = ds.schema()
+        reader = ds.reader(schema)
+        assert reader.partitions()[0].batches  # descriptors went to the reader
+        assert ds.schema() == schema
+        return len(pickle.dumps(ds))
+
+    small, large = pickled_size(10_000), pickled_size(99_999)
+    assert abs(large - small) < 64, (small, large)
+
+
 def test_datasource_reader_pickled_copy_partitions_raises(spark):
     """partitions() on a deserialized task-side copy must fail loudly —
     _groups=None means the descriptors were dropped on purpose; treating
