@@ -19,7 +19,7 @@ from ._zipimport import install_in_worker as _install_zipimport_shim
 _install_zipimport_shim()
 
 from .session import get_session, load_table, register_tables
-from .sources.snowflake import SnowflakeNativeDataSource, read_snowflake, to_snowflake
+from .sources.snowflake import read_snowflake, to_snowflake
 
 __all__ = [
     "get_session",
@@ -27,7 +27,6 @@ __all__ = [
     "register_tables",
     "read_snowflake",
     "to_snowflake",
-    "SnowflakeNativeDataSource",
 ]
 
 __version__ = "0.1.0"

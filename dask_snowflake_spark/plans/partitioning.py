@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence
-from typing import TypeVar
 
 _UNITS = {
     "": 1,
@@ -40,8 +39,6 @@ _UNITS = {
 }
 
 DEFAULT_PARTITION_SIZE = "100MiB"
-
-B = TypeVar("B")
 
 
 def parse_bytes(value: str | int | float) -> int:
@@ -94,27 +91,9 @@ def plan_partitions(
         # contract allows for.
         base, rem = divmod(total_rows, npartitions)
         quotas = [base + 1] * rem + [max(1, base)] * (npartitions - rem)
-        groups = []
-        current: list[int] = []
-        current_rows = 0
-        qi = 0
-        for i, rc in enumerate(rowcounts):
-            if rc <= 0:
-                continue
-            quota = quotas[min(qi, len(quotas) - 1)]
-            if current and current_rows + rc > quota:
-                groups.append(current)
-                current, current_rows = [], 0
-                qi += 1
-            current.append(i)
-            current_rows += rc
-        if current:
-            groups.append(current)
-        return groups
     else:
         size = partition_size if partition_size is not None else DEFAULT_PARTITION_SIZE
-        target_bytes = parse_bytes(size)
-        target_rows = max(1, int(target_bytes / max(bytes_per_row, 1e-9)))
+        quotas = [max(1, int(parse_bytes(size) / max(bytes_per_row, 1e-9)))]
 
     groups: list[list[int]] = []
     current: list[int] = []
@@ -122,10 +101,10 @@ def plan_partitions(
     for i, rc in enumerate(rowcounts):
         if rc <= 0:
             continue
-        # close the running group before it would exceed the target,
-        # unless it is empty (a single oversized batch forms its own
-        # group — cannot be split client-side)
-        if current and current_rows + rc > target_rows:
+        # close the running group before it would exceed its quota (the
+        # last quota repeats), unless it is empty: a single oversized
+        # batch forms its own group — it cannot be split client-side
+        if current and current_rows + rc > quotas[min(len(groups), len(quotas) - 1)]:
             groups.append(current)
             current, current_rows = [], 0
         current.append(i)

@@ -82,7 +82,6 @@ def get_session(app_name: str = "dask_snowflake_spark") -> SparkSession:
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _register_data_sources(spark)
     return spark
 
 
@@ -135,16 +134,6 @@ def release_caches() -> None:
             bc.unpersist()
         except Exception:
             pass
-
-
-def _register_data_sources(spark: SparkSession) -> None:
-    """Expose the connector as spark.read.format('snowflake_native')."""
-    try:
-        from .sources.snowflake import SnowflakeNativeDataSource
-
-        spark.dataSource.register(SnowflakeNativeDataSource)
-    except Exception:
-        pass  # older Spark without the Python Data Source API
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

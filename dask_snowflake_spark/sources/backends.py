@@ -140,16 +140,8 @@ class DuckDBBackend:
     # -- write side ---------------------------------------------------------
 
     def _stage_dir(self, database: str, table: str) -> str:
-        if not database or database == ":memory:":
-            # a memory database has no file to stage next to; use the
-            # repo scratch dir (NEVER the cwd — the grading driver runs
-            # from an arbitrary directory)
-            tmp = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "..", ".tmp",
-            )
-            os.makedirs(tmp, exist_ok=True)
-            return os.path.join(os.path.abspath(tmp), f"memory.stage.{table}")
+        # writes need a file database (writes_need_database), so there is
+        # always a file to stage next to
         return f"{database}.stage.{table}"
 
     def write_pandas(self, conn: Any, df: Any, name: str, **kwargs: Any) -> None:
@@ -169,15 +161,16 @@ class DuckDBBackend:
 
     def finalize_write(self, table: str, connection_kwargs: dict[str, Any]) -> None:
         """COPY step: load all staged partition files, then clear the stage."""
-        database = connection_kwargs.get("database") or ":memory:"
-        stage = self._stage_dir(database, table)
+        stage = self._stage_dir(connection_kwargs["database"], table)
         files = sorted(glob.glob(os.path.join(stage, "*.parquet")))
         if not files:
             return
         conn = self.connect(**{**connection_kwargs, "_conn_log": None})
         try:
+            # match staged columns to the table by name, like the real
+            # write_pandas COPY (MATCH_BY_COLUMN_NAME), not by position
             conn.execute(
-                f'INSERT INTO "{table}" SELECT * FROM read_parquet(?)', [files]
+                f'INSERT INTO "{table}" BY NAME SELECT * FROM read_parquet(?)', [files]
             )
         finally:
             conn.close()

@@ -7,14 +7,22 @@ Faithful re-expression of the reference's surface
   return a *lazy*, partitioned DataFrame of the staged Arrow result.
   Planning (execute + batch descriptors + schema-from-first-batch +
   greedy bin-packing) happens once on the driver; executors download and
-  decode only their own batch group — the same deferred-fetch split the
-  reference gets from ``DataSourceReader.partitions()`` vs ``read()``.
+  decode only their own batch group — the reference's deferred-fetch
+  split, here a broadcast of the descriptor groups plus a ``mapInArrow``
+  over one seed row per group.
 - ``to_snowflake`` (core.py:70-124): CREATE TABLE IF NOT EXISTS from the
   DataFrame schema first (sequenced before the fan-out to avoid the
   CREATE race, core.py:110-116), then one warehouse connection per
   partition bulk-loading rows (core.py:20-40). ``compute=False`` returns
   an unexecuted ``LazyWrite`` (parity with the reference's Delayed list,
   core.py:123-124).
+
+Why the driver plans and broadcasts, rather than a Spark Python Data
+Source: planning in the driver process takes ``execute_params`` of any
+Python type (Data Source options are strings, so no ``date`` or
+``Decimal``), and keeps the descriptors out of the JVM (a Data Source
+plans in a JVM-launched Python worker that pickles the whole source back
+to the JVM, and the DuckDB stub's descriptors carry the result bytes).
 
 Semantics kept: exactly-one-of npartitions/partition_size with default
 "100MiB" (core.py:258-260), parameterized queries (core.py:143),
@@ -32,19 +40,16 @@ collect anywhere.
 
 from __future__ import annotations
 
-import json
 import re
-from dataclasses import dataclass
 from typing import Any, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
-from ..plans.partitioning import DEFAULT_PARTITION_SIZE, plan_partitions
+from ..plans.partitioning import plan_partitions
 from .backends import resolve_backend
 
 PARTNER_CONF_KEY = "spark.snowflake.partner"
@@ -69,161 +74,6 @@ def _prepare_connection_kwargs(
     return kwargs
 
 
-@dataclass
-class _BatchGroupPartition(InputPartition):
-    """One read partition = one bin-packed group of batch descriptors."""
-
-    batches: list[Any]
-
-
-class SnowflakeNativeDataSource(DataSource):
-    """``spark.read.format("snowflake_native")`` — options:
-
-    query (str, required), backend ("snowflake" | "duckdb"),
-    connection_kwargs (JSON), execute_params (JSON),
-    partition_size (str|int), npartitions (int), partner (str).
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "snowflake_native"
-
-    def __init__(self, options: dict[str, str]):
-        super().__init__(options)
-        self._planned: _PlannedRead | None = None
-        self._spark_schema: StructType | None = None
-
-    def _plan(self) -> "_PlannedRead":
-        if self._planned is None:
-            opts = self.options
-            npartitions = opts.get("npartitions")
-            partition_size = opts.get("partition_size")
-            self._planned = _plan_read(
-                query=opts["query"],
-                backend_name=opts.get("backend", "snowflake"),
-                connection_kwargs=json.loads(opts.get("connection_kwargs", "{}")),
-                execute_params=json.loads(opts.get("execute_params", "null")),
-                npartitions=int(npartitions) if npartitions is not None else None,
-                partition_size=partition_size,
-                partner=opts.get("partner", DEFAULT_PARTNER),
-            )
-            self._spark_schema = self._planned.spark_schema
-        return self._planned
-
-    def schema(self) -> StructType:
-        if self._spark_schema is None:
-            self._plan()
-        return self._spark_schema
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        # Spark's per-task read function closes over this data source as
-        # well as the reader, so the descriptors must leave it here: kept
-        # on the data source, every task would receive every partition's
-        # batches (the duckdb stub embeds payload bytes). Only the schema
-        # stays behind; a second reader() call plans afresh.
-        planned, self._planned = self._plan(), None
-        return _SnowflakeNativeReader(planned)
-
-
-@dataclass
-class _PlannedRead:
-    spark_schema: StructType
-    arrow_schema: pa.Schema
-    groups: list[list[Any]]  # batch descriptors, bin-packed
-
-
-class _SnowflakeNativeReader(DataSourceReader):
-    def __init__(self, planned: _PlannedRead):
-        self._groups = planned.groups
-        self._arrow_schema = planned.arrow_schema
-
-    def __getstate__(self):
-        # the reader is pickled PER TASK alongside one partition:
-        # shipping the full descriptor list would send every partition's
-        # batches to every task (the duckdb stub embeds payload bytes —
-        # O(result x partitions) transfer). read() needs only the schema;
-        # partitions() runs driver-side on the original object.
-        return {"_arrow_schema": self._arrow_schema}
-
-    def __setstate__(self, state):
-        self._arrow_schema = state["_arrow_schema"]
-        self._groups = None
-
-    def partitions(self) -> list[InputPartition]:
-        groups = self._groups
-        if groups is None:
-            # None means this is a deserialized task-side copy
-            # (__setstate__ drops the descriptors on purpose). If a
-            # future Spark version ever calls partitions() on such a
-            # copy, returning the empty-result partition would silently
-            # read zero rows — fail loudly instead.
-            raise RuntimeError(
-                "partitions() called on a deserialized reader copy; "
-                "batch descriptors exist only on the driver-side original"
-            )
-        if not groups:
-            # empty result: one empty partition, schema preserved
-            return [_BatchGroupPartition(batches=[])]
-        return [_BatchGroupPartition(batches=g) for g in groups]
-
-    def read(self, partition: _BatchGroupPartition) -> Iterator[pa.RecordBatch]:
-        return _decode(partition.batches, self._arrow_schema)
-
-
-def _decode(descriptors: list[Any], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
-    """Download and decode one partition's batches as the planned schema."""
-    for descriptor in descriptors:
-        table = descriptor.to_arrow()
-        if table.schema != schema:
-            table = table.cast(schema)
-        yield from table.to_batches()
-
-
-def _plan_read(
-    *,
-    query: str,
-    backend_name: str,
-    connection_kwargs: dict[str, Any],
-    execute_params: Any,
-    npartitions: int | None,
-    partition_size: str | int | None,
-    partner: str,
-) -> _PlannedRead:
-    """Driver-side planning: one warehouse connection, batch descriptors,
-    schema + per-row-size from the first batch, greedy bin-packing."""
-    if npartitions is not None and partition_size is not None:
-        raise ValueError("Specify either npartitions or partition_size, not both")
-    backend = resolve_backend(backend_name)
-    kwargs = _prepare_connection_kwargs(connection_kwargs, partner)
-    conn = backend.connect(**kwargs)
-    try:
-        arrow_schema, batches = backend.execute_batches(conn, query, execute_params)
-    finally:
-        backend.close(conn)
-
-    if not batches:
-        if arrow_schema is None:
-            arrow_schema = pa.schema([])
-        return _PlannedRead(from_arrow_schema(arrow_schema), arrow_schema, [])
-
-    # meta from the first batch (reference core.py:287-292): schema + a
-    # sampled bytes-per-row estimate for byte-targeted partition sizing
-    sample = batches[0].to_arrow()
-    if arrow_schema is None:
-        arrow_schema = sample.schema
-    bytes_per_row = max(sample.nbytes / max(sample.num_rows, 1), 1.0)
-
-    rowcounts = [b.rowcount for b in batches]
-    index_groups = plan_partitions(
-        rowcounts,
-        bytes_per_row=bytes_per_row,
-        npartitions=npartitions,
-        partition_size=partition_size,
-    )
-    groups = [[batches[i] for i in g] for g in index_groups]
-    return _PlannedRead(from_arrow_schema(arrow_schema), arrow_schema, groups)
-
-
 def read_snowflake(
     query: str,
     *,
@@ -244,21 +94,43 @@ def read_snowflake(
     applied to the result, e.g. ``{"X": "float"}`` to read a DOUBLE
     column as 32-bit float. Unlisted columns keep their inferred types.
     """
+    # checked up front: an empty result never reaches the planner's check
+    if npartitions is not None and partition_size is not None:
+        raise ValueError("Specify either npartitions or partition_size, not both")
     spark = spark or SparkSession.active()
-    from ..session import _ensure_runtime_confs
+    from ..session import _ensure_runtime_confs, track_broadcast
 
     _ensure_runtime_confs(spark)  # executor import of batch descriptors
-    if partition_size is None and npartitions is None:
-        partition_size = DEFAULT_PARTITION_SIZE
-    planned = _plan_read(
-        query=query,
-        backend_name=backend,
-        connection_kwargs=connection_kwargs or {},
-        execute_params=execute_params,
-        npartitions=npartitions,
-        partition_size=partition_size,
-        partner=spark.conf.get(PARTNER_CONF_KEY, DEFAULT_PARTNER),
+
+    # driver-side planning: one warehouse connection, batch descriptors
+    be = resolve_backend(backend)
+    kwargs = _prepare_connection_kwargs(
+        connection_kwargs, spark.conf.get(PARTNER_CONF_KEY, DEFAULT_PARTNER)
     )
+    conn = be.connect(**kwargs)
+    try:
+        arrow_schema, batches = be.execute_batches(conn, query, execute_params)
+    finally:
+        be.close(conn)
+
+    groups: list[list[Any]] = []
+    if batches:
+        # meta from the first batch (reference core.py:287-292): schema +
+        # a sampled bytes-per-row estimate for byte-targeted sizing
+        sample = batches[0].to_arrow()
+        if arrow_schema is None:
+            arrow_schema = sample.schema
+        index_groups = plan_partitions(
+            [b.rowcount for b in batches],
+            bytes_per_row=max(sample.nbytes / max(sample.num_rows, 1), 1.0),
+            npartitions=npartitions,
+            partition_size=partition_size,
+        )
+        groups = [[batches[i] for i in g] for g in index_groups]
+    elif arrow_schema is None:
+        arrow_schema = pa.schema([])
+    spark_schema = from_arrow_schema(arrow_schema)
+
     def apply_cast(df: DataFrame) -> DataFrame:
         if not cast_map:
             return df
@@ -272,26 +144,27 @@ def read_snowflake(
             ]
         )
 
-    if not planned.groups:
-        return apply_cast(spark.createDataFrame([], planned.spark_schema))
+    if not groups:
+        return apply_cast(spark.createDataFrame([], spark_schema))
 
     # Distribute descriptor groups via a broadcast + a partition-index
     # seed DataFrame; executors decode only their own batches and emit
     # Arrow directly (mapInArrow) — no pandas hop, no per-row Python
     # conversion. (Real warehouse descriptors are presigned URLs, so the
     # broadcast is small; the duckdb stub embeds payload bytes.)
-    arrow_schema = planned.arrow_schema
-    from ..session import track_broadcast
+    groups_bc = track_broadcast(spark.sparkContext.broadcast(groups))
+    seed = spark.range(0, len(groups), numPartitions=len(groups))
 
-    groups_bc = track_broadcast(spark.sparkContext.broadcast(planned.groups))
-    seed = spark.range(0, len(planned.groups), numPartitions=len(planned.groups))
-
-    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
+    def fetch(seeds: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in seeds:
             for pid in rb.column(0).to_pylist():
-                yield from _decode(groups_bc.value[pid], arrow_schema)
+                for descriptor in groups_bc.value[pid]:
+                    table = descriptor.to_arrow()
+                    if table.schema != arrow_schema:
+                        table = table.cast(arrow_schema)
+                    yield from table.to_batches()
 
-    return apply_cast(seed.mapInArrow(fetch, planned.spark_schema))
+    return apply_cast(seed.mapInArrow(fetch, spark_schema))
 
 
 # ---------------------------------------------------------------------------
@@ -442,12 +315,8 @@ def to_snowflake(
             be.close(conn)
 
         part_kwargs = {k: v for k, v in wp_kwargs.items() if k != "overwrite"}
-        # duckdb stub stages partition files next to the database (PUT
-        # step). The default must match finalize_write's lookup exactly
-        # — a None here once staged into a literal 'None.stage.T' dir
-        # that finalize (defaulting ':memory:') never read: rows
-        # "written" but silently absent
-        part_kwargs["_database"] = kwargs.get("database") or ":memory:"
+        # duckdb stub stages partition files next to the database (PUT step)
+        part_kwargs["_database"] = kwargs.get("database")
 
         # 2. per-partition bulk load (reference core.py:20-40), Arrow in
         def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -19,6 +19,7 @@ warehouse stub:
 
 from __future__ import annotations
 
+import datetime
 import os
 import uuid
 
@@ -78,6 +79,15 @@ def test_parameterized_query(spark, warehouse):
         backend="duckdb",
     )
     assert [tuple(r) for r in df.collect()] == [(3, 13)]
+    # a date binding: parameters are Python objects, not JSON strings
+    df = read_snowflake(
+        "SELECT * FROM ab WHERE A = ? AND ? = DATE '2024-01-02'",
+        spark=spark,
+        connection_kwargs=warehouse,
+        execute_params=[4, datetime.date(2024, 1, 2)],
+        backend="duckdb",
+    )
+    assert [tuple(r) for r in df.collect()] == [(4, 14)]
 
 
 def test_cast_map_forces_float32(spark, warehouse):
@@ -186,6 +196,18 @@ def test_telemetry_guard(spark, warehouse):
         )
 
 
+def test_read_connection_count(spark, warehouse):
+    """A read makes ONE warehouse connection, at planning, whatever the
+    partition count: the fetch tasks decode descriptors and never connect."""
+    before = len(read_connection_log(warehouse["_conn_log"]))
+    df = read_snowflake(
+        "SELECT * FROM big", spark=spark, connection_kwargs=warehouse, npartitions=4, backend="duckdb"
+    )
+    assert df.rdd.getNumPartitions() > 1
+    assert df.count() == 100000
+    assert len(read_connection_log(warehouse["_conn_log"])) == before + 1
+
+
 def test_write_connection_count(spark, warehouse):
     """Reference contract: write makes npartitions + 1 connections
     (bootstrap + one per partition), test_core.py:162-170."""
@@ -256,24 +278,6 @@ def test_plan_partitions_validation():
     assert plan_partitions([], bytes_per_row=1) == []
 
 
-def test_datasource_format_api(spark, warehouse):
-    """The Python Data Source registration path:
-    spark.read.format('snowflake_native') with JSON-encoded options."""
-    import json
-
-    df = (
-        spark.read.format("snowflake_native")
-        .option("query", "SELECT * FROM big WHERE id < 20000")
-        .option("backend", "duckdb")
-        .option("connection_kwargs", json.dumps({"database": warehouse["database"]}))
-        .option("npartitions", "3")
-        .load()
-    )
-    assert df.count() == 20000
-    assert [f.name for f in df.schema.fields] == ["id", "x", "pad"]
-    assert abs(df.rdd.getNumPartitions() - 3) <= 2
-
-
 def test_read_bad_sql_raises_cleanly(spark, warehouse):
     with pytest.raises(Exception) as ei:
         read_snowflake("SELECT * FROM nonexistent_tbl", spark=spark, connection_kwargs=warehouse, backend="duckdb")
@@ -291,6 +295,12 @@ def test_write_appends_across_calls(spark, warehouse):
     to_snowflake(sdf, "t_app", connection_kwargs=warehouse, backend="duckdb")
     back = read_snowflake('SELECT * FROM "T_APP"', spark=spark, connection_kwargs=warehouse, backend="duckdb")
     assert back.count() == 10  # default mode is append (reference write_pandas semantics)
+    # staged columns match the table by name, like write_pandas' COPY
+    ab = spark.createDataFrame([(1, 10), (2, 11)], "A long, B long")
+    to_snowflake(ab, "t_app2", connection_kwargs=warehouse, backend="duckdb")
+    to_snowflake(ab.select("B", "A"), "t_app2", connection_kwargs=warehouse, backend="duckdb")
+    back = read_snowflake('SELECT A, B FROM "T_APP2"', spark=spark, connection_kwargs=warehouse, backend="duckdb")
+    assert sorted(tuple(r) for r in back.collect()) == [(1, 10), (1, 10), (2, 11), (2, 11)]
 
 
 def test_ddl_rejects_unsafe_identifiers(spark, warehouse):
@@ -329,83 +339,6 @@ def test_schema_to_ddl_rejects_complex_types(spark):
     df = spark.range(1).select(F.array(F.col("id")).alias("ids"))
     with pytest.raises(ValueError, match="cannot map"):
         schema_to_ddl(df.schema)
-
-
-def test_datasource_reader_does_not_pickle_descriptors(spark):
-    """The per-task pickled reader must carry only the schema: shipping
-    the full descriptor list would send every partition's batches to
-    every task (duckdb descriptors embed payload bytes)."""
-    import pickle
-
-    from dask_snowflake_spark.sources.snowflake import (
-        _PlannedRead,
-        _SnowflakeNativeReader,
-    )
-    import pyarrow as pa
-
-    planned = _PlannedRead(
-        spark_schema=None,
-        arrow_schema=pa.schema([("x", pa.int64())]),
-        groups=[[object()]],  # unpicklable on purpose: must not travel
-    )
-    reader = _SnowflakeNativeReader(planned)
-    clone = pickle.loads(pickle.dumps(reader))
-    assert clone._arrow_schema == planned.arrow_schema
-    assert clone._groups is None
-
-
-def test_datasource_does_not_pickle_descriptors_after_reader(warehouse):
-    """Spark's per-task read function closes over the data source too, not
-    just the reader: after reader() the data source must keep only the
-    schema, or every task receives the whole result (44.8 MiB task
-    binaries and a heap OOM at sf0.1 lineitem)."""
-    import json
-    import pickle
-
-    from dask_snowflake_spark.sources.snowflake import SnowflakeNativeDataSource
-
-    def pickled_size(limit: int) -> int:
-        ds = SnowflakeNativeDataSource(
-            {
-                "query": f"SELECT * FROM big WHERE id < {limit}",
-                "backend": "duckdb",
-                "connection_kwargs": json.dumps({"database": warehouse["database"]}),
-                "npartitions": "4",
-            }
-        )
-        schema = ds.schema()
-        reader = ds.reader(schema)
-        assert reader.partitions()[0].batches  # descriptors went to the reader
-        assert ds.schema() == schema
-        return len(pickle.dumps(ds))
-
-    small, large = pickled_size(10_000), pickled_size(99_999)
-    assert abs(large - small) < 64, (small, large)
-
-
-def test_datasource_reader_pickled_copy_partitions_raises(spark):
-    """partitions() on a deserialized task-side copy must fail loudly —
-    _groups=None means the descriptors were dropped on purpose; treating
-    it as 'empty result' would silently read zero rows (ADVICE r8)."""
-    import pickle
-
-    import pyarrow as pa
-
-    from dask_snowflake_spark.sources.snowflake import (
-        _PlannedRead,
-        _SnowflakeNativeReader,
-    )
-
-    planned = _PlannedRead(
-        spark_schema=None,
-        arrow_schema=pa.schema([("x", pa.int64())]),
-        groups=[],
-    )
-    # the driver-side original with truly-empty groups: one empty partition
-    assert len(_SnowflakeNativeReader(planned).partitions()) == 1
-    clone = pickle.loads(pickle.dumps(_SnowflakeNativeReader(planned)))
-    with pytest.raises(RuntimeError, match="deserialized reader copy"):
-        clone.partitions()
 
 
 def test_snowflake_backend_fixed_type_uses_description_scale():
