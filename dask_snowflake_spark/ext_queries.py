@@ -52,10 +52,10 @@ def _scratch_db(prefix: str) -> str:
     GROUP BY text
     ORDER BY keep_id
     """,
-    "exact dedup: hash-groupBy on full text, deterministic min-id representative",
     ("dedup",),
 )
 def xcx_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup: hash-groupBy on full text, deterministic min-id representative."""
     t = _t(spark, sf_dir)
     return (
         t["documents"]
@@ -159,10 +159,11 @@ def _minhash_cand_sql() -> str:
     WHERE round(i.c / (sa.n + sb.n - i.c), 6) >= 0.8
     ORDER BY doc_a, doc_b
     """,
-    "MinHash+LSH near-dup: 3-gram shingles -> 16 md5 minhashes -> 8 bands -> bucket join -> exact-Jaccard verify",
     ("dedup",),
 )
 def xfy_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup: 3-gram shingles -> 16 md5 minhashes -> 8 bands -> bucket join ->
+    exact-Jaccard verify."""
     t = _t(spark, sf_dir)
     return dedup_ops.minhash_near_dup(
         t["documents"], shingle_n=3, num_hashes=16, rows_per_band=2, threshold=0.8
@@ -181,10 +182,10 @@ def xfy_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(i.c / (sa.n + sb.n - i.c), 6) >= 0.8
     ORDER BY doc_a, doc_b
     """,
-    "exact all-pairs n-gram Jaccard near-dup (the baseline MinHash is verified against)",
     ("dedup",),
 )
 def x46_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact all-pairs n-gram Jaccard near-dup (the baseline MinHash is verified against)."""
     t = _t(spark, sf_dir)
     return dedup_ops.ngram_jaccard_pairs(t["documents"], shingle_n=3, threshold=0.8).orderBy(
         "doc_a", "doc_b"
@@ -207,19 +208,12 @@ def x46_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE i.c * 5 >= (sa.n + sb.n - i.c) * 4
     ORDER BY doc_a, doc_b
     """,
-    "EXACT Jaccard similarity join at scale via prefix filtering "
-    "(PPJoin candidate generation): each document exposes only its "
-    "n - ceil(0.8n) + 1 RAREST shingles (global rarest-first order), "
-    "candidates come from an equi-join on those prefixes plus a "
-    "length filter, survivors get an exact intersection-count verify "
-    "with the 0.8 threshold as an integer cross-multiplication. Same "
-    "answer as the quarantined all-pairs baseline (the oracle computes "
-    "it exhaustively) but cost is O(rare-token collisions), never "
-    "O(n^2) — this is the scale-correct path for EXACT near-dup, "
-    "complementing the approximate MinHash+LSH path",
     ("dedup",),
 )
 def jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Jaccard >= 0.8 similarity join by prefix filtering: candidates from each doc's rarest
+    shingles plus a length filter, verified by exact intersection counts with an integer
+    cross-multiplied threshold. Equals the all-pairs answer at O(rare-token collisions) cost."""
     t = _t(spark, sf_dir)
     return dedup_ops.jaccard_prefix_pairs(
         t["documents"], shingle_n=3, threshold=(4, 5)
@@ -247,10 +241,10 @@ def jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS simhash
     FROM votes GROUP BY doc ORDER BY doc_id
     """,
-    "SimHash 60-bit fingerprint per document (majority vote of word-hash bits)",
     ("dedup",),
 )
 def xa6_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash 60-bit fingerprint per document (majority vote of word-hash bits)."""
     t = _t(spark, sf_dir)
     return dedup_ops.simhash(t["documents"], bits=60).orderBy("doc_id")
 
@@ -290,10 +284,11 @@ def _pair_sim_sql(a: str = "a", b: str = "b") -> str:
     SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 10
     ORDER BY query_id, rank
     """,
-    "brute-force cosine top-k ANN baseline: broadcast queries x full corpus scan + window top-k",
     ("similarity",),
 )
 def x47_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k ANN baseline: broadcast queries x full corpus scan + window
+    top-k."""
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
     return sim_ops.topk_bruteforce(emb, emb.filter(F.col("vec_id") < 5), k=10)
@@ -317,10 +312,10 @@ def x47_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 5
     ORDER BY query_id, rank
     """,
-    "IVF-style pruned top-k: candidates restricted to the query's coarse cell (label)",
     ("similarity",),
 )
 def xg1_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style pruned top-k: candidates restricted to the query's coarse cell (label)."""
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
     return sim_ops.ivf_topk(emb, emb.filter(F.col("vec_id") < 20), k=5)
@@ -335,10 +330,11 @@ def xg1_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE {_pair_sim_sql()} >= 0.45
     ORDER BY id_a, id_b
     """,
-    "embedding-cosine near-dup pairs, candidates bucketed by coarse cell (IVF-style) — the join key collapses the cross product",
     ("similarity", "dedup"),
 )
 def x98_ann_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs, candidates bucketed by coarse cell (IVF-style) — the join
+    key collapses the cross product."""
     t = _t(spark, sf_dir)
     return sim_ops.embedding_near_dup_pairs_bucketed(t["embeddings"], threshold=0.45)
 
@@ -423,15 +419,12 @@ def _lang_scores_sql() -> str:
     JOIN lang l ON l.doc_id = t.doc_id
     ORDER BY t.doc_id
     """,
-    "per-document text analysis: token counting (whitespace + BPE-ish "
-    "regex) and character-class stats as pure column expressions; word-"
-    "level stats (quality features + composite score + heuristic "
-    "language ID) via the fused explode + two-aggregation word_profile "
-    "path — codegen'd InSet membership, no interpreted HOF lambdas, "
-    "zero Python anywhere.",
     ("text",),
 )
 def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document text stats: token counts, character classes, word-level quality features,
+    composite score and heuristic language ID, as column expressions plus one fused explode +
+    aggregation. No Python UDFs."""
     t = _t(spark, sf_dir)
     docs = t["documents"]
     text = F.col("text")
@@ -522,10 +515,10 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM norm
     ORDER BY doc_id
     """,
-    "document fingerprinting: normalized content hash + min-hash of character 8-grams",
     ("text",),
 )
 def x97_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document fingerprinting: normalized content hash + min-hash of character 8-grams."""
     t = _t(spark, sf_dir)
     return (
         text_ops.fingerprint(t["documents"])
@@ -556,10 +549,11 @@ def x97_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON c.user_id = p.user_id AND c.ts >= p.ts
     ORDER BY c.event_id
     """,
-    "as-of join: each click annotated with the user's most recent purchase at-or-before it (union-window implementation, one shuffle)",
     ("join", "asof"),
 )
 def xdh_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each click annotated with the user's most recent purchase at-or-before it
+    (union-window implementation, one shuffle)."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -613,12 +607,12 @@ def xdh_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 2, 3
     ORDER BY kind, window_start, event_type
     """,
-    "Structured Streaming tumbling 6h windows AND sliding 12h/6h windows "
-    "(each event lands in 2 overlapping windows) + watermark, both driven "
-    "to completion over the bounded events source and tag-unioned",
     ("streaming",),
 )
 def xf3_flow_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Structured Streaming tumbling 6h windows AND sliding 12h/6h windows (each event lands in 2
+    overlapping windows) + watermark, both driven to completion over the bounded events source and
+    tag-unioned."""
     ev = stream_ops._events_stream(spark, sf_dir)
     tumb_t, slide_t = stream_ops.run_streams_to_tables(
         [
@@ -656,10 +650,11 @@ def xf3_flow_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, sid
     ORDER BY user_id, session_start
     """,
-    "session windows (30-min gap) per user: session_window agg == gaps-and-islands sessionization",
     ("streaming",),
 )
 def xf4_flow_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session windows (30-min gap) per user: session_window agg == gaps-and-islands
+    sessionization."""
     t = _t(spark, sf_dir)
     return (
         t["events"]
@@ -681,10 +676,10 @@ def xf4_flow_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type
     """,
-    "streaming dedup (dropDuplicatesWithinWatermark) — key set matches batch distinct",
     ("streaming", "dedup"),
 )
 def xdu_flow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming dedup (dropDuplicatesWithinWatermark) — key set matches batch distinct."""
     stream = stream_ops.streaming_dedup(stream_ops._events_stream(spark, sf_dir))
     out = stream_ops.run_stream_to_table(
         stream.select("user_id", "event_type"), "stream_dedup_out", output_mode="append"
@@ -709,10 +704,11 @@ def xdu_flow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            'synthetic' AS codec
     FROM b ORDER BY doc_id
     """,
-    "multimodal metadata extraction: binary asset column -> Arrow-batched decode (stub kernel; real Spark plumbing)",
     ("multimodal",),
 )
 def mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal metadata extraction: binary asset column -> Arrow-batched decode (stub kernel;
+    real Spark plumbing)."""
     t = _t(spark, sf_dir)
     assets = mm_ops.attach_binary_assets(t["documents"])
     return mm_ops.decode_metadata(assets).orderBy("doc_id")
@@ -728,10 +724,10 @@ def mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM fr
     ORDER BY doc_id, frame_idx
     """,
-    "video-style frame sampling plumbing: 1->N mapInPandas over binary assets (stub frames)",
     ("multimodal",),
 )
 def xa7_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video-style frame sampling plumbing: 1->N mapInPandas over binary assets (stub frames)."""
     t = _t(spark, sf_dir)
     assets = mm_ops.attach_binary_assets(t["documents"])
     frames = mm_ops.frame_sample(assets, every_n=2)
@@ -750,10 +746,11 @@ def xa7_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT doc_id, lang, source FROM documents WHERE doc_id % 3 = 0 ORDER BY doc_id
     """,
-    "read_snowflake through the duckdb warehouse stub: distributed batch fetch + bin-packed partitions",
     ("connector",),
 )
 def xd4_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """read_snowflake through the duckdb warehouse stub: distributed batch fetch + bin-packed
+    partitions."""
     from .sources.snowflake import read_snowflake
 
     db = _scratch_db("roundtrip")
@@ -786,13 +783,12 @@ def xd4_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY grp
     """,
-    "to_snowflake -> read_snowflake roundtrip through the duckdb warehouse "
-    "stub: DDL bootstrap from df.schema, per-partition bulk write "
-    "(PUT+COPY shape), then distributed read-back — the reference's "
-    "flagship write path (core.py:70-124; test_core.py:54-65)",
     ("connector", "sink"),
 )
 def connector_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """to_snowflake -> read_snowflake roundtrip through the duckdb warehouse stub: DDL bootstrap
+    from df.schema, per-partition bulk write (PUT+COPY shape), then distributed read-back — the
+    reference's flagship write path (core.py:70-124; test_core.py:54-65)."""
     from .sources.snowflake import read_snowflake, to_snowflake
 
     db = _scratch_db("write-roundtrip")
@@ -827,13 +823,12 @@ def connector_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'repartition', 3::BIGINT, (SELECT count(*) FROM documents)
     ORDER BY mode
     """,
-    "explicit repartitioning control (SURVEY §2.B last row; reference "
-    "npartitions kwarg core.py:206-207, test_core.py:128): repartition(3) "
-    "yields exactly 3 partitions, coalesce(2) merges to exactly 2 — "
-    "verified in-result via spark_partition_id()",
     ("repartition",),
 )
 def x93_partition_control(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explicit repartitioning control (SURVEY §2.B last row; reference npartitions kwarg
+    core.py:206-207, test_core.py:128): repartition(3) yields exactly 3 partitions, coalesce(2)
+    merges to exactly 2 — verified in-result via spark_partition_id()."""
     t = _t(spark, sf_dir)
 
     def part_stats(df: DataFrame, mode: str) -> DataFrame:
@@ -865,10 +860,11 @@ def x93_partition_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    "salted two-stage aggregation over a hot-key distribution == plain aggregation (skew never stalls a reducer)",
     ("skew", "aggregation"),
 )
 def xae_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Salted two-stage aggregation over a hot-key distribution == plain aggregation (skew never
+    stalls a reducer)."""
     from .operators.skew import salted_agg
 
     t = _t(spark, sf_dir)
@@ -913,10 +909,11 @@ def xae_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id
     ORDER BY user_id
     """,
-    "applyInPandasWithState custom stateful operator: per-user running counters (integer-cents state, engine-exact); final state == batch aggregation",
     ("streaming", "udf"),
 )
 def xg2_flow_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """applyInPandasWithState custom stateful operator: per-user running counters (integer-cents
+    state, engine-exact); final state == batch aggregation."""
     from pyspark.sql.window import Window as W
 
     from .streaming.stateful import running_user_counters
@@ -949,10 +946,10 @@ def xg2_flow_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts BETWEEN c.ts AND c.ts + INTERVAL 1 HOUR
     ORDER BY click_id, purchase_id
     """,
-    "watermarked stream-stream interval join: purchases within 1h after each click",
     ("streaming", "join"),
 )
 def flow_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked stream-stream interval join: purchases within 1h after each click."""
     ev = stream_ops._events_stream(spark, sf_dir)
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -1007,10 +1004,11 @@ def flow_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang
     ORDER BY lang
     """,
-    "composed training-data prep pipeline: quality filter -> exact dedup (content hash, min-id keeper) -> per-language token budget",
     ("text", "dedup", "pipeline"),
 )
 def xd3_pipeline_text_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed training-data prep pipeline: quality filter -> exact dedup (content hash, min-id
+    keeper) -> per-language token budget."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -1067,12 +1065,11 @@ def xd3_pipeline_text_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, term, tfidf_r, rnk FROM ranked WHERE rnk <= 3
     ORDER BY doc_id, rnk
     """,
-    "sparse TF-IDF (smoothed idf) over whitespace unigrams, top-3 terms "
-    "per document; rank over the 6dp-rounded score so engine float tails "
-    "can't flip ties",
     ("text",),
 )
 def x00_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sparse TF-IDF (smoothed idf) over whitespace unigrams, top-3 terms per document; rank over
+    the 6dp-rounded score so engine float tails can't flip ties."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -1122,13 +1119,12 @@ def x00_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(sa, sb)) <= 3
     ORDER BY doc_a, doc_b
     """,
-    "SimHash near-dup pairs: banded candidate generation (pigeonhole — "
-    "hamming <= 3 pairs must agree exactly on one of 4 fifteen-bit bands, "
-    "so candidates come from an equi-join, never all-pairs) + "
-    "bit_count(xor) verify on candidates only",
     ("dedup",),
 )
 def x18_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs: banded candidate generation (pigeonhole — hamming <= 3 pairs must
+    agree exactly on one of 4 fifteen-bit bands, so candidates come from an equi-join, never
+    all-pairs) + bit_count(xor) verify on candidates only."""
     t = _t(spark, sf_dir)
     return dedup_ops.simhash_near_dup(t["documents"], max_hamming=3).withColumn(
         "hamming", F.col("hamming").cast("int")
@@ -1153,12 +1149,12 @@ def x18_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT split, count(*) AS n, min(doc_id) AS min_doc, max(doc_id) AS max_doc
     FROM assigned GROUP BY split ORDER BY split
     """,
-    "deterministic train/val/test split (80/10/10) by content hash of the "
-    "key — no RNG, reproducible across engines/retries/partitionings, and "
-    "rows never migrate between splits as the corpus grows",
     ("sampling",),
 )
 def x19_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic train/val/test split (80/10/10) by content hash of the key — no RNG,
+    reproducible across engines/retries/partitionings, and rows never migrate between splits as the
+    corpus grows."""
     from .operators.sampling import split_assign
 
     t = _t(spark, sf_dir)
@@ -1204,13 +1200,12 @@ def x19_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM spine s LEFT JOIN actual a ON a.user_id = s.user_id AND a.bucket = s.bucket
     ORDER BY s.user_id, s.bucket
     """,
-    "time-series gap fill: per-user 6h buckets densified over each "
-    "user's own [min, max] range (sequence+explode spine, no global "
-    "driver-side date range), zero-filled counts, forward-filled totals "
-    "via last(ignorenulls) window",
     ("timeseries",),
 )
 def x20_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-series gap fill: per-user 6h buckets densified over each user's own [min, max] range
+    (sequence+explode spine, no global driver-side date range), zero-filled counts, forward-filled
+    totals via last(ignorenulls) window."""
     from .operators.timeseries import gap_fill
 
     t = _t(spark, sf_dir)
@@ -1231,14 +1226,12 @@ def x20_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x21_ivf_trained_recall",
     None,  # iterative k-means training: float means are not bit-portable
-    "trained-IVF ANN: spherical k-means centroids fit on a deterministic "
-    "20% sample (Lloyd's via DataFrame ops, hash-seeded, no RNG), "
-    "scan-speed argmax-cosine cell assignment, in-cell top-10 search, "
-    "recall measured against the brute-force ground truth in-query — "
-    "rows-only check by design (iterative float training)",
     ("similarity",),
 )
 def x21_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trained-IVF ANN: spherical k-means on a hash-chosen 20% sample, argmax-cosine cell
+    assignment, in-cell top-10, recall vs brute force in-query. Rows-only by design (iterative
+    float training)."""
     from .operators.sampling import deterministic_sample
     from .session import track_cache
 
@@ -1328,13 +1321,12 @@ def x21_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     ORDER BY doc_id
     """,
-    "multimodal feature extraction: binary asset -> array<double> "
-    "embedding via an Arrow-batched mapInPandas kernel (stub: normalized "
-    "codepoint histogram, deliberately SQL-replicable so the whole "
-    "Python-UDF path is value-checked); output feeds the ANN operators",
     ("multimodal",),
 )
 def x22_mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal feature extraction: binary asset -> array<double> embedding via an Arrow-batched
+    mapInPandas kernel (stub: normalized codepoint histogram, deliberately SQL-replicable so the
+    whole Python-UDF path is value-checked); output feeds the ANN operators."""
     t = _t(spark, sf_dir)
     assets = mm_ops.attach_binary_assets(t["documents"])
     return mm_ops.extract_features(assets, dim=16).orderBy("doc_id")
@@ -1357,13 +1349,12 @@ def x22_mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON c.user_id = p.user_id AND c.ts <= p.ts
     ORDER BY c.event_id
     """,
-    "forward as-of join with tolerance (full merge_asof surface): each "
-    "click annotated with the user's NEXT purchase, nulled when it is "
-    "more than 1h later — same union-window one-shuffle implementation, "
-    "frame reversed",
     ("join", "asof"),
 )
 def x23_asof_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of join with tolerance (full merge_asof surface): each click annotated with the
+    user's NEXT purchase, nulled when it is more than 1h later — same union-window one-shuffle
+    implementation, frame reversed."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -1404,13 +1395,12 @@ def x23_asof_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    "streaming CDC/ingest shape end-to-end: readStream over events -> "
-    "foreachBatch -> to_snowflake per-micro-batch bulk load into the "
-    "warehouse stub -> read_snowflake back -> aggregate; totals match "
-    "the batch aggregation exactly",
     ("streaming", "connector", "sink"),
 )
 def x24_stream_warehouse_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming CDC/ingest shape end-to-end: readStream over events -> foreachBatch ->
+    to_snowflake per-micro-batch bulk load into the warehouse stub -> read_snowflake back ->
+    aggregate; totals match the batch aggregation exactly."""
     from .sources.snowflake import read_snowflake, to_snowflake
 
     db = _scratch_db("stream-sink")
@@ -1470,13 +1460,12 @@ def x24_stream_warehouse_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang, chunk_id
     ORDER BY lang, chunk_id
     """,
-    "LLM sequence packing (concat-and-chunk): per-language token streams "
-    "chunked into 512-token training sequences via prefix-sum windows "
-    "(docs may straddle chunks); output = per-chunk packing QA stats. "
-    "Shard-partitioned windows — no global ordering at any scale.",
     ("text", "packing"),
 )
 def x25_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM sequence packing (concat-and-chunk): per-language token streams chunked into 512-token
+    training sequences via prefix-sum windows (docs may straddle chunks); output = per-chunk
+    packing QA stats. Shard-partitioned windows — no global ordering at any scale."""
     from .operators.packing import chunk_summary, sequence_pack
 
     t = _t(spark, sf_dir)
@@ -1526,14 +1515,11 @@ def x25_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) u(column_name, metric, value)
     ORDER BY column_name, metric
     """,
-    "dataset profiling QA: per-column n_rows/nonnull/null/distinct/min/"
-    "max/mean in one aggregation job (no per-column jobs like "
-    "df.summary's multi-pass), unpivoted to long form; exact distincts "
-    "cost an Expand (~(N+1)x row replication) — approx_distinct=True is "
-    "the Expand-free bounded-state option at corpus scale",
     ("profile",),
 )
 def x26_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-column n_rows/nonnull/null/distinct/min/max/mean in one aggregation job, unpivoted to
+    long form. Exact distincts cost an Expand; approx_distinct=True is the bounded-state option."""
     from .operators.profile import profile
 
     t = _t(spark, sf_dir)
@@ -1551,12 +1537,12 @@ def x26_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_nationkey, n_name
     ORDER BY n_nationkey
     """,
-    "ORC sink + source roundtrip (the third columnar format after "
-    "parquet and the warehouse): write the supplier-nation join to ORC, "
-    "read back, aggregate — hash-matched against the direct aggregation",
     ("source", "sink"),
 )
 def x27_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORC sink + source roundtrip (the third columnar format after parquet and the warehouse):
+    write the supplier-nation join to ORC, read back, aggregate — hash-matched against the direct
+    aggregation."""
     from .queries import _scratch_dir
 
     t = _t(spark, sf_dir)
@@ -1596,14 +1582,12 @@ def x27_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE coalesce(h.n_overlap, 0) > 0
     ORDER BY doc
     """,
-    "benchmark decontamination: per-training-doc word-4-gram overlap "
-    "against the eval set's distinct shingles (doc_id % 50 = 0 stands in "
-    "for the benchmark) — broadcast semi-join of the corpus shingles "
-    "against the tiny eval n-gram set, the GPT-3/PaLM-style contamination "
-    "detector; only contaminated docs returned",
     ("text", "decontam"),
 )
 def xe9_decontaminate_evals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination: training docs whose word 4-grams overlap the eval set (doc_id %
+    50 = 0) via a broadcast semi-join against the eval n-grams. Only contaminated docs are
+    returned."""
     from .operators.decontam import ngram_overlap
 
     t = _t(spark, sf_dir)
@@ -1647,14 +1631,12 @@ def xe9_decontaminate_evals(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM red
     ORDER BY doc_id
     """,
-    "PII detect + redact: engine-portable regex (RE2-and-Java subset) "
-    "counts and placeholder-replaces emails/phones/IPv4s in one "
-    "codegen'd projection — synthetic PII seeded deterministically from "
-    "doc_id on both sides (corpus text has none); md5 of the redacted "
-    "text value-checks the full replacement",
     ("text", "pii"),
 )
 def x29_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII detect + redact: portable regexes count and replace emails, phones and IPv4s in one
+    projection over synthetic PII seeded from doc_id. The md5 of the redacted text value-checks
+    every replacement."""
     from .operators.pii import redact
 
     t = _t(spark, sf_dir)
@@ -1717,13 +1699,12 @@ def x29_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM stats
     ORDER BY doc
     """,
-    "Gopher-style repetition quality filter: per-doc duplicate-word "
-    "fraction, top-word fraction, mean word length (integer-quantized "
-    "ratios) + low_quality flag — one explode keyed by doc, two "
-    "cascaded map-side-combinable aggregations",
     ("text", "quality"),
 )
 def x30_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition quality filter: per-doc duplicate-word fraction, top-word fraction,
+    mean word length (integer-quantized ratios) + low_quality flag — one explode keyed by doc, two
+    cascaded map-side-combinable aggregations."""
     from .operators.text import repetition_stats
 
     t = _t(spark, sf_dir)
@@ -1772,14 +1753,12 @@ def x30_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY cluster_id
     ORDER BY cluster_id
     """,
-    "near-dup CLUSTERS, not just pairs: MinHash+LSH candidate pairs -> "
-    "hash-min connected components (one equi-join + min-agg per round, "
-    "O(diameter) rounds, lineage checkpoint-truncated) -> one cluster "
-    "row with min-id representative; the oracle replays the clustering "
-    "as a recursive transitive closure",
     ("dedup", "graph"),
 )
 def xd5_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup clusters: MinHash+LSH pairs, then hash-min connected components (one join + min-agg
+    per round), one row per cluster with its min-id representative. The oracle replays the
+    clustering as a recursive transitive closure."""
     from .operators.graph import connected_components
 
     t = _t(spark, sf_dir)
@@ -1821,12 +1800,11 @@ def xd5_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((h1, event_type), (h6, event_type), (d1, event_type))
     ORDER BY resolution, bucket_start, event_type
     """,
-    "hypertable-style multi-resolution rollup: 1h/6h/1d downsampled "
-    "aggregates of the event stream in ONE Expand-based grouping-sets "
-    "pass (no triple scan), tagged by resolution",
     ("timeseries", "aggregation"),
 )
 def x32_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hypertable-style multi-resolution rollup: 1h/6h/1d downsampled aggregates of the event
+    stream in ONE Expand-based grouping-sets pass (no triple scan), tagged by resolution."""
     t = _t(spark, sf_dir)
     b = t["events"].select(
         "event_type",
@@ -1886,13 +1864,12 @@ def x32_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN c ON c.user_id = v.user_id
     LEFT JOIN p ON p.user_id = v.user_id
     """,
-    "ordered conversion funnel over the event stream: first view -> "
-    "first click at-or-after it -> first purchase at-or-after that, "
-    "per-stage user counts + integer-quantized conversion rates; "
-    "stage aggregations shuffle once on user_id each",
     ("events", "analytics"),
 )
 def x33_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered conversion funnel over the event stream: first view -> first click at-or-after it ->
+    first purchase at-or-after that, per-stage user counts + integer-quantized conversion rates;
+    stage aggregations shuffle once on user_id each."""
     t = _t(spark, sf_dir)
     ev = t["events"]
     v = (
@@ -1940,13 +1917,12 @@ def x33_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY corpus_freq DESC, word
     LIMIT 20
     """,
-    "corpus vocabulary head: global top-20 words by corpus frequency "
-    "with document frequency — explode + one combined agg + "
-    "TakeOrderedAndProject top-k (per-partition heap, no full sort), "
-    "deterministic word tie-break",
     ("text", "aggregation"),
 )
 def x34_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus vocabulary head: global top-20 words by corpus frequency with document frequency —
+    explode + one combined agg + TakeOrderedAndProject top-k (per-partition heap, no full sort),
+    deterministic word tie-break."""
     t = _t(spark, sf_dir)
     words = (
         t["documents"]
@@ -1987,13 +1963,12 @@ def x34_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY ts)
     ORDER BY user_id, valid_from
     """,
-    "SCD-2 dimension history build from a CDC-style change stream: "
-    "per-key change rows -> validity intervals via lead() (valid_from, "
-    "valid_to, is_current), deduplicated deterministically at equal "
-    "timestamps; one shuffle keyed by the dimension key",
     ("cdc", "window"),
 )
 def x35_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD-2 dimension history build from a CDC-style change stream: per-key change rows ->
+    validity intervals via lead() (valid_from, valid_to, is_current), deduplicated
+    deterministically at equal timestamps; one shuffle keyed by the dimension key."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -2039,14 +2014,12 @@ def x35_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang
     ORDER BY lang
     """,
-    "deterministic quality-weighted corpus resampling: keep probability "
-    "proportional to a quality score, decided by a content-keyed md5 "
-    "hash instead of RNG — reproducible across engines, retries, and "
-    "partitionings (same determinism contract as the split operator); "
-    "pure projection + one aggregation, zero extra shuffle",
     ("sampling", "quality"),
 )
 def x36_quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-weighted corpus resampling: keep probability proportional to a quality score,
+    decided by a content-keyed md5 instead of an RNG, so the sample is the same on every engine,
+    retry and partitioning."""
     t = _t(spark, sf_dir)
     q = F.least(F.lit(1.0), F.col("n_chars") / 2000.0)
     u = (dedup_ops.portable_hash(F.col("doc_id").cast("string"), 7) % 1000000) / 1e6
@@ -2113,13 +2086,12 @@ def x36_quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE zq_mag > 30000
     ORDER BY user_id, event_id
     """,
-    "streaming-style anomaly detection on the event stream: per-user "
-    "trailing-window mean/stddev (ROWS frame, bounded state) -> z-score "
-    "-> |z| > 3 outlier flag; one shuffle keyed by user, deterministic "
-    "(ts, event_id) ordering",
     ("events", "window", "quality"),
 )
 def x37_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming-style anomaly detection on the event stream: per-user trailing-window mean/stddev
+    (ROWS frame, bounded state) -> z-score -> |z| > 3 outlier flag; one shuffle keyed by user,
+    deterministic (ts, event_id) ordering."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -2210,14 +2182,12 @@ def x37_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM merged
     ORDER BY l_returnflag, l_linestatus
     """,
-    "incremental materialized-aggregate maintenance: a base aggregate "
-    "table merged with a delta batch by COMBINING partial states "
-    "(sums/counts re-summed, avg derived at read) instead of "
-    "recomputing over the full corpus — the foreachBatch/CDC update "
-    "pattern; equals the full recompute exactly",
     ("aggregation", "cdc"),
 )
 def x38_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental aggregate maintenance: a base aggregate merged with a delta batch by combining
+    partial states (sums/counts re-summed, avg derived at read). Equals the full recompute
+    exactly."""
     t = _t(spark, sf_dir)
     li = t["lineitem"]
 
@@ -2276,13 +2246,12 @@ def x38_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY change
     ORDER BY change
     """,
-    "snapshot diff / change-data-feed between two table versions: "
-    "full outer join on the key classifying insert/delete/update/"
-    "unchanged (row-hash comparison) — the table-format CDF pattern "
-    "computed relationally; one shuffle keyed by the table key",
     ("cdc", "join"),
 )
 def x39_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot diff / change-data-feed between two table versions: full outer join on the key
+    classifying insert/delete/update/unchanged (row-hash comparison) — the table-format CDF pattern
+    computed relationally; one shuffle keyed by the table key."""
     t = _t(spark, sf_dir)
     o = t["orders"]
     old = o.filter(F.col("o_orderkey") % 7 != 0).select(
@@ -2333,18 +2302,12 @@ def x39_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.ts + INTERVAL 31 MINUTE <= h.w
     ORDER BY click_id, purchase_id NULLS FIRST
     """,
-    "watermarked stream-stream LEFT OUTER interval join: clicks with no "
-    "purchase within 30min still emit (null right side) once the "
-    "watermark passes — the state-eviction semantics the inner "
-    "flow_stream_join can't show. A bounded source's final watermark "
-    "stops 2h short of max event time, so clicks whose join window has "
-    "not fully expired are withheld by design; both engine and oracle "
-    "restrict to clicks inside the emitted horizon (margin over the "
-    "eviction boundary), making the bounded run equal the batch outer "
-    "join exactly",
     ("streaming", "join"),
 )
 def x40_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked stream-stream left outer interval join: clicks without a purchase within 30 min
+    emit with a null right side. Both sides keep only clicks inside the emitted watermark horizon,
+    so the bounded run equals the batch outer join."""
     # the final watermark of the bounded run, computed batch-side: the
     # stream only emits unmatched clicks whose 30-min join window fully
     # expired before it (1-min margin keeps eviction boundary semantics
@@ -2409,28 +2372,12 @@ def x40_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x41_pq_adc_recall",
     None,  # iterative per-subspace k-means: float means are not bit-portable
-    "product-quantization ANN: per-subspace codebooks trained on a "
-    "deterministic 20% sample (euclidean Lloyd's via DataFrame aggs, "
-    "hash-seeded), corpus encoded to m=4 one-byte codes (16x "
-    "compression of the float corpus), asymmetric-distance shortlist "
-    "via per-query lookup tables (the corpus scan does NO vector math "
-    "— sum of m table lookups per row), exact re-rank of the 10x "
-    "shortlist only (the PQ-prune + re-rank production pattern), "
-    "recall measured against the exact euclidean ground truth "
-    "in-query. NOTE the testdata embeddings are isotropic random unit "
-    "vectors (pairwise d2 = 2.0 +/- 0.25 measured): distance "
-    "concentration bounds ANY quantizer's recall on them, so the "
-    "deliverable here is the mechanism (lookup-only scan, bounded "
-    "codebooks, exact re-rank), not the recall value — rows-only "
-    "check by design (iterative float training). The VALUE-ORACLED "
-    "form of this family is ivfpq_recall_det (r14): deterministic "
-    "integer training hash-matches end-to-end; x41 deliberately keeps "
-    "exercising the float pq_fit/pq_encode/pq_adc_topk primitive "
-    "surface (Lloyd's over DataFrame aggs) that production float "
-    "pipelines use",
     ("similarity",),
 )
 def x41_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN: hash-sampled codebooks, m=4 one-byte codes, lookup-table ADC
+    shortlist, exact re-rank, recall vs exact euclidean ground truth. Rows-only by design (float
+    training); ivfpq_recall_det is the value-oracled form."""
     from pyspark.sql.window import Window as W
 
     from .operators.sampling import deterministic_sample
@@ -2518,13 +2465,12 @@ def x41_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY mask
     ORDER BY mask
     """,
-    "bitmap segmentation: per-user behavior bitmask via bit_or "
-    "aggregation (one bit per event type), then segment distribution "
-    "with bitwise predicates — the roaring-bitmap-style audience "
-    "pattern in two map-side-combinable aggregations",
     ("events", "aggregation", "bitwise"),
 )
 def x42_segment_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bitmap segmentation: per-user behavior bitmask via bit_or aggregation (one bit per event
+    type), then segment distribution with bitwise predicates — the roaring-bitmap-style audience
+    pattern in two map-side-combinable aggregations."""
     t = _t(spark, sf_dir)
     bit = (
         F.when(F.col("event_type") == "click", 1)
@@ -2582,16 +2528,12 @@ def x42_segment_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY k.lang, r.lang_tokens, r.rate
     ORDER BY k.lang
     """,
-    "LLM data mixing: target language proportions (en .4 / zh .2 / "
-    "de .15 / fr .15 / es .1) over a 50% global token budget -> "
-    "per-language sampling rate from the corpus's own token totals -> "
-    "deterministic hash-decided downsampling to the mixture (same "
-    "no-RNG contract as the split/resample operators); the rate table "
-    "is a broadcast-sized aggregate, the keep decision a pure "
-    "projection",
     ("sampling", "text", "pipeline"),
 )
 def xdt_data_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LLM data mixing: per-language sampling rates that hit target language proportions within a
+    50% token budget, applied by hash-decided downsampling. The rate table is a broadcast
+    aggregate; the keep decision is a projection."""
     t = _t(spark, sf_dir)
     toks = t["documents"].select(
         "doc_id",
@@ -2642,16 +2584,12 @@ def xdt_data_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x44_hll_mergeable_sketches",
     None,  # datasketches HLL binary images are engine-specific
-    "mergeable distinct-count sketches — the pre-aggregation pattern "
-    "that makes 100 TB distinct-user rollups incremental: per-(day, "
-    "event_type) HLL sketches (one pass over events), then weekly "
-    "distinct-user estimates by MERGING the daily sketch states "
-    "(hll_union_agg — never re-scanning events), compared in-query "
-    "against the exact weekly distinct and a relative-error bound; "
-    "rows-only by design (sketch binaries are engine-specific)",
     ("aggregation", "sketch", "timeseries"),
 )
 def x44_hll_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable HLL: per-(day, event_type) sketches merged into weekly distinct-user estimates
+    without rescanning events, checked in-query against the exact count and an error bound.
+    Rows-only by design (engine-specific sketch binaries)."""
     t = _t(spark, sf_dir)
     ev = t["events"].select(
         "event_type",
@@ -2700,16 +2638,12 @@ def x44_hll_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x45_heavy_hitters",
     None,  # freqItems candidate sets are sketch-dependent (over-approximate)
-    "distributed heavy hitters over the corpus vocabulary: one-pass "
-    "frequent-items sketch (df.stat.freqItems, Karp/Misra-Gries "
-    "family — per-partition candidate counters, merged map-side, no "
-    "full vocabulary shuffle) at 1% support, verified in-query against "
-    "the exact word frequencies: every TRUE >=1% word must be in the "
-    "candidate set (the algorithm's containment guarantee) — rows-only "
-    "by design (the candidate superset is sketch-dependent)",
     ("text", "sketch", "aggregation"),
 )
 def x45_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heavy hitters at 1% support via df.stat.freqItems (Misra-Gries family), checked in-query:
+    every true >=1% word must be in the candidate set. Rows-only by design (the superset is
+    sketch-dependent)."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -2766,15 +2700,12 @@ def x45_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN labels l ON l.u = d.doc_id
     ORDER BY d.doc_id
     """,
-    "end-to-end dedup APPLICATION over the corpus: MinHash+LSH pairs -> "
-    "connected-component clusters -> keep exactly the min-id "
-    "representative per cluster, emit the keep/drop decision for EVERY "
-    "document (singletons keep themselves via the left join) — the "
-    "materialization a training pipeline actually ships; the oracle "
-    "replays clustering as a recursive transitive closure",
     ("dedup", "graph", "pipeline"),
 )
 def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup application: MinHash+LSH pairs, connected-component clusters, and a keep/drop decision
+    for every document (min-id representative kept, singletons keep themselves). The oracle replays
+    clustering as a recursive transitive closure."""
     from .operators.graph import connected_components
 
     t = _t(spark, sf_dir)
@@ -2839,13 +2770,12 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flags
     ORDER BY doc_id
     """,
-    "Gopher/C4-style rule-based quality filter: per-document pass/fail "
-    "per rule + failed-rule audit trail, every threshold an integer "
-    "cross-multiplication (no float ratio can flip membership on an "
-    "engine rounding ulp); pure codegen projections, scan-speed",
     ("text", "quality", "pipeline"),
 )
 def x50_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher/C4-style rule-based quality filter: per-document pass/fail per rule + failed-rule
+    audit trail, every threshold an integer cross-multiplication (no float ratio can flip
+    membership on an engine rounding ulp); pure codegen projections, scan-speed."""
     t = _t(spark, sf_dir)
     out = text_ops.gopher_rules(t["documents"])
     return out.select(
@@ -2884,15 +2814,12 @@ def x50_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings e LEFT JOIN labels l ON l.u = e.vec_id
     ORDER BY e.vec_id
     """,
-    "semantic dedup APPLICATION (SemDeDup-style): embedding-cosine "
-    "near-dup pairs from cell-bucketed candidates (the cross product "
-    "collapses on the cell key, same plan as x98_ann_embedding_near_dup) -> "
-    "connected-component clusters -> per-vector keep/drop with the "
-    "min-id representative kept; the oracle replays clustering as a "
-    "recursive transitive closure over the same pair SQL",
     ("similarity", "dedup", "graph", "pipeline"),
 )
 def x51_semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic dedup (SemDeDup): cell-bucketed embedding-cosine near-dup pairs, connected
+    components, per-vector keep/drop with the min-id representative kept. The oracle replays
+    clustering as a recursive transitive closure."""
     from .operators.graph import connected_components
 
     t = _t(spark, sf_dir)
@@ -2932,15 +2859,11 @@ def x51_semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY s.sz, s.pr
     ORDER BY p_size
     """,
-    "skyline / Pareto frontier (maximize p_size, minimize "
-    "p_retailprice): dominance collapses to a map-side-combinable "
-    "per-size min + ONE window over the DISTINCT-size table (50 rows, "
-    "never the data) + a broadcast join back for the frontier rows — "
-    "the grid-reduction shape the Spark-SQL skyline literature uses "
-    "for low-dimensional skylines instead of an all-pairs NOT EXISTS",
     ("window", "aggregation", "analytics"),
 )
 def x52_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skyline (max p_size, min p_retailprice) by grid reduction: a per-size min, one window over
+    the distinct-size table and a broadcast join back, instead of an all-pairs NOT EXISTS."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -2997,16 +2920,12 @@ def x52_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     ORDER BY doc_id
     """,
-    "CCNet-style corpus-frequency quality signal: each document scored "
-    "by the mean corpus frequency of its word occurrences (high = "
-    "common-word prose, low = rare-token/garbage text). One map-side-"
-    "combinable vocab aggregation + one word-keyed shuffle join; the "
-    "score is an exact integer-quantized rational so both engines agree "
-    "bit-for-bit. At petabyte scale swap the BIGINT products for "
-    "DECIMAL(38,0) (sum_freq*1e6 approaches int64 range there)",
     ("text", "quality", "pipeline"),
 )
 def x53_corpus_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style quality signal: each document's mean corpus frequency of its words, from one
+    vocab aggregation and one word-keyed join. Exact: the score is an integer-quantized
+    rational."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -3031,6 +2950,8 @@ def x53_corpus_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_words",
+            # sum_freq * 1e6 nears the int64 range at petabyte scale; use DECIMAL(38,0) products
+            # there.
             (F.expr("sum_freq * 1000000 div (n_words * __total)") / 1e6).alias(
                 "mean_corpus_freq"
             ),
@@ -3060,14 +2981,11 @@ def x53_corpus_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM chunks
     ORDER BY doc_id, chunk_idx
     """,
-    "RAG/training-style document chunking: fixed 64-token windows with "
-    "16-token overlap (stride 48), emitted as (doc, chunk_idx, hash) — "
-    "pure map-side explode of per-doc start offsets, zero shuffle "
-    "except the presentation sort; chunk content carried as md5 so the "
-    "output stays narrow",
     ("text", "pipeline"),
 )
 def x54_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed 64-token chunks with 16-token overlap (stride 48) emitted as (doc, chunk_idx, md5) by
+    a map-side explode of start offsets. No shuffle beyond the presentation sort."""
     t = _t(spark, sf_dir)
     C, O, stride = 64, 16, 48
     words = t["documents"].select(
@@ -3110,14 +3028,11 @@ def x54_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY cohort_week, week_offset
     """,
-    "cohort retention over the event stream: first-activity week per "
-    "user -> distinct active weeks -> (cohort, week-offset) user "
-    "counts; two map-side-combinable aggregations + one user-keyed "
-    "join, week arithmetic exact (day diffs between week-truncated "
-    "timestamps are multiples of 7)",
     ("events", "aggregation", "analytics"),
 )
 def x55_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly cohort retention: first-activity week per user, distinct active weeks, (cohort, week
+    offset) user counts. Exact: day diffs between week-truncated timestamps are multiples of 7."""
     t = _t(spark, sf_dir)
     ev = t["events"]
     firsts = ev.groupBy("user_id").agg(
@@ -3159,14 +3074,11 @@ def x55_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.noun, b.noun) <= 2
     ORDER BY 1, 2, 3
     """,
-    "blocked fuzzy matching (entity-resolution shape): block on the "
-    "first name token, edit-distance verify ONLY within blocks of the "
-    "DISTINCT-name table — candidates bounded by block sizes, the "
-    "corpus-sized table is touched once by a map-side-combinable "
-    "distinct agg; levenshtein(<=2) is integer-exact on both engines",
     ("join", "dedup", "text"),
 )
 def x56_fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked fuzzy matching: block on the first name token, then levenshtein <= 2 only within
+    blocks of the distinct-name table. Integer-exact on both engines."""
     t = _t(spark, sf_dir)
     named = t["part"].select(
         "p_partkey",
@@ -3216,15 +3128,11 @@ def x56_fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE i.c * 10 >= sa.n * 9 OR i.c * 10 >= sb.n * 9
     ORDER BY doc_a, doc_b
     """,
-    "shingle CONTAINMENT (asymmetric Jaccard |A∩B|/|A|): detects a "
-    "document near-embedded in another (boilerplate wrapping, quote "
-    "expansion) that symmetric-Jaccard dedup misses when sizes differ; "
-    "candidates from the same LSH bands, intersection counted once per "
-    "pair, >=90%% threshold as an integer cross-multiplication, scores "
-    "integer-quantized — no float in filter or output arithmetic",
     ("dedup", "text"),
 )
 def x57_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shingle containment |A∩B|/|A| >= 90% over LSH-band candidates, catching a document embedded
+    in a larger one. Integer cross-multiplied threshold and integer-quantized scores."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -3286,14 +3194,11 @@ def x57_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE a1.split <> a2.split
     ORDER BY p.doc_a, p.doc_b
     """,
-    "train/test split LEAKAGE detector: near-dup pairs (MinHash+LSH, "
-    "Jaccard >= 0.8) whose endpoints land in DIFFERENT hash-decided "
-    "splits — the eval-contamination QA gate a pipeline runs before "
-    "shipping a split; two broadcast-able joins of the tiny pair set "
-    "against the split assignment",
     ("dedup", "sampling", "pipeline"),
 )
 def x58_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split leakage: near-dup pairs (MinHash+LSH, Jaccard >= 0.8) whose two docs land in different
+    hash-decided splits, via two small joins against the split assignment."""
     from .operators.sampling import split_assign
 
     t = _t(spark, sf_dir)
@@ -3330,15 +3235,12 @@ def x58_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY click_id, purchase_id
     """,
-    "event-sequence pattern with NEGATION (CEP / MATCH_RECOGNIZE "
-    "shape): click followed by a purchase within 1h for the same user "
-    "with NO error event between them — interval join for the positive "
-    "legs, LEFT ANTI range join for the negative leg; both shuffle on "
-    "user_id only, per-user range predicates evaluated within "
-    "co-partitioned rows",
     ("events", "join", "analytics"),
 )
 def x59_event_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event pattern with negation: a click followed by a purchase within 1h for the same user with
+    no error in between. Interval join for the positive legs, left-anti range join for the negative
+    one."""
     t = _t(spark, sf_dir)
     ev = t["events"]
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -3398,16 +3300,12 @@ def x59_event_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
     ORDER BY d.doc_id
     """,
-    "exact duplicated-SPAN detection (substring-level dedup, Lee et al. "
-    "2022): every 8-word window hashed map-side (60-bit longs), a span "
-    "is corpus-duplicated when >= 2 distinct docs contain it; per-doc "
-    "duplicated-span fraction + integer-cross-multiplied flag. Catches "
-    "the copied-paragraph-inside-unique-doc case doc-level MinHash "
-    "misses. One groupBy(span_hash) + one equi-join back — O(tokens), "
-    "never all-pairs",
     ("dedup", "text"),
 )
 def x60_dup_span_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicated-span detection (Lee et al. 2022): 8-word windows hashed map-side; a span is
+    duplicated when >= 2 docs hold it. Per-doc duplicated fraction and an integer cross-multiplied
+    flag, in O(tokens)."""
     t = _t(spark, sf_dir)
     return dedup_ops.dup_span_stats(
         t["documents"], span_words=8, dup_num=3, dup_den=10
@@ -3443,15 +3341,12 @@ def x60_dup_span_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_matches, max(j) AS best_jaccard
     FROM ver GROUP BY doc_a ORDER BY doc_id
     """,
-    "INCREMENTAL dedup (nightly-ingest pattern): a hash-decided 20%% "
-    "'incoming' batch matched against the 80%% existing corpus only — "
-    "incoming band keys equi-join the corpus band index (cost ~ batch x "
-    "collisions, independent of corpus size beyond the probe; corpus "
-    "pairs never re-checked), exact-Jaccard verify on candidates, min "
-    "corpus id as canonical dup target",
     ("dedup", "pipeline"),
 )
 def x61_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental dedup: a hash-chosen 20% incoming batch probes the 80% corpus band index,
+    exact-Jaccard verified, with the min corpus id as the dup target. Corpus pairs are never
+    re-checked."""
     t = _t(spark, sf_dir)
     docs = t["documents"]
     incoming = (
@@ -3475,14 +3370,11 @@ def x61_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, lang, rk FROM ranked WHERE rk <= 20 ORDER BY lang, rk
     """,
-    "EXACT-size stratified sampling: exactly min(n, 20) docs per "
-    "language, chosen by hash-ordered row_number (df.sample/limit are "
-    "irreproducible; this is deterministic across engines/retries/"
-    "partitionings and stable per doc as the corpus grows). One window "
-    "per stratum partition — no global sort",
     ("sampling", "pipeline"),
 )
 def x62_stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-size stratified sample: min(n, 20) docs per language chosen by hash-ordered
+    row_number. Deterministic across engines, retries and partitionings; one window per stratum."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -3535,16 +3427,11 @@ def x62_stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY rk <= 10
     ORDER BY rk
     """,
-    "BM25 relevance search (k1=1.2, b=0.75) for query terms "
-    "{spark, window, join}: tf/df/doclen aggregates + one broadcast "
-    "scalar (n_docs, sum_dl — avgdl derived as a ratio of EXACT integer "
-    "sums, so both engines divide the same integers); per-term scores "
-    "pivoted to fixed columns and added in a FIXED order (float "
-    "addition isn't associative — an agg-order sum would differ by an "
-    "ulp between engines); rank over the 6dp-rounded score, top 10",
     ("text", "search"),
 )
 def x63_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 (k1=1.2, b=0.75) top 10 for three query terms. Exact: avgdl comes from integer sums,
+    per-term scores add in a fixed column order, and ranking uses the 6dp-rounded score."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -3610,14 +3497,11 @@ def x63_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT source, doc_id, n_chars, rk, src_total
     FROM ranked WHERE rk <= 5 ORDER BY source, rk
     """,
-    "per-DOMAIN document cap (anti-over-representation: web corpora cap "
-    "docs per domain before training): keep the top-5 longest docs per "
-    "source with a deterministic doc_id tie-break, carrying the "
-    "domain's pre-cap total for the audit trail; one row_number + one "
-    "count window over the same partition — a single shuffle on source",
     ("sampling", "pipeline"),
 )
 def x64_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-domain cap: the 5 longest docs per source (doc_id tie-break) with the domain's pre-cap
+    total. One row_number and one count window over the same source partition."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -3663,19 +3547,12 @@ def x64_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY shard
     ORDER BY shard
     """,
-    "deterministic training-order SHARDING: every doc hashed to one of "
-    "8 shards, ordered within its shard by a second independent hash — "
-    "the reproducible global-shuffle + shard step an LLM data pipeline "
-    "runs last (RNG shuffles can't be re-derived after a failed run; "
-    "this is a pure function of doc_id). Per-shard audit row carries an "
-    "order checksum (sum of doc_id x position — exact integers, "
-    "order-independent sum, but any reordering changes it), so the "
-    "oracle verifies the ORDER itself, not just membership. One "
-    "shuffle on shard; within-shard row_number streams the sorted "
-    "partition",
     ("sampling", "pipeline"),
 )
 def x65_training_order_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic training-order sharding: 8 hash shards, each ordered by a second hash. The
+    per-shard checksum sum(doc_id * position) lets the oracle verify the order itself, not just
+    membership."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -3729,17 +3606,12 @@ def x65_training_order_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY w.doc_id
     ORDER BY w.doc_id
     """,
-    "unigram log-prob quality score (the cheap 'perplexity filter' "
-    "proxy of CCNet/Gopher pipelines, no LM needed): corpus unigram "
-    "distribution -> per-word negative log-prob quantized to integer "
-    "micro-nats ONCE at the vocab level -> per-doc mean NLL as exact "
-    "integer sums (float summation order can't flip anything) -> "
-    "flagged when mean NLL > 5 nats via integer cross-multiplication. "
-    "Vocab is bounded, broadcast into the word stream; everything else "
-    "is map-side + one groupBy(doc)",
     ("text", "pipeline"),
 )
 def x66_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram log-prob quality score: per-word NLL quantized to integer micro-nats once per vocab
+    entry, per-doc mean as exact integer sums, flagged when mean NLL > 5 nats by integer
+    cross-multiplication."""
     t = _t(spark, sf_dir)
     words = t["documents"].select(
         "doc_id", F.explode(F.split("text", r"\s+")).alias("word")
@@ -3793,17 +3665,12 @@ def x66_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dev d JOIN mad a USING (user_id)
     GROUP BY d.user_id ORDER BY d.user_id
     """,
-    "robust (MAD-based) outlier detection per user: median and median "
-    "absolute deviation via the SAME bounded-state two-pass exact "
-    "quantile operator q11 uses (never an O(group) agg buffer), outlier "
-    "= deviation > 3.5 sigma-equivalents (3.5 x 1.4826 = 5.1891). "
-    "Unlike the x37 trailing z-score, MAD doesn't let one spike inflate "
-    "its own threshold. Quantiles are 4dp-quantized AT THE STAGE SEAM "
-    "(before the deviation pass), so all downstream arithmetic is "
-    "identical doubles on both engines — no ulp-dependent membership",
     ("events", "analytics", "quality"),
 )
 def x67_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user MAD outliers: median and MAD from the bounded-state exact quantile operator;
+    outlier when |x - median| > 5.1891 * MAD (3.5 sigma). Quantiles are 4dp-rounded at the stage
+    seam, so later arithmetic is identical on both engines."""
     from .operators.quantiles import exact_group_quantiles
     from .session import track_cache
 
@@ -3877,17 +3744,12 @@ def x67_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms
     ORDER BY bin
     """,
-    "data DRIFT detection via Population Stability Index: purchase-value "
-    "histograms (20 fixed-width bins, dense bin spine so empty bins "
-    "still contribute) for days 1-15 vs 16-31, Laplace-smoothed "
-    "proportions as exact integer rationals, per-bin PSI term "
-    "(p-q)ln(p/q) integer-quantized at 1e-9 BEFORE the cross-bin sum "
-    "(float summation order can't flip the total); the rollout QA gate "
-    "that catches a feature distribution shifting between dataset "
-    "versions. Two map-side-combinable aggs + a 20-row spine join",
     ("events", "quality", "analytics"),
 )
 def x68_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Population Stability Index of purchase values, days 1-15 vs 16-31, over 20 fixed bins with a
+    dense spine. Smoothed proportions are integer rationals and each bin's term is quantized at
+    1e-9 before the sum."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -3991,16 +3853,12 @@ def _pagerank_iter_sql(iters: int) -> str:
     QUALIFY rk <= 20
     ORDER BY rk
     """,
-    "graph centrality over the near-dup graph: INTEGER-arithmetic "
-    "PageRank (all state in integer mass units, every op integer "
-    "mul/div/add — float PageRank can't be value-checked because "
-    "incoming-contribution sums depend on aggregation order) ranks the "
-    "HUB documents of boilerplate neighborhoods; 5 rounds, each one "
-    "edge-join + map-side-combinable sum, checkpoint-truncated lineage; "
-    "oracle replays the unrolled rounds as chained CTEs",
     ("dedup", "graph", "analytics"),
 )
 def xfo_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer-arithmetic PageRank over the near-dup graph: 5 rounds of edge join + sum, all state
+    in integer mass units so the result does not depend on aggregation order. The oracle unrolls
+    the rounds as CTEs."""
     from pyspark.sql.window import Window as W
 
     from .operators.graph import pagerank_integer
@@ -4049,16 +3907,11 @@ def xfo_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS global_cc
     FROM s, tri
     """,
-    "triangle census of the near-dup graph (degree-ordered orientation, "
-    "the O(m^1.5) compact-forward algorithm: orient each edge toward "
-    "its higher-degree endpoint so wedge enumeration is bounded by "
-    "sqrt(m) out-degrees, close wedges with one semi-join) — node/edge/"
-    "wedge/triangle counts and the integer-quantized global clustering "
-    "coefficient; triangles measure how clique-like duplicate clusters "
-    "are, complementing PageRank hubs (x69) and CC clusters",
     ("dedup", "graph", "analytics"),
 )
 def x94_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Triangle census of the near-dup graph by degree-ordered orientation (compact-forward): node,
+    edge, wedge and triangle counts and an integer-quantized global clustering coefficient."""
     from .operators.graph import triangle_stats
 
     t = _t(spark, sf_dir)
@@ -4095,16 +3948,12 @@ def x94_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND (m.valid_to IS NULL OR c.ts < m.valid_to)
     ORDER BY click_id
     """,
-    "point-in-time (AS OF) dimension join: facts joined to the SCD-2 "
-    "validity interval in force at their event time (the x35 history "
-    "build consumed downstream — how a warehouse resolves 'what was "
-    "the dimension value WHEN this happened'). Equi-join on the "
-    "dimension key with the interval predicate evaluated inside the "
-    "co-partitioned rows: each fact matches exactly one interval, no "
-    "row multiplication",
     ("cdc", "join", "events"),
 )
 def x70_pit_dimension_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time join: each fact joined to the SCD-2 interval valid at its event time, an
+    equi-join on the key with the interval predicate inside co-partitioned rows. Each fact matches
+    exactly one interval."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -4157,16 +4006,12 @@ def x70_pit_dimension_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.lang
     ORDER BY d.lang
     """,
-    "percentile-threshold quality gate: drop each language's shortest "
-    "10%% of documents — the threshold comes from the bounded-state "
-    "exact-quantile operator (per-language p10), 4dp-quantized at the "
-    "stage seam, broadcast back into the corpus scan; integer counts "
-    "vs a quantized threshold, so membership is engine-exact. The "
-    "per-stratum relative cut a fixed global length filter can't "
-    "express",
     ("text", "quality", "pipeline"),
 )
 def x71_percentile_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drop each language's shortest 10% of docs: per-language p10 from the bounded-state exact
+    quantile operator, 4dp-rounded at the stage seam and broadcast into the scan, so membership is
+    engine-exact."""
     from .operators.quantiles import exact_group_quantiles
 
     t = _t(spark, sf_dir)
@@ -4214,15 +4059,11 @@ def x71_percentile_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(new_users) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_users
     FROM daily ORDER BY day
     """,
-    "growth accounting: daily active users split into new (first-seen "
-    "that day) vs returning, plus cumulative acquired users — the "
-    "product-analytics daily rollup. Two user-keyed aggs + one join; "
-    "the cumulative window runs over one row PER DAY (bounded by the "
-    "calendar, not the corpus), so the unpartitioned frame is safe at "
-    "any scale",
     ("events", "analytics"),
 )
 def x72_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily active users split into new vs returning, plus cumulative acquired users. Two
+    user-keyed aggregations, one join, and a running sum over one row per day."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -4245,6 +4086,8 @@ def x72_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         "new_users",
         (F.col("dau") - F.col("new_users")).alias("returning_users"),
         F.sum("new_users")
+        # Unpartitioned window, safe at any scale: it runs over one row per day (bounded by the
+        # calendar, not the corpus).
         .over(W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow))
         .alias("cum_users"),
     ).orderBy("day")
@@ -4289,16 +4132,12 @@ def x72_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
            z_mag_q > 1960000 AS significant
     FROM zq
     """,
-    "A/B experiment readout: hash-decided arm assignment (deterministic "
-    "— the same user always lands in the same arm), per-arm conversion "
-    "counts as exact integers, two-sample pooled-proportion z-statistic "
-    "computed from those integers (identical doubles on both engines — "
-    "sqrt is IEEE-exact), quantized at 1e-6, significance as an INTEGER "
-    "compare against 1.96e6. One user-keyed agg + one 4-counter "
-    "combine; scan-speed at any corpus size",
     ("events", "analytics", "sampling"),
 )
 def x73_ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A/B readout: hash-decided arms, exact per-arm conversion counts, pooled two-proportion z
+    from those integers quantized at 1e-6, and significance as an integer compare against
+    1.96e6."""
     t = _t(spark, sf_dir)
     arm = F.when(
         F.pmod(dedup_ops.portable_hash(F.col("user_id"), F.lit("ab")), F.lit(2)) == 0, "A"
@@ -4389,18 +4228,12 @@ def x73_ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(sa, sb)) <= 3
     ORDER BY doc_a, doc_b
     """,
-    "multimodal asset near-dup via PERCEPTUAL hash: 60-bit aHash per "
-    "binary asset computed in the Arrow-batched mapInPandas kernel "
-    "(evenly-strided sample bytes, integer-cross-multiplied mean "
-    "threshold — a real deployment hashes the decoded luma plane with "
-    "identical packing), then the SAME banded-hamming equi-join as the "
-    "SimHash text path (pigeonhole: hamming<=3 agrees on one of 4 "
-    "15-bit bands). The oracle replays the kernel in SQL over the "
-    "synthetic ASCII payloads (byte == codepoint), so the whole "
-    "Python-kernel path is value-checked",
     ("multimodal", "dedup"),
 )
 def x74_mm_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal near-dup by perceptual hash: a 60-bit aHash per asset in an Arrow-batched
+    mapInPandas kernel, then the banded-hamming equi-join of the SimHash path. The oracle replays
+    the kernel in SQL."""
     t = _t(spark, sf_dir)
     assets = mm_ops.attach_binary_assets(t["documents"].filter(F.length("text") > 0))
     return (
@@ -4425,21 +4258,12 @@ def x74_mm_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(u) AS BIGINT) AS sum_ids
     FROM tree GROUP BY depth ORDER BY depth
     """,
-    "Recursive hierarchy traversal (org chart / BOM expansion — the "
-    "WITH RECURSIVE shape): a synthetic binary hierarchy over the "
-    "event users (parent = id div 2) walked root-down by "
-    "graph.tree_descend — a BOUNDED checkpointed-frontier loop whose "
-    "round count is the closed-form depth bound floor(log2(max_id)) "
-    "(a halving parent key), zero convergence probes; per-depth "
-    "rollup with an id checksum. Oracle = the equivalent WITH "
-    "RECURSIVE in DuckDB. Spark 4's own recursive CTE computes the "
-    "identical result but its UnionLoop re-plans every level (66 jobs "
-    "/ 4.1 s at sf0.1 vs 31 / 2.6 s for this loop, measured "
-    "interleaved r9) — the engine surface stays pinned by "
-    "test_graph.py::test_spark_recursive_cte_matches_tree_descend",
     ("sql", "graph"),
 )
 def x75_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursive hierarchy walk (parent = id div 2) by graph.tree_descend, a checkpointed frontier
+    loop bounded by floor(log2(max_id)), with a per-depth rollup and id checksum. The oracle is the
+    equivalent WITH RECURSIVE."""
     import math
 
     from .operators.graph import tree_descend
@@ -4507,16 +4331,11 @@ def _morton_sql(u: str, d: str, shift_op: bool) -> str:
     GROUP BY morton // 64
     ORDER BY bucket
     """,
-    "Z-ORDER (Morton-code) layout clustering: interleave the bits of "
-    "(user_id, day) so sorting by one integer key co-locates rows that "
-    "are close in BOTH dimensions — the data-layout trick behind "
-    "multi-dimensional file pruning (Delta/Iceberg OPTIMIZE ZORDER): a "
-    "scan filtered on either dimension touches few Morton buckets. "
-    "Pure integer bit arithmetic (engine-exact); the per-bucket min/max "
-    "spans ARE the file-skipping statistics a writer would persist",
     ("layout", "events"),
 )
 def x76_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order (Morton) clustering: interleave the bits of (user_id, day) into one sort key and
+    report per-bucket min/max spans, the file-skipping statistics. Pure integer bit arithmetic."""
     t = _t(spark, sf_dir)
     pts = t["events"].select(
         F.col("user_id").bitwiseAND(F.lit(65535)).alias("u"),
@@ -4559,15 +4378,12 @@ def x76_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT channel, count(*) AS n_conversions, round(sum(value), 2) AS revenue
     FROM attributed GROUP BY channel ORDER BY channel
     """,
-    "LAST-TOUCH marketing attribution: each purchase credited to the "
-    "user's most recent click/view within a 24h lookback (unattributed "
-    "-> 'direct'), rolled up to channel conversions + revenue. The "
-    "as-of union-window operator does the heavy lifting — one shuffle "
-    "on user_id, no correlated per-row probing (the oracle's LIMIT-1 "
-    "subquery is the semantics statement, not the plan)",
     ("events", "analytics", "asof"),
 )
 def x77_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-touch attribution: each purchase credited to the user's latest click/view within 24h
+    ('direct' if none), rolled up per channel, via the as-of union-window operator (one shuffle on
+    user_id)."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -4627,16 +4443,12 @@ def x77_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY rk <= 10
     ORDER BY lang, rk
     """,
-    "WEIGHTED sampling without replacement (Efraimidis-Spirakis A-ES): "
-    "per-item key ln(u)/w with u hash-decided (not RNG — the sample is "
-    "reproducible across engines/retries and stable per item), top-10 "
-    "per language by key = a w-weighted uniform draw without "
-    "replacement; the reservoir-sampling primitive behind quality-"
-    "weighted corpus subsetting. Key quantized at 1e-9 from identical "
-    "integer inputs; one window per stratum",
     ("sampling", "pipeline"),
 )
 def x78_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted sampling without replacement (Efraimidis-Spirakis): key ln(u)/w with u
+    hash-decided, top 10 per language by key. Keys are quantized at 1e-9 from identical integer
+    inputs."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -4673,16 +4485,11 @@ def x78_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.event_type = 'purchase'
     GROUP BY c.c_mktsegment ORDER BY segment
     """,
-    "STREAM-STATIC enrichment join (the third streaming join shape "
-    "after stream-stream inner and left-outer): the purchase stream "
-    "joined against the static customer dimension — broadcast per "
-    "micro-batch, NO join state kept (only the aggregation holds "
-    "state), which is why stream-static is the preferred enrichment "
-    "pattern at scale — then a complete-mode segment rollup; the batch "
-    "oracle is the time-complete result",
     ("streaming", "join"),
 )
 def x79_flow_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static enrichment: the purchase stream joined to the static customer dimension per
+    micro-batch (no join state), then a complete-mode segment rollup equal to the batch result."""
     from .session import load_table
 
     ev = stream_ops._events_stream(spark, sf_dir)
@@ -4737,17 +4544,12 @@ def x79_flow_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY rk <= 15
     ORDER BY rk
     """,
-    "word CO-OCCURRENCE statistics (pointwise mutual information) over "
-    "the corpus head: document-level incidence restricted to the top-20 "
-    "vocabulary (broadcast — caps the within-doc pair explosion at "
-    "C(20,2) per doc regardless of corpus size), doc-frequency and "
-    "co-occurrence counts as exact integers, PMI = ln(N*c_ab/(c_a*c_b)) "
-    "quantized at 1e-6 from identical integer ratios; top-15 "
-    "associations. The collocation/topic-signal pass of a corpus "
-    "analysis pipeline",
     ("text", "analytics"),
 )
 def x80_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Word co-occurrence PMI over the top-20 vocabulary (broadcast, capping pairs per doc at
+    C(20,2)): exact doc and pair counts, PMI quantized at 1e-6 from identical integer ratios, top
+    15 pairs."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -4816,15 +4618,11 @@ def x80_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(quantile_cont(sec, 0.90), 4) AS p90_sec
     FROM lat GROUP BY cohort ORDER BY cohort
     """,
-    "conversion LATENCY distribution: click -> next purchase gap in "
-    "seconds per user cohort, p50/p90 via the bounded-state exact "
-    "quantile operator (third consumer after q11/x67) — the ops metric "
-    "a funnel count can't express. The next-purchase lookup is the "
-    "as-of union-window shape (one shuffle on user_id), not a "
-    "correlated probe; quantiles 4dp-seam-rounded",
     ("events", "analytics", "quality"),
 )
 def x81_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Click-to-next-purchase latency p50/p90 per cohort: as-of union-window lookup (one shuffle on
+    user_id) and the bounded-state exact quantile operator, 4dp-rounded at the stage seam."""
     from .operators.quantiles import exact_group_quantiles
 
     t = _t(spark, sf_dir)
@@ -4899,15 +4697,12 @@ def x81_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(n_events) AS BIGINT) AS longest_session
     FROM per_session
     """,
-    "session BOUNCE rate: gaps-and-islands sessionization (30-min "
-    "inactivity boundary, deterministic event_id tie-break) -> "
-    "single-event-session fraction as an integer-quantized ratio — the "
-    "engagement metric on top of the same sessionization xf4_flow_sessions "
-    "verifies against streaming session_window; two windows + one agg, "
-    "all partitioned by user",
     ("events", "analytics"),
 )
 def x82_session_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session bounce rate: gaps-and-islands sessionization (30-min gap, event_id tie-break), then
+    the single-event-session fraction as an integer-quantized ratio. All windows partitioned by
+    user."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -4962,14 +4757,11 @@ def x82_session_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = s.s_nationkey))
     ORDER BY check_name
     """,
-    "referential-integrity AUDIT across the star schema: orphan counts "
-    "for each foreign-key edge via LEFT ANTI joins (the data-quality "
-    "gate a warehouse load runs post-ingest); each check is one "
-    "broadcast-or-shuffle anti-join, zero row multiplication, results "
-    "tagged and unioned into one report",
     ("quality", "join"),
 )
 def x83_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Referential-integrity audit: orphan counts per foreign key of the star schema via left-anti
+    joins, tagged and unioned into one report."""
     t = _t(spark, sf_dir)
 
     def orphans(name, left, lk, right, rk):
@@ -5016,16 +4808,12 @@ def x83_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ) AS BIGINT) END / 1e6 AS pearson_r
     FROM s
     """,
-    "metric CORRELATION (Pearson r between per-user click and purchase "
-    "counts) from EXACT integer moment sums — corr() aggregates float "
-    "partial states in nondeterministic order and can't be hash-"
-    "compared; the five integer moments are order-independent, the "
-    "final r is one double expression over identical integers on both "
-    "engines, 1e-6-quantized, degenerate variance guarded to 0. Two "
-    "map-side-combinable aggs total",
     ("events", "analytics"),
 )
 def x84_metric_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pearson r between per-user click and purchase counts from exact integer moment sums, one
+    double expression, quantized at 1e-6; zero variance gives 0. corr() is not used: its float
+    partial states are order-dependent."""
     t = _t(spark, sf_dir)
     per_user = (
         t["events"]
@@ -5081,14 +4869,11 @@ def x84_metric_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY rk <= 10
     ORDER BY rk
     """,
-    "user JOURNEY paths (product analytics): each user's first five "
-    "events in time order compressed to a path string, top-10 most "
-    "common journeys — the behavioral-funnel exploration query. One "
-    "user-partitioned window (rn <= 5 prunes early), ordered "
-    "string_agg == collect_list sorted by position, TakeOrdered top-k",
     ("events", "analytics"),
 )
 def x85_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 10 most common user journeys (first five events in time order as a path string), from
+    one user-partitioned window and a top-k."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -5134,16 +4919,12 @@ def x85_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(vq) / 1e6 AS max_v
     FROM vals GROUP BY dim ORDER BY dim
     """,
-    "per-DIMENSION embedding statistics (the whitening/standardization "
-    "pre-pass a vector pipeline runs before PQ or PCA): each float32 "
-    "component integer-quantized at 1e-6 AT THE SOURCE so the per-dim "
-    "sums are exact and order-independent (a float mean() would differ "
-    "by engine summation order); mean via integer division, min/max "
-    "exact. One posexplode + one map-side-combinable agg over 64 "
-    "fixed-dimension keys",
     ("similarity", "quality"),
 )
 def x86_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-dimension embedding mean/min/max: each component quantized to 1e-6 integers at the
+    source, so per-dim sums are exact and order-independent. One posexplode and one aggregation
+    over 64 keys."""
     t = _t(spark, sf_dir)
     vals = t["embeddings"].select(
         F.posexplode("embedding").alias("dim", "v")
@@ -5189,19 +4970,11 @@ def x86_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id
     ORDER BY user_id
     """,
-    "behavioral diversity: Shannon entropy of each user's event-type "
-    "distribution — p ln(1/p) computed per (user, type) from exact "
-    "integer counts and quantized at 1e-9 BEFORE the cross-type sum "
-    "(at most 5 terms, but their float-sum order still differs per "
-    "engine), so the per-user total is exact integer addition. The "
-    "bot-vs-human behavioral signal; one map-side-combinable agg, a "
-    "user-keyed window sum for the totals (r12: the former totals "
-    "self-join sat on an AQE broadcast threshold and flipped 6/7 jobs "
-    "run-to-run — the window plan is deterministic and one exchange "
-    "cheaper; same-keyed groupBy after it is exchange-free)",
     ("events", "analytics", "quality"),
 )
 def x87_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shannon entropy of each user's event-type distribution: each p ln(1/p) term from exact
+    counts, quantized at 1e-9 before the sum, so per-user totals are exact integer additions."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -5273,15 +5046,11 @@ def x87_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY sz
     ORDER BY cluster_size
     """,
-    "dedup REPORT (the QA summary a dedup run ships): near-dup cluster "
-    "SIZE distribution + per-size docs-removed counts + integer-"
-    "quantized corpus removal rate — the number a data lead reads "
-    "before approving a dedup config. Reuses the full LSH -> frontier-"
-    "CC pipeline; the report itself is two bounded aggs over one row "
-    "per cluster",
     ("dedup", "quality", "graph"),
 )
 def x88_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup report: near-dup cluster size distribution, docs removed per size and the
+    integer-quantized corpus removal rate, from the LSH and connected-components pipeline."""
     from .operators.graph import connected_components
 
     t = _t(spark, sf_dir)
@@ -5323,15 +5092,11 @@ def x88_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN j >= 0.999999 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact
     FROM ver
     """,
-    "dedup threshold SENSITIVITY sweep (config tuning): exact Jaccard "
-    "computed ONCE for every LSH candidate pair, then pair counts at "
-    "thresholds 0.7/0.8/0.9/exact as conditional aggregates — the "
-    "one-pass table a data lead reads before choosing a dedup cutoff "
-    "(x88 reports the consequences of the chosen one). Same bucketed "
-    "candidate pipeline; the sweep itself adds zero extra passes",
     ("dedup", "quality"),
 )
 def x89_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup threshold sweep: exact Jaccard once per LSH candidate pair, then pair counts at
+    0.7/0.8/0.9/1.0 as conditional aggregates in one pass."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -5528,30 +5293,12 @@ def _ivfpq_det_oracle_sql() -> str:
 @query(
     "ivfpq_recall_det",
     _ivfpq_det_oracle_sql(),
-    "DETERMINISTIC integer IVF-PQ recall census (the faiss IndexIVFPQ "
-    "shape -- THE standard billion-vector layout -- converted r14 from "
-    "rows-only to FULLY VALUE-ORACLED via the graph_knn_descent recipe, "
-    "the r13 verdict's #5: exact milli-quantized integer distances, "
-    "unique (d2, id)/(d2, cell)/(d2, j) tie-breaks everywhere, and "
-    "DETERMINISTIC training -- per-label integer centroids (sum div "
-    "count), hash-ring-ranked seed codewords, ONE integer-mean Lloyd "
-    "round (empty clusters keep init) -- so coarse quantizer, "
-    "codebooks, codes, ADC scores and the recall numbers are identical "
-    "BIGINTs on both engines and the census hash-matches. Search: "
-    "nprobe=2 cells by (d2, cell), ADC = 4 codebook lookups vs the "
-    "query residual, shortlist 20 by (adc, id), exact integer re-rank "
-    "to top-10, hits vs the exact corpus-wide top-10. Engine runs "
-    "three bounded matrix collects + one Arrow BLAS kernel per corpus "
-    "pass (the measured kmeans/r7 + r11 BLAS lessons; every "
-    "intermediate < 2^53 so float64 matmul stays exact; 2.7 s warm at "
-    "sf0.1 vs 4.7 s for the float version it replaces); oracle mirrors "
-    "the integer spec as dim-level CTEs; an independent python replica "
-    "re-derives the whole pipeline from md5 up. Divisions are Spark "
-    "div / DuckDB // on BIGINTs only (truncating, engine-pair pinned) "
-    "-- python never divides (python // floors, the r8 odd one out)",
     ("similarity",),
 )
 def ivfpq_recall_det(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic integer IVF-PQ recall census: integer training, nprobe=2 coarse cells,
+    4-codebook ADC shortlist of 20, exact re-rank to top 10, hits vs exact top 10. All integers
+    with unique tie-breaks, so it hash-matches the oracle."""
     t = _t(spark, sf_dir)
     return sim_ops.ivfpq_det_recall(t["embeddings"])
 
@@ -5582,16 +5329,11 @@ def ivfpq_recall_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY rk <= 5
     ORDER BY lang, rk
     """,
-    "quality ENSEMBLE ranking (Borda count): three signals — length, "
-    "type-token ratio, mean word length (both integer-quantized "
-    "ratios) — each ranked per language with a doc_id tie-break, "
-    "combined by integer rank SUM (rank aggregation sidesteps "
-    "incomparable signal scales AND float determinism entirely); "
-    "top-5 per language. All windows partitioned by language — no "
-    "global sort at any corpus size",
     ("text", "quality", "pipeline"),
 )
 def x91_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Borda quality ensemble: length, type-token ratio and mean word length each ranked per
+    language (doc_id tie-break), summed as integer ranks; top 5 per language."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -5644,15 +5386,11 @@ def x91_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(grp_sz) AS min_group
     FROM groups
     """,
-    "K-ANONYMITY audit (data governance, alongside PII redaction): "
-    "group sizes over the quasi-identifier tuple (nation, market "
-    "segment) — any group smaller than k=5 re-identifies its members; "
-    "reports violating-group and at-risk-row counts with an integer-"
-    "quantized risk fraction. The pre-release privacy gate for any "
-    "shared dataset; two map-side-combinable aggregations",
     ("quality", "governance"),
 )
 def x92_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-anonymity audit over (nation, segment): groups smaller than k=5, their at-risk row counts
+    and an integer-quantized risk fraction. Two map-side-combinable aggregations."""
     t = _t(spark, sf_dir)
     groups = (
         t["customer"]
@@ -5694,18 +5432,12 @@ def x92_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(l_div) AS min_l
     FROM groups
     """,
-    "L-DIVERSITY audit (data governance, the step after k-anonymity): "
-    "within each quasi-identifier group (nation, market segment), how "
-    "many DISTINCT values does the sensitive attribute take — here the "
-    "account-balance $1000 band, derived through exact integer cents "
-    "with a positive offset so floor division agrees across engines. A "
-    "k-anonymous group whose members all share one sensitive value "
-    "still leaks it; groups with l < 3 are flagged with at-risk row "
-    "counts and an integer-quantized risk fraction. Two map-side-"
-    "combinable aggregations",
     ("quality", "governance"),
 )
 def x95_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """l-diversity audit: distinct $1000 balance bands per (nation, segment) group, flagging l < 3
+    with at-risk rows and an integer-quantized risk fraction. Bands use exact integer cents with a
+    positive offset."""
     t = _t(spark, sf_dir)
     bucket = F.expr("(CAST(round(c_acctbal * 100) AS BIGINT) + 100000) div 100000")
     groups = (
@@ -5750,17 +5482,12 @@ def x95_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_freq DESC, term
     LIMIT 25
     """,
-    "inverted-index build (the search-engine / retrieval artifact "
-    "behind BM25): term -> document-frequency, corpus-frequency, and "
-    "the posting list head (10 smallest doc ids, comma-joined). The "
-    "posting head comes from a rank-window top-10 per term BEFORE any "
-    "list materialization, so per-task state stays bounded even for "
-    "stopword terms whose full posting list is corpus-sized; "
-    "per-term totals ride the same single shuffle as window "
-    "aggregates. Top-25 terms by doc_freq, term tie-break",
     ("text", "analytics"),
 )
 def x96_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inverted index for the top 25 terms by doc frequency: doc and corpus frequency and the 10
+    smallest doc ids, picked by a rank window before any list is built, so per-task state stays
+    bounded."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -5806,20 +5533,12 @@ def x96_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
     """,
-    "BUCKETED co-located join — the pre-shuffle pattern for a join "
-    "repeated across a 100 TB pipeline: both fact tables are written "
-    "once with bucketBy(8, orderkey) (hash-partitioned into fixed "
-    "buckets AT WRITE TIME), and the sort-merge join then reads bucket "
-    "i against bucket i with NO exchange on either side — the join "
-    "shuffle is paid once at layout time, not per query. The merge "
-    "hint pins SMJ so the demonstration can't degrade to a broadcast "
-    "at small SF; tests/test_plans.py pins SelectedBucketsCount in the "
-    "scan and the absence of a hashpartitioning exchange on the join "
-    "keys. At production scale the bucket count scales with the data "
-    "(e.g. 4096), amortizing every downstream orderkey join/agg",
     ("relational", "layout", "performance"),
 )
 def file_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketed co-located join: both facts written once with bucketBy(8, orderkey), then a
+    sort-merge join that reads bucket i against bucket i with no exchange. Exact integer-cents
+    revenue."""
     import hashlib
     import shutil
     import time as _time
@@ -5878,6 +5597,7 @@ def file_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li, od = spark.table(li_tbl), spark.table(od_tbl)
     return (
         li.filter(F.col("l_shipdate") > F.lit("1995-01-01").cast("date"))
+        # Pin the sort-merge join so a small scale factor cannot turn it into a broadcast join.
         .hint("merge")
         .join(od, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderstatus")
@@ -5921,18 +5641,11 @@ def file_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_occurrences DESC, pair
     LIMIT 20
     """,
-    "BPE tokenizer-induction round 1 (Sennrich et al. 2016): exact "
-    "corpus-weighted counts of adjacent symbol pairs, emitted as the "
-    "top-20 merge candidates. The scale trick is counting over the "
-    "VOCABULARY (distinct words x their corpus frequency) instead of "
-    "the token stream — pair extraction touches each distinct word "
-    "once, and the explode is bounded by vocabulary size x word "
-    "length, not corpus size. Exact integer counts; unique (count, "
-    "pair) ordering. Subsequent BPE rounds iterate the same "
-    "count->merge->re-pair shape on the shrinking symbolized vocab",
     ("text", "pipeline"),
 )
 def xa0_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE round 1: exact corpus-weighted adjacent-symbol-pair counts over the vocabulary (distinct
+    words x frequency, not the token stream), top 20 by unique (count, pair) order."""
     t = _t(spark, sf_dir)
     vocab = (
         t["documents"]
@@ -5994,18 +5707,12 @@ def xa0_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, cluster_id, quality, (rn = 1) AS kept
     FROM ranked ORDER BY doc_id
     """,
-    "QUALITY-AWARE dedup representative selection: near-dup clusters "
-    "(MinHash+LSH -> connected components) keep the HIGHEST-quality "
-    "member instead of dedup_apply's min-id — the policy production "
-    "pipelines actually want (min-id discards the best copy of "
-    "boilerplate families). Quality here is the integer trimmed length "
-    "(deterministic stand-in for the doc_stats composite); the "
-    "per-cluster argmax is a row_number window with (quality DESC, "
-    "doc_id) unique ordering, one shuffle over the assignment table. "
-    "Oracle replays clustering as a recursive transitive closure",
     ("dedup", "graph", "pipeline", "quality"),
 )
 def xaf_dedup_quality_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-aware dedup: near-dup clusters keep their longest trimmed member (doc_id tie-break)
+    instead of the min id, via one row_number window. The oracle replays clustering as a transitive
+    closure."""
     from pyspark.sql.window import Window as W
 
     from .operators.graph import connected_components
@@ -6056,18 +5763,11 @@ def xaf_dedup_quality_representative(spark: SparkSession, sf_dir: str) -> DataFr
            max(day) AS last_day
     FROM planned GROUP BY bin ORDER BY bin
     """,
-    "small-file COMPACTION planning (the Iceberg/Delta binPack "
-    "maintenance shape): the per-(day, event_type) file inventory with "
-    "simulated 512 B/row sizes is packed into ~256 KiB target bins by "
-    "exclusive-prefix-sum division in layout order — file i lands in "
-    "bin floor(cum_before / target), preserving sort order so "
-    "compacted files keep data-skipping locality. The plan runs over "
-    "file STATS (metadata-scale, thousands of rows for a 100 TB "
-    "table), never the data; the single unpartitioned window is "
-    "bounded by the inventory size. Integer sizes end-to-end",
     ("layout", "maintenance", "events"),
 )
 def xa2_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compaction plan: per-(day, event_type) file stats packed into ~256 KiB bins in layout order,
+    bin = exclusive prefix sum div target. Runs over file stats, never the data; integer sizes."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -6080,6 +5780,8 @@ def xa2_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     before = F.coalesce(
         F.sum("size_bytes").over(
+            # Unpartitioned window, bounded by the file inventory (thousands of rows for a 100 TB
+            # table).
             W.orderBy("day", "event_type").rowsBetween(W.unboundedPreceding, -1)
         ),
         F.lit(0),
@@ -6107,19 +5809,12 @@ def xa2_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE doc_id < 200
     ORDER BY doc_id
     """,
-    "binaryFile-source ingest — Spark's built-in path for loading raw "
-    "multimodal assets (images/audio) as binary columns straight from "
-    "a file listing: documents are materialized one file per doc_id "
-    "partition directory (text sink + partitionBy), read back with "
-    "format('binaryFile') which yields (path, modificationTime, "
-    "length, content), the owning doc_id recovered from the partition "
-    "path, and the binary payload verified by length + md5 against "
-    "the source table. At 100 TB this scan parallelizes over the file "
-    "listing with binary contents never passing through the driver; "
-    "maxPartitionBytes bounds task input as for any FileScan",
     ("sources", "multimodal"),
 )
 def xa3_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """binaryFile ingest: documents written one file per doc_id partition, read back with
+    format('binaryFile'), doc_id recovered from the path, and each payload checked by length and
+    md5 against the source."""
     import os
 
     from .queries import _scratch_dir
@@ -6185,17 +5880,11 @@ def xa3_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m GROUP BY lang, metric
     ORDER BY lang, metric
     """,
-    "FUSED multi-metric exact quantiles: per-language p50/p90 of BOTH "
-    "n_chars and n_tokens in ONE bounded-state histogram pass — the "
-    "metric name is folded into the GROUP KEY (union-explode to "
-    "(lang, metric, value) rows), so the existing exact-quantile "
-    "operator fuses any number of value columns with zero new API: "
-    "one scan, one histogram aggregation, one selection pass for all "
-    "metrics. The Spark-first answer to 'extend the operator to "
-    "multiple value columns'. 4dp stage-seam rounding as q11/x67",
     ("text", "quality", "analytics"),
 )
 def xa4_fused_metric_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language p50/p90 of n_chars and n_tokens in one exact-quantile pass, by folding the
+    metric name into the group key. 4dp-rounded at the stage seam."""
     from .operators.quantiles import exact_group_quantiles
 
     t = _t(spark, sf_dir)
@@ -6232,17 +5921,11 @@ def xa4_fused_metric_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     ORDER BY n.n_name
     """,
-    "SALTED broadcast join under a skewed key: the customer->nation "
-    "dimension join runs through salted_broadcast_join (dimension "
-    "replicated once per salt, fact joins on (key, salt)) so a hot "
-    "nation key can never stall one reducer — the big side is NEVER "
-    "shuffled at all (broadcast join on the composite key). Result is "
-    "provably identical to the plain join (the oracle IS the plain "
-    "join); complements agg_skew_salted (salted AGGREGATION) with the "
-    "join-side skew defense from operators/skew.py",
     ("relational", "skew", "performance"),
 )
 def xa5_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Salted broadcast join (operators.skew.salted_broadcast_join) for the customer->nation join,
+    so a hot key never stalls one reducer. The oracle is the plain join; results are identical."""
     from .operators.skew import salted_broadcast_join
 
     t = _t(spark, sf_dir)
@@ -6322,22 +6005,12 @@ def xa5_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assigned GROUP BY split, lang
     ORDER BY split, lang
     """,
-    "the END-TO-END LLM corpus-prep pipeline as ONE query — the "
-    "composition a reference user actually ships: (1) MinHash+LSH "
-    "near-dup clustering keeps the min-id representative per cluster "
-    "(near-dups of EVAL docs get dropped here too — dedup doubles as "
-    "fuzzy decontamination); (2) quality floor (>= 50 trimmed chars); "
-    "(3) benchmark decontamination — train docs with > 1% word-4-gram "
-    "overlap against the eval set (doc_id % 50 = 0 stand-in) dropped "
-    "via integer cross-multiplication; (4) hash-decided 80/10/10 "
-    "train/val/test split (rows never migrate as the corpus grows). "
-    "Emits per-(split, lang) doc and exact token counts. Every stage "
-    "reuses a driver-green operator (dedup CC, ngram_overlap, "
-    "split_assign); the oracle replays the chain with the same proven "
-    "CTEs",
     ("pipeline", "dedup", "decontam", "sampling", "quality"),
 )
 def pipeline_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end LLM corpus prep: MinHash dedup (min-id keeper), quality floor, eval
+    decontamination, hash-decided 80/10/10 split, then doc and exact token counts per (split,
+    lang)."""
     from .operators.decontam import ngram_overlap
     from .operators.graph import connected_components
     from .operators.sampling import split_assign
@@ -6418,16 +6091,12 @@ def pipeline_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(revenue), 2) AS revenue
     FROM per_session GROUP BY entry_type ORDER BY entry_type
     """,
-    "the product-analytics composition in ONE query (the events-side "
-    "mirror of xa8): gaps-and-islands sessionization (30-min boundary, "
-    "microsecond-exact diffs, event_id tiebreak) -> per-session entry "
-    "event type, bounce flag, conversion flag, purchase revenue -> "
-    "per-entry-type funnel readout with integer-quantized bounce and "
-    "conversion rates. All windows partitioned by user; the rollup is "
-    "one bounded agg over one row per session",
     ("events", "analytics", "pipeline"),
 )
 def xa9_pipeline_product_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-analytics pipeline: sessionization (30-min gap, microsecond diffs), per-session
+    entry type, bounce, conversion and revenue, rolled up per entry type with integer-quantized
+    rates."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -6482,17 +6151,11 @@ def xa9_pipeline_product_analytics(spark: SparkSession, sf_dir: str) -> DataFram
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_missing
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    "Spark 4 VARIANT semi-structured path (the successor to string "
-    "get_json_object that q21 covers): try_parse_json -> open VARIANT "
-    "column, typed extraction via variant_get('$.k', 'bigint') with "
-    "engine-native shredding, try_variant_get on an absent path "
-    "yielding NULL (counted, provably zero). VARIANT keeps the parsed "
-    "binary representation through the plan, so repeated path "
-    "extractions don't re-parse the JSON text per access — the right "
-    "semi-structured shape for wide event payloads at scale",
     ("functions", "json"),
 )
 def xaa_variant_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VARIANT path: try_parse_json, typed variant_get extraction, and try_variant_get on an absent
+    path counted as NULL (zero by construction)."""
     t = _t(spark, sf_dir)
     v = F.try_parse_json("props")
     ev = t["events"].select(
@@ -6542,18 +6205,12 @@ def xaa_variant_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM binned GROUP BY event_type, bin
     ORDER BY event_type, bin
     """,
-    "equi-depth feature bucketing (ML discretization): per-event-type "
-    "quartile boundaries from the bounded-state EXACT quantile "
-    "operator, rounded 4dp AT THE STAGE SEAM (so both engines bin "
-    "against identical doubles), then every value assigned its "
-    "quartile bin by broadcast of the tiny boundary table into the "
-    "scan — per-(type, bin) counts and value spans. The quantile "
-    "operator's 4th composition (after MAD, latency percentiles, "
-    "percentile gates); bucketize is one broadcast join + codegen "
-    "CASE, scan-speed at any corpus size",
     ("events", "quality", "analytics"),
 )
 def xab_equidepth_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-depth bucketing: per-event-type quartile bounds from the exact quantile operator,
+    4dp-rounded at the stage seam, then per-(type, bin) counts and spans via a broadcast boundary
+    join."""
     from .operators.quantiles import exact_group_quantiles
     from .session import track_cache
 
@@ -6609,17 +6266,11 @@ def xab_equidepth_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked GROUP BY c_nationkey, quartile
     ORDER BY c_nationkey, quartile
     """,
-    "the distribution window functions q12's ranking trio doesn't "
-    "cover: ntile(4) equal-count tiling, percent_rank, cume_dist — "
-    "per-nation balance quartiles with their rank-fraction spans. The "
-    "window ordering is UNIQUE ((balance, custkey)), so tiling and "
-    "rank fractions are deterministic; pr/cd are single IEEE divisions "
-    "of identical integers on both engines (no summation, no rounding "
-    "needed), and the per-quartile rollup keeps min/max picks — never "
-    "an order-dependent float sum",
     ("relational", "window"),
 )
 def xac_window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ntile(4), percent_rank and cume_dist of balance per nation over the unique (balance,
+    custkey) order, rolled up per quartile with min/max only, so no order-dependent float sum."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -6657,19 +6308,12 @@ def xac_window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE n_chars > 0
     ORDER BY doc_id, chunk_id
     """,
-    "document CHUNKING for RAG / training-window prep: each document "
-    "splits into 200-char windows at stride 150 (50-char overlap so no "
-    "boundary-straddling span is lost), every chunk carrying its "
-    "provenance (doc_id, ordinal, 1-based start offset) and a portable "
-    "md5 content address. Pure projection + generate-series explode — "
-    "scan-speed, zero shuffle, the fan-out is output-proportional; at "
-    "100 TB the chunker runs at read bandwidth and the md5 column is "
-    "the join key for downstream chunk-level dedup/embedding. "
-    "chunk_id derives from the start offset ((s-1) div stride), not "
-    "explode ordinality, so both engines agree without ORDINALITY",
     ("text", "pipeline"),
 )
 def xb0_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document chunking: 200-char windows at stride 150 with (doc_id, ordinal, start) provenance
+    and an md5 content address. chunk_id derives from the start offset, so both engines agree
+    without ORDINALITY."""
     t = _t(spark, sf_dir)
     # sequence(1, n, 150) is guarded by n_chars > 0: Spark's sequence
     # DESCENDS when stop < start (CLAUDE.md xa0 lesson), and n_chars
@@ -6725,18 +6369,12 @@ def xb0_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM versions
     ORDER BY custkey, version
     """,
-    "SCD TYPE-2 dimension maintenance (the warehouse-history pattern "
-    "the reference's sink feeds): each customer's order-status "
-    "observations collapse into VERSIONED validity intervals — "
-    "consecutive repeats dropped via lag() over the unique (date, "
-    "orderkey) order, version numbers + effective_to via "
-    "row_number/lead over the change rows, open-ended current row "
-    "flagged. Two windows over the same customer partitioning (one "
-    "shuffle, alias-traced through both), no self-join; dates compare "
-    "as DATE on both engines (timestamp canonicalization differs)",
     ("relational", "window", "warehouse"),
 )
 def xb4_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD type-2 history: each customer's order-status observations collapsed into versioned
+    validity intervals via lag/row_number/lead over the unique (date, orderkey) order. Two windows
+    on one partitioning."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -6837,22 +6475,12 @@ def xb4_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
                         'l_extendedprice','l_returnflag','l_linestatus']) AS u(col)
     ORDER BY column_name
     """,
-    "COLUMN PROFILER (the data-quality summary every ingest pipeline "
-    "runs before accepting a drop): per-column null count, exact "
-    "distinct count, min/max for six columns. Two passes, each the "
-    "scalable shape for its metric family: nulls/min/max as plain "
-    "conditional aggregates (map-side-combined, KB-sized result), and "
-    "exact distincts via unpivot-to-(column, value) + two-level count "
-    "— pure HashAggregate with map-side dedup. The naive ONE-pass "
-    "multi-countDistinct compiles to Expand(7x row replication) + "
-    "SortAggregate (string min/max buffers break hash agg) and "
-    "measured 14.4 s at sf0.1 vs ~1 s for this shape; at 100 TB the "
-    "Expand would also 7x the shuffle. Numeric extremes canonicalize "
-    "through DECIMAL(18,2) -> VARCHAR on both engines (raw stored "
-    "values, not computed aggregates, so the 2dp cast is lossless)",
     ("relational", "quality", "analytics"),
 )
 def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column profile of six columns: null count, exact distinct count, min and max, in two passes
+    (conditional aggregates, then an unpivoted two-level distinct count). Numeric extremes
+    render through DECIMAL(18,2) -> VARCHAR on both engines."""
     t = _t(spark, sf_dir)
     li = t["lineitem"]
     num_cols = {"l_quantity", "l_extendedprice"}
@@ -6967,22 +6595,11 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rk <= 5
     ORDER BY q_doc, rk
     """,
-    "SPARSE top-k retrieval via an inverted index (the BM25/TF-IDF "
-    "retrieval shape, complementing the dense ANN family): terms are "
-    "word 3-shingles (phrase-level vocabulary — rich enough that "
-    "document frequency actually discriminates), per-doc weights "
-    "tf * (N div df) — INTEGER idf quantization, so dot products are "
-    "exact integer sums no float agg order can perturb — query docs "
-    "join the corpus postings ON THE TERM (only docs sharing a "
-    "surviving term ever pair: the inverted-index prune), stop terms "
-    "with df > N/2 dropped by integer cross-multiplication (caps "
-    "posting-list blow-up at corpus scale), accumulated inner-product "
-    "scores, top-5 per query by (score, id). At 100 TB the postings "
-    "table is the shuffled asset and the df filter bounds the join "
-    "fan-out",
     ("text", "similarity", "pipeline"),
 )
 def xb2_sparse_topk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sparse top-5 retrieval over word 3-shingle postings: integer tf * (N div df) weights, stop
+    terms with df > N/2 dropped, exact integer inner products, ranked by (score, id)."""
     from pyspark.sql.window import Window as W
 
     from .session import track_cache
@@ -7072,18 +6689,11 @@ def xb2_sparse_topk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(nll_q) AS BIGINT) // CAST(count(*) AS BIGINT) AS nll_avg_micro
     FROM scored GROUP BY doc_id ORDER BY doc_id
     """,
-    "BIGRAM language-model scoring (the step up from x66's unigram "
-    "NLL): add-1-smoothed conditional P(w2|w1) = (c12+1)/(c1+V) "
-    "trained on the corpus itself, per-token NLL ln((c1+V)/(c12+1)) "
-    "quantized to integer micro-nats ONCE at its source (the x66/r5 "
-    "rule: a float that must be SUMMED across rows is quantized at "
-    "the term), so per-doc totals and the integer-div mean are exact "
-    "on both engines. The fluency/garbage signal a pretraining filter "
-    "computes per document; counts tables are the shuffled assets and "
-    "the scoring join is a broadcast wherever vocab^2 fits",
     ("text", "quality", "pipeline"),
 )
 def xb3_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bigram LM score per document: add-1 smoothed per-token NLL ln((c1+V)/(c12+1)) quantized to
+    integer micro-nats at its source, so per-doc totals and the integer-div mean are exact."""
     from pyspark.sql.window import Window as W
 
     from .session import track_cache
@@ -7149,19 +6759,12 @@ def xb3_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM mat m JOIN sizes s USING (cohort)
     ORDER BY m.cohort, m.offset_d
     """,
-    "COHORT RETENTION matrix (the product-analytics readout behind "
-    "every activation dashboard): each user's cohort is the calendar "
-    "DAY of their first event, every later event lands in a day "
-    "offset computed as a DATE-to-DATE day diff (integer-exact on "
-    "both engines — the timestamp-level date_diff boundary trap of "
-    "x81 never arises for DATEs), per-(cohort, offset) distinct "
-    "users, retention = integer-quantized ratio against the cohort's "
-    "own offset-0 size. Two shuffles (first-event agg + matrix agg), "
-    "both map-side-combinable; the matrix is dashboard-sized at any "
-    "corpus scale",
     ("events", "analytics"),
 )
 def xb5_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily cohort retention matrix: cohort = day of first event, offset = DATE-to-DATE day diff,
+    distinct users per (cohort, offset), retention as an integer-quantized ratio to the offset-0
+    size."""
     t = _t(spark, sf_dir)
     ev = t["events"].select("user_id", "ts")
     firsts = ev.groupBy("user_id").agg(F.min("ts").cast("date").alias("cohort"))
@@ -7221,19 +6824,12 @@ def xb5_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN norms nb ON nb.label = d.label_b
     ORDER BY d.label_a, d.label_b
     """,
-    "embedding-space LABEL AUDIT: per-label centroids and their "
-    "pairwise inner products / norms — the class-separation check a "
-    "labeled embedding corpus gets before training. Vector elements "
-    "quantize to integer micro-units at the SOURCE (float32 -> double "
-    "is exact and double*1e6 is one IEEE rounding, identical on both "
-    "engines — unlike ln, floor here cannot flip), so centroid sums, "
-    "integer-div means, dots and norms are all exact integer "
-    "arithmetic in any aggregation order. posexplode to (label, dim) "
-    "rows -> one map-side-combinable agg; the centroid table (labels "
-    "x dim) is broadcast-sized at any corpus scale",
     ("similarity", "analytics", "quality"),
 )
 def xb6_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding label audit: per-label centroids, pairwise inner products and norms. Elements are
+    quantized to integer micro-units at the source, so every sum, mean, dot and norm is exact
+    integer arithmetic."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -7307,19 +6903,12 @@ def xb6_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(wc) AS BIGINT) // CAST(count(*) AS BIGINT) AS mean_cents
     FROM clamped GROUP BY event_type ORDER BY event_type
     """,
-    "WINSORIZED robust statistics (the outlier-resistant mean a metric "
-    "pipeline reports instead of dropping rows): per-event-type "
-    "p05/p95 bounds from the bounded-state EXACT quantile operator "
-    "(4dp stage-seam rounding so both engines clamp against identical "
-    "doubles), every value clamped into [lo, hi], clamped values "
-    "floored to integer cents AT SOURCE (floor of a deterministic "
-    "IEEE product — engine-safe, unlike ln) so the winsorized sum and "
-    "integer-div mean are exact in any aggregation order. The "
-    "quantile operator's 5th composition; clamp is one broadcast join "
-    "+ codegen CASE at scan speed",
     ("events", "quality", "analytics"),
 )
 def xb7_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winsorized mean per event type: p05/p95 from the exact quantile operator (4dp at the stage
+    seam), values clamped and floored to integer cents at the source, so sum and integer-div mean
+    are exact."""
     from .operators.quantiles import exact_group_quantiles
     from .session import track_cache
 
@@ -7376,25 +6965,20 @@ def xb7_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM win
     ORDER BY n_rows DESC, join_key
     """,
-    "JOIN-KEY SKEW DIAGNOSIS (the operational pre-flight before a big "
-    "shuffle): per-key row counts, each key's row share and skew "
-    "factor (count / mean-count, i.e. n*k/total) as integer-quantized "
-    "ratios, and a suggested salt fan-out ceil(n/100k target rows per "
-    "reducer) in pure integer arithmetic. One map-side-combinable agg, "
-    "then corpus totals as an UNPARTITIONED WINDOW over the tiny "
-    "per-key table (one scan of events — a stats self-join would "
-    "re-evaluate the aggregate subtree in the compiled plan); the "
-    "readout that tells you whether operators/skew.py's salted join "
-    "is worth its replication cost BEFORE paying for a stalled reducer",
     ("events", "performance", "analytics"),
 )
 def xb8_skew_diagnosis(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-key skew diagnosis: per-key row counts, row share and skew factor (n*k/total) as
+    integer-quantized ratios, and a suggested salt fan-out ceil(n/100k), all in integer
+    arithmetic."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
     keyed = t["events"].groupBy(F.col("event_type").alias("join_key")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
+    # Unpartitioned window over the per-key count table (one row per key), not the events; a totals
+    # self-join would re-evaluate the aggregate subtree.
     w = W.partitionBy()
     return (
         keyed.select(
@@ -7445,21 +7029,12 @@ def xb8_skew_diagnosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM win
     ORDER BY yr, supp_nation
     """,
-    "NATIONAL MARKET SHARE (the TPC-H Q8 shape — the deepest join in "
-    "the relational surface): an 8-table snowflake join (lineitem -> "
-    "orders -> customer -> nation -> region on the demand side; part "
-    "filter; supplier -> nation on the supply side), per-row revenue "
-    "floored to integer cents AT SOURCE so every rollup is exact, "
-    "supplier-nation revenue share per year as integer-quantized "
-    "ratios computed by a PARTITION BY yr window over the grouped "
-    "result (a yearly-total self-join would re-evaluate the whole "
-    "8-table subtree in the compiled plan). Catalyst broadcasts every "
-    "dimension (region/nation/part/supplier/customer at this SF) so "
-    "the fact table shuffles only for the orderkey join — the plan "
-    "shape that holds when lineitem is 100 TB",
     ("relational", "join", "analytics"),
 )
 def xdf_market_share_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q8 national market share: an 8-table join, revenue floored to integer cents at the
+    source, and per-year supplier-nation shares as integer-quantized ratios from a PARTITION BY yr
+    window."""
     t = _t(spark, sf_dir)
     rev = (
         t["lineitem"]
@@ -7538,18 +7113,12 @@ def xdf_market_share_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) AS r(rule, n_violations)
     ORDER BY r.rule
     """,
-    "DECLARATIVE CONSTRAINT AUDIT (the Deequ-style data-quality gate a "
-    "pipeline runs before publishing a table): eight rules -- range, "
-    "domain-membership, positivity, not-null, key sanity -- evaluated "
-    "as conditional sums in ONE aggregation over ONE scan (never a "
-    "job per rule), then unpivoted to a rule/violations/pass-ratio "
-    "report via an in-plan stack spine (the xb1 profiler's shape). "
-    "Range compares are stored-double vs literal -- one IEEE compare, "
-    "identical on both engines; ratios integer-quantized. At 100 TB "
-    "this is a single map-side-combinable pass at scan speed",
     ("lineitem", "quality"),
 )
 def xca_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Declarative constraint audit: eight range/domain/positivity/not-null/key rules as
+    conditional sums in one aggregation, unpivoted to a rule/violations/pass-ratio report with
+    integer-quantized ratios."""
     from .operators.analytics import constraint_audit
 
     t = _t(spark, sf_dir)
@@ -7590,18 +7159,12 @@ def xca_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs
     ORDER BY from_type, to_type
     """,
-    "EVENT TRANSITION MATRIX (first-order Markov chain of user "
-    "journeys -- the input to next-action prediction and anomaly "
-    "detection): per-user event streams ordered by the UNIQUE "
-    "(ts, event_id) key (ts alone can tie), lag() pairs each event "
-    "with its predecessor, transition counts per (from, to), and "
-    "row-stochastic probabilities via a PARTITION BY from_type window "
-    "over the k*k matrix (never a totals self-join). One user-keyed "
-    "window shuffle + one pair aggregation; the matrix is "
-    "|event_types|^2 rows regardless of corpus size",
     ("events", "analytics", "sessionization"),
 )
 def xcb_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event transition matrix: per-user streams in unique (ts, event_id) order, lag() pairs,
+    counts per (from, to), and row-stochastic probabilities from a PARTITION BY from_type
+    window."""
     from .operators.analytics import transition_matrix
 
     t = _t(spark, sf_dir)
@@ -7639,22 +7202,12 @@ def xcb_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS open_orders
     FROM daily ORDER BY day
     """,
-    "OPEN-ORDER OCCUPANCY CURVE (sweep-line interval counting -- how "
-    "many orders are in flight each day, the shape behind active-"
-    "sessions and concurrency dashboards): each order's lifetime spans "
-    "orderdate .. last lineitem shipdate (orders with no lineitems "
-    "have no interval -- inner join semantics, documented; inverted "
-    "spans, present in the r8 fixtures, clamp to a same-day zero-net "
-    "pair on BOTH engines so the curve never dips on bad data), every "
-    "interval becomes a +1 open-day / -1 close-day+1 delta pair, "
-    "daily net change by aggregation, and the curve as one running "
-    "sum over the BOUNDED day axis (~2500 rows whatever the corpus "
-    "size). Never a day-x-interval range join: the sweep line is "
-    "O(rows) map work + one date-keyed agg. DATE-cast on both engines "
-    "(timestamps at midnight; the date_trunc canonicalization trap)",
     ("orders", "lineitem", "timeseries", "analytics"),
 )
 def xcc_open_orders_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Open-order occupancy curve: each order's [orderdate, last shipdate] as +1/-1 day deltas,
+    daily net change and a running sum over the day axis (operators.analytics.interval_occupancy).
+    DATE-cast on both engines."""
     from .operators.analytics import interval_occupancy
 
     t = _t(spark, sf_dir)
@@ -7703,18 +7256,12 @@ def xcc_open_orders_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(cents) AS BIGINT) AS revenue_cents
     FROM purchases GROUP BY channel ORDER BY channel
     """,
-    "LAST-TOUCH ATTRIBUTION (which channel gets credit for each "
-    "purchase -- the marketing-analytics staple): per-user streams "
-    "ordered by the UNIQUE (ts, event_id) key, the most recent "
-    "preceding click/view/signup found by last_value IGNORE NULLS "
-    "over an unbounded-to-1-preceding frame (two expressions, ONE "
-    "window node), credit only within a 7-day lookback compared in "
-    "MICROSECONDS (the x81/x82 lesson: second-granularity diffs "
-    "disagree across engines), revenue floored to integer cents at "
-    "source. One user-keyed window shuffle + one tiny channel agg",
     ("events", "analytics", "sessionization"),
 )
 def xcd_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-touch attribution: the latest preceding click/view/signup via last_value IGNORE NULLS,
+    credited within a 7-day lookback compared in microseconds; revenue floored to integer cents at
+    the source."""
     from .operators.analytics import last_touch_attribution
 
     t = _t(spark, sf_dir)
@@ -7786,25 +7333,12 @@ def xcd_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS intercept_mag_milli
     FROM slope ORDER BY event_type
     """,
-    "PER-SEGMENT TREND VIA EXACT CLOSED-FORM OLS (is this metric "
-    "rising? -- per event_type, regress value on days-since-segment-"
-    "start): x anchored to each segment's own min DATE by a window "
-    "(regeneration-proof -- magnitudes track the data span, never "
-    "calendar distance), y floored to integer cents at source, so "
-    "every OLS sum (n, sx, sy, sxy, sxx) is an exact BIGINT and the "
-    "slope num/den are exact integers. Slope and intercept are "
-    "reported MAGNITUDE + SIGN (the x73 lesson, refined by the r8 "
-    "engine-pair probe: BIGINT // truncates like Spark div, but "
-    "Python cross-checks floor and DuckDB // silently degenerates to "
-    "plain division on non-integer operands -- so keep quotient "
-    "operands integral AND non-negative), denominator-zero "
-    "CASE-guarded. The "
-    "event_type window partitioning feeds the same-keyed groupBy "
-    "exchange-free. Magnitude budget: |num|*1000 < 2^63 holds "
-    "through sf0.1 x 100 with a month-scale span",
     ("events", "analytics", "ml"),
 )
 def xce_segment_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type OLS trend of value on days since the segment start: exact BIGINT sums with y
+    in integer cents, slope and intercept reported as magnitude + sign, zero denominators
+    guarded."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -7848,6 +7382,7 @@ def xce_segment_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.signum("num").cast("long"))
         .alias("slope_sign"),
         F.when(F.col("den") == 0, F.lit(None).cast("long"))
+        # Magnitude budget: |num| * 1000 < 2^63 holds through sf0.1 x 100 with a month-scale span.
         .otherwise(F.expr("(abs(num) * 1000) div den"))
         .alias("slope_mag_milli"),
     )
@@ -7903,18 +7438,11 @@ def xce_segment_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'orders', n, d, n - d FROM o
     ORDER BY table_name
     """,
-    "ERASURE-CASCADE IMPACT AUDIT (the dry run a GDPR right-to-be-"
-    "forgotten pipeline reports before deleting): an erasure set of "
-    "customers (hash-decided c_custkey % 97 -- deterministic, "
-    "RNG-free) cascades customer -> orders -> lineitem through "
-    "left-mark joins; each table reports total/deleted/retained in "
-    "ONE scan (the deletion flag rides a broadcast mark join, never a "
-    "second counting scan). At 100 TB the erasure key set stays "
-    "key-only and broadcast-sized at each hop; the fact tables are "
-    "scanned once each and never shuffle",
     ("customer", "orders", "lineitem", "pipeline"),
 )
 def xcf_delete_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Erasure cascade dry run: customers with c_custkey % 97 = 0 cascade to orders and lineitem
+    via mark joins; each table reports total/deleted/retained in one scan."""
     t = _t(spark, sf_dir)
     del_cust = (
         t["customer"]
@@ -7986,21 +7514,12 @@ def xcf_delete_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY s.s_name
     ORDER BY numwait DESC, s_name
     """,
-    "SOLE-LATE-SUPPLIER BLAME (the TPC-H Q21 shape — the hardest "
-    "correlated-subquery pattern in the relational surface: EXISTS + "
-    "NOT EXISTS both correlated to the same fact table): suppliers "
-    "whose lineitem shipped >90 days after the order date on "
-    "finished multi-supplier orders where NO OTHER supplier was late. "
-    "The Spark side compiles the double correlation into one "
-    "(orderkey, suppkey) pre-aggregation + an orderkey window "
-    "(distinct-supplier and late-supplier counts) that RIDES the "
-    "groupBy's partitioning exchange-free — no self-join, the fact "
-    "table shuffles once; the DuckDB oracle runs the textbook "
-    "EXISTS/NOT EXISTS formulation, so the hash-match proves the "
-    "rewrite, not just the arithmetic",
     ("lineitem", "orders", "supplier", "relational", "join"),
 )
 def xdg_waiting_orders_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q21: suppliers alone in shipping late on finished multi-supplier orders, as an
+    (orderkey, suppkey) pre-aggregation and an orderkey window. The oracle runs the textbook
+    EXISTS/NOT EXISTS form."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -8072,20 +7591,12 @@ def xdg_waiting_orders_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN cnt cb ON cb.l_partkey = p.part_b
     ORDER BY p.part_a, p.part_b
     """,
-    "MARKET-BASKET CO-PURCHASE AFFINITY (association mining's support "
-    "+ lift, the recommender bootstrap): distinct (order, part) items, "
-    "within-order self-pairing under part_a < part_b (candidate pairs "
-    "bounded by items-per-order choose 2, ~6 per order — NEVER a "
-    "cross-catalog pairing), min-support-2 prune at the aggregation, "
-    "lift as the integer-quantized ratio n_ab*n_orders/(n_a*n_b) "
-    "(exact BIGINT products; magnitudes < 2^63 through sf1). Item "
-    "frequencies are |parts|-bounded and broadcast back; the corpus "
-    "total rides a one-row broadcast cross join. The within-order "
-    "self-join co-partitions on orderkey: one shuffle, no skew "
-    "(orders are bounded-size baskets)",
     ("lineitem", "analytics", "ml"),
 )
 def xch_copurchase_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-purchase affinity: within-order part pairs (part_a < part_b) with support >= 2 and lift
+    as the integer-quantized ratio n_ab*n_orders/(n_a*n_b), via
+    operators.analytics.basket_affinity."""
     from .operators.analytics import basket_affinity
 
     t = _t(spark, sf_dir)
@@ -8123,18 +7634,11 @@ def xch_copurchase_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dau d JOIN wau w USING (day)
     ORDER BY d.day
     """,
-    "DAU/WAU STICKINESS (the engagement ratio every product dashboard "
-    "tracks): per-day distinct actives, trailing-7-day distinct "
-    "actives computed by FANNING each (user, active day) out to the 7 "
-    "days it keeps the user 'weekly active' (bounded 7x explode + "
-    "dedup-count — the scale-correct replacement for a day-by-day "
-    "range join, O(7 rows) map work instead of O(days x rows) "
-    "pairing), stickiness as the integer-quantized exact ratio. Days "
-    "with DAU but no WAU cannot exist (day 0 of the fan-out covers "
-    "itself); output keyed by day only where both sides defined",
     ("events", "analytics", "timeseries"),
 )
 def xci_stickiness_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAU/WAU stickiness: each (user, active day) fanned out to the 7 days it counts as weekly
+    active, distinct counts per day, and the integer-quantized ratio. No day-by-day range join."""
     t = _t(spark, sf_dir)
     active = t["events"].select(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -8192,21 +7696,12 @@ def _ri_block_sql(rel: str, child: str, fk: str, parent: str, pk: str) -> str:
     "xcj_referential_orphans",
     "\nUNION ALL\n".join(_ri_block_sql(*r) for r in _RI_RELS)
     + "\nORDER BY relationship",
-    "REFERENTIAL-INTEGRITY ORPHAN AUDIT over six FK relationships, "
-    "bidirectional: orphan FKs (child values with no parent row -- the "
-    "classic anti-join check) AND unreferenced parents (dimension rows "
-    "no fact ever touches -- the reverse gap a one-way check misses). "
-    "Scale shape: each relationship is ONE groupBy(fk) -- collapsing "
-    "child rows to (key, count) BEFORE the join, so the join carries "
-    "distinct keys, never fact rows -- then ONE full-outer join with "
-    "the parent key set and ONE aggregation computing all six counts; "
-    "never a pass per metric. NULL-keyed child rows fall out as "
-    "orphans on both engines (full-join equality never matches NULL). "
-    "Coverage ratio integer-quantized; zero denominators CASE-guarded "
-    "(ANSI Spark errors on x/0 where DuckDB yields inf)",
     ("lineitem", "orders", "customer", "quality", "join"),
 )
 def xcj_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bidirectional orphan audit over six foreign keys: orphan child keys and unreferenced
+    parents, from one groupBy(fk) plus one full outer join per relation. Ratios integer-quantized,
+    zero denominators guarded."""
     t = _t(spark, sf_dir)
 
     def one(rel: str, child: str, fk: str, parent: str, pk: str) -> DataFrame:
@@ -8275,23 +7770,12 @@ def xcj_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
            array_to_string(list_sort(list(feature)), '|') AS features
     FROM hashed GROUP BY slot ORDER BY slot
     """,
-    "PORTABLE FEATURE HASHING (the 'hashing trick' every large-scale "
-    "learner uses to map unbounded categorical vocab into a fixed "
-    "model dimension without a trained dictionary): four categorical "
-    "features per order (priority, market segment, status, order "
-    "month) hashed into 64 slots with the engine's portable 60-bit "
-    "md5 hash, reported as the slot->features export with the "
-    "collision audit (features per slot, row mass per slot) a feature "
-    "store publishes alongside the model. Scale shape: the feature "
-    "fan-out is a map-side 4x explode, the per-feature count is one "
-    "map-side-combinable groupBy over a vocab-bounded key set, and "
-    "the slot rollup groups 64 keys -- no fact-row shuffle anywhere "
-    "after the dimension join (AQE broadcasts customer). The hash is "
-    "bit-identical Spark vs DuckDB, so the oracle checks the exact "
-    "slot assignment, not just the shape",
     ("orders", "customer", "feature", "text"),
 )
 def xck_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Feature hashing: four categorical order features hashed into 64 slots with the portable
+    60-bit md5 hash, reported with per-slot collision counts. The hash is bit-identical on both
+    engines."""
     t = _t(spark, sf_dir)
     feats = (
         t["orders"]
@@ -8385,24 +7869,12 @@ def _poisson_case_sql(u: str) -> str:
     FROM means m CROSS JOIN whole f
     GROUP BY f.n_orders, f.mean_price
     """,
-    "POISSON BOOTSTRAP confidence interval for the mean order price -- "
-    "the resampling method that actually works at 100 TB (classic "
-    "bootstrap needs B full resamples; Poisson bootstrap folds all B "
-    "replicates into ONE pass: each row contributes a hash-decided "
-    "Poisson(1) weight per replicate, so the data is scanned once and "
-    "the shuffle is 64 replicate keys, map-side combinable). The 64 "
-    "per-row draws come from TWO md5 hashes via the pairwise-"
-    "independent affine family (h1 + rep*h2) mod 1e6 -- 32x less "
-    "hashing than hash-per-replicate (measured 10.7 s -> one-hash-"
-    "bound at sf0.1); weights are deterministic integer inverse-CDF "
-    "thresholds, no RNG, prices fixed to integer cents at source, "
-    "replicate means integer-quantized, and the CI bounds are the "
-    "2nd/63rd order statistics of the 64 replicate means (~95%). "
-    "Row_number over the quantized mean with replicate-id tiebreak "
-    "keeps the order statistic unique on both engines",
     ("orders", "statistics", "sampling"),
 )
 def xds_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Poisson bootstrap CI of mean order price in one pass: 64 hash-decided Poisson(1) weights per
+    row, integer cents, replicate means integer-quantized, bounds = 2nd and 63rd order statistics
+    (replicate-id tie-break)."""
     t = _t(spark, sf_dir)
     from pyspark.sql import Window as W
 
@@ -8432,6 +7904,7 @@ def xds_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             (F.expr("(sum_cents * 10000) div n_w") / 1e6).alias("rep_mean"),
             F.row_number()
+            # Unpartitioned window over the 64 replicate means.
             .over(W.orderBy(F.expr("(sum_cents * 10000) div n_w"), F.col("rep")))
             .alias("rn"),
         )
@@ -8475,20 +7948,11 @@ def xds_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS wmedian_nchars
     FROM w GROUP BY lang ORDER BY lang
     """,
-    "TOKEN-WEIGHTED MEDIAN document length per language -- the "
-    "statistic that matters when you care about token MASS, not doc "
-    "count (half the corpus tokens sit in docs at or below it; a "
-    "plain median is blind to the giant-doc tail). Exact via the "
-    "cumulative-weight definition: per-language running token sum "
-    "over the unique (n_chars, doc_id) order, weighted median = "
-    "smallest value whose cumulative weight reaches half the total "
-    "(lower weighted median, integer weights so the 2*cumw >= total "
-    "test is exact). Scale shape: one scan, ONE hash partition by "
-    "lang shared by both window frames AND the final same-keyed "
-    "groupBy (exchange-free after the window), no join",
     ("documents", "statistics", "quantile", "text"),
 )
 def xcn_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-weighted median doc length per language: running token sum over the unique (n_chars,
+    doc_id) order; the smallest value with 2*cumw >= total, an exact integer test."""
     from pyspark.sql import Window as W
 
     t = _t(spark, sf_dir)
@@ -8562,20 +8026,11 @@ def xcn_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, rank_text, rank_vec, rrf
     FROM fused ORDER BY rrf DESC, doc_id LIMIT 20
     """,
-    "RECIPROCAL RANK FUSION (the standard way hybrid search merges a "
-    "lexical and a vector ranking without score calibration): list A "
-    "= docs ranked by occurrences of the term 'data' (substring-count "
-    "tf), list B = embeddings ranked by cosine against the axis-0 "
-    "unit query; both lists cut to top-100 by a DISTRIBUTED top-k "
-    "(TakeOrderedAndProject -- per-partition heaps, never a global "
-    "sort), ranks assigned by a window over the already-bounded 100 "
-    "rows (the unpartitioned window is k-bounded by construction, "
-    "not data-sized), fused full-outer with INTEGER RRF "
-    "1e6//(60+rank) so the fusion arithmetic is engine-exact, absent "
-    "ranks sentineled 0. Top-20 by (rrf, id)",
     ("documents", "embeddings", "similarity", "search"),
 )
 def xco_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocal rank fusion of a term-count ranking and a cosine ranking, each cut to top 100 by
+    a distributed top-k, fused with integer RRF 1e6 div (60 + rank); top 20 by (rrf, id)."""
     from pyspark.sql import Window as W
 
     t = _t(spark, sf_dir)
@@ -8588,6 +8043,8 @@ def xco_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_a = tf.filter(F.col("hits") > 0).orderBy(F.desc("hits"), F.asc("doc_id")).limit(100)
     rank_a = top_a.select(
         "doc_id",
+        # Unpartitioned rank windows run over the 100 rows the top-k kept: k-bounded, not
+        # data-sized.
         F.row_number().over(W.orderBy(F.desc("hits"), F.asc("doc_id"))).alias("ra"),
     )
     score = t["embeddings"].select(
@@ -8656,19 +8113,11 @@ def xco_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tok_b t LEFT JOIN newv n ON n.bucket = t.bucket
     ORDER BY t.bucket
     """,
-    "VOCABULARY GROWTH CURVE (Heaps-law saturation audit -- the "
-    "corpus-diversity readout that tells you whether the next chunk "
-    "of data still contributes new vocabulary or just repeats the "
-    "old): each word's FIRST occurrence via min(doc_id) groupBy (one "
-    "vocab-bounded shuffle -- the corpus's token stream never "
-    "re-pairs), new-word counts and token mass rolled to 50-doc "
-    "buckets, then cumulative token/vocab curves via windows over "
-    "the BUCKET axis (bounded by corpus/50 rows, never data-sized). "
-    "All integer arithmetic; the left join keeps buckets whose docs "
-    "introduce no new words",
     ("documents", "text", "analytics"),
 )
 def xcp_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary growth curve: each word's first doc via min(doc_id), new words and token mass per
+    50-doc bucket, cumulative curves over the bucket axis. All integers."""
     from pyspark.sql import Window as W
 
     t = _t(spark, sf_dir)
@@ -8689,6 +8138,7 @@ def xcp_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").cast("long").alias("n_tokens"),
     )
     j = tok_b.join(newv, "bucket", "left")
+    # Unpartitioned: one row per 50-doc bucket (corpus/50 rows), never data-sized.
     w_cum = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, W.currentRow)
     return j.select(
         "bucket",
@@ -8742,20 +8192,12 @@ def xcp_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS top_decile_share
     FROM terms
     """,
-    "TOKEN-MASS INEQUALITY (exact Gini + top-decile Lorenz share) "
-    "over per-document token counts -- the corpus-concentration "
-    "readout behind per-domain caps and length-balanced sampling "
-    "(a Gini near 1 means a few giant docs carry the token budget). "
-    "Scale-correct EXACT ranking without ranking anything: docs "
-    "collapse to (length value, count) runs -- one shuffle bounded by "
-    "DISTINCT lengths, never a data-sized global row_number -- and "
-    "the Gini rank formula's sum(i*x_i) is computed per run in closed "
-    "form (ranks R+1..R+c contribute v*(c*R + c(c+1)/2)), with the "
-    "run straddling the 90% rank threshold split arithmetically. "
-    "All integer; ratios integer-quantized; zero totals CASE-guarded",
     ("documents", "statistics", "text"),
 )
 def xcr_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Gini and top-decile share of per-document token counts: docs collapse to (length,
+    count) runs and sum(i*x_i) is computed per run in closed form. All integers, zero totals
+    guarded."""
     from pyspark.sql import Window as W
 
     t = _t(spark, sf_dir)
@@ -8770,6 +8212,7 @@ def xcr_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("c"),
         (F.col("v") * F.count(F.lit(1))).cast("long").alias("mass"),
     )
+    # Unpartitioned: one row per distinct length value, not per document.
     w_prev = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
     cum = runs.select(
         "v",
@@ -8846,20 +8289,12 @@ _BENFORD = {
     FROM exp_t e LEFT JOIN obs o ON o.digit = e.digit CROSS JOIN tot t
     ORDER BY e.digit
     """,
-    "BENFORD'S-LAW FIRST-DIGIT AUDIT (the forensic data-quality check "
-    "for fabricated or synthetically generated numeric columns: "
-    "organic multi-scale amounts follow P(d) = log10(1+1/d); uniform "
-    "generators don't): first digit extracted through integer-floor + "
-    "string head (exact on both engines -- never float log10 of a "
-    "stored double), observed shares integer-quantized against the "
-    "one-row broadcast total, compared to the 6dp Benford constants "
-    "with the deviation as |quantized - literal| (both operands exact "
-    "doubles, so the difference is engine-identical). The 9-row "
-    "digit spine LEFT JOINs observations so missing digits report 0. "
-    "Scale: one scan, one 9-key aggregation, broadcast total",
     ("orders", "quality", "statistics"),
 )
 def xcs_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benford first-digit audit: the first digit by integer floor + string head, observed shares
+    integer-quantized, and the deviation from 6dp Benford constants. A 9-row spine reports missing
+    digits as 0."""
     t = _t(spark, sf_dir)
     digits = t["orders"].filter(F.col("o_totalprice") >= 1).select(
         F.substring(
@@ -8934,22 +8369,12 @@ def xcs_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM idx x JOIN km k ON k.i = x.i
     ORDER BY t_day
     """,
-    "KAPLAN-MEIER SURVIVAL CURVE for time-to-conversion (first event "
-    "-> first purchase per user, administratively censored at a 3-day "
-    "follow-up horizon -- the censoring-aware statistic naive "
-    "conversion rates get wrong). Exact INTEGER KM: durations in "
-    "exact microseconds (never engine-divergent second/day diffs), "
-    "risk sets from cumulative counts over the distinct-time step "
-    "table (bounded by the horizon, never data-sized), and the "
-    "product-limit estimator as a STEPWISE integer fold S_i = "
-    "(S_{i-1} * (n_i - d_i)) div n_i at 1e-6 scale -- Spark folds a "
-    "sorted array with exact (a - pmod(a,n))/n division, the oracle "
-    "folds a recursive CTE; identical integers, no float product, no "
-    "ln. Deaths-before-censorings tie convention. Scale shape: one "
-    "scan, one user-keyed agg, then horizon-bounded arithmetic",
     ("events", "statistics", "timeseries"),
 )
 def xct_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kaplan-Meier time to first purchase, censored at 3 days: durations in exact microseconds and
+    the product-limit estimator as a stepwise integer fold at 1e-6 scale. Deaths before censorings
+    on ties."""
     from pyspark.sql import Window as W
 
     t = _t(spark, sf_dir)
@@ -8967,6 +8392,8 @@ def xct_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ev").cast("long").alias("d"),
         F.sum(1 - F.col("ev")).cast("long").alias("c"),
     )
+    # Unpartitioned: the windows run over the distinct-time step table, bounded by the follow-up
+    # horizon.
     w_prev = W.orderBy("t").rowsBetween(W.unboundedPreceding, -1)
     w_all = W.orderBy("t").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     idx = steps.select(
@@ -9036,21 +8463,12 @@ def xct_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
            num / 256.0 AS ewma_cents
     FROM lagged WHERE rn >= 8 ORDER BY day
     """,
-    "EXACT EWMA revenue smoothing with half-life decay (alpha = 1/2, "
-    "truncated at 8 taps): every weight is a power of two, so the "
-    "weighted sum is an INTEGER (sum of lag_k * 2^(7-k)) and the "
-    "smoothed value num/256 is a dyadic rational -- exact in binary "
-    "doubles on both engines, no float-power drift, unlike the "
-    "textbook recursive s_t = a*x_t + (1-a)*s_(t-1) whose float "
-    "rounding is order- and engine-dependent. Truncation bias is "
-    "bounded by max_rev/256 (documented, not hidden). Scale shape: "
-    "the per-day pre-aggregation is the only data-sized shuffle; the "
-    "8 lag taps share ONE window node over the bounded day axis. "
-    "First 7 days emit nothing (incomplete taps) rather than a "
-    "silently biased partial average",
     ("events", "timeseries", "statistics"),
 )
 def xcu_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EWMA of daily revenue with half-life weights truncated at 8 taps: the weighted sum is an
+    integer and value/256 is a dyadic rational, exact on both engines. The first 7 days emit
+    nothing."""
     from pyspark.sql import Window as W
 
     t = _t(spark, sf_dir)
@@ -9064,6 +8482,8 @@ def xcu_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev_cents")
         )
     )
+    # Unpartitioned: one row per day after the per-day pre-aggregation; the 8 lag taps share this
+    # one window.
     w = W.orderBy("day")
     num = None
     for k in range(8):
@@ -9126,20 +8546,12 @@ def xcu_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ELSE -((-fsum) // n_docs) END) / 1000.0 AS mean_flesch
     FROM agg ORDER BY lang
     """,
-    "FLESCH READING-EASE per language (the classic readability gate "
-    "corpus filters use alongside Gopher rules): 206.835 - 1.015*W/S "
-    "- 84.6*Y/W computed EXACTLY as one integer cross-multiplication "
-    "(206835*S*W - 1015*W^2 - 84600*Y*S over 1000*S*W) -- no float "
-    "ratio ever formed; syllables proxied by vowel-group counts "
-    "(regexp_extract_all, verified engine-identical), sentences by "
-    "[.!?]+ splits, all floor-guarded to >= 1. The score can go "
-    "NEGATIVE for dense text, so both the per-doc quantization and "
-    "the per-language mean are magnitude+sign decomposed (DuckDB // "
-    "floors, Spark div truncates -- the signed-division engine trap). "
-    "Scale: pure codegen projection + one lang-keyed aggregation",
     ("documents", "text", "quality"),
 )
 def xcv_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flesch reading ease per language as one integer cross-multiplication (no float ratio);
+    syllables from vowel groups, sentences from [.!?]+. Magnitude + sign division because the score
+    can be negative."""
     t = _t(spark, sf_dir)
     m = t["documents"].select(
         "lang",
@@ -9295,26 +8707,12 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 8) -> str:
 @query(
     "graph_kcore_onion",
     _kcore_oracle_sql(),
-    "K-CORE ONION DECOMPOSITION (bounded iterative vertex peeling — "
-    "the degree-based dual of the CC family's label propagation, and "
-    "the standard graph-QA lens for separating incidental periphery "
-    "from load-bearing dense structure): support-2 co-purchase edges "
-    "(distinct (order, part) items, within-order self-pairing bounded "
-    "by basket-size choose 2 — never a cross-catalog pairing), then up "
-    "to 8 simultaneous peels of every part whose degree among the "
-    "still-alive parts is < 2; layer = peel round, 0 = surviving core. "
-    "The 8-round cap makes the semantics a total function both engines "
-    "compute identically on ANY fixture (the oracle unrolls exactly 8 "
-    "alive sets; the Spark loop exits early at the fixpoint, which is "
-    "observationally identical) — converges in 3-5 rounds on all three "
-    "SFs today. Spark side: static both-directions edge list cached "
-    "pre-partitioned on the join key (never re-shuffles across "
-    "rounds), alive set shrinks monotonically (broadcast-sized once "
-    "peeling bites), one localCheckpoint per round bounds lineage; "
-    "data-driven round count — CC-family member for the jobs baseline",
     ("lineitem", "graph", "analytics"),
 )
 def graph_kcore_onion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-core onion layers of the support-2 co-purchase graph: up to 8 peels of parts with degree <
+    2; layer = peel round, 0 = core. The oracle unrolls exactly 8 rounds; the engine stops at the
+    fixpoint."""
     from .operators.graph import kcore_onion
 
     t = _t(spark, sf_dir)
@@ -9379,32 +8777,12 @@ def graph_kcore_onion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM emd
     ORDER BY c_nationkey, c_mktsegment
     """,
-    "T-CLOSENESS audit — the third classic privacy gate after "
-    "k-anonymity (x92) and l-diversity (x95): within each "
-    "quasi-identifier group (nation, market segment), how FAR is the "
-    "sensitive-attribute distribution (the same engine-exact $1000 "
-    "account-balance band as x95) from the global distribution — a "
-    "small group whose distribution mirrors the population leaks "
-    "nothing even at l=1, while a skewed one leaks despite passing "
-    "both earlier gates. Distance is the ordered-attribute EMD "
-    "(1/(m-1) * sum |cumsum(p-q)|), computed EXACTLY in integers: "
-    "per-band diff = cnt_g*N - cnt_all*grp_sz (numerator over the "
-    "common denominator grp_sz*N), windowed cumulative sum, |.|, "
-    "summed per group, then ONE integer-quantized division and the "
-    "t=0.2 flag as an integer cross-multiplication — no float "
-    "arithmetic anywhere before the final 6dp emission, so both "
-    "engines compute identical bits (the denominators fit BIGINT up "
-    "to ~1e9-row corpora; beyond that pre-quantize the per-band "
-    "probabilities). Scale shape: two map-side-combinable "
-    "aggregations over the fact table; the spine/window work runs on "
-    "the AGGREGATED (|QI-groups| x bands) table only; the global band "
-    "histogram and (N, m) scalars ride one broadcast each — never a "
-    "driver collect. Unlike x68's PSI (two time-snapshots of one "
-    "feature, log-ratio sum), this compares every QI GROUP against "
-    "the corpus under an order-aware ground distance",
     ("quality", "governance"),
 )
 def governance_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """t-closeness audit: ordered EMD between each (nation, segment) group's balance-band
+    distribution and the global one, in exact integers over a common denominator, one quantized
+    division, t=0.2 flag."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -9477,6 +8855,8 @@ def governance_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         "grp_sz",
         F.when(F.col("t_den") == 0, F.lit(0.0))
+        # The denominators fit BIGINT up to ~1e9-row corpora; beyond that, pre-quantize the
+        # per-band probabilities.
         .otherwise(F.expr("cast(t_num * 1000000 div t_den as bigint)") / 1e6)
         .alias("emd"),
         (F.col("t_num") * 5 > F.col("t_den")).alias("violates"),
@@ -9512,32 +8892,12 @@ def governance_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS credited_cents
     FROM j GROUP BY channel ORDER BY channel
     """,
-    "LINEAR (multi-touch) attribution with EXACT integer apportionment "
-    "— the equal-credit complement of the last-touch family (x77/xcd "
-    "pick one winning touch; this SPLITS the purchase value across "
-    "every touch in the 7-day lookback): per purchase, each of its n "
-    "touches gets cents div n, and the cents mod n remainder goes to "
-    "the most recent touches (largest-remainder / Hamilton "
-    "apportionment, recency rank as the deterministic tie-break) — so "
-    "credit per purchase sums EXACTLY to the purchase cents, no float "
-    "splits, no lost pennies, engine-identical bits. Lookback compared "
-    "in MICROSECONDS (epoch_us vs timestamp_diff — exact on both "
-    "engines; second-granularity date_diff counts boundary crossings). "
-    "Scale shape (r10 skew hardening): the join key is (user, calendar "
-    "WEEK bucket) — each touch is exploded to its own bucket and the "
-    "next, each purchase joins on its own — so a bot-grade hot user's "
-    "history splits across weeks instead of fanning out |purchases| x "
-    "|touches| under one key (the classic skew stall the r9 verdict "
-    "flagged); the bucket is floor(days-since-epoch / 7) from the NAIVE "
-    "calendar date, DST-immune and Spark-internal only (the exact "
-    "micros predicate still decides membership, so the oracle keeps the "
-    "plain user join and results are bit-identical). Residual per-key "
-    "fan-out is one week of one user's activity — the bound the 7-day "
-    "lookback itself imposes. Two windows over the per-purchase "
-    "partitions (pid is unique, skew-free), one map-side channel rollup",
     ("events", "analytics"),
 )
 def xe8_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linear attribution: each purchase's cents split over its touches in a 7-day microsecond
+    lookback, cents div n each with the remainder to the latest touches, so credit sums exactly to
+    the purchase."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -9638,22 +8998,12 @@ def xe8_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pick WHERE rk = 1
     ORDER BY event_type
     """,
-    "CUSUM CHANGEPOINT detection per event type (ingestion-shift "
-    "monitoring — 'WHEN did the daily volume regime change': x68's PSI "
-    "answers whether two snapshots differ, x37/xcu smooth or flag "
-    "single points; CUSUM localizes the shift): per-day deviations "
-    "from the per-type mean kept EXACT as integers (dev = n*c - S over "
-    "the common denominator n, so no float mean), a windowed running "
-    "sum, and the changepoint = the day of the maximum |CUSUM| "
-    "(earliest-day tie-break); the normalized shift score does ONE "
-    "integer-quantized division at the end and the direction is a "
-    "sign column (the r6 magnitude+sign rule — never floor a signed "
-    "value). Scale shape: one map-side-combinable daily rollup over "
-    "the fact table; every window runs on the (types x days) "
-    "aggregate. DATE output CAST on both sides (the r7 xb4 rule)",
     ("events", "analytics", "quality"),
 )
 def xdr_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM changepoint per event type: exact integer deviations n*c - S, a running sum, the day
+    of max |CUSUM| (earliest tie), one quantized division for the score and a separate sign
+    column."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -9764,26 +9114,12 @@ def xdr_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN longest l ON l.doc_id = n.doc_id
     ORDER BY n.doc_id
     """,
-    "VARIABLE-LENGTH duplicated-substring regions (the Lee et al. 2022 "
-    "ExactSubstr cut-list, new r10 — the genuine extension of x60's "
-    "fixed-span occurrence stats): a word position is covered when its "
-    "8-gram occurs in >= 2 distinct docs, and covered windows merge into "
-    "MAXIMAL regions by gaps-and-islands (new region iff the gap between "
-    "consecutive covered starts exceeds 8 — overlapping/touching windows "
-    "fuse, so a 100-word copied paragraph reports as ONE ~100-word "
-    "region where x60 counts 93 occurrences). Per doc: region count, "
-    "exact union word coverage (never double-counted), longest region's "
-    "length and 1-based start (rank tie-break: longest then earliest), "
-    "integer-quantized coverage fraction and a 30%-coverage flag via "
-    "integer cross-multiplication. Suffix-array-free: one map-side span "
-    "kernel, one groupBy(span_h) + hash semi-join back, one "
-    "doc-partitioned window over covered positions only, and the region "
-    "rollup + per-doc stats reuse that partitioning — O(total tokens), "
-    "no iteration (region merging is a single window, not a fixpoint "
-    "loop)",
     ("dedup", "text"),
 )
 def dedup_span_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maximal duplicated-substring regions (Lee et al. ExactSubstr): covered 8-gram positions
+    merged by gaps-and-islands; per doc region count, exact word coverage, longest region and a 30%
+    flag."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -10085,27 +9421,12 @@ def _bpe_fertility_sql(rounds: int) -> str:
 @query(
     "xd7_bpe_learn_rounds",
     _bpe_rounds_sql(5),
-    "BPE tokenizer induction, 5 BOUNDED merge rounds (the multi-round "
-    "extension of xa0's round-1 candidate count — the r9 verdict's "
-    "named alternative flagship): per round, exact corpus-weighted "
-    "adjacent-position pair counts over the exploded VOCABULARY "
-    "(overlaps included, the Sennrich et al. 2016 reference counting), "
-    "argmax with (count DESC, left, right) deterministic tie-break, "
-    "then greedy LEFT-TO-RIGHT NON-OVERLAPPING application as a "
-    "window-only pass — candidate islands (consecutive candidates "
-    "exist only for left==right symbol runs) keep their odd-indexed "
-    "members, drop-the-successor via lag, re-densify positions with "
-    "row_number; no HOF fold, no per-round join. State is "
-    "vocabulary-bounded (corpus touched once for word counts) and "
-    "localCheckpoint-truncated per round with a one-row argmax collect "
-    "(the measured kmeans pattern — in-plan broadcast argmax re-plans "
-    "per round). Oracle = 5 unrolled MATERIALIZED CTE rounds (the "
-    "kcore recipe). Emits (round, left_sym, right_sym, merged, "
-    "n_occurrences, symbols_after); fewer rows if pairs run out — the "
-    "bounded-cap total-function posture",
     ("text", "pipeline"),
 )
 def xd7_bpe_learn_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE induction, 5 bounded merge rounds: exact weighted pair counts over the vocabulary,
+    argmax with (count DESC, left, right) tie-break, greedy left-to-right non-overlapping
+    application."""
     t = _t(spark, sf_dir)
     return text_ops.bpe_learn(t["documents"], rounds=5).orderBy("round")
 
@@ -10150,25 +9471,12 @@ def _geom_dp_case_sql(u: str) -> str:
     FROM noise
     ORDER BY c_nationkey, c_mktsegment
     """,
-    "DIFFERENTIAL-PRIVACY release mechanism (geometric / discrete "
-    "Laplace at epsilon=1, sensitivity-1 counting query) — the fourth "
-    "member of the governance family: x92/x95/xd0 AUDIT re-identification "
-    "risk, this one RELEASES the per-(nation, segment) histogram with "
-    "integer noise plus small-count suppression (n < 5 -> sentinel -1, "
-    "never a NULL BIGINT: a nullable int column degrades to float64+NaN "
-    "through BOTH engines' pandas paths). Noise is the exact geometric "
-    "inverse-CDF over literal per-million thresholds computed once in "
-    "python (the xcl Poisson idiom — no transcendentals at query time, "
-    "engine-identical bits), seeded from the portable md5 of the group "
-    "key: DETERMINISTIC by construction so oracle/rerun agree — a "
-    "production release would draw the seed from a secret, the mechanism "
-    "and plan are unchanged. Scale shape: one map-side-combinable "
-    "groupBy over the fact table; noise + suppression are per-GROUP "
-    "column expressions on the aggregate — corpus-size-free after the "
-    "rollup",
     ("quality", "governance"),
 )
 def xd8_dp_geometric_release(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Differentially private (eps=1) per-(nation, segment) counts: geometric noise from literal
+    thresholds seeded by the md5 of the group key, counts < 5 suppressed to -1. Deterministic, so
+    the oracle agrees."""
     t = _t(spark, sf_dir)
     grp = t["customer"].groupBy("c_nationkey", "c_mktsegment").agg(
         F.count(F.lit(1)).cast("long").alias("n_true")
@@ -10225,25 +9533,11 @@ def xd8_dp_geometric_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) p ON p.doc_id = d.doc_id
     ORDER BY d.doc_id
     """,
-    "BPE corpus SEGMENTATION with the learned merges (the consumer side "
-    "of xd7's tokenizer induction, new r10): learn the same 5 merges "
-    "(min_word_len=1 — length-1 words carry no adjacent pairs, so the "
-    "learned merges are IDENTICAL to the length>=2 vocabulary's while "
-    "the converged state now covers every word), then each word's BPE "
-    "token count is simply its symbol-row count in the converged state, "
-    "joined back to the exploded corpus stream and rolled up per "
-    "document: whitespace words, character mass, learned-subword token "
-    "count and the integer-quantized tokens-per-char ratio — the budget "
-    "metric an LLM pipeline allocates by (doc_stats' n_bpe_ish is the "
-    "fixed-regex approximation; this is the real learned segmentation). "
-    "Scale shape: the learn loop stays vocabulary-bounded; segmentation "
-    "adds ONE corpus-stream explode + a vocab-keyed equi-join (the "
-    "word->n_tok table is vocabulary-sized, broadcastable at any corpus "
-    "scale) + one doc rollup. Oracle reuses the unrolled MATERIALIZED "
-    "chain at min_len=1 and reads the converged s5 state",
     ("text", "pipeline"),
 )
 def bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE segmentation of the corpus with the 5 learned merges: per-doc words, characters,
+    learned-token count and the integer-quantized tokens-per-char ratio."""
     t = _t(spark, sf_dir)
     return text_ops.bpe_segment(
         t["documents"], rounds=5, min_word_len=1
@@ -10280,28 +9574,12 @@ def bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tot
     ORDER BY segment, fold
     """,
-    "K-FOLD TARGET ENCODING (leakage-free categorical feature prep — "
-    "the ML-pipeline companion to xck feature hashing and xab "
-    "equi-depth bucketing): each order lands in one of 5 deterministic "
-    "folds (portable md5 of the order key), and a category's encoding "
-    "for fold f is the target mean computed WITHOUT fold f's own rows "
-    "(out-of-fold: (sum_all - sum_fold) / (n_all - n_fold)) — the "
-    "standard guard against target leakage when the encoded feature "
-    "feeds a model trained on the same rows. Exact integer cents "
-    "end-to-end: per-(segment, fold) BIGINT sums, segment totals via a "
-    "window over the 25-row aggregate (never a totals self-join — the "
-    "xb9/xce rule), ONE quantized division per output value at 2dp "
-    "(cents are integral, so /1e2 of an integer division is "
-    "engine-exact), empty-complement CASE-guarded on both engines "
-    "(ANSI x/0 is an error in Spark, inf in DuckDB — the x73 rule). "
-    "Scale shape: one fact-dim equi-join (customer side broadcastable), "
-    "one map-side-combinable rollup; all window/divide work on the "
-    "|segments| x |folds| aggregate. BIGINT headroom: sum(cents) "
-    "* 100 stays under 2^63 up to ~1e9 orders; beyond that, quantize "
-    "the per-fold means first",
     ("quality", "pipeline"),
 )
 def xda_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Out-of-fold target encoding over 5 hash folds: per-segment mean order value excluding the
+    fold's own rows, in exact integer cents with one quantized division; empty complements
+    guarded."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -10344,6 +9622,8 @@ def xda_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_all") - F.col("n_fold")).alias("n_oof"),
         F.when(F.col("n_all") - F.col("n_fold") == 0, F.lit(0.0))
         .otherwise(
+            # BIGINT headroom: sum(cents) * 100 stays under 2^63 up to ~1e9 orders; beyond that,
+            # quantize the per-fold means first.
             F.expr("cast((sum_all - sum_fold) * 100 div (n_all - n_fold) as bigint)") / 1e2
         )
         .alias("oof_mean_cents"),
@@ -10403,29 +9683,12 @@ def xda_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM mu m JOIN q ON q.segment = m.segment JOIN test t ON t.segment = m.segment
     ORDER BY m.segment
     """,
-    "SPLIT-CONFORMAL prediction intervals with a finite-sample coverage "
-    "audit (Vovk et al. / Lei et al. split conformal — the ML-eval "
-    "family's distribution-free guarantee, next to xcl's bootstrap CI "
-    "and x73's A/B readout): a deterministic 60/20/20 hash split "
-    "(train/calibration/test) of orders; the per-segment predictor is "
-    "the train-split mean in integer cents (floor division — exact both "
-    "engines on non-negative operands); the conformal radius is the "
-    "EXACT ceil(0.9*(n_cal+1))-th smallest absolute calibration "
-    "residual, picked by a deterministic rank window (residual, "
-    "orderkey tie-break; k capped at n_cal via least, ceil as "
-    "(9*(n+1)+9)//10 on non-negative ints); held-out coverage is then "
-    "audited on the test split with an integer-quantized ratio and an "
-    "80%-floor integer cross-multiplied flag (the guarantee is >= 90% "
-    "marginal coverage in expectation; a finite test split fluctuates, "
-    "hence the loose audit floor). Scale shape: one fact-dim join, one "
-    "train rollup; the rank window runs per segment over the "
-    "CALIBRATION split only (20% of rows) — at larger scale swap the "
-    "exact order statistic for operators/quantiles' histogram path; "
-    "the (segment -> mu, q) tables are |segments| rows, broadcast by "
-    "AQE",
     ("quality", "pipeline"),
 )
 def xfb_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split-conformal intervals on a 60/20/20 hash split: train-mean predictor in integer cents,
+    radius = exact ceil(0.9(n_cal+1))-th calibration residual, and test coverage with an 80%-floor
+    flag."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -10474,6 +9737,8 @@ def xfb_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("segment").alias("__rseg"),
         "resid",
         F.row_number()
+        # Exact order statistic over the calibration split (20% of rows) per segment; at larger
+        # scale use operators/quantiles' histogram path.
         .over(W.partitionBy("segment").orderBy("resid", "o_orderkey"))
         .alias("rk"),
     )
@@ -10574,32 +9839,11 @@ def _ndcg_w_case_sql(rk: str) -> str:
            END AS ndcg_at_10
     FROM ranked GROUP BY n_name ORDER BY n_name
     """,
-    "nDCG@10 RANKING EVALUATION (the IR-eval closer for the ranking "
-    "family — x91 Borda and xco RRF PRODUCE rankings, x63 BM25 scores "
-    "relevance; nothing evaluated one until now): per nation, the "
-    "'system' ranks suppliers by exact revenue cents and is judged "
-    "against graded relevance = the supplier's order-reach quartile "
-    "(ntile(4), deterministic (n_orders DESC, suppkey) tie-break; "
-    "gains 2^rel - 1 in {{0,1,3,7}}). DCG and ideal-DCG are EXACT "
-    "integer dot products: positional discounts floor(1e9/log2(rk+1)) "
-    "are LITERAL integers computed once in python (the xd8 threshold "
-    "idiom; formula-pinned) — no query-time logarithms on either "
-    "engine — and nDCG is ONE quantized division with a zero-IDCG "
-    "CASE guard. Scale shape: one fact rollup (supplier/nation dims "
-    "join AQE-chosen), three windows + one groupBy on the "
-    "(nation x supplier) AGGREGATE — corpus-size-free after the "
-    "rollup; revenue (the system's internal sort key) kept exact via "
-    "the integer-cents discount product: per-row round(price*100) and "
-    "round(disc*100) each quantize a value whose TRUE magnitude is an "
-    "integer (never near a half), then cents * (100 - disc_pct) "
-    "multiplies and sums pure BIGINTs — the r8 FIFTH-latent-safe form, "
-    "no float ever rounded at its own precision (r11 review: an "
-    "earlier draft rounded the float product price*(100-d), which is "
-    "provably engine-identical for non-negative values but "
-    "float-bearing; the integer form needs no proof)",
     ("quality", "analytics"),
 )
 def xdc_ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """nDCG@10 per nation: suppliers ranked by exact revenue cents, judged against order-reach
+    quartile relevance. DCG terms use literal integer discounts; nDCG is one quantized division."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -10718,30 +9962,11 @@ def xdc_ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM arms a CROSS JOIN th t
     ORDER BY a.arm
     """,
-    "CUPED variance-reduced A/B readout (Deng et al. 2013 — the "
-    "experimentation family's continuous-metric upgrade: x73 reads out "
-    "binary conversion proportions, this adjusts a REVENUE metric with "
-    "each user's own pre-period behavior): per user, x = pre-period "
-    "(day<=15) and y = experiment-period (day>15) purchase dollars "
-    "(floor(value) — exact integers both engines, no halfway rounding), "
-    "theta = cov(x,y)/var(x) from POOLED exact BIGINT sums (c_num = "
-    "N*Sxy - Sx*Sy over d_den = N*Sxx - Sx^2), and per-arm adjusted "
-    "mean = mean_y - theta*(mean_x_arm - mean_x_pooled). Every division "
-    "is exact-BIGINT in / exact-BIGINT out to IEEE doubles in ONE fixed "
-    "expression tree mirrored verbatim in the oracle — the x37/xce "
-    "idiom: correctly-rounded ops over identical integers give "
-    "bit-identical doubles, so the raw doubles ship unrounded. "
-    "var_reduction = rho^2 = c_num^2/(d_den*y_den) reported alongside "
-    "(the fraction of metric variance CUPED removes). Degenerate "
-    "zero-variance denominators CASE-guarded on both engines (x73 "
-    "rule). BIGINT headroom: N*Sxy at dollar scale fits to ~1e5 users "
-    "x 1e4-dollar user totals; beyond that pre-scale the covariate. "
-    "Scale shape: one user rollup, one 2-row arm rollup, pooled sums "
-    "ride a broadcast one-row cross join — corpus-size-free after the "
-    "first aggregation",
     ("events", "analytics", "quality"),
 )
 def xdd_cuped_ab_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUPED A/B readout: theta = cov(x, y)/var(x) from pooled exact BIGINT sums of floor-dollar
+    spends, per-arm adjusted means as one fixed double expression, zero denominators guarded."""
     t = _t(spark, sf_dir)
     ev = t["events"]
     is_purch = (F.col("event_type") == "purchase") & F.col("value").isNotNull()
@@ -10780,6 +10005,8 @@ def xdd_cuped_ab_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nn",
         "sx",
         "sy",
+        # BIGINT headroom: nn * sxy at dollar scale fits to ~1e5 users x 1e4-dollar user totals;
+        # beyond that pre-scale the covariate.
         (F.col("nn") * F.col("sxy") - F.col("sx") * F.col("sy")).alias("c_num"),
         (F.col("nn") * F.col("sxx") - F.col("sx") * F.col("sx")).alias("d_den"),
         (F.col("nn") * F.col("syy") - F.col("sy") * F.col("sy")).alias("y_den"),
@@ -10868,26 +10095,12 @@ def xdd_cuped_ab_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nw n LEFT JOIN per p ON p.doc_id = n.doc_id
     ORDER BY n.doc_id
     """,
-    "DUPLICATED-REGION APPLICATION (the cut step that completes the "
-    "Lee et al. pipeline — xd6 finds the maximal regions, this REMOVES "
-    "them and value-checks the surviving text): every word position "
-    "inside any maximal duplicated region is cut from every holder (the "
-    "conservative both-copies policy — a keep-one policy needs a "
-    "canonical owner per region, which overlapping region sets make "
-    "ill-defined; pipelines wanting keep-one apply doc-level dedup "
-    "first, dedup_apply), and the CLEANED document is verified by md5 "
-    "of the kept words joined in position order — the hash proves the "
-    "reconstruction (order, spacing, completeness), not just the "
-    "counts. Covered positions come from exploding each region's "
-    "bounded word range (equi-join against the word stream — never a "
-    "per-doc range join); empty survivors coalesce to md5('') on both "
-    "engines (DuckDB string_agg over zero rows is NULL where Spark's "
-    "array_join is '' — the r5 rule). Scale shape: xd6's plan plus one "
-    "positions explode bounded by total duplicated words, one word-"
-    "stream anti-join on (doc, pos), one ordered per-doc rollup",
     ("dedup", "text", "pipeline"),
 )
 def dedup_region_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cut every word inside a maximal duplicated region from every holder and verify the cleaned
+    text by md5 of the kept words in position order. Empty survivors hash md5('') on both
+    engines."""
     t = _t(spark, sf_dir)
     docs = t["documents"]
     runs = dedup_ops.dup_span_runs(docs, span_words=8, min_docs=2)
@@ -10928,30 +10141,12 @@ def dedup_region_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "bpe_encode_frozen",
     _bpe_encode_sql(5),
-    "FROZEN-TABLE BPE ENCODING of unseen text (the r10 verdict's named "
-    "flagship — the production encode path xd7/bpe_segment_corpus left "
-    "open: segmentation joins the training corpus to its OWN converged "
-    "state, while a shipped tokenizer applies a frozen priority-ranked "
-    "merge table to text the learner never saw): documents hash-split "
-    "80/20 (portable md5, the x19 idiom); 5 merges learned on the TRAIN "
-    "split only (text._bpe_iterate); the heldout split is encoded by "
-    "applying the frozen pairs as 5 rank-ordered literal-pair window "
-    "passes (text.bpe_encode) — rank order equals the classic min-rank "
-    "apply loop because a formation-ordered table's pairs containing a "
-    "merged symbol always rank later (min-rank-loop python replica "
-    "pinned). Per heldout doc: words, BPE tokens, MERGED tokens (length "
-    ">= 2 — proof the frozen table fired on unseen text), quantized "
-    "tokens-per-word. Scale shape: learning stays vocabulary-bounded on "
-    "the train split; the frozen apply is COLLECT-FREE — k literal-pair "
-    "island passes all partitioned by w (ONE exchange for the whole "
-    "chain, no checkpoints — contrast the learn loop's per-round "
-    "argmax), then one vocab-sized broadcastable token-count join and "
-    "one doc rollup. Oracle: the learn chain over the train split plus "
-    "an e0..e5 encode chain with LEFT JOIN ON true pair broadcasts "
-    "(rounds past convergence pass state through — the r11 rule)",
     ("text", "pipeline"),
 )
 def bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frozen-table BPE encoding: 5 merges learned on an 80% hash split, applied in rank order to
+    the held-out 20%. Per held-out doc: words, BPE tokens, merged tokens and quantized
+    tokens-per-word."""
     t = _t(spark, sf_dir)
     docs = t["documents"]
     bucket = F.pmod(
@@ -11017,37 +10212,12 @@ def bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked r CROSS JOIN nd n
     ORDER BY r.doc_id
     """,
-    "DSIR-STYLE IMPORTANCE SELECTION (Xie et al. 2023, Data Selection "
-    "via Importance Resampling — the data-SELECTION gap in the pipeline "
-    "family: x66 scores fluency against the corpus's own unigram LM, "
-    "xdt_data_mixture resamples to target LANGUAGE proportions; this "
-    "selects documents whose unigram feature distribution matches a "
-    "TARGET domain): target = the English subcorpus, source = the full "
-    "corpus; per-word importance = ln(p_target(w)/p_source(w)) under "
-    "add-one smoothing over the joint vocabulary, quantized to SIGNED "
-    "integer micro-nats ONCE at the vocab level (the x66 idiom — "
-    "per-doc sums are then exact integers no summation order can "
-    "flip; floor on the signed value is engine-identical given "
-    "identical doubles, and no symmetric threshold touches individual "
-    "q values — the r6 magnitude rule concerns thresholds, not "
-    "ranking); the ln argument is ONE division of two exact BIGINT "
-    "products (single rounding, fixture-pinned clear of floor "
-    "boundaries like x66/x68/xb3); per-doc importance = exact integer "
-    "sum, selection = top-20% by (importance DESC, doc_id) with the "
-    "quota as an integer cross-multiplication (rank*5 <= n_docs, "
-    "broadcast one-row count fold). Scale shape: vocab stats via ONE "
-    "agg over a broadcast-marked left join (count(1) + count(marker), "
-    "the decontaminate idiom), vocab-sized broadcastable q join back "
-    "to the word stream, one doc rollup; the global rank window runs "
-    "over the DOC-level aggregate — swap in the quantile-histogram "
-    "threshold (xab) at corpus scales where that window matters. "
-    "BIGINT headroom: (ct+1)*(ns+v) at ~1e9 tokens is ~1e18 — near "
-    "the edge; at larger corpora split the ln into "
-    "ln(ct+1)-ln(cs+1)+ln(ns+v)-ln(nt+v) (docstring-noted, not needed "
-    "at fixture scale)",
     ("text", "pipeline", "quality"),
 )
 def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR importance selection toward the English subcorpus: per-word ln(p_target/p_source) with
+    add-one smoothing, quantized to signed micro-nats once per word, exact per-doc sums, top 20% by
+    (importance, doc_id)."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -11075,6 +10245,8 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word",
         F.floor(
             F.log(
+                # BIGINT headroom: (ct+1)*(ns+v) is ~1e18 at ~1e9 tokens; at larger corpora split
+                # the ln into ln(ct+1) - ln(cs+1) + ln(ns+v) - ln(nt+v).
                 ((F.col("ct") + 1) * (F.col("ns") + F.col("v")))
                 / ((F.col("cs") + 1) * (F.col("nt") + F.col("v")))
             )
@@ -11104,6 +10276,8 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "sel_rank",
             F.row_number()
+            # Global rank over the doc-level aggregate (one row per document); where that matters,
+            # use the quantile-histogram threshold of xab.
             .over(W.orderBy(F.col("imp_q").desc(), "doc_id"))
             .cast("long"),
         )
@@ -11125,24 +10299,12 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "xdl_bpe_fertility_by_lang",
     _bpe_fertility_sql(5),
-    "TOKENIZER FERTILITY BY LANGUAGE (the standard tokenizer-evaluation "
-    "readout, consumer of xdj's frozen-table encode path): the same "
-    "80/20 split and 5 train-split merges, heldout docs encoded under "
-    "the frozen table, then rolled up PER LANGUAGE — docs, words, "
-    "tokens, merged-subword tokens, fertility (tokens per word) and "
-    "merged fraction, both integer-quantized ratios of exact BIGINT "
-    "sums. A corpus-level fertility table is how multilingual "
-    "pipelines detect a tokenizer starving a language (high fertility "
-    "= more tokens per word = less content per context window); the "
-    "single-language merges learned here make non-en fertility "
-    "visibly worse — exactly the readout's purpose. Scale shape: "
-    "identical to xdj (vocab-bounded learn, collect-free frozen "
-    "apply, broadcastable token-count join) plus one "
-    "|langs|-cardinality rollup; oracle shares the e0..e5 encode "
-    "chain generator and appends its own per-lang final",
     ("text", "pipeline", "quality"),
 )
 def xdl_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer fertility per language: held-out docs encoded with 5 frozen train-split merges,
+    then docs, words, tokens, merged tokens, fertility and merged fraction as integer-quantized
+    ratios."""
     t = _t(spark, sf_dir)
     docs = t["documents"]
     bucket = F.pmod(
@@ -11240,26 +10402,12 @@ def _rbo_sw_case_sql(m: str) -> str:
                 // {_RBO_MAXQ} AS BIGINT) / 1e6 AS rbo_norm
     FROM ranked GROUP BY n_name ORDER BY n_name
     """,
-    "RANK-BIASED OVERLAP between two rankings (Webber et al. 2010 — "
-    "the rank-AGREEMENT closer for the IR-eval family: xdc judges one "
-    "ranking against graded relevance, this measures how much two "
-    "rankings agree, top-weighted): per nation, suppliers ranked by "
-    "exact revenue vs by order reach; truncated RBO@10 with p=0.9. "
-    "The whole metric is ONE aggregation — an item whose worse rank "
-    "m = max(rank_a, rank_b) <= 10 is in both depth-d prefixes for "
-    "every d >= m, so its total contribution is the SUFFIX SUM "
-    "SW[m] = sum(W[m..10]) of the literal per-depth weights "
-    "floor((1-p)p^(d-1)/d * 1e12) — exact integers computed once in "
-    "python (9^(d-1)*1e12 // (d*10^d), no query-time powers), "
-    "formula-pinned, BIGINT throughout (the r10 INT32 lesson); "
-    "rbo_norm divides by the literal truncated maximum sum(d*W[d]) "
-    "with ONE integer-quantized division. Both row_number orders are "
-    "unique (suppkey tie-break); no depth explode, no float until "
-    "the final /1e6. Scale shape: xdc's fact rollup + two windows + "
-    "one groupBy on the (nation x supplier) aggregate",
     ("quality", "analytics"),
 )
 def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank-biased overlap @10 (p=0.9) per nation between supplier rankings by revenue and by order
+    reach, in one aggregation over literal integer suffix-sum weights and one quantized
+    normalisation."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -11337,24 +10485,12 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 * 1000000) AS BIGINT) END / 1e6 AS spearman_rho
     FROM s
     """,
-    "SPEARMAN RANK CORRELATION (the monotone-association closer next "
-    "to x84's Pearson on the same per-user frame — Pearson sees only "
-    "linear association; Spearman is Pearson on average ranks, robust "
-    "to the heavy-tailed count distributions events produce): tied "
-    "ranks via the exact integer identity 2*avg_rank = 2*rank() + "
-    "tie_count - 1, CENTERED by the exact mean 2*(n+1)/2 (rank sums "
-    "are tie-invariant, so sum(cx) == 0 exactly and the Pearson "
-    "numerator collapses to sum(cx*cy)); all moments exact BIGINT "
-    "sums of integer products, rho = ONE fixed double expression over "
-    "identical integers (sqrt(s_xx)*sqrt(s_yy), two exact-BIGINT "
-    "sqrts instead of sqrt of the overflowing product — headroom to "
-    "~2e5 users, then 4n^3 nears 2^63 and the moments pre-scale), "
-    "floor-quantized at 1e-6 (the x84 idiom), zero-variance guarded "
-    "on both sides. The rank windows run over the per-user AGGREGATE "
-    "(xab histogram swap at user scales where that matters)",
     ("events", "analytics"),
 )
 def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spearman rho between per-user click and purchase counts: doubled average ranks as exact
+    integers, exact centered BIGINT moments, rho as one double expression floor-quantized at 1e-6,
+    zero variance guarded."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -11370,6 +10506,7 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
+    # The unpartitioned rank windows run over the per-user aggregate (one row per user).
     n_all = F.count(F.lit(1)).over(W.partitionBy()).cast("long")
 
     def c2(col: str):
@@ -11395,6 +10532,8 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.expr(
                 "CASE WHEN s_xx = 0 OR s_yy = 0 THEN 0"
+                # Two sqrts instead of sqrt(s_xx * s_yy), whose product overflows; headroom to ~2e5
+                # users, then 4n^3 nears 2^63 and the moments must pre-scale.
                 " ELSE CAST(floor(s_xy * 1.0 / (sqrt(s_xx * 1.0) * sqrt(s_yy * 1.0))"
                 " * 1000000) AS BIGINT) END"
             )
@@ -11472,31 +10611,12 @@ def _power_iter_sql(rounds: int) -> str:
 @query(
     "pca_power_iteration",
     _power_iter_sql(5),
-    "TOP PRINCIPAL COMPONENT by POWER ITERATION over the embedding "
-    "gram matrix (the ML-linear-algebra closer next to xb6 centroids "
-    "and the IVF family — v_{k+1} ~ X^T(Xv_k), 5 bounded rounds, "
-    "never materializing the dim x dim covariance): every seam is "
-    "EXACT INTEGERS — per-term products floor(comp * int) are exact "
-    "doubles (float32 24-bit mantissa x |int| < 2^28 fits 53 bits; "
-    "|comp| < 1 fixture-pinned), so the per-vector dots and per-dim "
-    "matvec sums are order-independent BIGINT sums with NO float "
-    "boundary anywhere (contrast the x66 ln class, which needs "
-    "boundary contracts); renormalization is magnitude+sign integer "
-    "division by the max component (G-shrink guards (m*1e6) overflow "
-    "past ~1e12-scale iterates). Spark runs the measured kmeans "
-    "pattern — per round two aggregations over the vec_id-partitioned "
-    "persisted stream and ONE 64-int collect re-emitted as a literal "
-    "array (in-plan iterate joins re-plan broadcast subtrees and "
-    "benched 2-4x slower on the same shape); the oracle runs the "
-    "identical integer chain as unrolled MATERIALIZED CTEs. "
-    "Convergence note: fixture vectors are isotropic-random (tiny "
-    "eigengap), so 5 rounds demonstrate the MECHANISM (x41's "
-    "posture); real embedding spectra converge fast. Python replica "
-    "pinned (the oracle mirrors the expression, so the hash gate "
-    "alone cannot catch a mirrored math bug)",
     ("similarity", "analytics"),
 )
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top principal component of the embeddings by 5 rounds of power iteration over exact integer
+    products and sums, renormalized by magnitude + sign integer division. The oracle runs the same
+    integer chain."""
     import numpy as np
 
     t = _t(spark, sf_dir)
@@ -11541,6 +10661,8 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("pos")
             .agg(F.sum("u").cast("long").alias("wq"))
         )
+        # One 64-int collect per round, re-emitted as a literal array: in-plan iterate joins
+        # re-plan broadcast subtrees and ran 2-4x slower.
         wq_rows = sorted((r.pos, r.wq) for r in w.collect())
         wq = [int(q) for _, q in wq_rows]
         M = max(max(abs(q) for q in wq), 1)
@@ -11591,27 +10713,11 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM est
     ORDER BY exact_n DESC, w
     """,
-    "COUNT-MIN SKETCH (Cormode & Muthukrishnan 2005 — completes the "
-    "sketch family next to x44 HLL cardinality, x45 Misra-Gries heavy "
-    "hitters and the MinHash/SimHash signatures): 4 rows x 256 buckets "
-    "of portable-md5 counters built in ONE map-side-combinable "
-    "aggregation over the word stream (the sketch is 1024 cells — "
-    "mergeable across shards/streams by cell-wise addition, the "
-    "production use), then the top-10 exact words are probed back: "
-    "estimate = min over the 4 rows of the word's bucket counter, "
-    "verified in-query against the exact counts with the structural "
-    "guarantee cms_est >= exact_n (CMS never underestimates) shipped "
-    "as a column. All integers end-to-end; ONE portable md5 per word "
-    "with four independent 6-hex-digit slices as the row hashes, so "
-    "both engines address identical cells at a quarter of the hash "
-    "cost. "
-    "Scale shape: the sketch build is corpus-linear with a "
-    "1024-row output (the whole point at 100 TB: a fixed-size "
-    "mergeable summary); the probe side touches only the top-k "
-    "aggregate",
     ("sketch", "text", "aggregation"),
 )
 def xfp_cms_sketch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-min sketch (4 x 256 md5-addressed counters) over the word stream, probed with the top
+    10 exact words; estimate = min over rows, with cms_est >= exact_n as a column. All integers."""
     t = _t(spark, sf_dir)
     words = t["documents"].select(
         F.explode(F.split(F.col("text"), r"\s+")).alias("w")
@@ -11691,32 +10797,12 @@ def xfp_cms_sketch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS auc
     FROM agg2 ORDER BY segment
     """,
-    "ROC-AUC VIA TIE-CORRECTED MANN-WHITNEY RANK SUMS (the "
-    "classifier-discrimination closer next to xdc's nDCG ranking "
-    "quality, xdo's Spearman association and xdb-family conformal "
-    "coverage — AUC is THE standard binary-score readout and it is "
-    "exactly the Mann-Whitney U statistic, so it needs no curve "
-    "integration and no float thresholds): per market segment, does "
-    "order VALUE discriminate URGENT orders? AUC = P(score_pos > "
-    "score_neg) + P(=)/2 computed from the xdo doubled-average-rank "
-    "identity (2*avg_rank = 2*rank() + tie_count - 1, an exact "
-    "integer), summed over positives: u2 = 2*R_pos - n_pos*(n_pos+1) "
-    "= 2*U with ties contributing exactly 1/2 each; auc = u2 / "
-    "(2*n_pos*n_neg) as ONE integer-quantized division (1e-6) under "
-    "the xdp G-shrink guard (g = max(u2 div 1e12, 1) divides both "
-    "sides first — u2*1e6 would overflow at ~4e6 rows/segment, one "
-    "decade past the repo's own 100x probes; the guard is exact "
-    "whenever g = 1 and keeps the quotient within one quantum "
-    "otherwise, r12 ADVICE fix). All "
-    "BIGINT end-to-end — scores are 2dp-true prices in integer cents "
-    "(the recovery class), ranks/counts/sums exact. Scale shape: one "
-    "segment-keyed rank window over the orders-customer join (AQE "
-    "broadcasts the dimension), one same-keyed aggregation — the "
-    "groupBy reuses the window's hash partitioning, zero extra "
-    "exchanges",
     ("orders", "customer", "analytics"),
 )
 def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROC-AUC per market segment of order value for URGENT orders via tie-corrected Mann-Whitney:
+    u2 = 2*R_pos - n_pos*(n_pos+1) from exact doubled ranks, AUC as one guarded quantized
+    division."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -11765,6 +10851,8 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "u2",
         F.expr(
             "CASE WHEN n_pos = 0 OR n_neg = 0 THEN CAST(0 AS DOUBLE)"
+            # G-shrink guard: u2 * 1e6 would overflow at ~4e6 rows per segment, so g = max(u2 div
+            # 1e12, 1) divides both sides first (exact when g = 1, within one quantum otherwise).
             " ELSE CAST(((u2 div greatest(u2 div 1000000000000, 1)) * 1000000)"
             " div greatest((2 * n_pos * n_neg)"
             " div greatest(u2 div 1000000000000, 1), 1) AS BIGINT) / 1e6 END"
@@ -11821,32 +10909,12 @@ def _lpa_oracle_sql(rounds: int = 4) -> str:
 @query(
     "graph_lpa_communities",
     _lpa_oracle_sql(),
-    "LABEL-PROPAGATION COMMUNITIES (bounded synchronous LPA, Raghavan "
-    "et al. 2007 — the community-DETECTION closer for the graph "
-    "family: CC finds reachability classes, kcore strips periphery by "
-    "degree, PageRank ranks by centrality; LPA finds internally-DENSE "
-    "groups, the curation lens that splits a connected co-purchase "
-    "blob into its actual product neighborhoods): support-2 "
-    "co-purchase edges (the kcore graph), labels start as own part "
-    "key, then exactly 4 synchronous rounds of adopt-the-plurality-"
-    "neighbor-label (tie -> smallest label); output = per-community "
-    "member counts. Synchronous updates + deterministic tie-break "
-    "make the bounded iteration a total function both engines compute "
-    "identically on ANY fixture (oracle = 4 unrolled MATERIALIZED "
-    "argmax CTEs; the sync-LPA oscillation caveat is accepted "
-    "semantics, not nondeterminism). Spark side: static "
-    "both-directions edges cached pre-partitioned on the neighbor key "
-    "(zero re-shuffles across rounds), per-round = one equi-join + "
-    "plurality counts + a HashAggregate argmax via max(struct(count, "
-    "-label)) — no sort window; each round's labels are consumed "
-    "exactly once so the fixed 4-round chain runs as ONE linear-"
-    "lineage action (the pagerank shape — localCheckpoint only every "
-    "checkpoint_interval rounds for long runs); FIXED round count, "
-    "probe-free (the x75 rule). All integer; no RNG, no update-order "
-    "dependence",
     ("lineitem", "graph", "analytics"),
 )
 def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-propagation communities on the support-2 co-purchase graph: exactly 4 synchronous
+    rounds of plurality-label adoption (smallest label wins ties); per-community member counts. All
+    integers."""
     from .operators.graph import label_propagation
 
     t = _t(spark, sf_dir)
@@ -11901,33 +10969,12 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.common_neighbors DESC, c.u, c.v
     LIMIT 20
     """,
-    "COMMON-NEIGHBOR LINK PREDICTION (Liben-Nowell & Kleinberg 2003 — "
-    "the graph family's PREDICTIVE member: CC/kcore/LPA describe the "
-    "graph that exists, this scores the edges most likely MISSING, "
-    "the recommender / knowledge-graph-completion primitive): on the "
-    "support-2 co-purchase graph, top-20 non-adjacent part pairs by "
-    "common-neighbor count with neighborhood-Jaccard cn/(du+dv-cn) "
-    "integer-quantized at 1e-6. Spark side reuses the x94 IN-ARRAY "
-    "wedge kernel: per-center sorted neighbor arrays of (v, deg_v) "
-    "STRUCTS — each neighbor's degree is a window count over the "
-    "symmetric edge list attached BEFORE collection, so the wedge "
-    "explode carries both endpoint degrees and no degree join exists "
-    "in the plan (the former deg_u/deg_v joins re-joined an aggregate "
-    "onto its own lineage and straddled an AQE broadcast threshold — "
-    "the r12 jobs_spread 10<->11 flip, fixed by the x87 window "
-    "recipe) — map-side explode of in-array (i<j) pairs, one wedge "
-    "row per common neighbor, ONE groupBy counts the score, then a "
-    "left-anti join against the canonical edge set. Centers "
-    "with degree > 64 are excluded ON BOTH SIDES (explicit semantics: "
-    "hub-mediated co-occurrence is uninformative for link prediction "
-    "AND the cap bounds wedge fan-out at sum(min(deg,64)^2) — the "
-    "100 TB guard the LSH band-cap idiom uses); full degrees still "
-    "feed the Jaccard. Top-20 via orderBy().limit() -> "
-    "TakeOrderedAndProject (the xco rule), unique (cn DESC, u, v) "
-    "order; all integers end-to-end",
     ("lineitem", "graph", "analytics"),
 )
 def xdx_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Common-neighbor link prediction: top 20 non-adjacent part pairs by common-neighbor count
+    with integer-quantized Jaccard, from an in-array wedge explode. Centers with degree > 64 are
+    excluded on both sides."""
     t = _t(spark, sf_dir)
     edges = _copurchase_support2_edges(t)
     from pyspark.sql.window import Window as W
@@ -12035,25 +11082,12 @@ def xdx_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_dow
     ORDER BY dow
     """,
-    "DAY-OF-WEEK SEASONAL PROFILE (classical seasonal decomposition, "
-    "weekly period — the time-series closer next to xcu's EWMA level, "
-    "xdr's CUSUM changepoint and x39's anomaly flags: those react to "
-    "shifts, this SEPARATES the recurring weekly shape from trend so "
-    "capacity planning reads signal, not weekday artifact): daily "
-    "purchase revenue on a DENSE integer epoch-day spine (gap days = "
-    "0, no calendar/tz function anywhere — dow = epoch_day % 7, a "
-    "monotone tz-free anchor, 0 = Thursday), trend = centered 7-day "
-    "moving sum over the spine, detrended = 7*daily - ma7_sum (an "
-    "integer cross-multiplication — no float trend mean is ever "
-    "formed), interior days only (complete windows; the boundary rows "
-    "would bias the profile), then per-dow mean detrended cents and "
-    "revenue share as integer-quantized divisions (signed BIGINT "
-    "truncation is engine-identical, the pinned r7 rule). Scale "
-    "shape: everything after the one groupBy(day) runs on the "
-    "bounded day axis",
     ("events", "analytics", "timeseries"),
 )
 def xdy_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week profile: daily revenue on a dense epoch-day spine, detrended by 7*daily -
+    centered 7-day sum over interior days, then per-dow mean detrended cents and revenue share as
+    quantized divisions."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -12089,6 +11123,7 @@ def xdy_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dmax",
         "cents",
         F.sum("cents")
+        # Unpartitioned: the dense day spine is bounded by the calendar, not the corpus.
         .over(W.orderBy("day_i").rowsBetween(-3, 3))
         .cast("long")
         .alias("ma7"),
@@ -12185,27 +11220,12 @@ def xdy_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lang in sorted(text_ops.LANG_PROFILES)
         ),
     ),
-    "CLASSIFIER CONFUSION-MATRIX EVALUATION WITH COHEN'S KAPPA (the "
-    "model-eval closer for CLASSIFICATION, next to xdv's score-ranking "
-    "AUC, xdc's nDCG and xdb's conformal coverage — and the first "
-    "oracle-checked CALLER of the public operators/text.lang_id "
-    "surface, previously pinned only by its doc_stats consistency "
-    "test): the heuristic language-ID prediction vs the labeled lang "
-    "over the full documents table; per-class support/detected/TP "
-    "with precision tp/det, recall tp/lab and F1 via the exact "
-    "integer identity 2tp/(det+lab) (no float p*r/(p+r) chain), plus "
-    "overall accuracy and chance-corrected Cohen's kappa "
-    "(N*agree - sum lab_k*det_k) / (N^2 - sum lab_k*det_k) — signed "
-    "BIGINT numerator, truncating division engine-identical (pinned "
-    "r7 rule); every metric ONE integer-quantized division, zero "
-    "denominators CASE-guarded on both engines. Class spine = full "
-    "outer of labeled and detected classes, so an 'unknown'-only "
-    "prediction class still reports (precision 0 row). All window "
-    "totals ride the class-level aggregate (bounded). Headroom: "
-    "N^2*1e6 < 2^63 to ~3e6 docs, then pre-divide pe by gcd stages",
     ("documents", "text", "analytics"),
 )
 def xdz_lang_confusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Confusion matrix of heuristic language ID vs labels: per-class precision, recall and F1
+    (2tp/(det+lab)), accuracy and Cohen's kappa, each one integer-quantized division with zero
+    denominators guarded."""
     from pyspark.sql.window import Window as W
 
     from .operators.text import lang_id
@@ -12238,6 +11258,7 @@ def xdz_lang_confusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("tp", F.lit(0)).cast("long").alias("tp"),
         )
     )
+    # Unpartitioned window over the class-level aggregate (one row per class).
     w = W.partitionBy()
     tot = spine.select(
         "cls",
@@ -12270,6 +11291,7 @@ def xdz_lang_confusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.expr(
             "CASE WHEN n_total * n_total = pe THEN CAST(0 AS DOUBLE)"
+            # Headroom: n_total^2 * 1e6 < 2^63 to ~3e6 docs; beyond that pre-divide pe.
             " ELSE CAST((n_total * agree - pe) * 1000000"
             " div (n_total * n_total - pe) AS BIGINT) / 1e6 END"
         ).alias("kappa_q"),
@@ -12320,28 +11342,12 @@ def xdz_lang_confusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS mean_chunk_len
     FROM per
     """,
-    "CONTENT-DEFINED CHUNKING + chunk-store dedup audit (the "
-    "storage-dedup primitive — FastCDC/LBFS-style: x54/xb0 cut FIXED "
-    "windows, which shift at every insertion; content-defined "
-    "boundaries (hash of the 8-gram AT a position selects it as a cut "
-    "with P=1/64, expected ~64-char chunks) survive edits, so shared "
-    "regions between near-identical documents dedup at the CHUNK "
-    "level): boundary positions from the portable 60-bit md5 gram "
-    "hash (engine-identical bits), every doc's end is a sentinel "
-    "boundary (DISTINCT against real cut at end — never an empty "
-    "tail chunk), chunk spans = lag window per doc, chunk identity = "
-    "md5 of the substring, then ONE two-level rollup: total vs "
-    "distinct chunks and bytes, byte-level dedup ratio and mean chunk "
-    "length integer-quantized. Same-hash chunks share length, so "
-    "distinct_bytes = sum(min(len)) is exact. Scale shape: "
-    "corpus-linear position hashing (the CMS lesson: the hash IS the "
-    "cost — production swaps the md5 for a gear/rolling hash, the "
-    "boundary->islands->dedup plumbing is unchanged), one doc-keyed "
-    "window on boundary rows only (~len/64 per doc), chunk-hash "
-    "groupBy bounded by distinct content",
     ("documents", "text", "dedup"),
 )
 def content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Content-defined chunking: cut where the 8-gram md5 hash selects a boundary (P=1/64), chunk =
+    md5 of the substring, then total vs distinct chunks and bytes and the dedup ratio,
+    integer-quantized."""
     from pyspark.sql.window import Window as W
 
     from .operators.dedup import portable_hash
@@ -12438,29 +11444,11 @@ def content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY vlabel
     ORDER BY label
     """,
-    "CENTROID SILHOUETTE SCORE (simplified silhouette, squared-"
-    "distance variant — the cluster-QUALITY judgment next to xb6's "
-    "centroid separation audit and x51/xb6's cluster machinery: xb6 "
-    "reports raw centroid geometry, this scores every VECTOR's "
-    "assignment and rolls up per label): a = squared distance to the "
-    "own-label centroid, b = min squared distance to any other "
-    "centroid, s = (b - a)/max(a, b) in [-1, 1] — positive means the "
-    "label holds the vector better than any alternative. Exactness: "
-    "elements quantize to integer MILLI-units at source (floor of one "
-    "IEEE double*1e3 — xb6 idiom, coarsened 1e6 -> 1e3 so that "
-    "|b - a| * 1e6 stays within BIGINT: diffs <= 2e3, squares <= 4e6, "
-    "64-dim sums <= 2.6e8, times 1e6 <= 2.6e14), centroids integer-"
-    "div means, distances exact BIGINT sums of squares in any order; "
-    "s is quantized per vector by MAGNITUDE+SIGN (the r6 rule: the "
-    "s_q > 0 well-separated THRESHOLD must not skew across zero), "
-    "per-label mean = magnitude+sign integer division of the exact "
-    "sum. Scale shape: the centroid table (labels x dim) is "
-    "broadcast-sized at any corpus scale; per-vector work is one "
-    "map-side join fan of labels x dim terms, one (vec, label) agg — "
-    "corpus-linear, no pairwise distances anywhere",
     ("embeddings", "similarity", "analytics"),
 )
 def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Simplified silhouette per label: squared distances to own and nearest other centroid in
+    integer milli-units, s = (b - a)/max(a, b) quantized by magnitude + sign, per-label mean."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -12471,6 +11459,8 @@ def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             (F.col("pos0") + 1).alias("pos"),
+            # Milli-units (not micro) so |b - a| * 1e6 fits BIGINT: squares <= 4e6, 64-dim sums <=
+            # 2.6e8, times 1e6 <= 2.6e14.
             F.floor(F.col("x").cast("double") * 1_000).cast("long").alias("xq"),
         )
     )
@@ -12645,38 +11635,18 @@ def _markov_oracle_sql(rounds: int = 8) -> str:
 @query(
     "attribution_markov",
     _markov_oracle_sql(),
-    "MARKOV REMOVAL-EFFECT ATTRIBUTION (Anderl et al. 2014 — the "
-    "MODEL-BASED member of the attribution family: x77/xcd credit the "
-    "last touch, xe8_attribution_linear splits evenly; this asks "
-    "counterfactual 'how much conversion probability disappears if "
-    "channel c vanishes' on a first-order Markov model of the "
-    "journeys): per user, events up to the FIRST purchase (unique "
-    "(ts, event_id) order) form a chain START -> ... -> purchase "
-    "(absorbing CONV) or -> NULL (non-converters); removal of channel "
-    "c drops its transitions while keeping base out-totals (redirected "
-    "mass never converts — the standard semantics); conversion "
-    "probability = 8 bounded synchronous rounds of p'(s) = "
-    "(sum_t cnt_st * p(t)) div tot_s in integer NANO-probabilities "
-    "(ONE truncating division per state per round — deterministic and "
-    "engine-identical; within-8-steps absorption is the declared "
-    "total-function semantics, oracle = unrolled MATERIALIZED chain), "
-    "attribution share = effect / sum(effects) integer-quantized. "
-    "Scale shape: the corpus-heavy work is ONE pass (journey windows "
-    "+ transition counts); the state space is CHANNEL-bounded, so the "
-    "pivoted per-variant transition matrix (~45 rows) is collected "
-    "ONCE and the 8 rounds fold driver-side in exact python ints "
-    "(non-negative operands make python // identical to engine div — "
-    "the kmeans/ivfpq bounded-collect pattern; the in-plan broadcast "
-    "iteration re-planned 8 nested AQE subtrees at 34 jobs, r14). "
-    "Headroom: cnt * 1e9 < 2^63 to ~9e9 transitions per edge; beyond, "
-    "lower the probability scale",
     ("events", "analytics", "attribution"),
 )
 def attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Markov removal-effect attribution: conversion probability of the first-order journey chain
+    with each channel removed, 8 synchronous integer rounds in nano-probabilities; share = effect /
+    sum of effects."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
     chans = _MARKOV_CHANNELS
+    # Headroom: cnt * 1e9 < 2^63 to ~9e9 transitions per edge; beyond that, lower the probability
+    # scale.
     sc = _MARKOV_SCALE
     wu = W.partitionBy("user_id").orderBy("ts", "event_id")
     ev = t["events"].select(
@@ -12830,23 +11800,12 @@ def attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS average_precision
     FROM terms GROUP BY segment ORDER BY segment
     """,
-    "AVERAGE PRECISION / PR-AUC (the imbalanced-class companion to "
-    "xdv's ROC-AUC — with rare positives ROC flatters a classifier; "
-    "AP weighs precision AT each positive's rank, the retrieval/"
-    "rare-event standard): same orders-value-vs-URGENT frame as xdv; "
-    "AP = mean over positives of precision@rank under the unique "
-    "(score DESC, orderkey) order (tie-break is declared semantics, "
-    "identical both engines — AP, unlike AUC, has no closed tie "
-    "correction); each precision term cum_pos/rank is quantized to "
-    "integer NANO-units at its source (the x66 idiom: one truncating "
-    "division per positive, then exact BIGINT sums), the mean is one "
-    "more integer division. One rank window feeding one cumulative "
-    "window over the SAME (segment, score, key) sort — a single "
-    "window node, then a same-keyed aggregation; headroom: term_q "
-    "<= 1e9, sum < 2^63 to ~9e9 positives per segment",
     ("orders", "customer", "analytics"),
 )
 def xe3_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Average precision per segment of order value for URGENT orders under the unique (score DESC,
+    orderkey) order; each precision term quantized to integer nano-units, then exact sums and one
+    division."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -12885,6 +11844,7 @@ def xe3_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum_pos"),
     )
     terms = ranked.filter(F.col("pos") == 1).select(
+        # Headroom: term_q <= 1e9, so the sum stays below 2^63 to ~9e9 positives per segment.
         "segment", F.expr("cum_pos * 1000000000L div rk").alias("term_q")
     )
     return (
@@ -12958,26 +11918,12 @@ def xe3_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'none' END AS trend
     FROM v ORDER BY event_type
     """,
-    "MANN-KENDALL TREND TEST (the nonparametric is-there-a-monotone-"
-    "trend judgment for the time-series family — xce fits an OLS "
-    "slope, xdr localizes a changepoint, EWMA smooths; this answers "
-    "whether the daily series TRENDS at all, distribution-free): per "
-    "event type over the daily revenue series, S = sum over day pairs "
-    "of sign(x_later - x_earlier) — an exact integer from a bounded-"
-    "day-axis self-join (the axis is days, so the pair fan is "
-    "days^2/2 per type regardless of corpus size; ~9e18 headroom at "
-    "10-year daily series, docstring-noted) with the RENAMED join key "
-    "(xdb same-lineage rule); tie-corrected variance as the exact "
-    "integer var18 = 18*Var = n(n-1)(2n+5) - sum t(t-1)(2t+5); "
-    "z = (|S|-1)*sqrt(18)/sqrt(var18) with continuity correction, "
-    "magnitude+sign floor-quantized (every operand an exact integer "
-    "-> identical IEEE doubles, two correctly-rounded sqrts — the "
-    "xdo denominator idiom); the p<0.05 verdict NEVER touches the "
-    "float z: (|S|-1)^2 * 180000 > var18 * 38416 is the integer "
-    "cross-multiplication of |z| > 1.96 (the r5 threshold rule)",
     ("events", "analytics", "timeseries"),
 )
 def xe4_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Kendall trend test per event type on daily revenue: exact S from a day-pair self-join,
+    tie-corrected integer 18*Var, quantized z, and p<0.05 as the integer cross-multiplication of
+    |z| > 1.96."""
     t = _t(spark, sf_dir)
     daily = (
         t["events"]
@@ -12996,6 +11942,8 @@ def xe4_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day_i").alias("__dj"),
         F.col("cents").alias("__cj"),
     )
+    # Self-join on the bounded day axis: days^2/2 pairs per type whatever the corpus size; ~9e18
+    # headroom at 10-year daily series.
     pairs = daily.join(
         b,
         (F.col("__et") == F.col("event_type")) & (F.col("__dj") > F.col("day_i")),
@@ -13219,40 +12167,12 @@ def _dbscan_cell_kernel(pdf):
            CAST(count(*) AS BIGINT) AS n_points
     FROM roles GROUP BY cluster ORDER BY cluster
     """,
-    "DBSCAN DENSITY CLUSTERING over embeddings (Ester et al. 1996 — "
-    "the density member of the clustering family: x51/xaf cluster by "
-    "near-dup REACHABILITY alone, kmeans/IVF partition EVERYTHING; "
-    "DBSCAN separates dense structure (core), its fringe (border) "
-    "and outliers (noise) — the curation lens that finds both the "
-    "over-represented clumps AND the junk): exact integer squared "
-    "distances in milli-unit space (the cluster_silhouette (ex-xe1) quantization; eps^2 = "
-    "1.5e6 ~ cosine 0.25 on unit vectors, core = >= 2 other points "
-    "in range i.e. minPts=3 counting self — declared constants), "
-    "candidates blocked by the coarse label cell (the x98 IVF-style "
-    "declared semantics — at scale the blocker is the pluggable "
-    "part, the density classification is the mechanism); clusters = "
-    "connected components over CORE-CORE edges (recursive transitive "
-    "closure in the oracle), isolated core points self-cluster, "
-    "border points take the MIN core-neighbor cluster "
-    "(deterministic), everything else is noise (cluster -1); output "
-    "= per-cluster core/border/point counts. The blocker is a HARD "
-    "partition (pairs never cross cells), so the whole "
-    "classification decomposes per cell: ONE vectorized "
-    "Arrow-batched applyInPandas kernel per label cell does the "
-    "BLAS pair scan AND the integer min-label components (pointer "
-    "jumping) AND the border rule — exact despite float64 (every "
-    "intermediate an integer < 2^53), integer-only output (the r8 "
-    "python-kernel rule); the r13 distributed-CC-loop version spent "
-    "~60 scheduling-bound jobs on graphs that are cell-local by "
-    "construction. Cell-size CONTRACT (r12): the kernel is O(cell^2) by "
-    "design, so cells beyond _DBSCAN_MAX_CELL=1e5 raise a loud error "
-    "naming the mitigation (finer blocking cells) instead of silently "
-    "going quadratic; fixture cells contract-tested ~3 orders under "
-    "the bound. All integer end-to-end; python replica replays the "
-    "whole pipeline from raw floats",
     ("embeddings", "similarity", "graph", "analytics"),
 )
 def dbscan_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DBSCAN over embeddings blocked by label cell: exact integer milli-unit distances, eps^2 =
+    1.5e6, minPts = 3, core-core components, borders join their min core neighbor; per-cluster
+    core/border/point counts."""
     t = _t(spark, sf_dir)
     # Quantize in-array (the knn_graph_descent idiom): the embedding is
     # already position-ordered, so one F.transform computes vq with zero
@@ -13355,27 +12275,12 @@ def dbscan_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE CAST(smape_sum_q // n_test AS BIGINT) / 1e6 END AS smape
     FROM agg ORDER BY event_type
     """,
-    "SEASONAL-NAIVE FORECAST EVALUATION: MASE + sMAPE (Hyndman & "
-    "Koehler 2006 — the forecast-accuracy judgment that completes the "
-    "time-series family: xdy EXTRACTS the weekly shape, this measures "
-    "whether 'same weekday last week' actually predicts, the baseline "
-    "every production forecaster must beat): per event type on the "
-    "dense zero-filled day spine, forecast f_t = x_(t-7) over the "
-    "last-14-day test window (a test row counts toward n_test only "
-    "when its seasonal lag exists — c7 IS NOT NULL on both engines, "
-    "r12 ADVICE fix: sub-21-day series otherwise kept NULL-skipped "
-    "error rows in the denominator count, silently deflating "
-    "MAE/sMAPE); MASE = test MAE over the IN-SAMPLE "
-    "one-step naive MAE as ONE integer cross-multiplied division "
-    "(sum_test*n_den*1e6 div (sum_den*n_test) — no float MAE is ever "
-    "formed); sMAPE per test day 2|f-x|*1e6 div (|f|+|x|) quantized "
-    "at its source (x66 idiom, both-zero guarded to 0), then an "
-    "integer mean. Absolute errors of integer cents are exact; all "
-    "window work rides the bounded day axis. Headroom: "
-    "sum_test*n_den*1e6 < 2^63 to ~1e5-day series at 1e8-cent days",
     ("events", "analytics", "timeseries"),
 )
 def xe6_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal-naive forecast evaluation per event type: MASE of f_t = x_(t-7) over the last 14
+    days as one integer cross-multiplied division, and sMAPE quantized per day then averaged in
+    integers."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -13473,6 +12378,7 @@ def xe6_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mae_seasonal_dollars"),
         F.expr(
             "CASE WHEN sum_den_abs = 0 OR n_test = 0 THEN CAST(0 AS DOUBLE)"
+            # Headroom: sum_test * n_den * 1e6 < 2^63 to ~1e5-day series at 1e8-cent days.
             " ELSE CAST(sum_test_abs * n_den * 1000000"
             " div (sum_den_abs * n_test) AS BIGINT) / 1e6 END"
         ).alias("mase"),
@@ -13550,25 +12456,12 @@ def _ece_bin_sql() -> str:
     FROM joined
     ORDER BY bin
     """,
-    "EXPECTED CALIBRATION ERROR (the calibration judgment completing "
-    "the eval quartet — xdv AUC ranks, xe3 AP weighs rare positives, "
-    "xdb conformal guarantees coverage; ECE asks whether the score's "
-    "implied RATE matches reality per bin, Naeini et al. 2015): "
-    "80/20 portable-hash split (the established split idiom), decile "
-    "bin boundaries as EXACT order statistics of the train scores "
-    "(rank condition rn*10 <= n*k, an integer cross-multiplication — "
-    "no percentile float), bin assignment by a 9-compare codegen "
-    "CASE against the broadcast one-row boundary set (the xab "
-    "pattern), confidence = train positive rate and accuracy = test "
-    "positive rate per bin as integer-quantized ratios, ECE = "
-    "sum(n_test_b * |acc_q - conf_q|) div N_test — every term an "
-    "exact integer, the weighted mean ONE division. Empty-train bins "
-    "take confidence 0 (declared, both engines). Scale shape: two "
-    "scans + one rank window on the train split; everything after "
-    "rides the 10-row bin aggregate",
     ("orders", "analytics"),
 )
 def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Expected calibration error on an 80/20 hash split: decile bins from exact train order
+    statistics, per-bin train confidence and test accuracy as integer-quantized ratios, ECE as one
+    weighted integer division."""
     from pyspark.sql.window import Window as W
 
     from .operators.dedup import portable_hash
@@ -13589,6 +12482,8 @@ def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = train.select(
         "score_cents",
         F.row_number()
+        # Unpartitioned rank window over the whole train split (row-level, data-sized); the work
+        # after it rides the 10-row bin aggregate.
         .over(W.orderBy("score_cents", "o_orderkey"))
         .cast("long")
         .alias("rn"),
@@ -13647,6 +12542,7 @@ def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("pos_test * 1000000 div n_test").alias("acc_q"),
         )
     )
+    # Unpartitioned window over the 10-row bin frame.
     w = W.partitionBy()
     return joined.select(
         "bin",
@@ -13719,25 +12615,12 @@ def calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS drifted
     FROM d ORDER BY event_type
     """,
-    "TWO-SAMPLE KOLMOGOROV-SMIRNOV DRIFT TEST (the exact-supremum "
-    "counterpart to x68's binned PSI — PSI needs bin choices, KS is "
-    "the binning-free distribution-shift judgment): per event type, "
-    "the value distribution of the first 15 days vs the rest; D is "
-    "EXACT over the common denominator n1*n2 — two cumulative window "
-    "sums over the (type, cents) aggregate give f1*n2 - f2*n1 as "
-    "exact BIGINTs at every distinct value, D = max |.| (the "
-    "t-closeness EMD common-denominator idiom applied to a supremum), "
-    "ks = ONE integer-quantized division; the alpha=0.05 critical "
-    "value 1.358*sqrt((n1+n2)/(n1*n2)) is one fixed double expression "
-    "over exact integers floor-quantized at 1e-3 precision/1e6 scale, "
-    "and the drift verdict compares the two QUANTIZED BIGINTs — both "
-    "engine-identical, so the boolean cannot flip on an ulp (the xe4 "
-    "z pattern). ECDF evaluation points are the distinct observed "
-    "values (the KS supremum is attained there); all window work on "
-    "the (type x distinct-cents) aggregate",
     ("events", "analytics", "quality"),
 )
 def xfr_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample KS drift per event type, days 1-15 vs the rest: D exact over the common
+    denominator n1*n2, one quantized division, and the alpha=0.05 verdict compared on quantized
+    BIGINTs."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -13856,24 +12739,11 @@ def xfr_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT CAST(sum(term_q) AS BIGINT) AS chi2_q FROM terms) s
     CROSS JOIN tot t
     """,
-    "CHI-SQUARE INDEPENDENCE + CRAMER'S V (the categorical-"
-    "association judgment next to x84's numeric Pearson and xdo's "
-    "rank Spearman — does market segment associate with order "
-    "priority at all, and how strongly on a 0..1 scale): the 5x5 "
-    "contingency table with FULL margin spine (a missing cell "
-    "contributes (0*N - r*c)^2/(N*r*c), never silently dropped); "
-    "per-cell deviation d = o*N - r*c is an exact BIGINT (common-"
-    "denominator idiom), each cell's chi2 term floor-quantized to "
-    "integer micro-units from ONE fixed-order double expression over "
-    "exact integers (d*d may exceed 2^53, but both engines compute "
-    "the IDENTICAL IEEE product of identical doubles — the xe4 "
-    "pattern; and the 25 terms then sum as exact INTEGERS, killing "
-    "the x63 agg-order float-sum trap), V = sqrt(chi2/(N*min(k1-1,"
-    "k2-1))) floor-quantized. Everything after the one groupBy rides "
-    "the 25-cell aggregate",
     ("orders", "customer", "analytics"),
 )
 def chi2_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square independence and Cramer's V for market segment x order priority over the full 5x5
+    margin spine; each cell term floor-quantized from exact integers, then summed as integers."""
     t = _t(spark, sf_dir)
     joined = (
         t["orders"]
@@ -14001,30 +12871,12 @@ def _hits_oracle_sql(rounds: int = 4) -> str:
 @query(
     "hits_bipartite",
     _hits_oracle_sql(),
-    "HITS HUBS AND AUTHORITIES (Kleinberg 1999 — the mutual-"
-    "reinforcement centrality the graph family lacked: PageRank "
-    "scores a vertex by incoming mass on ONE side; HITS alternates "
-    "two scores on a BIPARTITE relation, here customers (hubs) vs "
-    "parts (authorities) of the purchase graph — an authority is a "
-    "part bought by strong hubs, a hub a customer buying strong "
-    "authorities): 4 bounded alternating rounds, each half-step = "
-    "one equi-join + map-side-combinable sum over the cached "
-    "pre-partitioned distinct edge list, renormalized by its MAX via "
-    "pure integer division with the xdp G-shrink overflow guard "
-    "(values stay in 1e6-scale integers; sum bound deg*1e6, the "
-    "guard divides both operands first so raw*1e6 can never overflow "
-    "at any degree); the max fold is an unpartitioned window OVER "
-    "the half-step's own aggregate — one flat action per half-step, "
-    "no broadcast-fold diamond (r15; the window's single partition "
-    "holds one row per node, bounded by the node set, never the "
-    "corpus) — and each SMALL renormed state is localCheckpointed "
-    "(probe-free fixed rounds, the x75 rule); output "
-    "= top-10 per side via TakeOrderedAndProject, unique (score, "
-    "key) order. Oracle = unrolled MATERIALIZED alternating chain; "
-    "all integer end-to-end",
     ("orders", "lineitem", "graph", "analytics"),
 )
 def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HITS hubs (customers) and authorities (parts): 4 alternating rounds of join + sum, each
+    renormalized by its max with integer division; top 10 per side by unique (score, key) order.
+    All integers."""
     from .session import track_cache
 
     t = _t(spark, sf_dir)
@@ -14075,6 +12927,8 @@ def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out_key,
                 "raw",
                 "mx",
+                # G-shrink overflow guard: both operands are divided by g first, so raw * 1e6
+                # cannot overflow at any degree.
                 F.greatest(F.expr("mx div 1000000000000"), F.lit(1))
                 .cast("long")
                 .alias("g"),
@@ -14222,31 +13076,12 @@ def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM qstat CROSS JOIN (SELECT unnest(generate_series(1, 7)) AS lag) l
     ORDER BY event_type, lag
     """,
-    "AUTOCORRELATION FUNCTION + LJUNG-BOX PORTMANTEAU TEST (Box & "
-    "Pierce 1970 / Ljung & Box 1978 — the seasonality/dependence "
-    "DETECTOR the time-series family lacked: xdy EXTRACTS a weekly "
-    "shape, xe4 tests monotone trend, xdr locates a level shift; "
-    "this answers 'is the series autocorrelated AT ALL, at which "
-    "lags' — the Box-Jenkins first step): per event type on the "
-    "dense zero-filled daily floor-dollar series, sample ACF at "
-    "lags 1..7 with the common-denominator centering idiom — "
-    "y_t = n*x_t - S is an exact BIGINT, r_k = sum(y_t*y_{t-k}) / "
-    "sum(y_t^2) scaled by n^2 on both sides so no float mean is "
-    "ever formed; the quantized division carries the xdp G-shrink "
-    "guard (den ~ 3.7e13 at sf0.1 — num*1e6 would overflow "
-    "BIGINT; both operands pre-divided by g = den div 1e12, a "
-    "declared deterministic coarsening), signed quotients truncate "
-    "toward zero identically on both engines (r8 engine-pair pin); "
-    "Ljung-Box Q = n(n+2)*sum(r_k_q^2 div (n-k)) rides the "
-    "1e6-scale integers (1e12-scale Q), verdict = integer compare "
-    "vs the chi2(7, 0.95) literal 14.06714044934e12 — no float "
-    "ever crosses the threshold. One day-axis window chain, one "
-    "5-row-per-type aggregate, lag spine via stack. Headroom: den "
-    "< 2^63 to ~1000x bench SF; beyond, coarsen dollars by a "
-    "magnitude probe (docstring contract)",
     ("events", "analytics", "timeseries"),
 )
 def acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ACF at lags 1..7 and the Ljung-Box Q per event type on the dense daily series: centered
+    exact BIGINT sums, G-shrink-guarded quantized divisions, and the chi2(7, 0.95) verdict as an
+    integer compare."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -14298,6 +13133,8 @@ def acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(1, 8)
         ],
     )
+    # G-shrink guard: den is ~3.7e13 at sf0.1, so num * 1e6 would overflow BIGINT; both operands
+    # are pre-divided by g. den < 2^63 to ~1000x bench SF; beyond, coarsen dollars.
     gexpr = "greatest(den div 1000000000000, 1)"
     quant = agg.select(
         "event_type",
@@ -14421,24 +13258,12 @@ def acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(rec) // count(*) AS BIGINT) AS avg_recency_days
     FROM labeled GROUP BY segment_class ORDER BY segment_class
     """,
-    "RFM CUSTOMER SEGMENTATION (Hughes 1994 — the product-analytics "
-    "staple the inventory lacked: score every purchasing customer "
-    "1..5 on Recency/Frequency/Monetary quintiles and roll up named "
-    "lifecycle classes — champions, loyal, at_risk, hibernating, "
-    "recent, regular, tie-broken in that declared CASE order): "
-    "quintile BOUNDARIES are exact order statistics computed on the "
-    "(dim, value) HISTOGRAM (5*cum >= n*k rank condition, xe7 "
-    "tie-to-lower semantics; shuffle bounded by distinct values — "
-    "never a global per-customer rank, the xco scale rule), all "
-    "three dimensions ride ONE unpivoted histogram chain; the "
-    "12-value boundary row broadcasts back (crossJoin) and "
-    "assignment is a pure codegen CASE ladder; recency inverts "
-    "(6 - bin) so recent = 5; averages are integer-division exact "
-    "(avg scores 1e6-quantized, monetary floor-dollars). One "
-    "customer agg + one tiny histogram chain + one rollup",
     ("orders", "analytics", "customer"),
 )
 def xfq_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM segmentation: 1..5 quintile scores for recency, frequency and monetary value from exact
+    order statistics on a value histogram, then named lifecycle classes and integer-exact
+    averages."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -14609,29 +13434,12 @@ def xfq_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM phi p CROSS JOIN tot t
     ORDER BY p.channel
     """,
-    "SHAPLEY-VALUE ATTRIBUTION (Shapley 1953 via Zhao, Mahboobi & "
-    "Manavoglu 2018 — completes the attribution family's model "
-    "ladder: x77/xcd last-touch argmax, xe8 linear equal-credit, "
-    "attribution_markov removal effects; Shapley is the "
-    "order-free cooperative-game solution marketers quote): users "
-    "are exposure coalitions — per-user bitmask of touched "
-    "non-purchase channels (bit_or as sum DISTINCT of power-of-2 "
-    "codes, engine-portable), conversion = any purchase; exact-set "
-    "conversion rates r_T = c_T*1e6 div u_T (safe count-ratio "
-    "quantization) on the FULL 16-mask spine, characteristic "
-    "w(S) = sum of r_T over T subset-of S via one bitwise-contain "
-    "join on the 16-row lattice (T & S = T), Shapley phi_i = "
-    "sum over S avoiding i of |S|!(n-1-|S|)!*(w(S+i)-w(S)) with "
-    "factorial literals CASEd on bit_count, one exact division by "
-    "n!=24 — marginals are non-negative (w is monotone), so every "
-    "quotient truncates identically; efficiency invariant "
-    "sum(phi) = w(N)-w(empty) pins the replica. The lattice work "
-    "is CONSTANT-size (16 rows) regardless of corpus scale — the "
-    "whole query is one events scan + one user agg + one 16-row "
-    "agg; exposed_users context via a bit-filtered spine sum",
     ("events", "analytics", "attribution"),
 )
 def attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shapley channel attribution over the 16 exposure coalitions: exact-set conversion rates,
+    w(S) by a bitwise-contain join, phi_i from factorial literals and one exact division by 4! =
+    24."""
     t = _t(spark, sf_dir)
     uf = (
         t["events"]
@@ -14765,31 +13573,11 @@ def attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE f.r <= 10
     ORDER BY f.r
     """,
-    "GOOD-TURING UNSEEN MASS + CHAO1 RICHNESS OVER WORD TRIGRAMS "
-    "(Good 1953, Chao 1984 - the corpus-PLANNING readout the text "
-    "family lacked: xcr measures how token mass is distributed, xdl "
-    "how a tokenizer covers languages; this estimates what the "
-    "corpus has NOT seen - the probability the next 3-gram is novel "
-    "and how many distinct 3-grams exist beyond the sample, i.e. "
-    "the 'is more data worth crawling' judgment AND the open-mass "
-    "estimate for the dedup family's own 3-shingle space): "
-    "frequency-of-frequencies N_r over \\s+-lowercased word "
-    "trigrams (the pinned tokenization rule; trigram unit chosen "
-    "because the fixtures' unigram/bigram vocabularies SATURATE at "
-    "sf0.1 - N1 = 0 - while the trigram space stays open at every "
-    "SF, which is also why shingle dedup works there), built by "
-    "filtered-array index explode with the len >= 3 guard on BOTH "
-    "sides (the xa0 sequence-descend rule); Good-Turing p0 = N1/N "
-    "as the safe count-ratio quantization, bias-corrected Chao1 = "
-    "V + N1(N1-1)/(2(N2+1)) kept ENTIRELY in integer vocabulary "
-    "units (quotient forms before any scaling - no 1e6 blow-up at "
-    "corpus scale; +1 is the standard bias correction and the div0 "
-    "guard). Output = the r<=10 head of N_r with corpus scalars. "
-    "One scan, one gram-keyed agg (the only corpus-sized shuffle), "
-    "one tiny count-keyed agg, broadcast scalar fold",
     ("documents", "text", "analytics"),
 )
 def vocab_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Good-Turing unseen mass and bias-corrected Chao1 richness over lowercased word trigrams: the
+    N_r head (r <= 10) with corpus scalars, all in integer units."""
     t = _t(spark, sf_dir)
     ws = t["documents"].select(
         F.filter(
@@ -14901,28 +13689,11 @@ def vocab_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM shr
     ORDER BY shrunk_q DESC, user_id LIMIT 15
     """,
-    "EMPIRICAL-BAYES BETA-BINOMIAL SHRINKAGE of per-user purchase "
-    "rates (Efron & Morris 1975 / the 'how not to rank by raw "
-    "average' estimator — the small-sample RANKING fix next to "
-    "xcl's bootstrap uncertainty and xdb's conformal intervals: a "
-    "3/10 user must not outrank a 25/86 user): method-of-moments "
-    "beta prior from the group-rate distribution — per-user rates "
-    "quantized at source (safe count ratio c*1e6 div n), prior "
-    "mean m = Sm div G and variance v = Sv div G - m^2 as DECLARED "
-    "integer-op moments (two divisions instead of the (G*Sv - "
-    "Sm^2)/G^2 form, which overflows BIGINT at ~10x bench scale; "
-    "engine-identical either way), prior strength K = m(1e6-m)*1e6 "
-    "div v - 1e6 clamped at 0 (v <= 0 degenerates to no "
-    "shrinkage), posterior mean (c + a)/(n + K) as ONE quantized "
-    "division under the xdp G-shrink guard; top-15 by (shrunk "
-    "DESC, user_id) via TakeOrderedAndProject (xco rule). "
-    "Differential shrinkage is live on the fixtures: K ~ typical "
-    "n, exposures vary ~2x, so raw and shrunk ORDERINGS disagree "
-    "(replica-pinned). One events scan + user agg + broadcast "
-    "one-row prior fold",
     ("events", "analytics", "quality"),
 )
 def eb_shrunk_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Empirical-Bayes beta-binomial shrinkage of per-user purchase rates with a method-of-moments
+    prior in integer ops; top 15 users by shrunk rate (user_id tie-break)."""
     t = _t(spark, sf_dir)
     u = (
         t["events"]
@@ -14951,6 +13722,8 @@ def eb_shrunk_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "g",
             F.expr("sm div g").alias("m_q"),
+            # Two divisions instead of (G*Sv - Sm^2)/G^2, which overflows BIGINT at ~10x bench
+            # scale.
             F.expr("sv div g - (sm div g) * (sm div g)").alias("v_q"),
         )
         .select(
@@ -15052,25 +13825,12 @@ def eb_shrunk_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS alloc_labels
     FROM ranked ORDER BY lang
     """,
-    "NEYMAN OPTIMAL ALLOCATION of a 10k-label annotation budget "
-    "across language strata (Neyman 1934 — the survey-sampling "
-    "design step the sampling family lacked: the samplers EXECUTE a "
-    "split, this DECIDES the split that minimizes estimator "
-    "variance, n_h proportional to N_h*S_h): per-language doc-length "
-    "moments as the declared integer-op form (xei rule — the exact "
-    "cross-multiplied variance overflows at corpus scale), S_h = "
-    "floor(sqrt(var)*1000) milli-units (IEEE sqrt of an identical "
-    "integer-derived double is correctly rounded — the x37 "
-    "precedent), weights w_h = N_h*S_h exact BIGINTs, integer "
-    "seats 10000*w_h div W under the xdp G-shrink guard, and the "
-    "leftover distributed by LARGEST REMAINDER with deterministic "
-    "(rem DESC, lang) ties — the xd1 Hamilton idiom on weighted "
-    "strata, so allocations sum to EXACTLY 10000 (replica-pinned "
-    "invariant). Window work rides the strata frame (bounded by "
-    "language count); one documents scan + one lang-keyed agg",
     ("documents", "analytics", "sampling"),
 )
 def xej_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Neyman allocation of a 10k-label budget across languages: n_h proportional to N_h *
+    floor(sqrt(var_h)), integer seats plus largest-remainder leftovers, so the allocation sums to
+    exactly 10000."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -15088,6 +13848,8 @@ def xej_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_h",
         F.expr(
+            # Declared integer-op variance (divide first): the exact cross-multiplied form
+            # overflows at corpus scale.
             "CAST(floor(sqrt(greatest("
             "sxx div n_h - (sx div n_h) * (sx div n_h), 0L)) * 1000)"
             " AS BIGINT)"
@@ -15099,6 +13861,7 @@ def xej_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sd_milli",
         (F.col("n_h") * F.col("sd_milli")).alias("w"),
         F.sum(F.col("n_h") * F.col("sd_milli"))
+        # Unpartitioned windows over the strata frame (one row per language).
         .over(W.partitionBy())
         .cast("long")
         .alias("tw"),
@@ -15186,26 +13949,12 @@ def xej_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g CROSS JOIN f
     ORDER BY g.lang
     """,
-    "ONE-WAY ANOVA + ETA-SQUARED: does document length differ by "
-    "language (Fisher 1925 — completes the bivariate-association "
-    "matrix: xed chi-square is categorical x categorical, x84/xdo "
-    "Pearson/Spearman numeric x numeric, xfr_ks_drift KS two-sample; this is "
-    "the categorical x numeric member): per-language char-length "
-    "moments, between/within sum-of-squares via the quantized "
-    "group-term T = sum(S_j^2 div n_j) (error < 1 char^2 per group, "
-    "bounded group count — declared quantization), SSB = T - S^2 "
-    "div N and SSW = Sxx - T exact BIGINTs from there, F = "
-    "(SSB/(k-1))/(SSW/(N-k)) and effect size eta^2 = SSB/(SSB+SSW) "
-    "each as ONE G-shrink-guarded integer division (ratios in 1e6 "
-    "units; SSB*1e6 alone would overflow at ~10x bench scale). NO "
-    "significance verdict is emitted: the F critical value depends "
-    "on data-driven degrees of freedom (k-1, N-k), which cannot be "
-    "a pinned literal — the statistic and effect size are the "
-    "deliverable (the xe4/xfr_ks_drift verdict pattern applies only when "
-    "dof is fixed). One scan + one lang agg + broadcast scalar fold",
     ("documents", "analytics", "text"),
 )
 def xek_anova_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-way ANOVA of doc length by language: exact BIGINT sums of squares, F and eta^2 each one
+    G-shrink-guarded integer division. No verdict: the critical value depends on data-driven
+    degrees of freedom."""
     t = _t(spark, sf_dir)
     g = (
         t["documents"]
@@ -15237,6 +13986,7 @@ def xek_anova_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         "ssb",
         "ssw",
+        # G-shrink guard: SSB * 1e6 alone would overflow at ~10x bench scale.
         F.expr("greatest(greatest(ssb, ssw) div 1000000000000, 1)").alias(
             "gg"
         ),
@@ -15312,24 +14062,12 @@ def xek_anova_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rmed WHERE rn = (n + 1) // 2
     ORDER BY event_type
     """,
-    "THEIL-SEN ROBUST SLOPE + INTERCEPT (Theil 1950 / Sen 1968 — the "
-    "robust ESTIMATOR beside the family's tests: xe4 Mann-Kendall "
-    "answers 'is there a monotone trend', xce OLS fits a "
-    "least-squares line an outlier day can hijack; Theil-Sen is the "
-    "median of all pairwise slopes, 29% breakdown): per event type "
-    "on the observed daily revenue-cents series, pairwise slopes "
-    "(c2-c1)*1e6 div (d2-d1) from a renamed-key self-join on the "
-    "BOUNDED day axis (the xe4 pair frame; C(n,2) pairs per type — "
-    "never corpus-sized), signed quotients truncate toward zero "
-    "identically (r8 pin); the median is the DECLARED LOWER median "
-    "at rank (m+1) div 2 under the unique (slope_q, d1, d2) order "
-    "(no two-middle averaging — stays integer); intercept = lower "
-    "median of residuals c*1e6 - slope_q*d under (r_q, d) order. "
-    "Two bounded-size window passes; one events scan feeds the "
-    "checkpointed daily aggregate consumed by pairs AND residuals",
     ("events", "analytics", "timeseries"),
 )
 def xeo_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil-Sen slope and intercept per event type: lower median of pairwise slopes from a
+    day-pair self-join, then lower median of residuals, under unique orders. Signed integer
+    quotients truncate toward zero."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -15420,20 +14158,12 @@ def xeo_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS total_cents
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    "ORC sink + source roundtrip (completes the file-format matrix "
-    "next to xa1's CSV/JSON-lines and the parquet family: ORC is "
-    "the other columnar format Spark ships a native vectorized "
-    "reader for — Hive-ecosystem interchange): write a pruned "
-    "lineitem projection to ORC with integer cents materialized "
-    "BEFORE the sink (the float never crosses the format boundary, "
-    "so the roundtrip aggregate is exact by construction), read "
-    "back with an explicit schema, aggregate; oracle = the same "
-    "aggregate straight off parquet — equality proves the "
-    "sink+source pair is lossless for longs and strings. Scratch "
-    "namespaced per source fixture (_scratch_dir)",
     ("source", "sink", "lineitem"),
 )
 def xep_file_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORC roundtrip: a lineitem projection with integer cents written to ORC, read back with an
+    explicit schema and aggregated; the oracle aggregates parquet directly, so equality proves the
+    roundtrip lossless."""
     from .queries import _scratch_dir
 
     t = _t(spark, sf_dir)
@@ -15500,27 +14230,11 @@ def xep_file_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                / 1e6 AS assortativity
     FROM sums
     """,
-    "DEGREE ASSORTATIVITY of the co-purchase part graph (Newman 2002 "
-    "— the graph-diagnostics scalar the family lacked: CC/kcore/LPA "
-    "find structure, PageRank/HITS rank vertices; assortativity says "
-    "whether hubs attach to hubs (r > 0, social-network-like) or to "
-    "leaves (r < 0, hub-and-spoke) — decides if degree-based "
-    "sampling/salting is needed before the joins): distinct "
-    "co-purchase pairs from a renamed-key same-order self-join "
-    "(basket-bounded fan-out — TPC-H baskets <= 7 lines, so pairs "
-    "per order are C(7,2)-bounded at any corpus scale), endpoint "
-    "degrees via the r8 idiom (ONE window count over the directed "
-    "explode, then one (lo,hi)-keyed agg of each edge's two rows — "
-    "no degree joins), and Newman's r over the DIRECTED pair list, "
-    "where symmetry makes Sy = Sx so r = (Sxy/n - mean^2)/(Sxx/n - "
-    "mean^2) — NO sqrt at all; declared integer-op moments (xei "
-    "rule, overflow-free at any scale), one signed toward-zero "
-    "quantized division, b <= 0 degenerates to 0. Degrees are exact "
-    "integers end-to-end; one lineitem self-join + one window + two "
-    "aggs",
     ("lineitem", "graph", "analytics"),
 )
 def xeq_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree assortativity of the co-purchase graph: Newman's r over the directed pair list with
+    exact integer degrees and integer-op moments (no sqrt by symmetry), one quantized division."""
     from pyspark.sql.window import Window as W
 
     from .operators.graph import _both_directions
@@ -15589,6 +14303,7 @@ def xeq_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(sx div n AS BIGINT)").alias("mean_degree"),
         F.col("maxdeg").alias("max_degree"),
         F.expr(
+            # Declared integer-op moments (divide before multiplying): overflow-free at any scale.
             "CAST(CASE WHEN sxx div n - (sx div n) * (sx div n) <= 0 THEN 0"
             " ELSE (sxy div n - (sx div n) * (sx div n)) * 1000000"
             " div (sxx div n - (sx div n) * (sx div n)) END AS BIGINT) / 1e6"
@@ -15639,29 +14354,12 @@ def xeq_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE k1.la < k1.lb
     ORDER BY lang_a, lang_b
     """,
-    "PAIRWISE LANGUAGE JENSEN-SHANNON DIVERGENCE MATRIX (Lin 1991 — "
-    "the corpus-mixture GEOMETRY readout: xdt resamples languages to "
-    "target proportions, xdk importance-weights toward a target "
-    "distribution; this measures how far apart the language "
-    "subcorpora actually are, the quantity mixture planning needs): "
-    "per-language unigram distributions (\\\\s+-lowercase, the pinned "
-    "tokenization), JSD(P,Q) = KL(P||M)/1 ... decomposed per word "
-    "with ZERO-count words handled natively (a word absent from Q "
-    "gives ln(2p/(p+q)) = ln 2 exactly; absent from P contributes "
-    "0); the ln ARGUMENT is ONE division of exact BIGINT products "
-    "2*c_p*n_q / (c_p*n_q + c_q*n_p) (the xdk rule — identical "
-    "quotient doubles on both engines, products < 2^53 to ~100x "
-    "bench scale), each term floor-quantized to integer micro-nats "
-    "at the WORD level then summed as c_p-weighted exact integers "
-    "with the per-language denominator constant per leg — two "
-    "integer divisions per pair at the very end. Both KL legs ride "
-    "ONE checkpointed (lang, word) aggregate (vocabulary-bounded; "
-    "the corpus-sized work is the single word-count shuffle); "
-    "ln-boundary fixture contract pinned in "
-    "tests/test_fixture_contracts.py",
     ("documents", "text", "analytics"),
 )
 def xer_lang_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Jensen-Shannon divergence between language unigram distributions: each ln argument
+    one division of exact BIGINT products, terms floor-quantized to micro-nats per word, then exact
+    weighted sums."""
     t = _t(spark, sf_dir)
     wcl = (
         t["documents"]
@@ -15791,22 +14489,11 @@ def xer_lang_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ELSE 'regular' END
     ORDER BY band
     """,
-    "INTER-EVENT BURSTINESS BANDS (Goh & Barabási 2008, B = "
-    "(sigma - mu)/(sigma + mu) over a user's inter-arrival gaps — "
-    "the temporal bot/automation signal next to x87's behavioral "
-    "entropy: B -> -1 is a metronome (scripted), B ~ 0 Poisson "
-    "(organic), B -> +1 heavy bursts): per-user gaps as EXACT whole "
-    "seconds (micros diff div 1e6 — the pinned epoch_us idiom, "
-    "second resolution declared; (ts, event_id) unique lag order), "
-    "integer-op moments + the xej milli-unit sqrt seam, B one "
-    "signed toward-zero quantized division (denominator positive); "
-    "band thresholds compare the ENGINE-IDENTICAL quantized b_q "
-    "(+-0.2 literals), min 5 gaps declared; banded rollup with "
-    "integer-division means. One events scan + one user-ordered "
-    "window + two tiny aggs",
     ("events", "analytics", "timeseries"),
 )
 def xes_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user burstiness B = (sigma - mu)/(sigma + mu) of inter-event gaps in whole seconds (min
+    5 gaps), quantized, then banded at +-0.2 with integer-division means per band."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -15930,31 +14617,11 @@ _SPRT_BOUND_Q = 2944438
            CAST(final_llr_q AS BIGINT) / 1e6 AS final_llr
     FROM agg ORDER BY arm
     """,
-    "WALD SPRT SEQUENTIAL A/B TEST (Wald 1945 — the EARLY-STOPPING "
-    "member of the experimentation family: x73 reads the experiment "
-    "out at a fixed horizon, xdd variance-reduces it; SPRT answers "
-    "'how early could we have stopped' — the sample-efficiency "
-    "judgment sequential testing exists for): H0 p=0.15 vs H1 "
-    "p=0.25 at alpha=beta=0.05 over x73's exact arm/conversion "
-    "frame (md5-hash arms, high-value purchase conversion), "
-    "enrollment order DECLARED as user_id; the log-likelihood walk "
-    "is an exact INTEGER cumsum — per-user steps and decision "
-    "bounds are python-precomputed micro-nat literals (the r10 "
-    "literal-table idiom, formula-pinned incl. the floor-of-"
-    "negative B), so crossing detection is a pure integer compare "
-    "at every prefix; first crossing via two conditional mins "
-    "(earlier bound wins), no crossing -> 'undecided' with n_users "
-    "(degenerate-total semantics); final LLR = one exact counts "
-    "expression. One events scan + user agg + one arm-ordered "
-    "window + tiny agg. SCALE NOTE: a sequential test is inherently "
-    "order-dependent — the per-arm cumsum window moves one arm to "
-    "one partition; at corpus scale implement the walk as the "
-    "standard two-pass parallel prefix scan (per-bucket partial "
-    "sums, broadcast prefix offsets, in-bucket cumsum) — "
-    "bit-identical integers, no single-partition sort",
     ("events", "analytics", "quality"),
 )
 def sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wald SPRT (p0=0.15 vs p1=0.25, alpha=beta=0.05) over the A/B arms in user_id order: integer
+    micro-nat LLR steps and bounds, first crossing per arm or 'undecided'."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -15988,6 +14655,9 @@ def sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("conv") * F.lit(_SPRT_STEP_SUCC)
         + (1 - F.col("conv")) * F.lit(_SPRT_STEP_FAIL)
     )
+    # The sequential walk is order-dependent: this cumsum puts each arm in one partition. At corpus
+    # scale use a two-pass parallel prefix scan (per-bucket partial sums, broadcast offsets); the
+    # integers are identical.
     ww = W.partitionBy("arm").orderBy("user_id")
     walk = arms.select(
         "arm",
@@ -16065,26 +14735,11 @@ def sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS hill_alpha
     FROM terms ORDER BY k
     """,
-    "HILL TAIL-INDEX ESTIMATOR of the purchase-value distribution "
-    "(Hill 1975 — the tail-heaviness judgment completing the "
-    "inequality family: xcr's Gini says how unequal the mass is, "
-    "this says whether the tail is POWER-LAW and how heavy — "
-    "alpha < 2 means infinite variance, the 'can I trust my mean "
-    "revenue' diagnostic): alpha_k = k / sum ln(x_(i)/x_(k+1)) "
-    "over the k largest order statistics, at k = 50 and 100 (two "
-    "rows — the stability readout: a stable alpha across k "
-    "supports the power-law read); top-101 via ONE "
-    "TakeOrderedAndProject under the unique (cents DESC, event_id) "
-    "order (the xco rule — never a global rank), every ln argument "
-    "ONE division of two exact BIGINT cents (xdk rule), micro-nat "
-    "floor per term, exact integer sums, alpha = one integer "
-    "quantized division (k*1e12 div sum); x_i = x_(k+1) gives "
-    "ln 1 = 0 exactly; zero-cent purchases excluded (declared); "
-    "ln-boundary fixture contract pinned. All window/join work on "
-    "the 101-row frame",
     ("events", "analytics", "quality"),
 )
 def xeu_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hill tail index of purchase values at k = 50 and 100 from the top 101 order statistics: each
+    ln term one BIGINT ratio floored to micro-nats, alpha one integer quantized division."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -16185,32 +14840,12 @@ def xeu_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 END AS BIGINT) / 1e6 AS r_squared
     FROM ab
     """,
-    "ZIPF RANK-FREQUENCY EXPONENT (Zipf 1949 — the corpus-"
-    "NATURALNESS diagnostic closing the corpus-statistics family: "
-    "vocab_good_turing estimates unseen mass, xcr token inequality, xer language "
-    "geometry; natural language shows ln(freq) ~ -s*ln(rank) with "
-    "s ~ 1, synthetic word salads drift far from it — a cheap "
-    "generated-vs-organic screen): vocabulary ranked by the unique "
-    "(count DESC, word) order (vocabulary-bounded window — the "
-    "corpus-sized work is the one word-count shuffle), ln(rank) "
-    "and ln(count) floor-quantized to MILLI-nats (each ln takes "
-    "ONE integer argument — trivially the xdk single-quotient "
-    "form; boundary fixture contract pinned; r12 ADVICE fix: at "
-    "micro-nats the raw moment sums sum(x*x) overflowed BIGINT at "
-    "~1e5 distinct words — milli-nats bound x,y <= ln(2^63)*1e3 ~ "
-    "43700, so sum(x*x) < 2^63 holds to ~4.8e9 vocabulary words, "
-    "beyond any real corpus; slope precision loss ~1e-4, "
-    "immaterial for a naturalness screen), OLS slope via "
-    "declared integer-op moments (the xei overflow-free form), "
-    "exponent = one signed G-shrink-guarded quantized division "
-    "NEGATED (the covariance*1e6 product is unguarded-overflow at "
-    "giant-corpus ln magnitudes), r^2 = "
-    "a^2/(b*c) as ONE fixed double expression over the identical "
-    "engine integers floor-quantized (x37 idiom); degenerate "
-    "variances CASE-guarded",
     ("documents", "text", "analytics"),
 )
 def xev_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf exponent: OLS slope of ln(count) on ln(rank) over the vocabulary with both logs floored
+    to milli-nats, integer-op moments, one guarded quantized division, and r^2; degenerate
+    variances guarded."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -16227,6 +14862,7 @@ def xev_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = wc.select(
         F.row_number()
+        # Unpartitioned rank over the vocabulary (vocabulary-bounded).
         .over(W.partitionBy().orderBy(F.col("c").desc(), "w"))
         .cast("long")
         .alias("rk"),
@@ -16234,6 +14870,8 @@ def xev_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lns = ranked.select(
         F.expr(
+            # Milli-nats, not micro: x, y <= ~43700, so sum(x*x) < 2^63 holds to ~4.8e9 distinct
+            # words (micro-nats overflowed at ~1e5).
             "CAST(floor(ln(CAST(rk AS DOUBLE)) * 1000) AS BIGINT)"
         ).alias("x"),
         F.expr(
@@ -16258,6 +14896,8 @@ def xev_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("vocab_size"),
         F.expr(
             "CAST(CASE WHEN b_q <= 0 THEN 0L"
+            # G-shrink guard: the covariance * 1e6 product overflows unguarded at giant-corpus ln
+            # magnitudes.
             " ELSE -(((a_q div greatest(b_q div 1000000000000, 1)) * 1000000)"
             " div greatest(b_q div greatest(b_q div 1000000000000, 1), 1))"
             " END AS BIGINT) / 1e6"
@@ -16315,24 +14955,11 @@ def xev_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS cum_ltv_dollars_per_cust
     FROM cum ORDER BY cohort, age
     """,
-    "COHORT LTV TRIANGLE (the revenue-accumulation staple next to "
-    "xb5's presence-based retention matrix — a MATERIALLY different "
-    "measure per the extension rule: retention counts who came "
-    "back, LTV sums what each acquisition cohort has spent by age "
-    "N, the payback-period readout growth teams plan spend "
-    "against): cohort = month index of the customer's first order "
-    "(year*12 + month — integer, tz-free on DATE), age = order "
-    "month - cohort month, first 12 cohorts x ages 0..11 declared "
-    "(the triangle's fixed frame; the min-cohort fold is a "
-    "broadcast one-row crossJoin), per-cell exact cent sums, "
-    "cumulative LTV per customer = one cohort-partitioned window "
-    "cumsum + integer floor-dollar division by cohort size. All "
-    "integer end-to-end (2dp-true o_totalprice recovery class); "
-    "orders scanned for facts + one first-order agg, both "
-    "checkpoint-free linear chains over the bounded month axis",
     ("orders", "analytics", "customer"),
 )
 def xex_ltv_cohort_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort LTV triangle: first 12 monthly cohorts x ages 0..11, exact cent sums per cell and
+    cumulative floor-dollar LTV per customer from one cohort-partitioned running sum."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -16539,41 +15166,12 @@ def _qc_chain_sql() -> str:
 @query(
     "quality_classifier",
     _qc_chain_sql(),
-    "TRAINED QUALITY CLASSIFIER (the fastText-style learned quality "
-    "gate every production corpus pipeline ships between cheap "
-    "heuristics and dedup — Brown et al. 2020 trained LR on "
-    "WebText-vs-CommonCrawl, CCNet/DSIR distill heuristic signals the "
-    "same way; this is the missing TRAINED member of the quality "
-    "family: x50 rules -> x53/x66 perplexity -> dsir importance -> "
-    "THIS, a logistic regression distilling the Gopher rule verdict "
-    "into a smooth linear scorer): 5 integer per-mille features "
-    "(stopword/punct/digit/distinct per-mille + capped word count; "
-    "the doc_stats extraction, exact on both engines), label = the "
-    "x50 Gopher composite (integer cross-multiplication thresholds), "
-    "integer z-standardization (milli-z, clamped +-4000; sd = "
-    "floor(sqrt(integer variance)) — sqrt of an exact BIGINT is "
-    "engine-identical IEEE, the x37 lesson), then _QC_ROUNDS rounds "
-    "of full-batch gradient descent in EXACT INTEGER arithmetic: "
-    "sigmoid via a 257-edge literal micro-prob table with integer "
-    "linear interpolation between edges (the sprt_ab literal-table "
-    "idiom extended to a transcendental CURVE — no engine calls "
-    "exp(); a step-function table stalled at 0.888 accuracy, "
-    "interpolation reaches the 0.97 float ceiling, measured), "
-    "milli-quantized error so gradient sums hold BIGINT to ~2.3e12 "
-    "docs, truncating-division updates (engine-pair pinned). Output: "
-    "the (round, weights, accuracy) training trajectory — accuracy "
-    "0.76 base -> 0.97 at round 10 on the fixture. Scale shape "
-    "(kmeans collect-per-round pattern, measured optimal r7): ONE "
-    "text-parsing pass materialized by eager localCheckpoint (7 ints "
-    "per doc — regex parsing is expensive COMPUTE, the r11 cache rule "
-    "cuts the other way for cheap re-scans), one stats aggregate, "
-    "then rounds+1 scan-agg jobs each collecting a 7-int gradient "
-    "row; weights travel as literals, no driver-side data motion "
-    "beyond 7 ints per round. Oracle: the identical integer chain "
-    "unrolled as MATERIALIZED CTEs (bpe-chain generator pattern)",
     ("documents", "text", "quality", "analytics"),
 )
 def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Logistic-regression quality classifier distilled from the Gopher rule verdict: 5 integer
+    features, integer z-scores and full-batch gradient descent in exact integer arithmetic with a
+    table sigmoid."""
     t = _t(spark, sf_dir)
     docs = t["documents"]
     text = F.col("text")
@@ -16613,6 +15211,8 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND n_distinct * 10 >= n_words * 3"
             " THEN 1 ELSE 0 END AS BIGINT)"
         ).alias("y"),
+    # Eager: regex parsing is expensive compute, and every gradient round re-scans these 7 ints per
+    # doc.
     ).localCheckpoint(eager=True)
 
     def tdiv(a: int, b: int) -> int:
@@ -16759,28 +15359,12 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cl2 c JOIN kept k ON k.cell = c.cell
     ORDER BY cluster
     """,
-    "CLUSTER-LEVEL PRUNE POLICY (SSL-Prune / DataComp-style curation "
-    "— score whole clusters and act on cluster STATISTICS: the "
-    "curation layer above x51's vector-pair semantic dedup and xaf's "
-    "per-cluster representative choice, both of which need a pair "
-    "scan; this one needs none, so it is the first line of defense "
-    "at 100 TB): milli-quantized components (the silhouette/DBSCAN "
-    "integer space), per-cell exact integer centroid (trunc-div "
-    "sums), per-vector exact squared distance, mean_sqd = one "
-    "integer division per cluster; policy with declared literals — "
-    "collapse near-dup farms (mean_sqd < 5e5) to their min-id "
-    "representative, cap oversized clusters (n > 50) to a "
-    "deterministic portable-hash downsample (x19 idiom), keep the "
-    "rest; kept_xor = bit_xor of surviving ids (scale-safe "
-    "membership checksum — id sums overflow on huge keep clusters, "
-    "XOR never does; bit ops engine-pair pinned r11). Uniform-noise "
-    "fixtures correctly fire NO collapse (honest null, replica- "
-    "asserted); the collapse branch is pinned by a constructed- "
-    "cluster unit test. Corpus-sized work: one posexplode + two "
-    "keyed aggs, all row-linear",
     ("embeddings", "similarity", "dedup"),
 )
 def cluster_prune_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster prune policy: per-cell integer centroid and mean squared distance; collapse tight
+    clusters to their min id, hash-downsample clusters over 50, keep the rest; kept_xor checksums
+    the survivors."""
     t = _t(spark, sf_dir)
     return sim_ops.cluster_prune(t["embeddings"], cap=50, dense_sqd=500_000)
 
@@ -16805,21 +15389,11 @@ def cluster_prune_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE (role = 'pos' AND rank <= 3) OR (role = 'neg' AND rank <= 3)
     ORDER BY query_id, role, rank
     """,
-    "CONTRASTIVE HARD-NEGATIVE MINING (the embedding-model "
-    "training-data op — per anchor emit top same-cell POSITIVES and "
-    "the most-similar other-cell HARD NEGATIVES, the confusables "
-    "a contrastive loss actually learns from; completes the "
-    "similarity family's TRAINING-DATA story next to x47 brute / "
-    "xg1_ann_topk_ivf serving / x51-xf5 dedup curation): anchors = "
-    "vec_id < 20 (a bounded mining batch — batches are how mining "
-    "runs at 100 TB), ONE corpus scan against the broadcast anchor "
-    "set, roles by cell equality, one (anchor, role)-partitioned "
-    "top-k window, cosines round(6) (the pinned cross-engine "
-    "compare); for unbounded anchors the docstring swaps the "
-    "broadcast for the SRP-bucket blocker",
     ("embeddings", "similarity"),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for anchors vec_id < 20: top same-cell positives and most similar
+    other-cell negatives from one scan against the broadcast anchors; cosines rounded to 6dp."""
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
     return sim_ops.mine_contrastive_pairs(
@@ -16875,29 +15449,12 @@ _BLOOM_ABSENT_PROBES = ("blorptok", "qwxjkl", "snarfle", "vrumpt", "xqzzy", "zyz
     FROM verdicts v LEFT JOIN words w ON w.w = v.probe_key
     ORDER BY v.probe_key
     """,
-    "MERGEABLE BLOOM MEMBERSHIP INDEX (Bloom 1970 — completes the "
-    "sketch family's MEMBERSHIP axis next to cms counts, x44 HLL "
-    "cardinality and x45 heavy hitters; Spark's own bloom_filter_agg "
-    "is internal-only in 4.1, so the engine-portable form is 256 "
-    "BIGINT words of 62 usable bits built by ONE bit_or aggregation "
-    "— bits 62/63 stay clear so every stored word is a plain "
-    "positive BIGINT on both engines; two shard indexes merge by "
-    "word-wise bit_or, the property that makes a Bloom the "
-    "corpus-side seen-before structure for incremental dedup / URL "
-    "dedup / cross-shard decontamination where the eval-set "
-    "broadcast of decontaminate_evals does not apply): K=4 hashes as "
-    "independent 6-hex slices of ONE md5 per key (the "
-    "xfp_cms_sketch_probe single-digest idiom), 12 declared probes (6 "
-    "corpus words + 6 absent nonsense words) each report bits set, "
-    "the maybe-present verdict (all 4 set; any clear bit PROVES "
-    "absence) and exact membership for the false-positive readout. "
-    "The 31-word saturated fixture vocabulary fills 124/15872 bits "
-    "-> zero false positives is the honest null (replica-asserted); "
-    "the FP path is pinned by a constructed tiny-index unit test. "
-    "Shifts/bit_or/& engine-pair pinned on adversarial literals",
     ("documents", "dedup", "text"),
 )
 def bloom_membership_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom membership index: 256 BIGINT words of 62 bits from one bit_or aggregation, K=4 md5
+    slices per key, 12 probes reporting bits set, the maybe-present verdict and exact
+    membership."""
     from .operators import decontam as decontam_ops
 
     t = _t(spark, sf_dir)
@@ -16991,26 +15548,12 @@ def bloom_membership_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM quota q LEFT JOIN sel l ON l.lang = q.lang
     ORDER BY q.lang
     """,
-    "TEMPERATURE-SCALED MIXTURE SAMPLING (the mT5 / XLM-R alpha-"
-    "sampling data-mixture op: quotas proportional to corpus-token "
-    "counts raised to alpha = 1/2, boosting low-resource languages "
-    "against head domination — the DERIVED-weight counterpart to "
-    "xdt's declared-literal target proportions, exactly as xej's "
-    "Neyman allocation derives where xd1's Hamilton declares): "
-    "per-language exact token totals, temperature weight w = "
-    "floor(sqrt(tokens)) (sqrt of an exact BIGINT is engine-"
-    "identical IEEE — the xej milli-sqrt seam family), a declared "
-    "200-doc budget apportioned by Hamilton largest remainder over "
-    "the w's (exact integers, (remainder DESC, lang) deterministic "
-    "tie-break — allocations sum to exactly 200), then per-language "
-    "deterministic portable-hash sampling to the quota; selected_xor "
-    "= bit_xor of chosen doc_ids pins WHICH docs were sampled, not "
-    "just how many. Scale shape: one corpus scan for token counts, "
-    "language-bounded lattice work, one hash-rank window per "
-    "language partition; all integer end-to-end",
     ("documents", "text", "analytics"),
 )
 def temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature mixture sampling (alpha = 1/2): weights floor(sqrt(tokens)) per language, a
+    200-doc budget split by largest remainder, then hash sampling to quota; selected_xor checksums
+    the chosen docs."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -17174,35 +15717,12 @@ def _bh_pvalue_table() -> list[int]:
     FROM kstar
     ORDER BY nation
     """,
-    "BENJAMINI-HOCHBERG FDR CONTROL (Benjamini & Hochberg 1995 — the "
-    "MULTIPLE-TESTING member completing the experimentation family: "
-    "x73 tests one readout, sprt_ab stops one test early, xed/xek "
-    "test one association; a metrics platform fires DOZENS of "
-    "hypotheses per day and must control the false-discovery rate "
-    "across them): per-nation one-sample binomial z-test of the "
-    "URGENT-order rate against the global rate — z^2 = (x*N - n*X)^2 "
-    "/ (n*X*(N-X)) as ONE fixed-order double expression over exact "
-    "BIGINTs floor-quantized at 1e-6 (the xed idiom: identical "
-    "integer inputs -> identical IEEE doubles -> identical floor on "
-    "both engines), two-sided p-value via a 641-entry literal "
-    "erfc table over z^2 in [0, 64] with integer linear "
-    "interpolation (the quality_classifier idiom — no engine calls "
-    "erfc), then the BH step-up: rank p ascending under a unique "
-    "order, k* = max rank with p_(k) <= k*q/m as a pure integer "
-    "cross-multiplication at q = 0.10, reject ranks <= k*. The "
-    "fixture's uniform priorities are the HONEST NULL: naive p<0.05 "
-    "flags ~2 nations, BH correctly rejects ZERO (replica-asserted "
-    "— the correction visibly working); the rejection path is "
-    "pinned by a constructed-p unit test on analytics.bh_select. "
-    "Degenerate global rates (x_all = 0 or x_all = n_all — no or all "
-    "URGENT orders) CASE-guard z^2 to 0 identically on both sides "
-    "(the x73 rule: total function on ANY fixture, never an "
-    "engine-divergent Inf/NaN). "
-    "Scale shape: one orders scan -> nation-bounded lattice; the "
-    "unpartitioned windows ride the 25-row hypothesis frame",
     ("orders", "customer", "nation", "analytics"),
 )
 def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benjamini-Hochberg at q=0.10 over per-nation binomial z-tests of the URGENT rate: z^2
+    floor-quantized, p from a literal erfc table, step-up by integer cross-multiplication;
+    degenerate rates guarded."""
     from pyspark.sql.window import Window as W
 
     from .operators import analytics as an_ops
@@ -17231,6 +15751,7 @@ def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = cell.select(
         "*",
+        # Unpartitioned windows over the 25-row per-nation hypothesis frame.
         F.sum("n_i").over(W.partitionBy()).cast("long").alias("n_all"),
         F.sum("x_i").over(W.partitionBy()).cast("long").alias("x_all"),
         F.count(F.lit(1)).over(W.partitionBy()).cast("long").alias("m"),
@@ -17363,35 +15884,12 @@ def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
            (p_q <= 50000000) AS significant
     FROM p
     """,
-    "DIFFERENCE-IN-DIFFERENCES READOUT (Card & Krueger 1994 shape — "
-    "the OBSERVATIONAL-causal member completing the experimentation "
-    "family: x73 randomized A/B, xdd CUPED variance reduction, "
-    "xfc multiple-testing; DiD is what ships when assignment is a "
-    "rollout, not a coin flip): user-period panel of exact purchase "
-    "cents (integer day index, tz-free; period = above/below the "
-    "data's own midpoint day via a broadcast one-row fold; arm = "
-    "deterministic hash), 2x2 cell moments as exact BIGINTs in ONE "
-    "12-counter aggregate, interaction estimate and unpooled z^2 = "
-    "did^2 / sum(var_cell/n_cell) each as ONE fixed-order double "
-    "expression over the identical integers floor-quantized (x37/xed "
-    "idiom), two-sided p via the shared 641-entry literal erfc table "
-    "(xfc), significance an integer compare at 0.05. Sign carried "
-    "separately from the p magnitude (r6 magnitude+sign rule). "
-    "Honest null: random hash arms on organic data -> |z| ~ 1.1, "
-    "not significant (replica-asserted); the mechanism's arithmetic "
-    "is pinned by the replica re-deriving everything from raw "
-    "events. Degenerate panels (any empty 2x2 cell, or zero pooled "
-    "variance incl. tiny-negative float cancellation) CASE-guard "
-    "did_mc/z2_q to 0 identically on both sides (x73 rule — total "
-    "function; an unguarded zero variance could even drive z2_q "
-    "NEGATIVE and index the erfc table out of range). "
-    "Headroom: cents^2 sums hold BIGINT to ~9e8 user-periods "
-    "at $1k spends (pre-scale to dollars beyond). One events scan + "
-    "one user-keyed agg + a 12-counter combine — scan-speed at any "
-    "corpus size",
     ("events", "analytics"),
 )
 def did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Difference-in-differences readout: 2x2 (arm x period) cell moments of exact purchase cents,
+    the interaction estimate, z^2 and a table p-value, all from identical integers; degenerate
+    panels guarded to 0."""
     t = _t(spark, sf_dir)
     ev = t["events"].select(
         "user_id",
@@ -17434,6 +15932,8 @@ def did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.when(cond, F.col("cents")).otherwise(0))
                 .cast("long")
                 .alias(f"s_{tag}{tag2}"),
+                # Headroom: cents^2 sums hold BIGINT to ~9e8 user-periods at $1k spends; pre-scale
+                # to dollars beyond.
                 F.sum(F.when(cond, F.col("cents") * F.col("cents")).otherwise(0))
                 .cast("long")
                 .alias(f"q_{tag}{tag2}"),
@@ -17531,30 +16031,12 @@ def did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(s.ssd AS BIGINT) AS ssd_q
     FROM tot t LEFT JOIN ssd s ON true
     """,
-    "DELETE-ONE JACKKNIFE STANDARD ERROR (Quenouille/Tukey — the "
-    "closed-form resampling member next to xds's Poisson bootstrap: "
-    "the bootstrap resamples with RNG-derived weights, the jackknife "
-    "needs NO randomness because every leave-one-out replicate of a "
-    "RATIO statistic is computable from the totals by algebra — "
-    "theta_(-i) = (S - s_i)/(N - n_i) — so the all-replicates pass "
-    "is ONE corpus scan at any scale, the property that makes "
-    "jackknife THE production SE for ratio metrics): statistic = "
-    "corpus stopword rate S/N over documents; per-doc replicate "
-    "floor-quantized at 1e-9 from ONE double division of exact "
-    "BIGINTs (identical inputs -> identical IEEE doubles both "
-    "engines, x37 reasoning — no libm in sight, no boundary "
-    "contract needed), centered by the integer mean (trunc-div), "
-    "SSD as exact integer sum of squared nano-deviations (two-pass "
-    "centered form — the one-pass moment form sum(tq^2) would "
-    "overflow BIGINT at fixture scale; deviations are self-limiting "
-    "~s_i/N so the centered sum SHRINKS as the corpus grows), "
-    "SE = sqrt((n-1) ssd / n)/1e9 — sqrt of identical doubles. "
-    "theta via the pinned count-ratio quantization. Scale shape: "
-    "one text scan + a broadcast one-row totals fold + one centered "
-    "aggregate; python replica re-derives everything",
     ("documents", "text", "analytics"),
 )
 def jackknife_se(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delete-one jackknife SE of the corpus stopword rate: each leave-one-out replicate from the
+    totals in one scan, quantized at 1e-9, centered by the integer mean, SE from the exact sum of
+    squares."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -17584,6 +16066,8 @@ def jackknife_se(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(sum(tq) AS BIGINT) div CAST(count(1) AS BIGINT)"
         ).alias("mq")
     )
+    # Two-pass centered form: the one-pass sum(tq^2) would overflow BIGINT at fixture scale, while
+    # centered deviations shrink as the corpus grows.
     ssd = (
         tq.join(F.broadcast(m), how="left")
         .agg(
@@ -17655,36 +16139,12 @@ def jackknife_se(spark: SparkSession, sf_dir: str) -> DataFrame:
                )) AS BIGINT) + 1 AS estimate_within_2se
     FROM counts
     """,
-    "CAPTURE-RECAPTURE POPULATION ESTIMATE (Lincoln-Petersen via the "
-    "Chapman 1951 bias-corrected form — the mark-recapture estimator "
-    "as corpus QA: when near-dup VERIFICATION is budgeted, two "
-    "independently-sampled verification passes over the same "
-    "candidate population estimate the FULL verified-dup count "
-    "without ever verifying everything — 'how many dup pairs exist' "
-    "from two cheap half-passes, the wildlife-census trick applied "
-    "to data curation): population = LSH candidates passing the "
-    "exact-Jaccard 0.8 verify (round-6 count-ratio form, mirroring "
-    "minhash_near_dup's own filter EXACTLY — a different-but-"
-    "equivalent cross-mult here would be the xb6 fixture-luck class), "
-    "capture A/B = two INDEPENDENT deterministic hash samples of the "
-    "verification budget (portable md5, 50% each — the capture "
-    "process is the sampling, stated plainly; classic LP instead "
-    "assumes two independent DETECTORS, whose catchability varies "
-    "with pair similarity — heterogeneous-catchability bias the "
-    "sampled-verification framing avoids), Chapman N-hat = "
-    "(n_a+1)(n_b+1) div (n_both+1) - 1 in exact integers, coverage "
-    "as the pinned count-ratio quantization. Fixture luxury: n_true "
-    "is computable exactly (25 pairs at sf0.01), so the output "
-    "carries the Chapman SE (one fixed double expression over the "
-    "exact counters, Seber 1982 form) and a within-2-SE sanity flag "
-    "that stays honest at every scale (an absolute band would fail "
-    "as SE grows ~sqrt(N) — measured: SE 5 at sf0.01, 47 at 10x); "
-    "python replica re-derives capture sets and "
-    "estimator. Scale: rides the existing LSH candidate machinery, "
-    "plus one 4-counter aggregate",
     ("documents", "dedup", "analytics"),
 )
 def capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chapman capture-recapture estimate of verified near-dup pairs from two independent 50% hash
+    samples of LSH candidates, in exact integers, with its SE and a within-2-SE check against the
+    exact count."""
     t = _t(spark, sf_dir)
     pop = dedup_ops.minhash_near_dup(
         t["documents"], shingle_n=3, num_hashes=16, rows_per_band=2, threshold=0.8
@@ -17810,35 +16270,12 @@ def capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM by_depth d LEFT JOIN branch b ON true
     ORDER BY d.depth
     """,
-    "DOCUMENT-ATOMIC SEQUENCE PACKING (the r13 depth flagship — the "
-    "production packing shape for instruction-tuning/T5/GPT corpora: "
-    "whole documents into fixed 512-token training bins, never split "
-    "across sequences, so no cross-sequence attention contamination; "
-    "completes the packing family where x25 is concat-and-chunk with "
-    "straddling and xa2 bin-packs file METADATA in layout order): "
-    "Next-Fit-Decreasing over the (length, count) HISTOGRAM — the "
-    "histogram-packing insight (Krell et al. 2021): same-length "
-    "documents are interchangeable, so the entire packing DECISION "
-    "folds over <= 512 histogram classes with scalar integer state "
-    "(open-bin id, remainder), O(cap) work at ANY corpus size. Spark "
-    "side collects the bounded histogram and folds driver-side "
-    "(operators/packing.nfd_plan — the kmeans collect pattern), then "
-    "broadcast-joins the per-class plan so each doc derives its bin "
-    "id in closed form from its within-class rank: r <= fill -> the "
-    "inherited open bin, else new_start + (r-fill-1) div per_bin. "
-    "Oracle mirrors the fold as a LINEAR recursive CTE (one row per "
-    "class — scalar state, so no AS MATERIALIZED fan-out of the xcw "
-    "class). Closed form == true sequential NFD: pinned by a "
-    "hypothesis property test vs a brute per-item simulator AND a "
-    "python replica over the real fixture; zero-token and >cap "
-    "documents are declared counted branches (honest null on "
-    "fixtures: both 0 — lengths 10..100; branch raise pinned by unit "
-    "test). Output: per-depth bin census + exact packing efficiency "
-    "(count-ratio quantization), docs_xor = xor-of-xors membership "
-    "checksum (overflow-free at any scale). All integers end-to-end",
     ("documents", "text", "analytics"),
 )
 def pack_sequences_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document-atomic Next-Fit-Decreasing packing into 512-token bins over the (length, count)
+    histogram; per-doc bin ids in closed form. Per-depth bin census, packing efficiency and a
+    docs_xor checksum."""
     from pyspark.sql.window import Window as W
 
     from .operators import packing as pack_ops
@@ -17870,6 +16307,7 @@ def pack_sequences_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bins",
         "tokens_at_depth",
         "docs_xor",
+        # Unpartitioned windows over the per-depth census (one row per bin depth).
         F.sum("n_bins").over(W.partitionBy()).cast("long").alias("n_bins_total"),
         F.sum(F.col("depth") * F.col("n_bins"))
         .over(W.partitionBy())
@@ -18011,34 +16449,12 @@ def _knn_round_sql(prev: str, rnd: int, k: int) -> str:
     LEFT JOIN fh ON fh.u = p.u
     ORDER BY probe_id
     """,
-    "NN-DESCENT k-NN GRAPH + RECALL AUDIT (Dong et al. 2011 — the "
-    "graph-based ANN member completing the family's RECALL story "
-    "beyond IVF cells, and the first ANN-recall query with a FULL "
-    "value oracle: x21/x41/x90 are rows-only because their sketches "
-    "are nondeterministic, but NN-descent over exact integer "
-    "distances with unique (d2, id) tie-breaks is a deterministic "
-    "function of the data, so the whole graph hash-matches): seed "
-    "each vector's k=6 list from the coarse-cell blocker (label "
-    "cells, the x98 declared semantics), then 2 NN-descent rounds — "
-    "symmetrize to B(v) = out+in neighbors capped at 2k by distance "
-    "rank (the paper's sampling bound), in-array (i<j) wedge "
-    "candidates map-side (the x94 kernel), exact integer milli-unit "
-    "distances via ONE Arrow numpy kernel (the dbscan BLAS lesson; "
-    "int64 end-to-end, kernel emits only integers), union + re-rank "
-    "top-k. Audit: recall@6 of seed AND final lists vs exact "
-    "brute-force for 32 probe anchors — the output shows what the "
-    "descent rounds RECOVER beyond the blocker (cross-cell true "
-    "neighbors the cell join structurally misses). Oracle = the same "
-    "bounded chain as MATERIALIZED CTEs from one generator (the "
-    "_bpe_chain_sql idiom); python replica re-runs the whole descent "
-    "in numpy independently. Count-ratio recalls, window means over "
-    "the 32-row probe frame. Scale: cell-blocked seeds, <= |V|*(2k "
-    "choose 2) wedge rows/round emitted map-side with both endpoint "
-    "vectors riding the collected neighborhood (r15: the attach joins "
-    "and candidate distinct fused away) — no all-pairs scan anywhere",
     ("embeddings", "similarity", "graph"),
 )
 def graph_knn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NN-descent k-NN graph (k=6): cell-blocked seeds, 2 rounds of in-array wedge candidates
+    re-ranked by exact integer distances, and recall@6 of seed and final lists for 32 probe
+    anchors."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -18168,28 +16584,11 @@ def _pass_at_k_expr(k: int) -> str:
     FROM scored
     ORDER BY user_id
     """,
-    "UNBIASED PASS@K (Chen et al. 2021, HumanEval appendix — the "
-    "LLM-eval staple completing the eval family next to xe3 AP / "
-    "roc_auc_eval / calibration_ece / xdz kappa: given n sampled "
-    "attempts per task with c successes, the unbiased probability "
-    "that at least one of k random draws succeeds is 1 - C(n-c,k)/"
-    "C(n,k); read here over the events fixture as tasks = users, "
-    "attempts = events, success = purchase — the estimator is "
-    "domain-agnostic): the combinatorial ratio as a k-term product "
-    "of exact-BIGINT quotients in ONE fixed expression order "
-    "(identical integers -> identical IEEE doubles -> identical "
-    "floor both engines, the x63/xed idiom; the naive C(n,k) BIGINT "
-    "product overflows at n ~ 80 for k = 10 — the quotient-product "
-    "form never overflows at ANY n), c = 0 and n - c < k guarded to "
-    "exact 0 / 1e6 BEFORE the product (the ELSE branch then has all "
-    "factors positive — no x/0, total function), ppm quantization, "
-    "corpus means by integer window division. One events scan + one "
-    "user-keyed agg; the unpartitioned windows ride the task frame. "
-    "Python replica re-derives from raw events via "
-    "math.comb exact rationals (a genuinely independent formula)",
     ("events", "analytics"),
 )
 def pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unbiased pass@k (k = 1, 5, 10) per user (tasks = users, success = purchase):
+    1 - C(n-c,k)/C(n,k) as a fixed-order product of BIGINT quotients in ppm, plus corpus means."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -18219,6 +16618,7 @@ def pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p5_ppm").cast("long") / 1e6).alias("pass_at_5"),
         (F.col("p10_ppm").cast("long") / 1e6).alias("pass_at_10"),
         (
+            # Unpartitioned OVER () windows over the task frame (one row per user).
             F.expr("CAST(sum(p1_ppm) OVER () div count(1) OVER () AS BIGINT)")
             / 1e6
         ).alias("mean_pass_at_1"),
@@ -18294,31 +16694,11 @@ def pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dec d JOIN expick e ON e.q = d.q
     ORDER BY d.q
     """,
-    "MERGEABLE HDR QUANTILE SKETCH + EXACT AUDIT (HdrHistogram / "
-    "DDSketch family, Masson et al. 2019 — the QUANTILE axis of the "
-    "mergeable-sketch family: xfp cms = counts, bloom = membership, "
-    "x44 HLL = cardinality, x45 = heavy hitters; production latency/"
-    "size percentiles at 100 TB are served by a merge of per-shard "
-    "constant-size histograms, not an exact selection per probe): "
-    "bucket = pure-INTEGER msb form length(bin(v))-1 with 5 mantissa "
-    "bits (<= 3.125% relative width; values < 32 exact) — no float "
-    "log anywhere, unlike quantiles._log_bucket where the float "
-    "bucket is only an exactness-agnostic PRUNING device; here the "
-    "bucket layout IS the driver-facing contract, so it must be "
-    "integer-exact (variable-amount >>/<< pinned engine-pair). "
-    "Sketch = one map-side-combinable groupBy (<= ~1200 rows at any "
-    "corpus size); merge law = bucket-wise count sum (unit-pinned); "
-    "quantile probe = integer cross-mult rank walk (cum*100 >= n*q) "
-    "over the bounded bucket frame. The audit: the EXACT quantile at "
-    "the same integer rank rule (xcr value-histogram cumsum; fixture-"
-    "scale distinct-cents frame — production audits sample or use "
-    "operators/quantiles' bounded-state selection) must fall inside "
-    "[lo, hi] — structurally guaranteed by bucket monotonicity, "
-    "emitted as the sketch's validity readout with the bucket's "
-    "relative width. All integers end-to-end",
     ("lineitem", "analytics"),
 )
 def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable HDR quantile sketch with integer msb buckets (5 mantissa bits), quantiles by
+    integer rank walk, and an audit that the exact quantile falls inside the reported bucket."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -18500,33 +16880,12 @@ def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grouped
     ORDER BY bloom_says, actually_member
     """,
-    "BLOOM-PRUNED JOIN AUDIT (the runtime-row-filtering pattern Spark "
-    "implements internally with its non-public bloom_filter_agg — a "
-    "fact-side scan probes a tiny membership index built from the "
-    "filtered dim side and skips rows that PROVABLY cannot join, "
-    "trading a bounded false-positive pass-through rate for never "
-    "shuffling non-matching rows; this query exercises the hardened "
-    "decontam.bloom_build/probe pair end-to-end in its production "
-    "role): dim = BUILDING customers (302 keys at sf0.01) into a "
-    "DELIBERATELY small 32-word index (1984 bits, ~61% fill) so the "
-    "false-positive path carries REAL traffic — the r12 bloom row's "
-    "honest null was zero FPs at 0.8% fill, leaving the FP path "
-    "pinned only by a constructed unit test; here ~14% of "
-    "non-members pass and the driver hashes the exact count "
-    "(deterministic given md5). Output: the 2x2 (bloom_says x "
-    "actually_member) census over distinct probe keys with order-row "
-    "mass, the FP rate among non-members, the row-pass fraction, and "
-    "n_false_negatives — exactly 0 by the any-clear-bit-proves-"
-    "absence law (replica-asserted; the structurally-empty "
-    "(says=false, member=true) cell never appears). Spark side goes "
-    "through bloom_probe's fingerprint guard (the ADVICE r12 "
-    "hardening) — this is the first registry consumer to exercise it "
-    "driver-shaped. Production sizing note: n_words scales with "
-    "|dim| for a target FP rate (~10 bits/key for 1%); the 32-word "
-    "choice here is the declared adversarial-fill constant",
     ("customer", "orders", "dedup"),
 )
 def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-pruned join audit: a small 32-word index of BUILDING customers probes order keys; the
+    2x2 (bloom says x member) census, false-positive rate, row-pass fraction and zero false
+    negatives."""
     from pyspark.sql.window import Window as W
 
     from .operators import decontam as decontam_ops
@@ -18639,27 +16998,12 @@ def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tri t LEFT JOIN ctx c ON true
     ORDER BY t.i1, t.i2, t.i3
     """,
-    "FREQUENT ITEMSETS VIA APRIORI (Agrawal & Srikant 1994 — the "
-    "market-basket mining classic completing the family above xch's "
-    "pair-affinity: frequent TRIPLES with the candidate-pruning "
-    "machinery that makes k >= 3 tractable at 100 TB): the ENGINE "
-    "runs true Apriori — frequent items L1 prune the basket stream, "
-    "frequent pairs L2 (support >= 2) generate candidate triples by "
-    "the L2-join-L2 prefix rule (shared i1, i2 < i3) FURTHER pruned "
-    "by the (i2, i3) in L2 subset check, and only basket-instances "
-    "of surviving candidates are counted — while the ORACLE counts "
-    "triples NAIVELY from the definition; the two agree by the "
-    "Apriori theorem itself (every sub-itemset of a frequent triple "
-    "is frequent, so pruning never drops one — the oracle-vs-engine "
-    "pair literally checks the theorem on real data every round). "
-    "Candidate volume at scale is bounded by L2 joins (pair-frequent "
-    "prefixes), never the item-catalog cross product; basket triple "
-    "instances come from the L2-restricted per-basket pair frame "
-    "joined on (basket, shared-first-item) — the wedge shape. "
-    "All exact integer counts; unique (i1, i2, i3) order",
     ("lineitem", "analytics"),
 )
 def frequent_itemsets_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent triples by Apriori (L1 and L2 pruning, L2-join-L2 candidates) checked against an
+    oracle that counts triples naively; they agree by the Apriori theorem. Exact counts, unique
+    order."""
     t = _t(spark, sf_dir)
     items = (
         t["lineitem"]
@@ -18848,40 +17192,12 @@ def _hll_oracle_sql() -> str:
 @query(
     "hll_cardinality",
     _hll_oracle_sql(),
-    "PORTABLE INTEGER HYPERLOGLOG (Flajolet et al. 2007) -- the "
-    "CARDINALITY axis completing the mergeable-sketch family "
-    "(membership = bloom_membership_index, frequency = xfp count-min, "
-    "quantile = hdr_quantile_sketch; cardinality was the r13 verdict's "
-    "named gap): per-event_type register sketches over event ids, "
-    "bucket-wise-MAX merged into a corpus sketch, plus a low-"
-    "cardinality user-id sketch so BOTH estimator branches (raw HLL "
-    "and small-range linear counting) are live in-query. One md5 per "
-    "key sliced into an 8-bit bucket and a 48-bit rank field (rank = "
-    "49 - length(bin(v)), the pure-integer msb idiom); estimate = "
-    "floor(alpha_256 * 2^65 / S) via two exact BIGINT divisions "
-    "(alpha scaled to 2^61, formula-pinned) -- no doubles anywhere, so "
-    "the estimate hash-matches cross-engine, unlike engine-private "
-    "approx_count_distinct (x04). Small-range branch reads a 256-entry "
-    "literal round(m*ln(m/V)) table (the transcendental-free "
-    "literal-table idiom). THEOREM-CHECKING oracle (the Apriori "
-    "precedent): the engine MERGES per-shard sketches into '__all__' "
-    "while the oracle builds the global sketch directly from all keys "
-    "-- equality holds by the merge law max(max(A), max(B)) = "
-    "max(A u B) itself, so the oracle is structurally independent of "
-    "the merge path. Estimator sanity is SCALE-AWARE (the xff rule): "
-    "within_3se compares against 3 * 1.04/sqrt(256) = 19.5% relative "
-    "SE by integer cross-multiplication -- valid at any corpus size. "
-    "Scale shape: registers are map-side-combinable max aggregates, "
-    "<= 258 rows per shard at ANY corpus size; merge is one tiny "
-    "groupBy; nothing data-sized ever leaves the executors. Duplicate "
-    "keys need no pre-distinct (max is idempotent), so the build is "
-    "one scan, no distinct shuffle. The operator's parameter-"
-    "fingerprint guard (bucket -1/-2 carry +-fp; mismatched merges "
-    "break the cancellation) is exercised by unit pin, not here -- "
-    "the oracle has no meta rows and the guard contributes 0",
     ("events", "sketch", "analytics"),
 )
 def hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Portable integer HyperLogLog per event type, merged into a corpus sketch by bucket-wise max,
+    with both estimator branches live and a 3-SE sanity check. No doubles, so it hash-matches
+    across engines."""
     from .operators.cardinality import HLL_M, hll_build, hll_estimate, hll_merge
 
     t = _t(spark, sf_dir)
@@ -18997,36 +17313,12 @@ def hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g CROSS JOIN hc
     ORDER BY g.lang
     """,
-    "KRUSKAL-WALLIS RANK TEST + EPSILON-SQUARED (Kruskal & Wallis "
-    "1952 -- the NONPARAMETRIC twin of xek's one-way ANOVA in the "
-    "bivariate-association matrix; rank-based, so heavy tails and "
-    "outliers cannot dominate the way they can a variance "
-    "decomposition): does document length differ by language, by "
-    "ranks. NO global per-row sort: lengths collapse to a "
-    "(value, count) histogram (the xcr Gini run-collapse idiom) and "
-    "tie-aware DOUBLED average ranks are exact integers from ONE "
-    "histogram cumsum window -- r2(v) = 2*cum(v) - cnt(v) + 1 (the "
-    "spearman doubled-rank idiom) -- so per-language rank sums are "
-    "exact BIGINTs at any corpus size. H = 12*sum(R_j^2/n_j)/(N(N+1)) "
-    "- 3(N+1) with the group term quantized per group (error < 1 per "
-    "group, bounded group count -- the xek T-idiom), G-shrink-guarded "
-    "against the ~10x-decade overflow of A*1e6 (the xek gg idiom; the "
-    "shrink divides numerator AND denominator, ceiling the divisor so "
-    "the quotient cannot inflate); tie correction H/(1 - sum(t^3-t)/"
-    "(N^3-N)) as one further guarded integer division. NO significance "
-    "verdict: chi2(k-1) critical values depend on the data-driven "
-    "group count (the xek/xe4 rule) -- the statistic and epsilon^2 "
-    "effect size are the deliverable. EXPECTED HONEST NULL on these "
-    "fixtures: generator doc lengths are lang-independent (xek "
-    "measured F < 1). SCALE NOTE: the tie term needs N^3 - N, which "
-    "overflows BIGINT loudly (ANSI) past ~2e6 rows -- bin lengths "
-    "into coarser classes first at that scale (histogram semantics "
-    "unchanged). H should sit near its null mean ~ k-1 and "
-    "epsilon^2 near 0 -- the replica asserts that truthful null, not "
-    "fake liveness (the r11 honest-null rule)",
     ("documents", "analytics", "text"),
 )
 def xg3_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kruskal-Wallis H and epsilon^2 of doc length by language from a value histogram with exact
+    doubled ranks, guarded integer divisions and tie correction. No verdict: critical values depend
+    on the group count."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -19087,6 +17379,8 @@ def xg3_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("a"),
         )
+        # N^3 - N overflows BIGINT loudly (ANSI) past ~2e6 rows; at that scale bin lengths into
+        # coarser classes first.
         .withColumn("d", F.expr("n * n * n - n"))
         .withColumn(
             "h_q",
@@ -19210,36 +17504,12 @@ def _ipf_oracle_sql() -> str:
 @query(
     "xg4_raking_ipf",
     _ipf_oracle_sql(),
-    "SURVEY RAKING / ITERATIVE PROPORTIONAL FITTING (Deming & Stephan "
-    "1940 -- corpus reweighting to TWO marginal targets at once, the "
-    "two-axis generalization of the mixing family's single-marginal "
-    "members xdt/temperature_mixture: a training-data pipeline that "
-    "must hit a (language x length-bucket) target mix cannot get "
-    "there with independent per-axis rates; IPF finds the rank-1 cell "
-    "weights w_ij = u_i * v_j whose weighted marginals match both "
-    "axes): 5 bounded rounds alternating u_i = row-target / "
-    "sum_j(c_ij v_j) and v_j = col-target / sum_i(c_ij u_i), every "
-    "half-step ONE exact integer division quantized to micro-units "
-    "(the x66 quantize-at-source idiom -- both engines floor the same "
-    "single quotient, so the whole trajectory is BIGINT-identical); "
-    "degenerate zero denominators CASE-guarded on both sides (x73 "
-    "rule; cannot fire while every lang/bucket is populated -- the "
-    "contingency liveness is fixture-checked tri-SF). State is "
-    "BOUNDED (5 u + 3 v values), so the engine collects the "
-    "contingency table once (the kmeans/NFD bounded-collect pattern) "
-    "and folds the rounds driver-side in integers (non-negative "
-    "throughout, so python // == the engines' truncating division), "
-    "then all emission arithmetic -- w_ij, kept mass, achieved vs "
-    "target marginals, max gap -- runs IN-PLAN from two broadcast "
-    "literal frames, mirroring the oracle's unrolled MATERIALIZED CTE "
-    "chain (the kcore recipe). Scale shape: one corpus scan to the "
-    "(lang, bucket) aggregate; everything after is O(cells). "
-    "Liveness: achieved marginals land within max_gap_micro of "
-    "targets (replica asserts gap < 1% of corpus mass -- raking "
-    "converges geometrically on positive tables)",
     ("documents", "analytics", "sampling"),
 )
 def xg4_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Raking (IPF) of language x length-bucket cells to both marginal targets: 5 integer rounds
+    folded on the driver, then cell weights, kept mass, achieved vs target marginals and max gap
+    in-plan."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -19249,6 +17519,7 @@ def xg4_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
+    # Collected once: the state is bounded (5 u + 3 v values), so the rounds fold on the driver.
     cell_rows = [(r.lang, r.b, r.c) for r in cells.collect()]
     n = sum(c for _, _, c in cell_rows)
     row_t = dict(_IPF_ROW_TARGETS)
@@ -19333,6 +17604,7 @@ def xg4_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.abs(F.col("col_achieved_micro") - F.col("col_target_micro")),
             )
         )
+        # Unpartitioned window over the lang x bucket cell frame.
         .over(W.partitionBy())
         .cast("long")
         .alias("max_gap_micro"),
@@ -19401,30 +17673,11 @@ def _gmc_oracle_sql() -> str:
 @query(
     "xg5_greedy_max_coverage",
     _gmc_oracle_sql(),
-    "GREEDY MAX-COVERAGE DATA SELECTION (Nemhauser-Wolsey-Fisher 1978 "
-    "-- the submodular-selection staple behind diverse few-shot / "
-    "coreset / dedup-aware sampling: pick k documents maximizing "
-    "covered BIGRAM vocabulary; the greedy pick carries the classic "
-    "1 - 1/e approximation guarantee, and coverage over the fixture's "
-    "CLOSED bigram class (916 bigrams, max 98 per doc -- probed "
-    "tri-SF before building, the r11 unit-of-analysis rule) has real "
-    "submodular structure where unigrams are degenerate: one doc "
-    "holds all 31 words): 8 rounds, each = anti-filter the corpus "
-    "bigram set against the covered set (a BOUNDED python InSet -- "
-    "covered <= 8 * 98 strings, codegen'd membership, never a "
-    "corpus-sized join), per-doc gain aggregation, argmax by "
-    "(gain DESC, doc_id) via orderBy().limit(1) "
-    "(TakeOrderedAndProject, the xco rule), then ONE bounded collect "
-    "of the picked doc's bigrams (the kmeans bounded-collect "
-    "pattern). Oracle = the same greedy as 8 unrolled MATERIALIZED "
-    "CTE rounds (kcore recipe; p{r} is multiply-consumed). All "
-    "integers; unique tie-breaks everywhere. The replica pins the "
-    "SUBMODULARITY THEOREM on real data: greedy marginal gains are "
-    "monotone non-increasing -- a strictly increasing gain would "
-    "prove the implementation wrong, fixture-independent",
     ("documents", "text", "sampling"),
 )
 def xg5_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy max coverage: 8 rounds picking the document that adds the most uncovered bigrams,
+    ties by doc_id. The oracle unrolls the same greedy as 8 CTE rounds."""
     t = _t(spark, sf_dir)
     docs = t["documents"].select(
         "doc_id",
@@ -19443,6 +17696,7 @@ def xg5_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
         .distinct()
+        # Checkpointed once: every greedy round filters and aggregates this (doc, bigram) set.
         .localCheckpoint(eager=True)
     )
     covered: set = set()
@@ -19547,32 +17801,11 @@ def xg5_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
            ((1 + n_extreme) * 1000000 // 200) / 1e6 AS p_value
     FROM ex
     """,
-    "RANDOMIZATION INFERENCE / PERMUTATION TEST (Fisher 1935 -- the "
-    "experimentation family's FOURTH inference paradigm next to the "
-    "parametric z (x73), the Poisson bootstrap (xds) and the "
-    "sequential SPRT: exact finite-sample inference with NO "
-    "distributional assumption, valid for any statistic): 199 "
-    "DETERMINISTIC pseudo-permutations of the x73 arm assignment "
-    "(rank users by md5('perm:' || b || ':' || user_id) per replicate "
-    "-- the hash-ring determinism idiom; fixed margins, so pseudo-A "
-    "is always exactly n_a users), statistic = conversions captured "
-    "by pseudo-A, two-sided extremeness by the INTEGER "
-    "cross-multiplication |s_b * N - n_a * C| >= |s_obs * N - n_a * "
-    "C| (the hypergeometric mean n_a*C/N cleared of its denominator "
-    "-- no float anywhere), p = (1 + n_extreme) / 200 via the "
-    "round-6 integer count-ratio quantization. The arm and "
-    "conversion definitions COPY x73's exact text (the r12 rule: a "
-    "population defined by another operator's filter copies that "
-    "filter verbatim). Honest null expected and asserted: arms are "
-    "hash-random w.r.t. conversion, so p is non-extreme (0.535 at "
-    "sf0.01). SCALE NOTE: fixed-margin permutation ranks B x N rows "
-    "(one window per replicate) -- fine to millions of users x "
-    "hundreds of replicates; at billions of users relax to binomial "
-    "(per-(b,user) hash-bit) assignment, which drops the rank window "
-    "and stays a valid randomization test with random margins",
     ("events", "analytics"),
 )
 def xg6_randomization_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Permutation test of A/B conversions: 199 hash-ranked pseudo-permutations with fixed margins,
+    two-sided extremeness by integer cross-multiplication, p = (1 + n_extreme)/200."""
     from pyspark.sql.window import Window as W
 
     t = _t(spark, sf_dir)
@@ -19620,6 +17853,8 @@ def xg6_randomization_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_b = W.partitionBy("b").orderBy("h", "user_id")
     stats = (
+        # Fixed-margin permutations rank B x N rows (one window per replicate): fine to millions of
+        # users x hundreds of replicates; at billions, switch to per-(b, user) hash-bit assignment.
         perm.withColumn("rk", F.row_number().over(w_b))
         .crossJoin(F.broadcast(obs))
         .groupBy("b")

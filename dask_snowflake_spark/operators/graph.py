@@ -36,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Fixed-round loops on linear lineage (pagerank_integer,
+# label_propagation) localCheckpoint their state every this many rounds:
+# short loops run as one action, long ones keep a bounded plan depth.
+_CHECKPOINT_EVERY = 8
+
 
 def _both_directions(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(u,v) and (v,u) rows from ONE scan of ``edges`` (explode of two
@@ -144,7 +149,6 @@ def pagerank_integer(
     damping_num: int = 85,
     damping_den: int = 100,
     mass: int = 1_000_000_000_000,
-    checkpoint_interval: int = 8,
 ) -> DataFrame:
     """Deterministic integer-arithmetic PageRank over the undirected
     graph ``edges`` — centrality for ranking e.g. which document is the
@@ -166,16 +170,12 @@ def pagerank_integer(
     round as ``connected_components``. Lineage grows LINEARLY in rounds
     (each round reads the previous rank vector once), so short fixed
     loops run as ONE job with overlapping stages; every
-    ``checkpoint_interval`` rounds the state is ``localCheckpoint``ed
+    ``_CHECKPOINT_EVERY`` rounds the state is ``localCheckpoint``ed
     to bound plan depth for long runs without paying a materialization
     job per round. Undirected edges mean every vertex has incoming
     mass, so there are no dangling-mass corrections. Returns
     ``(vertex, pr_q)`` with ``pr_q`` in mass units.
     """
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
     from ..session import track_cache
 
     from pyspark.sql.window import Window as W
@@ -223,7 +223,7 @@ def pagerank_integer(
                 ),
             )
         )
-        if (i + 1) % checkpoint_interval == 0 and (i + 1) < iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
             pr = pr.localCheckpoint(eager=True)
     return pr.select(F.col("__u").alias("vertex"), F.col("__pr").alias("pr_q"))
 
@@ -569,7 +569,6 @@ def label_propagation(
     dst: str,
     *,
     rounds: int = 4,
-    checkpoint_interval: int = 8,
 ) -> DataFrame:
     """Bounded SYNCHRONOUS label propagation communities (Raghavan et
     al. 2007, deterministic variant) — the community-DETECTION member
@@ -603,7 +602,7 @@ def label_propagation(
     exactly ONCE (by the next round's join), so lineage grows LINEARLY
     — like ``pagerank_integer``, a short fixed loop runs as ONE action
     with overlapping stages, and ``localCheckpoint`` truncation is only
-    paid every ``checkpoint_interval`` rounds to bound plan depth for
+    paid every ``_CHECKPOINT_EVERY`` rounds to bound plan depth for
     long runs (4-round A/B at sf0.1: 28 -> 24 deterministic jobs,
     wall-neutral, values tuple-identical). Round count is FIXED —
     probe-free (the x75 rule: when the bound is known, never pay
@@ -613,10 +612,6 @@ def label_propagation(
     id) the vertex holds after ``rounds`` updates. Self-loops dropped
     (a vertex voting for its own label distorts plurality).
     """
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
     from ..session import track_cache
 
     und = track_cache(
@@ -651,7 +646,7 @@ def label_propagation(
         # last-round guard matches pagerank_integer: the final labels
         # frame has no further lineage to truncate, so a checkpoint
         # there is a pure materialization job
-        if (i + 1) % checkpoint_interval == 0 and (i + 1) < rounds:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
             labels = labels.localCheckpoint(eager=True)
     return labels.select(
         F.col("__u").alias("vertex"), F.col("__lbl").alias("community")

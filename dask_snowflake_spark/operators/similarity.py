@@ -638,87 +638,6 @@ def pq_adc_topk(
     )
 
 
-def ivf_pq_index(
-    emb: DataFrame,
-    coarse: list[list[float]],
-    codebooks: list[list[list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ index rows (the faiss ``IndexIVFPQ`` layout): each vector
-    gets its coarse cell (inverted-list key) and the PQ codes of its
-    RESIDUAL against that cell's centroid — residual encoding is what
-    lets small codebooks stay accurate once the coarse quantizer has
-    removed most of the variance. Pure projections against broadcast
-    literals: scan-speed, no shuffle; the float vector can be dropped
-    afterwards (m bytes + one small int per vector survive)."""
-    cents = lit_matrix(coarse)
-    assigned = assign_cells(emb, coarse, vec_col=vec_col, out_col="cell")
-    resid = F.zip_with(
-        F.col(vec_col),
-        F.element_at(cents, F.col("cell") + 1),
-        lambda a, b: a - b,
-    )
-    with_resid = assigned.withColumn("__resid", resid)
-    return pq_encode(with_resid, codebooks, vec_col="__resid", out_col="codes").select(
-        id_col, "cell", "codes"
-    )
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    index: DataFrame,
-    coarse: list[list[float]],
-    codebooks: list[list[list[float]]],
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    q_id: str = "q_id",
-    q_vec: str = "q_vec",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF-PQ search: probe the query's ``nprobe`` closest coarse cells
-    (equi-join on the cell key — the inverted-list prune that caps the
-    scan at nprobe/k_coarse of the corpus), compute one residual lookup
-    table per (query, probed cell), and score each candidate as the sum
-    of m table lookups — no vector arithmetic against the corpus.
-    Returns (q_id, vec_id, rnk) of the approximate top-k; re-rank the
-    shortlist with exact distances for the production pattern."""
-    from pyspark.sql.window import Window as W
-
-    m = len(codebooks)
-    d_m = len(codebooks[0][0])
-    cents = lit_matrix(coarse)
-    probed = assign_cells(queries, coarse, vec_col=q_vec, out_col="cell", nprobe=nprobe)
-    q_resid = F.zip_with(
-        F.col(q_vec), F.element_at(cents, F.col("cell") + 1), lambda a, b: a - b
-    )
-    probed = probed.withColumn("__qr", q_resid)
-    luts = []
-    for s in range(m):
-        sl = F.slice(F.col("__qr"), s * d_m + 1, d_m)
-        cbs = lit_matrix(codebooks[s])
-        luts.append(F.transform(cbs, lambda c: _l2sq(sl, c)).alias(f"lut{s}"))
-    q = probed.select(F.col(q_id), "cell", *luts)
-    dist = sum(
-        F.element_at(F.col(f"lut{s}"), F.element_at(F.col("codes"), s + 1) + 1)
-        for s in range(m)
-    )
-    w = W.partitionBy(q_id).orderBy(F.col("__d"), F.col(id_col))
-    return (
-        index.join(F.broadcast(q), "cell")
-        .select(q_id, id_col, dist.alias("__d"))
-        # a vector can surface from two probed cells of one query —
-        # keep its best lookup distance
-        .groupBy(q_id, id_col)
-        .agg(F.min("__d").alias("__d"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id, id_col, "rnk")
-    )
-
-
 def cluster_prune(
     emb: DataFrame,
     *,

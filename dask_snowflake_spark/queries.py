@@ -34,14 +34,13 @@ class QueryDef:
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => non-SQL-expressible; driver does rows-only
-    description: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 _REGISTRY: dict[str, QueryDef] = {}
 
 
-def query(name: str, oracle: str | None, description: str = "", tags: tuple[str, ...] = ()):
+def query(name: str, oracle: str | None, tags: tuple[str, ...] = ()):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in _REGISTRY:
             # registry naming is LOAD-BEARING (the driver's priority
@@ -50,7 +49,7 @@ def query(name: str, oracle: str | None, description: str = "", tags: tuple[str,
             # different query into the window — fail the day the
             # collision is introduced
             raise ValueError(f"duplicate query name {name!r} in the registry")
-        _REGISTRY[name] = QueryDef(name, fn, oracle, description, tags)
+        _REGISTRY[name] = QueryDef(name, fn, oracle, tags)
         return fn
 
     return deco
@@ -131,23 +130,12 @@ def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     FROM g
     ORDER BY l_returnflag, l_linestatus
     """,
-    "TPC-H Q1-style pricing summary: multi-agg hash aggregation with "
-    "partial (map-side) combine. Exact integer-cents end-to-end (r11 "
-    "adversarial review): disc_price is a 4-TRUE-DECIMAL product and "
-    "charge a 6-decimal one, so round(sum(float), 2) sits on a "
-    "hittable .xx5 boundary where two engines' (or two runs') "
-    "summation orders can land on opposite sides — the r8 "
-    "FIFTH-latent class, which this query predated. Now every "
-    "aggregate sums exact BIGINTs (pc*dk in 1e-4 units, pc*dk*tk in "
-    "1e-6) and the 2dp/4dp outputs are integer HALF-UP divisions "
-    "((v + 50) div 100; (200*s + n) div (2n) for the averages) — "
-    "value-identical to the float form everywhere off the boundary "
-    "and deterministic on it. BIGINT headroom: sum(pc*dk*tk) ~ 2e11 "
-    "per row — fine past 1e7 rows per group; a 100 TB deployment "
-    "sums DECIMAL(38,0) internally instead (docstring note)",
     ("aggregation",),
 )
 def xfw_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1 pricing summary per (returnflag, linestatus) as one map-side-combined hash
+    aggregation. Exact: every aggregate sums integer cents (1e-4 and 1e-6 units) and rounds half-up
+    by integer division, so no .xx5 boundary depends on summation order."""
     t = _t(spark, sf_dir)
     li = t["lineitem"]
     e = li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date")).select(
@@ -163,6 +151,8 @@ def xfw_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("qc").cast("long").alias("sq"),
         F.sum("pc").cast("long").alias("sp"),
         F.sum(F.col("pc") * F.col("dk")).cast("long").alias("sd4"),
+        # BIGINT headroom: pc*dk*tk is ~2e11 per row, so the sum fits past 1e7 rows per group; at
+        # 100 TB sum DECIMAL(38,0) instead.
         F.sum(F.col("pc") * F.col("dk") * F.col("tk")).cast("long").alias("sc6"),
         F.sum(F.lit(100) - F.col("dk")).cast("long").alias("sdisc"),
     )
@@ -194,14 +184,11 @@ def xfw_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    "TPC-H Q6-style selective filter + scalar aggregate; predicates "
-    "push to the parquet scan. price*disc is a 4-true-decimal product, "
-    "so the revenue sums exact integer 1e-4 units and rounds half-up "
-    "by integer division (the r11 q01 rule — a float sum rounded at "
-    "2dp sits on a hittable .xx5 boundary)",
     ("aggregation", "filter"),
 )
 def x11_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q6 selective filter + scalar revenue aggregate with predicates pushed to the scan.
+    Exact: price*disc sums in integer 1e-4 units and rounds half-up by integer division."""
     t = _t(spark, sf_dir)
     li = t["lineitem"]
     e4 = F.expr(
@@ -231,10 +218,10 @@ def x11_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
     """,
-    "count-distinct (expand-based distinct agg) alongside plain aggs",
     ("aggregation",),
 )
 def xey_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-distinct (expand-based distinct agg) alongside plain aggs."""
     t = _t(spark, sf_dir)
     return (
         t["orders"]
@@ -264,10 +251,10 @@ def xey_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (l_returnflag, l_linestatus)
     ORDER BY grouping_kind, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
-    "ROLLUP (hierarchical subtotals) and CUBE (all subtotal combinations) grouping sets",
     ("aggregation",),
 )
 def xfg_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLUP (hierarchical subtotals) and CUBE (all subtotal combinations) grouping sets."""
     t = _t(spark, sf_dir)
     aggs = (F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count(F.lit(1)).alias("n"))
     rolled = (
@@ -304,15 +291,12 @@ def xfg_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    "exact percentile/median via DISTRIBUTED two-phase selection "
-    "(operators.quantiles: range-bucket histogram -> candidate-bucket "
-    "sort; bounded per-task state, never an O(group) agg buffer) + "
-    "collect_set canonicalized by sort. Exactness is the oracle "
-    "contract; approx_quantiles (functions.approx, x04) is the "
-    "fewer-pass sketch alternative.",
     ("aggregation",),
 )
 def xfl_percentile_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact per-group percentile/median by distributed two-phase selection (operators.quantiles:
+    bucket histogram, then candidate-bucket sort) plus a sort-canonicalized collect_set. Bounded
+    per-task state, never an O(group) buffer."""
     from .operators.quantiles import exact_group_quantiles
 
     t = _t(spark, sf_dir)
@@ -356,10 +340,10 @@ def xfl_percentile_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_regionkey
     ORDER BY n_regionkey
     """,
-    "collect_set aggregation canonicalized by sort (list order is nondeterministic otherwise)",
     ("aggregation",),
 )
 def x16_collect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """collect_set aggregation canonicalized by sort (list order is nondeterministic otherwise)."""
     t = _t(spark, sf_dir)
     return (
         t["nation"]
@@ -389,10 +373,10 @@ def x16_collect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND (o_custkey % 2 = 0 OR o_totalprice > 100000)
     ORDER BY o_orderkey
     """,
-    "compound predicates: IN / BETWEEN / LIKE / IS NULL / boolean logic, pushed to the scan",
     ("filter",),
 )
 def xel_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compound predicates: IN / BETWEEN / LIKE / IS NULL / boolean logic, pushed to the scan."""
     t = _t(spark, sf_dir)
     o = t["orders"]
     return (
@@ -426,10 +410,10 @@ def xel_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     ORDER BY p_partkey
     """,
-    "projection with scalar expressions, CASE WHEN, arithmetic",
     ("projection",),
 )
 def xem_projection_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Projection with scalar expressions, CASE WHEN, arithmetic."""
     t = _t(spark, sf_dir)
     return (
         t["part"]
@@ -477,15 +461,12 @@ def xem_projection_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     ORDER BY revenue DESC, n_name
     """,
-    "5-way star join; small dims broadcast, fact joins shuffle on "
-    "keys; TPC-H Q5 shape. Revenue sums exact integer 1e-4 units "
-    "(cents * (100 - disc_pct)) and rounds half-up by integer "
-    "division — the r11 q01 rule: disc_price is a 4-true-decimal "
-    "product, so a float sum rounded at 2dp sits on a hittable .xx5 "
-    "boundary",
     ("join", "aggregation"),
 )
 def xfx_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5 five-way star join: small dims broadcast, the fact table shuffles on keys. Exact:
+    revenue sums integer 1e-4 units (cents * (100 - disc_pct)) and rounds half-up by integer
+    division."""
     t = _t(spark, sf_dir)
     # region/nation are constant-size (5/25 rows at every SF): always
     # broadcast. customer is SF-proportional: let Catalyst/AQE decide.
@@ -530,10 +511,11 @@ def xfx_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                       WHERE o_custkey = c_custkey AND o_totalprice > 350000)
     ORDER BY side, key
     """,
-    "left-semi join (EXISTS, no row multiplication) and left-anti join (NOT EXISTS) as a tagged union",
     ("join",),
 )
 def xf9_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Left-semi join (EXISTS, no row multiplication) and left-anti join (NOT EXISTS) as a tagged
+    union."""
     t = _t(spark, sf_dir)
     big_items = t["lineitem"].filter(F.col("l_quantity") > 45)
     semi = (
@@ -569,10 +551,10 @@ def xf9_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_custkey
     ORDER BY c_custkey
     """,
-    "left outer join preserving unmatched rows + null-tolerant aggregation",
     ("join", "aggregation"),
 )
 def xfk_outer_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Left outer join preserving unmatched rows + null-tolerant aggregation."""
     t = _t(spark, sf_dir)
     return (
         t["customer"]
@@ -600,10 +582,10 @@ def xfk_outer_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY k
     """,
-    "full outer join with unmatched sides on both ends",
     ("join",),
 )
 def xcz_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full outer join with unmatched sides on both ends."""
     t = _t(spark, sf_dir)
     c = t["customer"].select((F.col("c_nationkey") % 40).alias("k")).distinct().alias("c")
     s = t["supplier"].select((F.col("s_suppkey") % 40).alias("k")).distinct().alias("s")
@@ -629,10 +611,10 @@ def xcz_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON o_totalprice >= buckets.lo AND o_totalprice < buckets.hi
     ORDER BY o_orderkey
     """,
-    "theta (non-equi range) join against a broadcast bucket table",
     ("join",),
 )
 def xfa_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theta (non-equi range) join against a broadcast bucket table."""
     t = _t(spark, sf_dir)
     buckets = spark.createDataFrame(
         [("low", 0.0, 50000.0), ("mid", 50000.0, 150000.0), ("high", 150000.0, 1e18)],
@@ -671,11 +653,11 @@ def xfa_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 3
     ORDER BY c_nationkey, rn
     """,
-    "ranking + distribution windows (row_number/rank/dense_rank/ntile/cume_dist/percent_rank) "
-    "+ top-k per group (row_number filter)",
     ("window",),
 )
 def xez_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ranking + distribution windows (row_number/rank/dense_rank/ntile/cume_dist/percent_rank) +
+    top-k per group (row_number filter)."""
     t = _t(spark, sf_dir)
     w = W.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
     # rank/dense_rank/cume_dist over the rounded value so float-equality
@@ -715,10 +697,10 @@ def xez_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     ORDER BY o_custkey, o_orderdate, o_orderkey
     """,
-    "analytic windows: lag/lead/first_value with deterministic tie-broken ordering",
     ("window",),
 )
 def xf0_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Analytic windows: lag/lead/first_value with deterministic tie-broken ordering."""
     t = _t(spark, sf_dir)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
@@ -755,11 +737,11 @@ def xf0_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY o_custkey, o_orderkey
     """,
-    "running ROWS-frame aggregates (cumulative sum/count) + RANGE frame "
-    "over a time axis (trailing 30-day aggregates)",
     ("window",),
 )
 def xf1_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running ROWS-frame aggregates (cumulative sum/count) + RANGE frame over a time axis
+    (trailing 30-day aggregates)."""
     t = _t(spark, sf_dir)
     w = (
         W.partitionBy("o_custkey")
@@ -799,10 +781,10 @@ def xf1_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 25
     """,
-    "global top-k: Spark runs TakeOrderedAndProject (per-partition heap, no full sort)",
     ("sort",),
 )
 def xew_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global top-k: Spark runs TakeOrderedAndProject (per-partition heap, no full sort)."""
     t = _t(spark, sf_dir)
     return (
         t["orders"]
@@ -826,10 +808,10 @@ def xew_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'except', count(*) FROM (SELECT DISTINCT k FROM c EXCEPT SELECT DISTINCT k FROM s)
     ORDER BY op
     """,
-    "set operations: union all / union distinct / intersect / except",
     ("setops",),
 )
 def xcy_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Set operations: union all / union distinct / intersect / except."""
     t = _t(spark, sf_dir)
     c = t["customer"].select(F.col("c_nationkey").alias("k"))
     s = t["supplier"].select(F.col("s_nationkey").alias("k"))
@@ -870,10 +852,10 @@ def xcy_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     ORDER BY p_partkey
     """,
-    "string function family: concat/substr/length/trim/case/regexp/split/levenshtein",
     ("functions",),
 )
 def xf2_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """String function family: concat/substr/length/trim/case/regexp/split/levenshtein."""
     t = _t(spark, sf_dir)
     return (
         t["part"]
@@ -920,11 +902,11 @@ def xf2_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY o_orderkey
     """,
-    "date/time function family: trunc/extract/diff/add_months/format/"
-    "last_day/week boundaries/day offsets/dow/iso week",
     ("functions",),
 )
 def xfm_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Date/time function family: trunc/extract/diff/add_months/format/last_day/week boundaries/day
+    offsets/dow/iso week."""
     t = _t(spark, sf_dir)
     d = F.col("o_orderdate").cast("date")
     return (
@@ -969,10 +951,10 @@ def xfm_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_orderkey < 1000
     ORDER BY l_orderkey, l_linenumber
     """,
-    "math function family: round/abs/ceil/floor/ln/exp/pow/sqrt/mod",
     ("functions",),
 )
 def x48_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Math function family: round/abs/ceil/floor/ln/exp/pow/sqrt/mod."""
     t = _t(spark, sf_dir)
     return (
         t["lineitem"]
@@ -1007,11 +989,11 @@ def x48_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY o_orderkey
     """,
-    "cast / null handling: cast to decimal+string, coalesce, nullif, "
-    "CASE-produced nulls, na.fill over a produced null",
     ("functions",),
 )
 def xfh_null_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cast / null handling: cast to decimal+string, coalesce, nullif, CASE-produced nulls, na.fill
+    over a produced null."""
     t = _t(spark, sf_dir)
     big = F.when(F.col("o_totalprice") > 100000, F.col("o_totalprice"))
     out = (
@@ -1048,11 +1030,11 @@ def xfh_null_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
     ORDER BY event_id
     """,
-    "semi-structured access: string-path extraction (get_json_object) AND "
-    "from_json with an explicit schema -> typed struct field access",
     ("functions", "json"),
 )
 def xfi_json_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured access: string-path extraction (get_json_object) AND from_json with an
+    explicit schema -> typed struct field access."""
     t = _t(spark, sf_dir)
     # both access paths: string-path extraction for the filter, schema'd
     # from_json struct for the typed projection
@@ -1085,11 +1067,11 @@ def xfi_json_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings
     ORDER BY vec_id
     """,
-    "array higher-order functions (size/aggregate/element/filter lambdas) "
-    "+ map construction, map_keys/map_values aggregation, element_at",
     ("functions", "array", "map"),
 )
 def xfn_array_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Array higher-order functions (size/aggregate/element/filter lambdas) + map construction,
+    map_keys/map_values aggregation, element_at."""
     t = _t(spark, sf_dir)
     emb = F.col("embedding")
     n_positive = F.size(F.filter(emb, lambda x: x > 0))
@@ -1131,10 +1113,10 @@ def xfn_array_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, word
     LIMIT 50
     """,
-    "explode/unnest an array column then re-aggregate (word counts)",
     ("functions", "array"),
 )
 def x17_explode_unnest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explode/unnest an array column then re-aggregate (word counts)."""
     t = _t(spark, sf_dir)
     return (
         t["part"]
@@ -1156,10 +1138,10 @@ def x17_explode_unnest(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    "pivot: linestatus columns out of rows (conditional aggregation)",
     ("aggregation",),
 )
 def x02_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pivot: linestatus columns out of rows (conditional aggregation)."""
     t = _t(spark, sf_dir)
     piv = (
         t["lineitem"]
@@ -1181,10 +1163,10 @@ def x02_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY o_orderstatus, o_orderpriority
     """,
-    "dropDuplicates on a projection",
     ("projection",),
 )
 def x10_distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dropDuplicates on a projection."""
     t = _t(spark, sf_dir)
     return (
         t["orders"]
@@ -1202,10 +1184,10 @@ def x10_distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
     ORDER BY c_custkey
     """,
-    "scalar subquery in predicate (uncorrelated aggregate subquery)",
     ("filter", "subquery"),
 )
 def x06_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scalar subquery in predicate (uncorrelated aggregate subquery)."""
     t = _t(spark, sf_dir)
     t["customer"].createOrReplaceTempView("customer")
     return spark.sql(
@@ -1236,10 +1218,10 @@ def x06_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) >= 5 AND sum(CAST(round(o_totalprice * 100) AS BIGINT)) > 20000000
     ORDER BY o_custkey
     """,
-    "post-aggregation HAVING filter",
     ("aggregation", "filter"),
 )
 def x08_having(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Post-aggregation HAVING filter."""
     t = _t(spark, sf_dir)
     return (
         t["orders"]
@@ -1265,10 +1247,10 @@ def x08_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY s_suppkey
     """,
-    "nested IN subqueries (rewritten to semi-joins by Catalyst)",
     ("filter", "subquery"),
 )
 def x07_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nested IN subqueries (rewritten to semi-joins by Catalyst)."""
     t = _t(spark, sf_dir)
     for name in ("supplier", "nation", "region"):
         t[name].createOrReplaceTempView(name)
@@ -1288,12 +1270,11 @@ def x07_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x04_approx_sketches",
     None,  # approximate by design: rows-only check
-    "approximate sketches: approx_count_distinct (HLL++), percentile_approx — no exact oracle by design",
     ("aggregation", "approx"),
 )
 def x04_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.approx import approx_distinct, approx_median
-
+    """Bounded-state sketches next to an exact countDistinct: HLL++ approx_count_distinct and a
+    percentile_approx median per returnflag. No exact oracle by design."""
     t = _t(spark, sf_dir)
     li = t["lineitem"]
     # the exact countDistinct runs in its OWN aggregation: mixed
@@ -1302,8 +1283,10 @@ def x04_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3.35 s combined vs 0.3 s each separate at sf0.1 — the join of
     # two 5-row aggregates is free)
     sketches = li.groupBy("l_returnflag").agg(
-        approx_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
-        approx_median("l_extendedprice", accuracy=1000).alias("approx_median_price"),
+        F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
+        F.percentile_approx("l_extendedprice", F.lit(0.5), F.lit(1000)).alias(
+            "approx_median_price"
+        ),
     )
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("exact_parts")
@@ -1354,11 +1337,11 @@ def _scratch_dir(name: str, sf_dir: str | None = None) -> str:
     GROUP BY event_type
     ORDER BY fmt, grp
     """,
-    "CSV and JSON-lines sink + source roundtrips: write, read back with "
-    "explicit schema, aggregate — tagged union of both formats",
     ("source", "sink"),
 )
 def xa1_file_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CSV and JSON-lines sink + source roundtrips: write, read back with explicit schema,
+    aggregate — tagged union of both formats."""
     t = _t(spark, sf_dir)
     csv_path = _scratch_dir("file_rt_csv", sf_dir)
     t["orders"].select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode(
@@ -1398,10 +1381,10 @@ def xa1_file_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    "partitioned parquet sink + partition-pruned scan (only 2 of 3 partitions read back)",
     ("source", "sink"),
 )
 def xfj_file_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Partitioned parquet sink + partition-pruned scan (only 2 of 3 partitions read back)."""
     t = _t(spark, sf_dir)
     path = _scratch_dir("q38_parquet", sf_dir)
     t["lineitem"].select("l_orderkey", "l_returnflag").write.mode("overwrite").partitionBy(
@@ -1425,10 +1408,10 @@ def xfj_file_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer ON c_custkey = o_custkey
     ORDER BY o_orderkey
     """,
-    "TPC-H Q18 shape: aggregate-then-join with HAVING pre-filter",
     ("join", "aggregation"),
 )
 def x12_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q18 shape: aggregate-then-join with HAVING pre-filter."""
     t = _t(spark, sf_dir)
     big = (
         t["lineitem"]
@@ -1461,10 +1444,10 @@ def x12_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY substr(c_name, 1, 9)
     ORDER BY name_prefix
     """,
-    "TPC-H Q22 shape: scalar avg subquery + NOT EXISTS anti-join + re-aggregation",
     ("join", "subquery", "aggregation"),
 )
 def x13_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q22 shape: scalar avg subquery + NOT EXISTS anti-join + re-aggregation."""
     t = _t(spark, sf_dir)
     for name in ("customer", "orders"):
         t[name].createOrReplaceTempView(name)
@@ -1491,10 +1474,11 @@ def x13_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY p_partkey
     """,
-    "TPC-H Q2 shape: correlated scalar min subquery (decorrelated to an aggregate join by Catalyst)",
     ("subquery", "join"),
 )
 def x09_correlated_min(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q2 shape: correlated scalar min subquery (decorrelated to an aggregate join by
+    Catalyst)."""
     t = _t(spark, sf_dir)
     t["part"].createOrReplaceTempView("part")
     return spark.sql(
@@ -1523,10 +1507,10 @@ def x09_correlated_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM monthly a LEFT JOIN monthly b ON b.mo = CAST(a.mo - INTERVAL 1 MONTH AS DATE)
     ORDER BY a.mo
     """,
-    "CTE defined once, consumed twice (self-join for month-over-month delta)",
     ("cte", "join", "window"),
 )
 def x05_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CTE defined once, consumed twice (self-join for month-over-month delta)."""
     t = _t(spark, sf_dir)
     t["orders"].createOrReplaceTempView("orders")
     return spark.sql(
@@ -1555,10 +1539,10 @@ def x05_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) UNPIVOT (val FOR metric IN (l_quantity, l_extendedprice, l_discount))
     ORDER BY l_orderkey, l_linenumber, metric
     """,
-    "unpivot (wide -> long): Spark stack() == SQL UNPIVOT",
     ("projection",),
 )
 def x03_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unpivot (wide -> long): Spark stack() == SQL UNPIVOT."""
     t = _t(spark, sf_dir)
     return (
         t["lineitem"]
@@ -1587,12 +1571,12 @@ def x03_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    "exact decimal aggregation: DECIMAL(18,2) sums are order-independent "
-    "(no float rounding needed); driver-facing output stringified — raw "
-    "DECIMAL canonicalizes differently per engine (CLAUDE.md rule)",
     ("aggregation", "types"),
 )
 def x14_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact decimal aggregation: DECIMAL(18,2) sums are order-independent (no float rounding
+    needed); driver-facing output stringified — raw DECIMAL canonicalizes differently per engine
+    (CLAUDE.md rule)."""
     t = _t(spark, sf_dir)
     dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
     return (
@@ -1623,10 +1607,10 @@ def x14_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j WHERE o_totalprice IS NOT NULL
     ORDER BY variant
     """,
-    "na.fill / na.drop over outer-join-produced nulls",
     ("functions", "null"),
 )
 def x15_na_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """na.fill / na.drop over outer-join-produced nulls."""
     t = _t(spark, sf_dir)
     top = (
         t["orders"]
@@ -1668,10 +1652,11 @@ def x15_na_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM updates u ANTI JOIN customer c ON c.c_custkey = u.c_custkey
     ORDER BY c_custkey, c_name
     """,
-    "MERGE INTO emulation (upsert/CDC apply): matched rows updated, unmatched inserted via anti-join + union",
     ("merge", "join"),
 )
 def x01_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE INTO emulation (upsert/CDC apply): matched rows updated, unmatched inserted via
+    anti-join + union."""
     t = _t(spark, sf_dir)
     updates = (
         t["orders"]

@@ -46,7 +46,7 @@ from typing import Any, Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..plans.partitioning import plan_partitions
@@ -292,7 +292,6 @@ def to_snowflake(
     kwargs = _prepare_connection_kwargs(connection_kwargs, partner)
     wp_kwargs = dict(write_pandas_kwargs or {})
     ddl = schema_to_ddl(df.schema)
-    arrow_schema = to_arrow_schema(df.schema)
 
     def run() -> int:
         be = resolve_backend(backend_name)

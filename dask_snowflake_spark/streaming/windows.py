@@ -1,12 +1,11 @@
-"""Structured Streaming surface over the ``events`` table: tumbling /
-sliding / session windows, watermarked late-data handling, streaming
-dedup.
+"""Structured Streaming surface over the ``events`` table: tumbling and
+sliding windows, watermarked late-data handling, streaming dedup.
 
 Each operator has a *streaming* runner (readStream -> windowed agg ->
 memory sink, driven to completion with ``processAllAvailable`` — the
 local smoke pattern) and the *same logical spec* is what the batch
 ``queries()`` entries express, so the DuckDB oracle can check the
-semantics: a tumbling/sliding/session aggregation over a static table
+semantics: a tumbling/sliding aggregation over a static table
 is the time-complete result of the streaming query.
 
 Scale posture: watermarks bound state (late rows beyond the horizon are
@@ -151,25 +150,6 @@ def sliding_counts(events: DataFrame, duration: str = "12 hours", slide: str = "
     )
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows (gap-based): session count + bounds.
-
-    In streaming mode ``session_window`` maintains merging session state
-    per key; watermark closes sessions past the horizon."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def streaming_dedup(events: DataFrame, within: str = "1 hour") -> DataFrame:
     """Streaming dedup on (user_id, event_type) within the watermark
     horizon (``dropDuplicatesWithinWatermark`` keeps bounded state)."""
@@ -201,11 +181,3 @@ def run_streams_to_tables(
         q.awaitTermination()
         out.append(s.table(name))
     return out
-
-
-def run_tumbling_stream(spark: SparkSession, sf_dir: str, name: str = "stream_tumbling") -> DataFrame:
-    return run_stream_to_table(tumbling_counts(_events_stream(spark, sf_dir)), name)
-
-
-def run_session_stream(spark: SparkSession, sf_dir: str, name: str = "stream_sessions") -> DataFrame:
-    return run_stream_to_table(session_windows(_events_stream(spark, sf_dir)), name)

@@ -36,11 +36,11 @@ from .queries import _t, query
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    "vectorized scalar Pandas UDF (Arrow-batched taxed-price floor) feeding "
-    "a grouped-aggregate Pandas UDF (order-independent sorted accumulation)",
     ("udf",),
 )
 def xea_fn_udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vectorized scalar Pandas UDF (Arrow-batched taxed-price floor) feeding a grouped-aggregate
+    Pandas UDF (order-independent sorted accumulation)."""
     t = _t(spark, sf_dir)
 
     @F.pandas_udf("double")
@@ -89,10 +89,10 @@ def xea_fn_udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY c_nationkey)
     ORDER BY c_custkey
     """,
-    "applyInPandas grouped-map: per-nation min-max scaling (exact under reordering)",
     ("udf",),
 )
 def xen_fn_udf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """applyInPandas grouped-map: per-nation min-max scaling (exact under reordering)."""
     t = _t(spark, sf_dir)
 
     def scale(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -132,10 +132,10 @@ def xen_fn_udf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     ORDER BY doc_id
     """,
-    "mapInArrow: per-partition Arrow RecordBatch transform (zero-copy batch access)",
     ("udf",),
 )
 def xfz_fn_udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mapInArrow: per-partition Arrow RecordBatch transform (zero-copy batch access)."""
     t = _t(spark, sf_dir)
 
     def shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -171,10 +171,10 @@ def xfz_fn_udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ex
     ORDER BY o_orderkey, chunk
     """,
-    "Python UDTF: one row per 50k price chunk of each order (lateral table function)",
     ("udf",),
 )
 def xdi_fn_udf_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Python UDTF: one row per 50k price chunk of each order (lateral table function)."""
     t = _t(spark, sf_dir)
 
     @F.udtf(returnType="o_orderkey bigint, chunk bigint, chunk_floor bigint")
@@ -203,15 +203,11 @@ def xdi_fn_udf_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(c_custkey) AS max_custkey
     FROM customer GROUP BY c_nationkey ORDER BY c_nationkey
     """,
-    "applyInArrow grouped-map (Spark 4's Arrow-native sibling of "
-    "applyInPandas): the group arrives as a pyarrow Table — no pandas "
-    "conversion layer — and per-nation stats are computed with "
-    "pyarrow.compute kernels. Balances go through exact integer cents "
-    "(2dp money scaled by 100 is integer-valued, so rounding mode "
-    "can't bite), so the group sums are order-independent integers",
     ("udf",),
 )
 def xad_fn_udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """applyInArrow grouped map: per-nation stats with pyarrow.compute on each group's Arrow table.
+    Balances are exact integer cents, so group sums do not depend on order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -256,18 +252,11 @@ def xad_fn_udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT doc_id, w, unnest(range(len(w) - 2)) AS i FROM f WHERE len(w) >= 3)
     ORDER BY doc_id, pos
     """,
-    "POLYMORPHIC Python UDTF (Spark 4's analyze() API — the schema is "
-    "computed at PLAN time from the literal argument, so one UDTF "
-    "serves every n; xdi's static-returnType UDTF can't change shape): "
-    "word 3-grams of each document, one output column per gram "
-    "position (g1..gn from analyze(n)), 1-based positions. The UDTF "
-    "is the documented slow path — this query proves the API surface "
-    "(LATERAL correlation + plan-time polymorphism) on a bounded doc "
-    "subset; the scale path for n-gram work is the arrays_zip kernel "
-    "every dedup operator uses (dedup.py)",
     ("udf",),
 )
 def xdm_fn_udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Polymorphic Python UDTF whose analyze() sets the schema at plan time: word 3-grams per
+    document, one column per gram position, over a bounded doc subset."""
     import re
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType

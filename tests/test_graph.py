@@ -125,16 +125,21 @@ def test_pagerank_integer_known_graph_and_stability(spark):
     from dask_snowflake_spark.operators.graph import pagerank_integer
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
-    pr = {r.vertex: r.pr_q for r in pagerank_integer(edges, "a", "b", iters=8).collect()}
-    assert pr[2] > pr[1] == pr[3], pr
-    total = sum(pr.values())
-    # mass conserved up to integer-div truncation (<= deg per vertex per round)
-    assert 0.99e12 < total <= 1_000_000_000_000, total
-    pr2 = {
-        r.vertex: r.pr_q
-        for r in pagerank_integer(edges.repartition(7), "a", "b", iters=8).collect()
-    }
-    assert pr == pr2
+    # iters=9 also runs the mid-loop checkpoint (every 8 rounds)
+    for iters in (8, 9):
+        pr = {
+            r.vertex: r.pr_q
+            for r in pagerank_integer(edges, "a", "b", iters=iters).collect()
+        }
+        assert pr[2] > pr[1] == pr[3], (iters, pr)
+        total = sum(pr.values())
+        # mass conserved up to integer-div truncation (<= deg per vertex per round)
+        assert 0.99e12 < total <= 1_000_000_000_000, (iters, total)
+        pr2 = {
+            r.vertex: r.pr_q
+            for r in pagerank_integer(edges.repartition(7), "a", "b", iters=iters).collect()
+        }
+        assert pr == pr2, iters
 
 
 def test_pagerank_integer_empty_edges(spark):
@@ -563,39 +568,19 @@ def test_lpa_drops_self_loops_and_multi_edges(spark) -> None:
     assert _lpa(spark, edges) == _naive_lpa(edges)
 
 
-def test_lpa_checkpoint_interval_is_value_invariant(spark) -> None:
-    # r14: the fixed-round loop runs on LINEAR lineage (each round's
-    # labels consumed exactly once) with localCheckpoint paid only
-    # every checkpoint_interval rounds — the pagerank shape. Checkpoint
-    # placement is a plan decision; values must be identical whether
-    # truncation happens every round (the pre-r14 shape), mid-loop, or
-    # never within the loop.
-    edges = [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)]
-    expect = _naive_lpa(edges)
-    for interval in (1, 2, 8):
-        assert _lpa(spark, edges, checkpoint_interval=interval) == expect, interval
-    # rounds > interval exercises the mid-loop truncation branch
+def test_lpa_mid_loop_checkpoint_is_value_invariant(spark) -> None:
+    # The fixed-round loop runs on LINEAR lineage (each round's labels
+    # consumed exactly once) and localCheckpoints every
+    # _CHECKPOINT_EVERY rounds. At 9 rounds that truncation fires
+    # mid-loop; checkpoint placement is a plan decision, so the values
+    # must still equal the naive synchronous state.
+    from dask_snowflake_spark.operators.graph import _CHECKPOINT_EVERY
+
+    assert _CHECKPOINT_EVERY < 9
+    cliques = [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)]
     path = [(i, i + 1) for i in range(8)]
-    assert _lpa(spark, path, rounds=3, checkpoint_interval=2) == _naive_lpa(
-        path, rounds=3
-    )
-
-
-def test_checkpoint_interval_validated(spark) -> None:
-    # r14 ADVICE: checkpoint_interval=0 raised ZeroDivisionError from
-    # the modulo on both public loop surfaces; both now validate loudly.
-    import pytest
-
-    from dask_snowflake_spark.operators.graph import (
-        label_propagation,
-        pagerank_integer,
-    )
-
-    edges = spark.createDataFrame([(1, 2)], "s long, d long")
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        pagerank_integer(edges, "s", "d", checkpoint_interval=0)
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        label_propagation(edges, "s", "d", checkpoint_interval=-1)
+    for edges in (cliques, path):
+        assert _lpa(spark, edges, rounds=9) == _naive_lpa(edges, rounds=9), edges
 
 
 def test_link_prediction_matches_naive_python(spark) -> None:

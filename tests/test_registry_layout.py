@@ -246,3 +246,21 @@ def test_every_query_has_oracle_or_documented_rows_only():
         "x45_heavy_hitters",
         "x90_ivfpq_recall",
     }, rows_only
+
+
+def test_every_query_docstring_is_short_and_timeless():
+    """Each query function says what it computes, and its exactness
+    invariant, in a docstring of 1-3 non-empty lines. Round history
+    and before/after measurements belong in git, not in the registry."""
+    import inspect
+    import re
+
+    bad = {}
+    for name, qd in registry().items():
+        doc = inspect.getdoc(qd.spark_fn)
+        lines = doc.splitlines() if doc else []
+        if not 1 <= len(lines) <= 3 or not all(line.strip() for line in lines):
+            bad[name] = f"{len(lines)} lines"
+        elif re.search(r"\br\d+\b", doc):
+            bad[name] = "round tag"
+    assert not bad, bad

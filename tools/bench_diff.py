@@ -72,7 +72,7 @@ def main() -> int:
             # are only comparable between runs at the SAME scale factor
             jobs["__sf__"] = sf
         with open(BASELINE, "w") as f:
-            json.dump(dict(sorted(jobs.items())), f, indent=1, sort_keys=True)
+            json.dump(dict(sorted(jobs.items())), f, indent=0, sort_keys=True)
             f.write("\n")
         print(f"baseline updated: {len(jobs) - (sf is not None)} queries (sf={sf}) -> {BASELINE}")
         return 0
