@@ -160,6 +160,31 @@ def _calibration_sec(spark) -> list[float]:
     return out
 
 
+def timed_passes(spark, sf_dir: str, queries, n_passes: int):
+    """Run ``queries`` (``[(name, spark_fn)]``) in ``n_passes``
+    interleaved passes into the ``noop`` sink. Returns ``(runs,
+    job_runs)``: per pass, ``{name: wall seconds}`` and ``{name: Spark
+    jobs}``. The scheduler's job-id counter delta is NOISE-FREE
+    (deterministic per plan), so fixed-overhead regressions stay
+    attributable even when the shared host's ±2x wall-clock variance
+    masks them."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    runs: list[dict[str, float]] = []
+    job_runs: list[dict[str, int]] = []
+    for _ in range(max(1, n_passes)):
+        pass_times: dict[str, float] = {}
+        pass_jobs: dict[str, int] = {}
+        for name, spark_fn in queries:
+            t0 = time.perf_counter()
+            j0 = sched.nextJobId()
+            spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            pass_jobs[name] = sched.nextJobId() - j0
+            pass_times[name] = round(time.perf_counter() - t0, 2)
+        runs.append(pass_times)
+        job_runs.append(pass_jobs)
+    return runs, job_runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from dask_snowflake_spark.queries import registry
@@ -195,27 +220,12 @@ def main() -> None:
     # codegen first-touch doesn't pollute the calibration)
     calib_start = _calibration_sec(spark)
 
-    # Per-query Spark job counts ride along with the wall times: the
-    # scheduler's job-id counter delta is NOISE-FREE (deterministic per
-    # plan), so fixed-overhead regressions stay attributable even when
-    # the shared host's ±2x wall-clock variance masks them.
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    runs: list[dict[str, float]] = []
-    job_runs: list[dict[str, int]] = []
-    for _ in range(max(1, n_passes)):
-        pass_times: dict[str, float] = {}
-        pass_jobs: dict[str, int] = {}
-        for name, qd in ordered:
-            t0 = time.perf_counter()
-            j0 = sched.nextJobId()
-            df = qd.spark_fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            pass_jobs[name] = sched.nextJobId() - j0
-            pass_times[name] = round(time.perf_counter() - t0, 2)
-        runs.append(pass_times)
-        job_runs.append(pass_jobs)
+    runs, job_runs = timed_passes(
+        spark,
+        sf_dir,
+        [(name, qd.spark_fn) for name, qd in ordered],
+        int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")),
+    )
     timings = {name: min(r[name] for r in runs) for name in runs[0]}
     spread = {name: round(max(r[name] for r in runs) - timings[name], 2) for name in runs[0]}
     # median-of-N alongside best-of-N (r10 verdict #5): spread

@@ -1519,7 +1519,7 @@ def x25_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x26_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column n_rows/nonnull/null/distinct/min/max/mean in one aggregation job, unpivoted to
-    long form. Exact distincts cost an Expand; approx_distinct=True is the bounded-state option."""
+    long form. Exact distincts cost an Expand."""
     from .operators.profile import profile
 
     t = _t(spark, sf_dir)
@@ -3138,12 +3138,8 @@ def x57_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     docs = t["documents"]
     sh = track_cache(dedup_ops.hashed_shingles(docs, "text", "doc_id", 3))
-    # prehashed=True is CORRECTNESS-relevant, not just speed: the oracle
-    # builds its bands from the hashed shingle longs, so re-hashing here
-    # would put Spark on a different LSH family — a different candidate
-    # superset that only happens to contain the same verified pairs.
     # Bands cached: the candidate self-join reads both sides.
-    sig = dedup_ops.minhash_signatures(sh, num_hashes=16, prehashed=True)
+    sig = dedup_ops.minhash_signatures(sh, num_hashes=16)
     bands = track_cache(dedup_ops.lsh_bands(sig, rows_per_band=2))
     cand = dedup_ops.lsh_candidate_pairs(bands)
     # intersection + sizes in one array-verify pass (dedup.pair_
@@ -5101,7 +5097,7 @@ def x89_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     sh = track_cache(dedup_ops.hashed_shingles(t["documents"], "text", "doc_id", 3))
-    sig = dedup_ops.minhash_signatures(sh, 16, prehashed=True)
+    sig = dedup_ops.minhash_signatures(sh, 16)
     bands = track_cache(dedup_ops.lsh_bands(sig, 2))
     cand = dedup_ops.lsh_candidate_pairs(bands)
     jac = dedup_ops.jaccard(sh, cand)
@@ -9718,9 +9714,13 @@ def xfb_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+    # mu, caln, q and test hold one row per market segment and every join
+    # against them is a broadcast hint: left to AQE, which joins it turned
+    # into broadcasts at runtime depended on stage timing, so the job count
+    # varied with the core count (16 at 8 cores, 18 at 32).
     cal = (
         rows_.filter(F.col("h").isin(6, 7))
-        .join(mu.select("segment", "mu_cents"), "segment")
+        .join(F.broadcast(mu.select("segment", "mu_cents")), "segment")
         .select(
             "segment",
             F.abs(F.col("cents") - F.col("mu_cents")).alias("resid"),
@@ -9742,15 +9742,15 @@ def xfb_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.partitionBy("segment").orderBy("resid", "o_orderkey"))
         .alias("rk"),
     )
-    q = caln.join(
+    q = F.broadcast(caln).join(
         ranked,
         (F.col("rk") == F.least(F.expr("(9 * (n_cal + 1) + 9) div 10"), F.col("n_cal")))
         & (F.col("__rseg") == F.col("segment")),
     ).select("segment", "n_cal", F.col("resid").alias("q_cents"))
     test = (
         rows_.filter(F.col("h") >= 8)
-        .join(mu.select("segment", "mu_cents"), "segment")
-        .join(q.select("segment", "q_cents"), "segment")
+        .join(F.broadcast(mu.select("segment", "mu_cents")), "segment")
+        .join(F.broadcast(q.select("segment", "q_cents")), "segment")
         .groupBy("segment")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_test"),
@@ -9764,8 +9764,8 @@ def xfb_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        mu.join(q, "segment")
-        .join(test, "segment")
+        mu.join(F.broadcast(q), "segment")
+        .join(F.broadcast(test), "segment")
         .select(
             "segment",
             "n_train",

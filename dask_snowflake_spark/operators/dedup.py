@@ -116,9 +116,7 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
     )
 
 
-def hashed_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, *, hash_fn: str = "md5"
-) -> DataFrame:
+def hashed_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document as 60-bit hashes
     (``portable_hash``, seed 0): the text -> hash projection is
     map-side, so the per-doc distinct and every downstream join/shuffle
@@ -126,22 +124,9 @@ def hashed_shingles(
     shuffle bytes at corpus scale. Jaccard over hashes equals Jaccard
     over shingles up to md5 collisions, and the oracle hashes with the
     IDENTICAL md5 expression, so the value compare stays exact even in
-    a collision. The low 32 bits are the MinHash base hash (same bits
-    ``minhash_signatures`` derives), so no second md5 pass is needed.
-
-    ``hash_fn="xxhash64"`` is the PRODUCTION fast path: Spark's native
-    codegen'd 64-bit hash (no hex round-trip, ~an order of magnitude
-    cheaper per shingle than md5). Exact-duplicate pairs (identical
-    shingle sets -> identical signatures under any hash family) are
-    found identically; borderline pairs near the threshold may differ
-    by LSH band recall — each family independently misses a j-similar
-    pair with probability (1 - j^2)^n_bands, so which few borderline
-    pairs slip differs per family. DuckDB has no xxhash64, so
-    oracle-checked queries stay on md5 (the engine-portability price
-    is paid once, in the shingle projection).
+    a collision. The low 32 bits are the MinHash base hash
+    (``minhash_signatures``), so no second md5 pass is needed.
     """
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
     w = F.split(F.col(text_col), r"\s+")
     base = df.select(
         F.col(id_col).alias("doc"),
@@ -156,15 +141,9 @@ def hashed_shingles(
         F.posexplode(F.arrays_zip(*[F.col(f"w{j}") for j in range(n)])).alias("pos", "s"),
     )
     cols = [F.col("s").getField(f"w{j}") for j in range(n)]
-    joined = F.concat_ws(" ", *cols)
-    if hash_fn == "xxhash64":
-        # 60-bit like portable_hash so downstream band math is unchanged
-        h = F.xxhash64(F.lit("0:"), joined).bitwiseAND(F.lit((1 << 60) - 1))
-    else:
-        h = portable_hash(joined)
     return (
         zipped.filter(cols[-1].isNotNull() | (F.col("pos") == 0))
-        .select("doc", h.alias("shingle"))
+        .select("doc", portable_hash(F.concat_ws(" ", *cols)).alias("shingle"))
         .dropDuplicates(["doc", "shingle"])
     )
 
@@ -187,25 +166,18 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 16, *, prehashed: bool = False
-) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
     """Wide-format MinHash signatures: (doc, sig array<long>) from
-    long-format (doc, shingle) rows.
+    ``hashed_shingles`` rows (doc, shingle long).
 
-    Classic one-base-hash formulation: md5 ONCE per shingle, then k
-    affine transforms h_i = (a_i * h32 + b_i) mod p — k plain codegen
-    expressions, no nested higher-order functions (those are
-    interpreted row-at-a-time and were ~15x slower). The groupBy runs
-    map-side partial min aggregation, so the shuffle carries ~one row
-    per (doc, partition). ``prehashed=True`` declares the shingle
-    column already a ``portable_hash`` long (``hashed_shingles``) whose
-    low 32 bits ARE the base hash — skips the md5 pass."""
+    Classic one-base-hash formulation: the shingle hash's low 32 bits
+    are the base hash, then k affine transforms
+    h_i = (a_i * h32 + b_i) mod p — k plain codegen expressions, no
+    nested higher-order functions (those are interpreted row-at-a-time
+    and were ~15x slower). The groupBy runs map-side partial min
+    aggregation, so the shuffle carries ~one row per (doc, partition)."""
     params = minhash_params(num_hashes)
-    base_hash = (
-        F.col("shingle") if prehashed else portable_hash(F.col("shingle"))
-    )
-    rows = sh.withColumn("h32", base_hash.bitwiseAND(F.lit(0xFFFFFFFF)))
+    rows = sh.withColumn("h32", F.col("shingle").bitwiseAND(F.lit(0xFFFFFFFF)))
     mins = [
         F.min((F.col("h32") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"m{i}")
         for i, (a, b) in enumerate(params)
@@ -379,45 +351,17 @@ def minhash_near_dup(
     num_hashes: int = 16,
     rows_per_band: int = 2,
     threshold: float = 0.85,
-    hash_fn: str = "md5",
-    max_shingle_df: float | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, verified with exact Jaccard.
 
     The scale path: cost ~ O(docs * shingles * k) map-side + shuffles on
     (doc,seed), band_sig, and shingle for the verify step restricted to
     candidates — all shingle traffic as 60-bit hashes, never raw
-    strings. Returns (doc_a, doc_b, jaccard >= threshold).
-    ``hash_fn="xxhash64"`` switches the shingle projection to the
-    native fast path (see ``hashed_shingles``) for production runs that
-    don't need the cross-engine oracle.
-
-    ``max_shingle_df`` (e.g. ``0.001``) drops shingles present in more
-    than that fraction of documents BEFORE signatures and verification
-    — the boilerplate cap for web corpora, where a site-wide footer
-    shingle otherwise lands in every band bucket and inflates both the
-    candidate join and the verify join. Changes semantics (Jaccard is
-    then over the informative shingles only), so it is opt-in and off
-    for every oracle-checked query."""
+    strings. Returns (doc_a, doc_b, jaccard >= threshold)."""
     # cached: the shingle set feeds the signature path AND the verify
     # path — without it Spark re-parses every document per subtree
-    sh = hashed_shingles(docs, text_col, id_col, shingle_n, hash_fn=hash_fn)
-    if max_shingle_df is not None:
-        if not 0.0 < max_shingle_df <= 1.0:
-            raise ValueError(f"max_shingle_df must be in (0, 1], got {max_shingle_df}")
-        n_docs = docs.count()
-        cap = max(1, int(n_docs * max_shingle_df))
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > cap)
-            .select("shingle")
-        )
-        # anti-join against the (small) hot set: broadcast-able because
-        # shingles over the df cap are by definition few distinct values
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sh = track_cache(sh)
-    sig = minhash_signatures(sh, num_hashes, prehashed=True)
+    sh = track_cache(hashed_shingles(docs, text_col, id_col, shingle_n))
+    sig = minhash_signatures(sh, num_hashes)
     # the band self-join reads both sides; caching the (tiny, one row
     # per doc x bands) band keys stops the k-min signature aggregation
     # from running twice
@@ -902,7 +846,7 @@ def incremental_near_dup(
     matching corpus id as the canonical target.
     """
     sh = track_cache(hashed_shingles(docs, text_col, id_col, shingle_n))
-    sig = minhash_signatures(sh, num_hashes, prehashed=True)
+    sig = minhash_signatures(sh, num_hashes)
     bands = track_cache(lsh_bands(sig, rows_per_band))
     mem = docs.select(F.col(id_col).alias("doc"), incoming_filter.alias("__inc"))
     b_inc = bands.join(mem.filter(F.col("__inc")), "doc").select("doc", "band", "band_sig")

@@ -41,6 +41,12 @@ from pyspark.sql import functions as F
 # short loops run as one action, long ones keep a bounded plan depth.
 _CHECKPOINT_EVERY = 8
 
+# pagerank_integer: damping 85/100 over a total of 1e12 mass units (the
+# oracle's _pagerank_iter_sql hardcodes the same three values).
+_DAMPING_NUM = 85
+_DAMPING_DEN = 100
+_MASS = 1_000_000_000_000
+
 
 def _both_directions(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(u,v) and (v,u) rows from ONE scan of ``edges`` (explode of two
@@ -146,9 +152,6 @@ def pagerank_integer(
     dst: str,
     *,
     iters: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    mass: int = 1_000_000_000_000,
 ) -> DataFrame:
     """Deterministic integer-arithmetic PageRank over the undirected
     graph ``edges`` — centrality for ranking e.g. which document is the
@@ -157,10 +160,10 @@ def pagerank_integer(
     Float PageRank cannot be value-checked across engines: each
     vertex's incoming contributions are summed in aggregation order,
     and float addition isn't associative. Here ALL state is an integer
-    number of mass units (total mass ``mass``), every operation is
+    number of mass units (total ``_MASS``), every operation is
     integer mul/div/add, so the result is bit-identical across engines,
     partitionings, and retries. Integer-div truncation loses at most
-    ``deg`` mass units per vertex per round — at mass=1e12 a relative
+    ``deg`` mass units per vertex per round — at 1e12 units a relative
     error ~1e-9, irrelevant for ranking, and both engines truncate
     identically (all values non-negative, so floor == truncate).
 
@@ -206,9 +209,9 @@ def pagerank_integer(
             F.col("__u").alias("vertex"), F.col("__deg").cast("long").alias("pr_q")
         )
     # python // == SQL div here: every operand is non-negative
-    base = ((damping_den - damping_num) * (mass // n)) // damping_den
+    base = ((_DAMPING_DEN - _DAMPING_NUM) * (_MASS // n)) // _DAMPING_DEN
     pr = und_deg.select("__u").distinct().select(
-        "__u", F.lit(mass // n).alias("__pr")
+        "__u", F.lit(_MASS // n).alias("__pr")
     )
     for i in range(iters):
         pr = (
@@ -218,9 +221,9 @@ def pagerank_integer(
             .agg(F.sum("__sh").alias("__s"))
             .select(
                 F.col("__v").alias("__u"),
-                (F.lit(base) + F.expr(f"({damping_num} * __s) div {damping_den}")).alias(
-                    "__pr"
-                ),
+                (
+                    F.lit(base) + F.expr(f"({_DAMPING_NUM} * __s) div {_DAMPING_DEN}")
+                ).alias("__pr"),
             )
         )
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:

@@ -7,12 +7,10 @@ per-column jobs like ``df.summary()``'s multi-pass approach — then
 unpivots to the long (column, metric, value) form dashboards and diff
 tools want.
 
-Scale caveat: with exact distinct counts (the default), N distinct
-aggregates compile to an Expand node that replicates every scanned row
-~(N+1)× before the aggregation — so profiling many columns exactly is
-NOT single-scan-priced, and the per-count state grows with cardinality.
-Pass ``approx_distinct=True`` for HLL++ (no Expand, bounded state) when
-profiling wide or high-cardinality tables at corpus scale.
+Scale caveat: the exact distinct counts compile to an Expand node that
+replicates every scanned row ~(N+1)× before the aggregation — so
+profiling many columns is NOT single-scan-priced, and the per-count
+state grows with cardinality.
 """
 
 from __future__ import annotations
@@ -20,40 +18,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_ROUND_DIGITS = 4
+_MEAN_SCALE = 10_000
 
-def profile(
-    df: DataFrame,
-    columns: list[str],
-    *,
-    approx_distinct: bool = False,
-    round_digits: int = 4,
-    mean_scale: int = 10_000,
-) -> DataFrame:
+
+def profile(df: DataFrame, columns: list[str]) -> DataFrame:
     """Long-format profile: one row per (column, metric) with metrics
     n_rows / n_nonnull / n_null / n_distinct / min / max / mean (all as
     double for a uniform value column).
 
-    The mean is the QUANTIZED mean ``sum(round(col * mean_scale)) /
-    (mean_scale * n_nonnull)`` — an exact integer sum divided once, so
-    the value is the identical double on every engine and partitioning
-    (a raw float mean depends on summation ORDER: Spark's partial-merge
-    vs DuckDB's sequential sums differ by ulps, and rounding that at
-    round_digits flips near halfway boundaries — fixture-luck). Exact
-    for inputs with <= log10(mean_scale) decimals (money at the default
-    1e4), otherwise within 1/(2*mean_scale) of the true mean. Column
+    min, max and mean are rounded to 4 digits. The mean is the QUANTIZED
+    mean ``sum(round(col * 1e4)) / (1e4 * n_nonnull)`` — an exact
+    integer sum divided once, so the value is the identical double on
+    every engine and partitioning (a raw float mean depends on summation
+    ORDER: Spark's partial-merge vs DuckDB's sequential sums differ by
+    ulps, and rounding that flips near halfway boundaries —
+    fixture-luck). Exact for inputs with <= 4 decimals (money),
+    otherwise within 1/2e4 of the true mean. Column
     and metric names ride as ``F.lit`` columns through an explode
     unpivot — never interpolated into SQL text."""
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
     for i, c in enumerate(columns):
-        distinct = (
-            F.approx_count_distinct(c) if approx_distinct else F.countDistinct(c)
-        )
-        q = F.col(c).cast("double") * mean_scale
+        q = F.col(c).cast("double") * _MEAN_SCALE
         aggs += [
             F.count(c).alias(f"__nn_{i}"),
-            distinct.alias(f"__nd_{i}"),
-            F.round(F.min(c).cast("double"), round_digits).alias(f"__mn_{i}"),
-            F.round(F.max(c).cast("double"), round_digits).alias(f"__mx_{i}"),
+            F.countDistinct(c).alias(f"__nd_{i}"),
+            F.round(F.min(c).cast("double"), _ROUND_DIGITS).alias(f"__mn_{i}"),
+            F.round(F.max(c).cast("double"), _ROUND_DIGITS).alias(f"__mx_{i}"),
             F.sum(F.round(q, 0).cast("long")).alias(f"__sq_{i}"),
         ]
     wide = df.agg(*aggs)
@@ -62,7 +53,7 @@ def profile(
         nn = F.col(f"__nn_{i}")
         mean = F.when(
             nn > 0,
-            F.round(F.col(f"__sq_{i}") / (float(mean_scale) * nn), round_digits),
+            F.round(F.col(f"__sq_{i}") / (float(_MEAN_SCALE) * nn), _ROUND_DIGITS),
         )
         for metric, expr in (
             ("n_rows", F.col("__n_rows").cast("double")),

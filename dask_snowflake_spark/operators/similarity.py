@@ -178,33 +178,25 @@ def embedding_near_dup_pairs(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_col: str | None = None,
     round_digits: int = 6,
 ) -> DataFrame:
     """Vector pairs with cosine >= threshold (embedding-space near-
-    duplicate detection).
-
-    With ``bucket_col`` set, candidates are restricted to pairs sharing
-    the bucket (an IVF cell / cluster id / SRP signature) — the join key
-    makes the cross product collapse to per-bucket blocks, which is the
-    only shape that survives 100 TB. Without it, exact all-pairs (the
-    small-scale correctness baseline)."""
-    keep = ["id"] + (["bucket"] if bucket_col is not None else [])
-    base_cols = [F.col(id_col).alias("id"), F.col(vec_col)]
-    if bucket_col is not None:
-        base_cols.append(F.col(bucket_col).alias("bucket"))
+    duplicate detection), exact all-pairs: the small-scale correctness
+    baseline. At scale, :func:`embedding_near_dup_pairs_bucketed`
+    restricts candidates to pairs sharing a bucket."""
     # persist: the self-join references the normalized vectors on both
     # sides and the per-element normalization lambda is interpreted —
     # uncached it runs twice over the corpus
-    v = track_cache(with_normalized(embeddings.select(*base_cols), vec_col, "vec", keep))
+    v = track_cache(
+        with_normalized(
+            embeddings.select(F.col(id_col).alias("id"), F.col(vec_col)), vec_col, "vec", ["id"]
+        )
+    )
     a = v.select(*[F.col(c).alias(f"{c}_a") for c in v.columns])
     b = v.select(*[F.col(c).alias(f"{c}_b") for c in v.columns])
-    if bucket_col is not None:
-        joined = a.join(b, (F.col("bucket_a") == F.col("bucket_b")) & (F.col("id_a") < F.col("id_b")))
-    else:
-        joined = a.join(b, F.col("id_a") < F.col("id_b"))
     return (
-        joined.withColumn("sim", F.round(dot(F.col("vec_a"), F.col("vec_b")), round_digits))
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("sim", F.round(dot(F.col("vec_a"), F.col("vec_b")), round_digits))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
         .orderBy("id_a", "id_b")
@@ -232,7 +224,7 @@ def embedding_near_dup_pairs_bucketed(
     match :func:`embedding_near_dup_pairs` exactly while the heavy
     lifting runs at matrix-multiply speed (~5x faster than the
     interpreted higher-order-function dot at 5k vectors). NULL-bucket
-    rows are dropped, matching the equi-join variant's semantics.
+    rows are dropped.
 
     This is the "Pandas UDF where built-ins can't express it
     efficiently" escape hatch: the all-pairs kernel is a matmul, which
@@ -1122,19 +1114,23 @@ def knn_graph_descent(
     return seed, cur
 
 
+# The deterministic IVF-PQ shape; _ivfpq_det_oracle_sql hardcodes the
+# same values. Vectors with id < _PQ_QUERIES are the queries.
+_PQ_QUERIES = 5
+_PQ_M = 4  # subspaces
+_PQ_SUB_DIM = 16
+_PQ_K = 16  # codewords per subspace
+_PQ_NPROBE = 2
+_PQ_TOP = 10
+_PQ_SHORTLIST = 20
+
+
 def ivfpq_det_recall(
     emb: DataFrame,
     *,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str = "label",
-    n_queries: int = 5,
-    m_sub: int = 4,
-    sub_dim: int = 16,
-    k_pq: int = 16,
-    nprobe: int = 2,
-    k_top: int = 10,
-    shortlist: int = 20,
 ) -> DataFrame:
     """DETERMINISTIC integer IVF-PQ (the faiss IndexIVFPQ shape made
     fully value-oracle-able — the graph_knn_descent recipe applied to
@@ -1181,7 +1177,7 @@ def ivfpq_det_recall(
     scan-cost readout (candidates == scanned lists by construction)."""
     import numpy as np
 
-    dim = m_sub * sub_dim
+    dim = _PQ_M * _PQ_SUB_DIM
     ev = emb.select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
@@ -1190,10 +1186,10 @@ def ivfpq_det_recall(
             lambda x: F.floor(x.cast("double") * 1000).cast("long"),
         ).alias("v"),
     )
-    corp = ev.filter(F.col("id") >= n_queries)
-    qs = ev.filter(F.col("id") < n_queries)
+    corp = ev.filter(F.col("id") >= _PQ_QUERIES)
+    qs = ev.filter(F.col("id") < _PQ_QUERIES)
 
-    # bounded collect #1: query vectors (n_queries rows)
+    # bounded collect #1: query vectors (_PQ_QUERIES rows)
     q_rows = sorted((r.id, np.asarray(r.v, dtype=np.int64)) for r in qs.collect())
     # bounded collect #2: per-label integer centroids (cells x dim;
     # division in-plan via `div` so python never divides)
@@ -1219,7 +1215,7 @@ def ivfpq_det_recall(
         )
         return np.argmin(d2, axis=1)
 
-    # bounded collect #3: deterministic seed vectors (k_pq rows by the
+    # bounded collect #3: deterministic seed vectors (_PQ_K rows by the
     # md5 hash ring), residualized driver-side (subtraction only)
     seed_rows = (
         corp.select(
@@ -1228,21 +1224,22 @@ def ivfpq_det_recall(
             F.md5(F.concat(F.lit("pq:"), F.col("id").cast("string"))).alias("h"),
         )
         .orderBy("h", "id")
-        .limit(k_pq)
+        .limit(_PQ_K)
         .collect()
     )
     seed_rows = sorted(seed_rows, key=lambda r: (r.h, r.id))
     SV = np.stack([np.asarray(r.v, dtype=np.int64) for r in seed_rows])
     s_res = SV - C[_assign(SV)]
     init = np.stack(
-        [s_res[:, s * sub_dim : (s + 1) * sub_dim] for s in range(m_sub)]
-    )  # (m_sub, k_pq, sub_dim)
+        [s_res[:, s * _PQ_SUB_DIM : (s + 1) * _PQ_SUB_DIM] for s in range(_PQ_M)]
+    )  # (_PQ_M, _PQ_K, _PQ_SUB_DIM)
 
     def _sub_argmin(R, B):
-        # R: (n, m_sub, sub_dim) residual subvectors; B: (m_sub, k, sub_dim)
-        # returns (n, m_sub) first-min codeword indices — the (d2, j) order
-        out = np.empty((len(R), m_sub), dtype=np.int64)
-        for s in range(m_sub):
+        # R: (n, _PQ_M, _PQ_SUB_DIM) residual subvectors;
+        # B: (_PQ_M, _PQ_K, _PQ_SUB_DIM)
+        # returns (n, _PQ_M) first-min codeword indices — the (d2, j) order
+        out = np.empty((len(R), _PQ_M), dtype=np.int64)
+        for s in range(_PQ_M):
             Rs, Bs = R[:, s, :], B[s]
             d2 = (
                 (Rs * Rs).sum(axis=1)[:, None]
@@ -1259,17 +1256,17 @@ def ivfpq_det_recall(
             if len(pdf) == 0:
                 continue
             X = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["v"]])
-            R = (X - C[_assign(X)]).reshape(len(X), m_sub, sub_dim)
+            R = (X - C[_assign(X)]).reshape(len(X), _PQ_M, _PQ_SUB_DIM)
             j0 = _sub_argmin(R, init)
             rows = {"s": [], "j": [], "dd": [], "ps": [], "pc": []}
-            for s in range(m_sub):
-                for j in range(k_pq):
+            for s in range(_PQ_M):
+                for j in range(_PQ_K):
                     mask = j0[:, s] == j
                     n = int(mask.sum())
                     if not n:
                         continue
                     sm = R[mask, s, :].sum(axis=0)
-                    for dd in range(sub_dim):
+                    for dd in range(_PQ_SUB_DIM):
                         rows["s"].append(s)
                         rows["j"].append(j + 1)
                         rows["dd"].append(dd + 1)
@@ -1277,7 +1274,7 @@ def ivfpq_det_recall(
                         rows["pc"].append(n)
             yield pd.DataFrame(rows)
 
-    # bounded collect #4: Lloyd-1 integer-mean update (<= m*k*sub_dim
+    # bounded collect #4: Lloyd-1 integer-mean update (<= _PQ_M*_PQ_K*_PQ_SUB_DIM
     # rows; partial sums merged and DIVIDED in-plan)
     upd_rows = (
         corp.select("v")
@@ -1292,18 +1289,18 @@ def ivfpq_det_recall(
 
     # driver-side query prep: probe cells (stable argsort == (d2, cell)
     # order) and the per-(query, cell) ADC lookup tables — all exact
-    # int64 add/multiply, bounded n_queries * nprobe * m_sub * k_pq
+    # int64 add/multiply, bounded _PQ_QUERIES * _PQ_NPROBE * _PQ_M * _PQ_K
     probes = {}
     lut = {}
     for q_id, qv in q_rows:
         d2q = ((qv[None, :] - C) ** 2).sum(axis=1)
-        pc = np.argsort(d2q, kind="stable")[:nprobe]
+        pc = np.argsort(d2q, kind="stable")[:_PQ_NPROBE]
         probes[q_id] = set(int(c) for c in pc)
         for ci in pc:
-            qr = (qv - C[ci]).reshape(m_sub, sub_dim)
+            qr = (qv - C[ci]).reshape(_PQ_M, _PQ_SUB_DIM)
             lut[(q_id, int(ci))] = np.stack(
-                [((qr[s][None, :] - CW[s]) ** 2).sum(axis=1) for s in range(m_sub)]
-            )  # (m_sub, k_pq)
+                [((qr[s][None, :] - CW[s]) ** 2).sum(axis=1) for s in range(_PQ_M)]
+            )  # (_PQ_M, _PQ_K)
 
     def kern_search(it):
         import pandas as pd
@@ -1314,7 +1311,7 @@ def ivfpq_det_recall(
             ids = pdf["id"].to_numpy()
             X = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["v"]])
             cell = _assign(X)
-            R = (X - C[cell]).reshape(len(X), m_sub, sub_dim)
+            R = (X - C[cell]).reshape(len(X), _PQ_M, _PQ_SUB_DIM)
             codes = _sub_argmin(R, CW)
             out = {"q_id": [], "id": [], "adc": []}
             for q_id, _ in q_rows:
@@ -1324,7 +1321,7 @@ def ivfpq_det_recall(
                 idx = np.nonzero(mask)[0]
                 for i in idx:
                     tab = lut[(q_id, int(cell[i]))]
-                    adc = int(sum(tab[s, codes[i, s]] for s in range(m_sub)))
+                    adc = int(sum(tab[s, codes[i, s]] for s in range(_PQ_M)))
                     out["q_id"].append(q_id)
                     out["id"].append(int(ids[i]))
                     out["adc"].append(adc)
@@ -1336,7 +1333,7 @@ def ivfpq_det_recall(
     w_q = W.partitionBy("q_id").orderBy("adc", "id")
     short = (
         adc_df.withColumn("rk", F.row_number().over(w_q))
-        .filter(F.col("rk") <= shortlist)
+        .filter(F.col("rk") <= _PQ_SHORTLIST)
         .select("q_id", "id")
     )
     qvec = qs.select(F.col("id").alias("q_id"), F.col("v").alias("va"))
@@ -1349,7 +1346,7 @@ def ivfpq_det_recall(
             .select(F.col("q_id").alias("u"), F.col("id").alias("w"), "va", "vb")
         )
         .withColumn("rk", F.row_number().over(w_d2))
-        .filter(F.col("rk") <= k_top)
+        .filter(F.col("rk") <= _PQ_TOP)
         .select(F.col("u").alias("q_id"), F.col("w").alias("id"))
     )
     truth = (
@@ -1359,7 +1356,7 @@ def ivfpq_det_recall(
             )
         )
         .withColumn("rk", F.row_number().over(w_d2))
-        .filter(F.col("rk") <= k_top)
+        .filter(F.col("rk") <= _PQ_TOP)
         .select(F.col("u").alias("q_id"), F.col("w").alias("id"))
     )
     hits = (

@@ -47,17 +47,9 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
 def get_session(app_name: str = "dask_snowflake_spark") -> SparkSession:
-    """Build (or reuse) the engine SparkSession with engine defaults."""
-    # Executor python workers must be able to import this package no
-    # matter the driver's cwd (batch descriptors/UDF closures reference
-    # it). PYTHONPATH is inherited by workers at JVM spawn.
-    pp = os.environ.get("PYTHONPATH", "")
-    if _REPO_ROOT not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = _REPO_ROOT + (os.pathsep + pp if pp else "")
+    """Build (or reuse) the engine SparkSession with engine defaults,
+    with this package shipped to executors (:func:`_ensure_runtime_confs`)."""
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
@@ -82,6 +74,7 @@ def get_session(app_name: str = "dask_snowflake_spark") -> SparkSession:
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ensure_runtime_confs(spark)
     return spark
 
 
@@ -163,8 +156,8 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
     - ship this package to executors via ``addPyFile`` — module-level
       functions (stateful update fns, batch descriptors, decode
       kernels) pickle BY REFERENCE, so executor Python workers must be
-      able to ``import dask_snowflake_spark`` even when the session was
-      created before the package was on any PYTHONPATH."""
+      able to ``import dask_snowflake_spark`` whatever the driver's cwd
+      and import path."""
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
@@ -188,46 +181,44 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
 
 
 def _ensure_executor_package(spark: SparkSession) -> None:
+    """``addPyFile`` a zip of this package, rebuilt whenever a source
+    file is newer than it — otherwise executors silently import stale
+    code after an edit. Workers put the zip first on ``sys.path``."""
+    import uuid
+    import zipfile
+
     sc = spark.sparkContext
     if getattr(sc, "_dss_pyfile_added", False):
         return
-    try:
-        import uuid
-        import zipfile
-
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        tmp_dir = os.path.join(os.path.dirname(pkg_dir), ".tmp")
-        os.makedirs(tmp_dir, exist_ok=True)
-        zip_path = os.path.join(tmp_dir, "dask_snowflake_spark_pkg.zip")
-        # Rebuild whenever any source file is newer than the zip —
-        # otherwise executors silently import stale code after an edit.
-        newest_src = max(
-            (
-                os.path.getmtime(os.path.join(root, f))
-                for root, _dirs, files in os.walk(pkg_dir)
-                for f in files
-                if f.endswith(".py")
-            ),
-            default=0.0,
-        )
-        if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest_src:
-            # per-process temp name: two concurrent sessions (bench +
-            # pytest after a source edit) both rebuilding a stale zip
-            # would interleave writes into one shared '.part' file and
-            # os.replace a corrupt archive into place
-            part = f"{zip_path}.{os.getpid()}.{uuid.uuid4().hex}.part"
-            with zipfile.ZipFile(part, "w") as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
-                    for f in files:
-                        if f.endswith(".py"):
-                            full = os.path.join(root, f)
-                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                            zf.write(full, rel)
-            os.replace(part, zip_path)
-        sc.addPyFile(zip_path)
-        sc._dss_pyfile_added = True
-    except Exception:
-        pass  # PYTHONPATH route (get_session) already covers our own sessions
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    tmp_dir = os.path.join(os.path.dirname(pkg_dir), ".tmp")
+    os.makedirs(tmp_dir, exist_ok=True)
+    zip_path = os.path.join(tmp_dir, "dask_snowflake_spark_pkg.zip")
+    newest_src = max(
+        (
+            os.path.getmtime(os.path.join(root, f))
+            for root, _dirs, files in os.walk(pkg_dir)
+            for f in files
+            if f.endswith(".py")
+        ),
+        default=0.0,
+    )
+    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest_src:
+        # per-process temp name: two concurrent sessions (bench +
+        # pytest after a source edit) both rebuilding a stale zip
+        # would interleave writes into one shared '.part' file and
+        # os.replace a corrupt archive into place
+        part = f"{zip_path}.{os.getpid()}.{uuid.uuid4().hex}.part"
+        with zipfile.ZipFile(part, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(root, f)
+                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                        zf.write(full, rel)
+        os.replace(part, zip_path)
+    sc.addPyFile(zip_path)
+    sc._dss_pyfile_added = True
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:

@@ -16,6 +16,7 @@ dropped, state for closed windows is evicted); groupBy keys are
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,61 +31,38 @@ from pyspark.sql import functions as F
 EVENTS_SCHEMA = "event_id long, ts long, user_id long, event_type string, value double, props string"
 
 
-_STREAM_CLONES: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = None  # type: ignore[assignment]
+# Bounded smoke runs are state-store-setup bound: stream-stream joins
+# allocate 4 state stores per partition per micro-batch, so width 8 -> 4
+# measured 15-30% faster across the whole stream family (the earlier
+# 32 -> 8 cut measured 6 s -> 2.7 s). A long-lived production stream
+# sizes this to its key cardinality instead, and wants the RocksDB state
+# store (state off-heap/on disk); the in-heap default measured faster
+# for seconds-long bounded runs, which pay RocksDB's native setup per
+# partition per operator.
+_STREAM_WIDTH = 4
+
+_STREAM_CLONES: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _stream_session(spark: SparkSession) -> SparkSession:
     """A per-driver-session clone (shared SparkContext, OWN SQLConf)
-    right-sized for bounded stream runs. State-store instances = shuffle
-    partitions and their setup cost dominates a bounded smoke run
-    (6s -> 2.7s at 32 -> 8 partitions locally); sizing the clone keeps
-    the width-8 setting invisible to every query on the caller's
-    session. Memoized in a module-level weak mapping (never mutating
-    the caller's session object) so all streams of one driver session
-    share a catalog (stream-stream joins, memory-sink tables); the
-    entry dies with the owning session. A long-lived production stream
-    sizes this to its key cardinality instead."""
-    global _STREAM_CLONES
-    if _STREAM_CLONES is None:
-        import weakref
-
-        _STREAM_CLONES = weakref.WeakKeyDictionary()
+    with at most ``_STREAM_WIDTH`` shuffle partitions, so the narrow
+    setting stays invisible to every query on the caller's session.
+    Memoized in a module-level weak mapping (never mutating the
+    caller's session object) so all streams of one driver session share
+    a catalog (stream-stream joins, memory-sink tables); the entry dies
+    with the owning session."""
     clone = _STREAM_CLONES.get(spark)
     if clone is None:
         from ..session import _ensure_runtime_confs
 
         clone = spark.newSession()
         _ensure_runtime_confs(clone)
-        # Bounded smoke runs are state-store-setup bound: stream-stream
-        # joins allocate 4 state stores per partition per micro-batch,
-        # so width 8 -> 4 measured 15-30% faster across the whole
-        # stream family (r14; the earlier 32 -> 8 cut measured 6 s ->
-        # 2.7 s). Env-overridable: a long-lived production stream sizes
-        # this to its key cardinality instead.
-        cap = os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4")
         width = clone.conf.get("spark.sql.shuffle.partitions")
-        if width.isdigit() and cap.isdigit() and int(width) > int(cap):
-            clone.conf.set("spark.sql.shuffle.partitions", cap)
-        # State-store provider is env-selectable. Long-lived production
-        # streams want RocksDB (state spills off-heap/to disk instead of
-        # living in executor heap — the right 100 TB posture for
-        # stream-stream joins whose state outgrows memory); the bounded
-        # local smoke runs keep the in-heap default, which measured
-        # FASTER here (RocksDB pays native store setup per partition per
-        # operator, the dominant cost of a seconds-long bounded run —
-        # same class as the width clamp above). Set
-        # SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb (or a full class
-        # name) to flip every stream in the session.
-        provider = os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "")
-        if provider:
-            if provider.lower() == "rocksdb":
-                provider = (
-                    "org.apache.spark.sql.execution.streaming."
-                    "state.RocksDBStateStoreProvider"
-                )
-            clone.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
+        if width.isdigit() and int(width) > _STREAM_WIDTH:
+            clone.conf.set("spark.sql.shuffle.partitions", str(_STREAM_WIDTH))
         _STREAM_CLONES[spark] = clone
     return clone
 

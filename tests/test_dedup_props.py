@@ -169,66 +169,6 @@ def test_incremental_near_dup_no_incoming(spark, sf_oracle):
     assert incremental_near_dup(docs, F.lit(False)).count() == 0
 
 
-def test_minhash_xxhash64_fast_path_same_pairs(spark, sf_oracle):
-    """The xxhash64 production path finds the same verified near-dup
-    pairs up to LSH band recall: EXACT duplicates (jaccard == 1, whose
-    identical shingle sets give identical signatures under ANY hash
-    family) must appear under both; borderline 0.8 <= j < 1 pairs may
-    differ only by which hash family happened to collide them (each
-    such miss has probability (1 - j^2)^8 per family)."""
-    from dask_snowflake_spark.operators.dedup import minhash_near_dup
-
-    docs = _t(spark, sf_oracle)["documents"]
-    md5_rows = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_near_dup(docs, threshold=0.8).collect()
-    }
-    xx_rows = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_near_dup(docs, threshold=0.8, hash_fn="xxhash64").collect()
-    }
-    md5_exact = {p for p, j in md5_rows.items() if j == 1.0}
-    xx_exact = {p for p, j in xx_rows.items() if j == 1.0}
-    assert md5_exact == xx_exact, (len(md5_exact), len(xx_exact))
-    # any disagreement is confined to borderline pairs, and verified
-    # jaccard agrees wherever both families surfaced the pair
-    for p2 in set(md5_rows) & set(xx_rows):
-        assert md5_rows[p2] == xx_rows[p2], p2
-    for p2 in set(md5_rows) ^ set(xx_rows):
-        j = md5_rows.get(p2, xx_rows.get(p2))
-        assert j < 1.0, (p2, j)
-
-
-def test_minhash_df_cap_off_equals_full(spark, sf_oracle):
-    """max_shingle_df=1.0 (cap above every df) must change nothing; a
-    tight cap still finds the genuinely-duplicate pairs (their
-    informative shingles survive)."""
-    from dask_snowflake_spark.operators.dedup import minhash_near_dup
-
-    docs = _t(spark, sf_oracle)["documents"]
-    base = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_near_dup(docs, threshold=0.8).select("doc_a", "doc_b").collect()
-    }
-    uncapped = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_near_dup(docs, threshold=0.8, max_shingle_df=1.0)
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    assert base == uncapped
-    capped = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_near_dup(docs, threshold=0.8, max_shingle_df=0.05)
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    # exact-duplicate pairs share ALL shingles, so any survivor set
-    # still has jaccard 1; the capped run must keep every base pair
-    # whose docs are identical and may add near-misses — never empty
-    assert capped, "df cap wiped out all pairs"
-
-
 def _exhaustive_jaccard_pairs(spark, docs, tn, td, shingle_n=3):
     """Ground truth for the prefix-filter join: ALL pairs sharing >= 1
     shingle, exact intersection counts, integer-cross-mult threshold —

@@ -264,3 +264,56 @@ def test_every_query_docstring_is_short_and_timeless():
         elif re.search(r"\br\d+\b", doc):
             bad[name] = "round tag"
     assert not bad, bad
+
+
+def test_package_reads_only_deployment_env_vars():
+    """The package reads only the deployment variables (core count,
+    driver heap) and the variable Spark gives every Python worker; it
+    writes none. Any other environment knob would select behaviour no
+    caller sets, so a new one has to be argued here first."""
+    import ast
+    import pathlib
+
+    allowed = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "PYTHON_WORKER_FACTORY_SECRET"}
+
+    def is_os_attr(node, attr):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == attr
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    def key(node):
+        return node.value if isinstance(node, ast.Constant) else None
+
+    pkg = pathlib.Path(__file__).parent.parent / "dask_snowflake_spark"
+    found, odd = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            where = f"{path.relative_to(pkg.parent)}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.ImportFrom) and node.module == "os":
+                if {a.name for a in node.names} & {"environ", "getenv", "putenv"}:
+                    odd.append(f"{where} imports from os")
+            if is_os_attr(node, "getenv"):
+                call = parents.get(node)
+                k = key(call.args[0]) if isinstance(call, ast.Call) and call.args else None
+                found.add(k) if k else odd.append(f"{where} os.getenv")
+            if is_os_attr(node, "putenv"):
+                odd.append(f"{where} os.putenv")
+            if not is_os_attr(node, "environ"):
+                continue
+            up = parents.get(node)
+            k = None
+            if isinstance(up, ast.Subscript) and isinstance(up.ctx, ast.Load):
+                k = key(up.slice)
+            elif isinstance(up, ast.Attribute) and up.attr == "get":
+                call = parents.get(up)
+                if isinstance(call, ast.Call) and call.args:
+                    k = key(call.args[0])
+            elif isinstance(up, ast.Compare) and isinstance(up.ops[0], (ast.In, ast.NotIn)):
+                k = key(up.left)
+            found.add(k) if k else odd.append(f"{where} os.environ use that is not a keyed read")
+    assert not odd and found <= allowed, (odd, sorted(found - allowed))

@@ -6,7 +6,8 @@ task; on CPython < 3.13 each zipimporter then re-parses its whole archive
 directory. The shim re-reads an archive only when its stat signature
 changed. These tests pin that an unchanged archive is not re-read, a
 rewritten one is, the shim never stacks, and reused Spark workers carry
-it after importing the package from the ``addPyFile`` zip.
+it after importing the package from the ``addPyFile`` zip — which is how
+every worker imports the package.
 """
 
 from __future__ import annotations
@@ -164,3 +165,38 @@ def test_reused_workers_carry_the_shim(spark):
     assert all(r.gated for r in rows)
     assert all(r.pkg_zip for r in rows)
     assert len({r.pid for r in rows}) < n  # workers were reused across tasks
+
+
+_FRESH_SESSION_UDF = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from dask_snowflake_spark.operators.multimodal import decode_metadata
+from dask_snowflake_spark.session import get_session
+
+spark = get_session("zip-only")
+df = spark.createDataFrame([(1, b"abc")], "doc_id long, asset binary")
+print(decode_metadata(df).collect())
+spark.stop()
+"""
+
+
+def test_get_session_ships_package_to_workers_without_import_path(tmp_path):
+    """The ``addPyFile`` zip is the package's only route to executors:
+    from a non-repo cwd with PYTHONPATH unset, a Python UDF that pickles
+    a package function by reference runs right after ``get_session``,
+    before any table is loaded."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION_UDF, repo],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "codec='synthetic'" in out.stdout, out.stdout

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Spot-bench a few registry queries: interleaved passes, best-of-N
-wall + deterministic job counts per query — the same methodology as
-bench.py, scoped to a handful of names for A/B adjudication.
+wall + deterministic job counts per query — bench.py's timed loop
+(``bench.timed_passes``), scoped to a handful of names for A/B
+adjudication.
 
 Usage: python tools/spot_bench.py name [name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -13,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -23,6 +23,7 @@ def main() -> None:
     if not names:
         raise SystemExit("usage: spot_bench.py name [name ...]")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from bench import timed_passes
     from dask_snowflake_spark.queries import registry
     from dask_snowflake_spark.session import get_session, register_tables
 
@@ -39,23 +40,12 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    runs: list[dict[str, float]] = []
-    job_runs: list[dict[str, int]] = []
-    for _ in range(max(1, n_passes)):
-        pt: dict[str, float] = {}
-        pj: dict[str, int] = {}
-        for name in names:
-            t0 = time.perf_counter()
-            j0 = sched.nextJobId()
-            reg[name].spark_fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            pj[name] = sched.nextJobId() - j0
-            pt[name] = round(time.perf_counter() - t0, 2)
-        runs.append(pt)
-        job_runs.append(pj)
+    runs, job_runs = timed_passes(
+        spark,
+        sf_dir,
+        [(n, reg[n].spark_fn) for n in names],
+        int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")),
+    )
     out = {
         n: {
             "best_sec": min(r[n] for r in runs),
