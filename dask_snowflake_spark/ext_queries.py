@@ -935,6 +935,22 @@ def xg2_flow_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _watermarked_purchases(ev: DataFrame) -> DataFrame:
+    """The purchase side of the stream-stream joins: ``(purchase_id,
+    p_user_id, p_ts, value)`` from the events stream, watermarked 2h
+    on ``p_ts``."""
+    return (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("p_ts"),
+            "value",
+        )
+        .withWatermark("p_ts", "2 hours")
+    )
+
+
 @query(
     "flow_stream_join",
     """
@@ -956,16 +972,7 @@ def flow_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts"))
         .withWatermark("click_ts", "2 hours")
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-            "value",
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
+    purchases = _watermarked_purchases(ev)
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
@@ -2342,16 +2349,7 @@ def x40_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts"))
         .withWatermark("click_ts", "2 hours")
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-            "value",
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
+    purchases = _watermarked_purchases(ev)
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
@@ -4779,6 +4777,23 @@ def x83_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("check_name")
 
 
+def _user_click_purchase_counts(t: dict) -> DataFrame:
+    """``(user_id, x, y)``: per-user click count ``x`` and purchase
+    count ``y`` as BIGINTs."""
+    return (
+        t["events"]
+        .groupBy("user_id")
+        .agg(
+            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+            .cast("long")
+            .alias("x"),
+            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+            .cast("long")
+            .alias("y"),
+        )
+    )
+
+
 @query(
     "x84_metric_correlation",
     """
@@ -4810,19 +4825,7 @@ def x84_metric_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson r between per-user click and purchase counts from exact integer moment sums, one
     double expression, quantized at 1e-6; zero variance gives 0. corr() is not used: its float
     partial states are order-dependent."""
-    t = _t(spark, sf_dir)
-    per_user = (
-        t["events"]
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("long")
-            .alias("x"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("long")
-            .alias("y"),
-        )
-    )
+    per_user = _user_click_purchase_counts(_t(spark, sf_dir))
     s = per_user.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -8614,30 +8617,22 @@ def xcv_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _copurchase_support2_edges(t: dict) -> DataFrame:
     """Support-2 co-purchase part edges (u < v) by in-array i<j pair
-    enumeration over per-order sorted distinct part arrays (the
-    apriori/basket_affinity r14 rewrite, shared here r15 by the kcore /
-    LPA / link-prediction graph queries): baskets are schema-bounded
+    enumeration (``operators.analytics.array_pairs``) over per-order
+    sorted distinct part arrays, shared by the kcore / LPA /
+    link-prediction graph queries: baskets are schema-bounded
     (<= 7 lines/order), so pair instances explode map-side and the
     order-keyed self-join — measured 4.9 s of kcore's 8 s at sf0.1 —
     never exists. sort_array + i<j keeps u < v; support counting is
     unchanged (one pair instance per order containing both parts)."""
-    its = F.col("__its")
-    pair_arr = F.flatten(
-        F.transform(
-            its,
-            lambda x, i: F.transform(
-                F.slice(its, i + F.lit(2), F.size(its)),
-                lambda y: F.array(x, y),
-            ),
-        )
-    )
+    from .operators.analytics import array_pairs
+
     return (
         t["lineitem"]
         .select("l_orderkey", "l_partkey")
         .distinct()
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_list("l_partkey")).alias("__its"))
-        .select(F.explode(pair_arr).alias("__p"))
+        .select(F.explode(array_pairs(F.col("__its"))).alias("__p"))
         .select(F.col("__p")[0].alias("u"), F.col("__p")[1].alias("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("__n_ab"))
@@ -9799,6 +9794,31 @@ def _ndcg_w_case_sql(rk: str) -> str:
     return f"CASE {whens} ELSE 0 END"
 
 
+def _supplier_revenue_reach(t: dict) -> DataFrame:
+    """``(n_name, s_suppkey, rev, n_orders)``: per (nation, supplier)
+    exact discounted revenue in cent-percent units and the number of
+    distinct orders reached."""
+    return (
+        t["lineitem"]
+        .join(t["supplier"].select("s_suppkey", "s_nationkey"),
+              F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(t["nation"].select("n_nationkey", "n_name"),
+              F.col("n_nationkey") == F.col("s_nationkey"))
+        .groupBy("n_name", "s_suppkey")
+        .agg(
+            F.sum(
+                F.expr(
+                    "cast(round(l_extendedprice * 100) as bigint)"
+                    " * (100 - cast(round(l_discount * 100) as bigint))"
+                )
+            )
+            .cast("long")
+            .alias("rev"),
+            F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
+        )
+    )
+
+
 @query(
     "xdc_ndcg_ranking_eval",
     f"""
@@ -9846,26 +9866,7 @@ def xdc_ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     quartile relevance. DCG terms use literal integer discounts; nDCG is one quantized division."""
     from pyspark.sql.window import Window as W
 
-    t = _t(spark, sf_dir)
-    per = (
-        t["lineitem"]
-        .join(t["supplier"].select("s_suppkey", "s_nationkey"),
-              F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(t["nation"].select("n_nationkey", "n_name"),
-              F.col("n_nationkey") == F.col("s_nationkey"))
-        .groupBy("n_name", "s_suppkey")
-        .agg(
-            F.sum(
-                F.expr(
-                    "cast(round(l_extendedprice * 100) as bigint)"
-                    " * (100 - cast(round(l_discount * 100) as bigint))"
-                )
-            )
-            .cast("long")
-            .alias("rev"),
-            F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
-        )
-    )
+    per = _supplier_revenue_reach(_t(spark, sf_dir))
     wn = W.partitionBy("n_name")
     graded = per.select(
         "n_name",
@@ -10138,16 +10139,9 @@ def dedup_region_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "bpe_encode_frozen",
-    _bpe_encode_sql(5),
-    ("text", "pipeline"),
-)
-def bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frozen-table BPE encoding: 5 merges learned on an 80% hash split, applied in rank order to
-    the held-out 20%. Per held-out doc: words, BPE tokens, merged tokens and quantized
-    tokens-per-word."""
-    t = _t(spark, sf_dir)
+def _bpe_frozen_split(t: dict) -> tuple[DataFrame, list[tuple[str, str]]]:
+    """The held-out 20% of ``documents`` (hash split on ``doc_id``) and
+    the 5 merge pairs BPE learns on the other 80%, in rank order."""
     docs = t["documents"]
     bucket = F.pmod(
         dedup_ops.portable_hash(F.col("doc_id").cast("string"), F.lit("bpe_enc")),
@@ -10159,7 +10153,19 @@ def bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
         train, "text", rounds=5, min_word_len=1,
         need_sizes=False, need_state=False,
     )
-    pairs = [(m[1], m[2]) for m in merges]
+    return held, [(m[1], m[2]) for m in merges]
+
+
+@query(
+    "bpe_encode_frozen",
+    _bpe_encode_sql(5),
+    ("text", "pipeline"),
+)
+def bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frozen-table BPE encoding: 5 merges learned on an 80% hash split, applied in rank order to
+    the held-out 20%. Per held-out doc: words, BPE tokens, merged tokens and quantized
+    tokens-per-word."""
+    held, pairs = _bpe_frozen_split(_t(spark, sf_dir))
     return text_ops.bpe_encode(held, pairs).orderBy("doc_id")
 
 
@@ -10305,19 +10311,7 @@ def xdl_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility per language: held-out docs encoded with 5 frozen train-split merges,
     then docs, words, tokens, merged tokens, fertility and merged fraction as integer-quantized
     ratios."""
-    t = _t(spark, sf_dir)
-    docs = t["documents"]
-    bucket = F.pmod(
-        dedup_ops.portable_hash(F.col("doc_id").cast("string"), F.lit("bpe_enc")),
-        F.lit(5),
-    )
-    train = docs.filter(bucket < 4)
-    held = docs.filter(bucket == 4)
-    merges, _state = text_ops._bpe_iterate(
-        train, "text", rounds=5, min_word_len=1,
-        need_sizes=False, need_state=False,
-    )
-    pairs = [(m[1], m[2]) for m in merges]
+    held, pairs = _bpe_frozen_split(_t(spark, sf_dir))
     enc = text_ops.bpe_encode(held, pairs)
     return (
         enc.join(held.select("doc_id", "lang"), "doc_id")
@@ -10410,26 +10404,7 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalisation."""
     from pyspark.sql.window import Window as W
 
-    t = _t(spark, sf_dir)
-    per = (
-        t["lineitem"]
-        .join(t["supplier"].select("s_suppkey", "s_nationkey"),
-              F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(t["nation"].select("n_nationkey", "n_name"),
-              F.col("n_nationkey") == F.col("s_nationkey"))
-        .groupBy("n_name", "s_suppkey")
-        .agg(
-            F.sum(
-                F.expr(
-                    "cast(round(l_extendedprice * 100) as bigint)"
-                    " * (100 - cast(round(l_discount * 100) as bigint))"
-                )
-            )
-            .cast("long")
-            .alias("rev"),
-            F.countDistinct("l_orderkey").cast("long").alias("n_orders"),
-        )
-    )
+    per = _supplier_revenue_reach(_t(spark, sf_dir))
     wn = W.partitionBy("n_name")
     ranked = per.select(
         "n_name",
@@ -10493,19 +10468,7 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero variance guarded."""
     from pyspark.sql.window import Window as W
 
-    t = _t(spark, sf_dir)
-    per_user = (
-        t["events"]
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("long")
-            .alias("x"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("long")
-            .alias("y"),
-        )
-    )
+    per_user = _user_click_purchase_counts(_t(spark, sf_dir))
     # The unpartitioned rank windows run over the per-user aggregate (one row per user).
     n_all = F.count(F.lit(1)).over(W.partitionBy()).cast("long")
 
@@ -10979,6 +10942,7 @@ def xdx_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _copurchase_support2_edges(t)
     from pyspark.sql.window import Window as W
 
+    from .operators.analytics import array_pairs
     from .operators.graph import _both_directions
 
     und = _both_directions(edges, "u", "v").distinct()
@@ -10997,16 +10961,7 @@ def xdx_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     adj = und_d.groupBy("__u").agg(F.sort_array(F.collect_list("nbr")).alias("nb"))
     centers = adj.filter(F.size("nb") <= 64)
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("nb"),
-            lambda s, i: F.transform(
-                F.slice(F.col("nb"), i + F.lit(2), F.size(F.col("nb"))),
-                lambda v2: F.array(s, v2),
-            ),
-        )
-    )
-    wedges = centers.select(F.explode(pair_arr).alias("p")).select(
+    wedges = centers.select(F.explode(array_pairs(F.col("nb"))).alias("p")).select(
         F.col("p")[0]["__v"].alias("u"),
         F.col("p")[0]["dv"].alias("deg_u"),
         F.col("p")[1]["__v"].alias("v"),
@@ -11865,6 +11820,23 @@ def xe3_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_event_cents(t: dict) -> DataFrame:
+    """``(event_type, day_i, cents)``: per event type and day (days
+    since 1970-01-01) the exact sum of event values in cents."""
+    return (
+        t["events"]
+        .select(
+            "event_type",
+            F.expr("datediff(cast(ts as date), DATE '1970-01-01')")
+            .cast("long")
+            .alias("day_i"),
+            F.expr("cast(round(value * 100) as bigint)").alias("__vc"),
+        )
+        .groupBy("event_type", "day_i")
+        .agg(F.sum("__vc").cast("long").alias("cents"))
+    )
+
+
 @query(
     "xe4_mann_kendall_trend",
     """
@@ -11924,19 +11896,7 @@ def xe4_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test per event type on daily revenue: exact S from a day-pair self-join,
     tie-corrected integer 18*Var, quantized z, and p<0.05 as the integer cross-multiplication of
     |z| > 1.96."""
-    t = _t(spark, sf_dir)
-    daily = (
-        t["events"]
-        .select(
-            "event_type",
-            F.expr("datediff(cast(ts as date), DATE '1970-01-01')")
-            .cast("long")
-            .alias("day_i"),
-            F.expr("cast(round(value * 100) as bigint)").alias("__vc"),
-        )
-        .groupBy("event_type", "day_i")
-        .agg(F.sum("__vc").cast("long").alias("cents"))
-    )
+    daily = _daily_event_cents(_t(spark, sf_dir))
     b = daily.select(
         F.col("event_type").alias("__et"),
         F.col("day_i").alias("__dj"),
@@ -12283,19 +12243,7 @@ def xe6_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers."""
     from pyspark.sql.window import Window as W
 
-    t = _t(spark, sf_dir)
-    daily0 = (
-        t["events"]
-        .select(
-            "event_type",
-            F.expr("datediff(cast(ts as date), DATE '1970-01-01')")
-            .cast("long")
-            .alias("day_i"),
-            F.expr("cast(round(value * 100) as bigint)").alias("__vc"),
-        )
-        .groupBy("event_type", "day_i")
-        .agg(F.sum("__vc").cast("long").alias("cents"))
-    )
+    daily0 = _daily_event_cents(_t(spark, sf_dir))
     b = daily0.groupBy("event_type").agg(
         F.min("day_i").alias("dmin"), F.max("day_i").alias("dmax")
     )
@@ -14237,29 +14185,19 @@ def xeq_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer degrees and integer-op moments (no sqrt by symmetry), one quantized division."""
     from pyspark.sql.window import Window as W
 
+    from .operators.analytics import array_pairs
     from .operators.graph import _both_directions
 
     t = _t(spark, sf_dir)
     li = t["lineitem"].select("l_orderkey", "l_partkey")
-    # in-array pair enumeration (the apriori/basket_affinity r14
-    # rewrite): per-order sorted part arrays are bounded (<= 17 at
-    # fixture), so the co-purchase edges explode map-side — no
-    # order-keyed self-join.
-    its = F.col("__its")
-    pair_arr = F.flatten(
-        F.transform(
-            its,
-            lambda x, i: F.transform(
-                F.slice(its, i + F.lit(2), F.size(its)),
-                lambda y: F.array(x, y),
-            ),
-        )
-    )
+    # in-array pair enumeration (``array_pairs``): per-order sorted
+    # part arrays are bounded (<= 17 at fixture), so the co-purchase
+    # edges explode map-side — no order-keyed self-join.
     pairs = (
         li.distinct()
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_list("l_partkey")).alias("__its"))
-        .select(F.explode(pair_arr).alias("__p"))
+        .select(F.explode(array_pairs(F.col("__its"))).alias("__p"))
         .select(F.col("__p")[0].alias("u"), F.col("__p")[1].alias("v"))
         .distinct()
     )
@@ -17004,6 +16942,8 @@ def frequent_itemsets_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent triples by Apriori (L1 and L2 pruning, L2-join-L2 candidates) checked against an
     oracle that counts triples naively; they agree by the Apriori theorem. Exact counts, unique
     order."""
+    from .operators.analytics import array_pairs
+
     t = _t(spark, sf_dir)
     items = (
         t["lineitem"]
@@ -17033,17 +16973,8 @@ def frequent_itemsets_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     its = F.col("its")
-    pair_arr = F.flatten(
-        F.transform(
-            its,
-            lambda a, i: F.transform(
-                F.slice(its, i + F.lit(2), F.size(its)),
-                lambda b: F.array(a, b),
-            ),
-        )
-    )
     pair_counts = (
-        baskets.select(F.explode(pair_arr).alias("p"))
+        baskets.select(F.explode(array_pairs(its)).alias("p"))
         .select(F.col("p")[0].alias("i1"), F.col("p")[1].alias("i2"))
         .groupBy("i1", "i2")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))

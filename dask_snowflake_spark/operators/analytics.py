@@ -20,9 +20,9 @@ DataFrame transforms with scale-correct plans:
 - ``last_touch_attribution``: per-conversion channel credit from one
   window node (two last-ignorenulls expressions, microsecond-exact
   lookback).
-- ``basket_affinity``: market-basket support + lift from a
-  within-basket self-join (bounded candidate pairs) with broadcast
-  item frequencies.
+- ``basket_affinity``: market-basket support + lift from in-array
+  pair enumeration (``array_pairs``, bounded by basket size) with
+  broadcast item frequencies.
 
 Determinism contract (CLAUDE.md): ratios are integer-quantized
 (``x * 1_000_000 div total / 1e6``) so both engines of an oracle pair
@@ -231,6 +231,25 @@ def last_touch_attribution(
     )
 
 
+def array_pairs(arr: Column) -> Column:
+    """Every ``array(arr[i], arr[j])`` with i < j, as one flat array —
+    in-array pair enumeration (the r8 wedge idiom): explode it map-side
+    instead of self-joining the array's rows, so the only bound is the
+    array's own length squared. Over a sorted array each pair comes out
+    in order (left <= right)."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                # slice length: the total size is a safe upper bound
+                # and avoids re-evaluating a size() capture per element
+                F.slice(arr, i + F.lit(2), F.size(arr)),
+                lambda y: F.array(x, y),
+            ),
+        )
+    )
+
+
 def basket_affinity(
     df: DataFrame, basket_col: str, item_col: str, min_support: int = 2
 ) -> DataFrame:
@@ -238,9 +257,9 @@ def basket_affinity(
     lift)`` for every unordered item pair appearing in at least
     ``min_support`` baskets, ordered by (item_a, item_b).
 
-    Candidate pairs come from a within-basket self-join under
-    ``item_a < item_b`` — bounded by basket-size choose 2, never a
-    cross-catalog pairing — co-partitioned on the basket key. Item
+    Candidate pairs come from each basket's sorted item array
+    (``array_pairs``, so ``item_a < item_b``) — bounded by basket-size
+    choose 2, never a cross-catalog pairing, exploded map-side. Item
     frequencies are |items|-bounded and broadcast back; the basket
     total rides a one-row broadcast cross join. Lift is the
     integer-quantized exact ratio ``n_ab * n_baskets / (n_a * n_b)``
@@ -259,25 +278,12 @@ def basket_affinity(
     ).distinct()
     tot = items.agg(F.countDistinct("__bk").cast("long").alias("__n_baskets"))
     cnt = items.groupBy("__it").agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    # in-array pair enumeration (r8 wedge idiom, r14): collect each
-    # basket's sorted item array once and explode i<j pairs map-side —
-    # the former basket-keyed self-join shuffled both sides and
-    # re-sorted per pass; the array bound is basket size, exactly the
-    # bound the join's basket-size-choose-2 output already imposed.
-    its = F.col("__its")
-    pair_arr = F.flatten(
-        F.transform(
-            its,
-            lambda x, i: F.transform(
-                F.slice(its, i + F.lit(2), F.size(its)),
-                lambda y: F.array(x, y),
-            ),
-        )
-    )
+    # in-array pairs (r14): the former basket-keyed self-join shuffled
+    # both sides and re-sorted per pass
     pairs = (
         items.groupBy("__bk")
         .agg(F.sort_array(F.collect_list("__it")).alias("__its"))
-        .select(F.explode(pair_arr).alias("__p"))
+        .select(F.explode(array_pairs(F.col("__its"))).alias("__p"))
         .select(
             F.col("__p")[0].alias("item_a"), F.col("__p")[1].alias("item_b")
         )

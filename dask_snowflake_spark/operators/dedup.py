@@ -80,18 +80,18 @@ def shingle_array(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Data
     return words.select("doc", arr.alias("shingles"))
 
 
-def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document, long format.
+def _word_windows(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> tuple[DataFrame, list[Column]]:
+    """Every word position's ``n``-word window: ``(doc, pos, s)`` rows
+    plus the ``n`` window-word Columns over ``s`` (a window running past
+    the doc's end has NULL tail words).
 
     Built by zipping the word array against its own n-1 shifted slices
     (``arrays_zip`` of ``slice``s — all codegen'd, no interpreted HOF
-    lambdas) and posexploding the zipped structs: shingle assembly is
-    entirely MAP-SIDE, so the only shuffle in the operator is the final
-    per-doc distinct — one fewer exchange than the previous
-    lead()-window formulation, which mattered more than its local ~20%:
-    a window shuffle's sort is the part that grows with corpus scale.
-    Short docs (< n words) yield one partial shingle (concat_ws skips
-    the NULL tail), matching the array variant and the SQL oracle."""
+    lambdas) and posexploding the zipped structs: window assembly is
+    entirely MAP-SIDE. The kernel of ``shingles``, ``hashed_shingles``
+    and ``span_stream``; each caller picks its windows and projection."""
     w = F.split(F.col(text_col), r"\s+")
     base = df.select(
         F.col(id_col).alias("doc"),
@@ -105,7 +105,20 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
         "doc",
         F.posexplode(F.arrays_zip(*[F.col(f"w{j}") for j in range(n)])).alias("pos", "s"),
     )
-    cols = [F.col("s").getField(f"w{j}") for j in range(n)]
+    return zipped, [F.col("s").getField(f"w{j}") for j in range(n)]
+
+
+def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per document, long format.
+
+    Built on the map-side ``_word_windows`` kernel, so the only shuffle
+    in the operator is the final per-doc distinct — one fewer exchange
+    than the previous lead()-window formulation, which mattered more
+    than its local ~20%: a window shuffle's sort is the part that grows
+    with corpus scale. Short docs (< n words) yield one partial shingle
+    (concat_ws skips the NULL tail), matching the array variant and the
+    SQL oracle."""
+    zipped, cols = _word_windows(df, text_col, id_col, n)
     # keep full n-grams (last slice element non-null) plus the single
     # partial shingle of a short doc (pos 0) — identical index set to
     # the sequence(0, greatest(size-n, 0)) array formulation
@@ -118,29 +131,17 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
 
 def hashed_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document as 60-bit hashes
-    (``portable_hash``, seed 0): the text -> hash projection is
-    map-side, so the per-doc distinct and every downstream join/shuffle
-    carries 8-byte longs instead of raw shingle strings — ~5x fewer
-    shuffle bytes at corpus scale. Jaccard over hashes equals Jaccard
-    over shingles up to md5 collisions, and the oracle hashes with the
-    IDENTICAL md5 expression, so the value compare stays exact even in
-    a collision. The low 32 bits are the MinHash base hash
-    (``minhash_signatures``), so no second md5 pass is needed.
+    (``portable_hash``, seed 0) of the ``shingles`` strings: the text ->
+    hash projection is map-side, so the per-doc distinct and every
+    downstream join/shuffle carries 8-byte longs instead of raw shingle
+    strings — ~5x fewer shuffle bytes at corpus scale. Jaccard over
+    hashes equals Jaccard over shingles up to md5 collisions, and the
+    oracle hashes with the IDENTICAL md5 expression, so the value
+    compare stays exact even in a collision. The low 32 bits are the
+    MinHash base hash (``minhash_signatures``), so no second md5 pass
+    is needed.
     """
-    w = F.split(F.col(text_col), r"\s+")
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        w.alias("w0"),
-        *[
-            F.slice(w, j + 1, F.greatest(F.size(w) - j, F.lit(0))).alias(f"w{j}")
-            for j in range(1, n)
-        ],
-    )
-    zipped = base.select(
-        "doc",
-        F.posexplode(F.arrays_zip(*[F.col(f"w{j}") for j in range(n)])).alias("pos", "s"),
-    )
-    cols = [F.col("s").getField(f"w{j}") for j in range(n)]
+    zipped, cols = _word_windows(df, text_col, id_col, n)
     return (
         zipped.filter(cols[-1].isNotNull() | (F.col("pos") == 0))
         .select("doc", portable_hash(F.concat_ws(" ", *cols)).alias("shingle"))
@@ -245,6 +246,14 @@ def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_ratio() -> Column:
+    """Jaccard of a pair from its ``n_common``, ``n_a`` and ``n_b``
+    columns, rounded to 6 places."""
+    return F.round(
+        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
+    ).alias("jaccard")
+
+
 def _jaccard_from_intersections(sh: DataFrame, inter: DataFrame) -> DataFrame:
     """Attach set sizes to (doc_a, doc_b, n_common) intersection counts
     and compute Jaccard."""
@@ -258,54 +267,18 @@ def _jaccard_from_intersections(sh: DataFrame, inter: DataFrame) -> DataFrame:
             sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_shingles", "n_b"),
             "doc_b",
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", _jaccard_ratio())
     )
 
 
-def pair_intersections(sh: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact intersection counts for candidate pairs over per-doc
-    shingle sets: ``(doc_a, doc_b, n_common, n_a, n_b)``.
-
-    CONTRACT: ``sh`` must be DISTINCT per (doc, shingle) — every
-    in-tree producer (``shingles``/``hashed_shingles``) guarantees it.
-    A duplicate-bearing stream would inflate ``n_a``/``n_b`` (the
-    ``count(1)`` set size) while ``array_intersect`` still dedups
-    ``n_common``, silently deflating downstream Jaccards.
-
-    Verify-by-array: collect each doc's (distinct) shingles once, join
-    each pair with the two arrays, and count the intersection with
-    ``array_intersect`` — two doc-keyed joins, no per-candidate
-    explosion. The earlier shape (explode the pair's doc_a shingles,
-    equi-join on (doc_b, shingle), re-aggregate, join sizes twice)
-    shuffled |A| rows per candidate; the array verify benched 15 -> 13
-    jobs / 3.5 -> 2.6 s warm inside the LSH path at sf0.1, identical
-    rows. Contract preserved from the join formulation: pairs with an
-    EMPTY intersection are dropped, not emitted at 0 (x89 counts the
-    returned candidates). Per-pair state is the two docs' shingle
-    arrays — the bound a single document already imposes.
-    """
-    # persist: the collected-arrays aggregate is consumed at TWO
-    # different join keys (doc_a, doc_b) below — ReuseExchange can't
-    # dedupe differently-keyed consumers (r9), so uncached it runs the
-    # collect_list shuffle twice per verify; measured 1.8 -> 1.3 s
-    # warm (+1 job) inside the LSH path at sf0.1, across all verify
-    # consumers.
-    from ..session import track_cache
-
-    sets_ = track_cache(
-        sh.groupBy("doc").agg(
-            F.collect_list("shingle").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-    )
-    # a caller's extra pair columns (e.g. an n_a it computed itself)
-    # would ambiguous-reference against the size joins below
-    pairs = pairs.select("doc_a", "doc_b")
+def _pair_overlap(pairs: DataFrame, sets_: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, n_common, n_a, n_b)`` for ``(doc_a, doc_b)``
+    pairs against per-doc ``(doc, s, n)`` shingle arrays and set sizes:
+    join each pair with the two docs' arrays (two doc-keyed joins, no
+    per-candidate explosion) and count the intersection with
+    ``array_intersect``. Per-pair state is the two docs' shingle arrays
+    — the bound a single document already imposes. The verify step of
+    ``pair_intersections`` and ``jaccard_prefix_pairs``."""
     return (
         pairs.join(
             sets_.select(
@@ -326,20 +299,51 @@ def pair_intersections(sh: DataFrame, pairs: DataFrame) -> DataFrame:
             "n_a",
             "n_b",
         )
-        .filter(F.col("n_common") > 0)
+    )
+
+
+def pair_intersections(sh: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact intersection counts for candidate pairs over per-doc
+    shingle sets: ``(doc_a, doc_b, n_common, n_a, n_b)``.
+
+    CONTRACT: ``sh`` must be DISTINCT per (doc, shingle) — every
+    in-tree producer (``shingles``/``hashed_shingles``) guarantees it.
+    A duplicate-bearing stream would inflate ``n_a``/``n_b`` (the
+    ``count(1)`` set size) while ``array_intersect`` still dedups
+    ``n_common``, silently deflating downstream Jaccards.
+
+    Verify-by-array (``_pair_overlap``): collect each doc's (distinct)
+    shingles once and intersect the two arrays per pair. The earlier
+    shape (explode the pair's doc_a shingles, equi-join on (doc_b,
+    shingle), re-aggregate, join sizes twice) shuffled |A| rows per
+    candidate; the array verify benched 15 -> 13 jobs / 3.5 -> 2.6 s
+    warm inside the LSH path at sf0.1, identical rows. Contract
+    preserved from the join formulation: pairs with an EMPTY
+    intersection are dropped, not emitted at 0 (x89 counts the
+    returned candidates).
+    """
+    # persist: the collected-arrays aggregate is consumed at TWO
+    # different join keys (doc_a, doc_b) — ReuseExchange can't dedupe
+    # differently-keyed consumers (r9), so uncached it runs the
+    # collect_list shuffle twice per verify; measured 1.8 -> 1.3 s
+    # warm (+1 job) inside the LSH path at sf0.1, across all verify
+    # consumers.
+    sets_ = track_cache(
+        sh.groupBy("doc").agg(
+            F.collect_list("shingle").alias("s"), F.count(F.lit(1)).alias("n")
+        )
+    )
+    # a caller's extra pair columns (e.g. an n_a it computed itself)
+    # would ambiguous-reference against the size joins
+    return _pair_overlap(pairs.select("doc_a", "doc_b"), sets_).filter(
+        F.col("n_common") > 0
     )
 
 
 def jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact Jaccard over shingle sets for the given candidate pairs
     (array-verify semantics and cost — see ``pair_intersections``)."""
-    return pair_intersections(sh, pairs).select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-        ).alias("jaccard"),
-    )
+    return pair_intersections(sh, pairs).select("doc_a", "doc_b", _jaccard_ratio())
 
 
 def minhash_near_dup(
@@ -431,10 +435,10 @@ def jaccard_prefix_pairs(
     over docs + an equi-join on rare prefix tokens; O(candidates),
     never O(n²) and never proportional to boilerplate collisions.
 
-    Verification joins each candidate pair with the two docs' SHINGLE
-    ARRAYS (already collected for prefix selection) and computes the
-    intersection per pair with ``array_intersect`` — two doc-keyed
-    joins, zero explosion. The earlier shape (explode doc_a's shingles
+    Verification (``_pair_overlap``) joins each candidate pair with the
+    two docs' SHINGLE ARRAYS (already collected for prefix selection)
+    and computes the intersection per pair with ``array_intersect`` —
+    two doc-keyed joins, zero explosion. The earlier shape (explode doc_a's shingles
     per candidate, equi-join on (doc_b, shingle), re-aggregate, then
     two more joins for sizes) shuffled |A| rows per candidate and
     benched 16 jobs / 3.5 s warm at sf0.1 vs 13 / 2.1 s for this one
@@ -490,35 +494,11 @@ def jaccard_prefix_pairs(
         F.size("toks").alias("n"),
     )
     return (
-        cand.join(
-            sets_.select(
-                F.col("doc").alias("doc_a"), F.col("s").alias("s_a"), F.col("n").alias("n_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            sets_.select(
-                F.col("doc").alias("doc_b"), F.col("s").alias("s_b"), F.col("n").alias("n_b")
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("s_a", "s_b")).alias("n_common"),
-            "n_a",
-            "n_b",
-        )
+        _pair_overlap(cand, sets_)
         .filter(
             F.col("n_common") * td >= (F.col("n_a") + F.col("n_b") - F.col("n_common")) * tn
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", _jaccard_ratio())
     )
 
 
@@ -657,26 +637,11 @@ def span_stream(
     """``(doc, pos, span_h)`` for every FULL ``span_words``-word window
     of every document: 0-based word position plus the 60-bit portable
     hash of the window text. Assembly is entirely MAP-SIDE (the
-    arrays_zip shifted-slice kernel shared with ``shingles``); docs
+    ``_word_windows`` kernel of ``shingles``); docs
     shorter than ``span_words`` words yield no rows. The shared span
     source for ``dup_span_stats`` (occurrence stats) and
     ``dup_span_runs`` (maximal duplicated regions)."""
-    w = F.split(F.col(text_col), r"\s+")
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        w.alias("w0"),
-        *[
-            F.slice(w, j + 1, F.greatest(F.size(w) - j, F.lit(0))).alias(f"w{j}")
-            for j in range(1, span_words)
-        ],
-    )
-    zipped = base.select(
-        "doc",
-        F.posexplode(F.arrays_zip(*[F.col(f"w{j}") for j in range(span_words)])).alias(
-            "pos", "s"
-        ),
-    )
-    cols = [F.col("s").getField(f"w{j}") for j in range(span_words)]
+    zipped, cols = _word_windows(df, text_col, id_col, span_words)
     # full windows only — no partial tail (a short doc has no spans)
     return zipped.filter(cols[-1].isNotNull()).select(
         "doc", "pos", portable_hash(F.concat_ws(" ", *cols)).alias("span_h")
@@ -773,8 +738,8 @@ def dup_span_stats(
     Doc-level MinHash misses this case: a unique article quoting a
     widely-copied paragraph has low doc Jaccard but high span overlap.
 
-    Scale shape: span assembly is map-side (arrays_zip of shifted
-    slices, same kernel as ``hashed_shingles``); spans travel as 60-bit
+    Scale shape: span assembly is map-side (``span_stream``, on the
+    ``_word_windows`` kernel of ``hashed_shingles``); spans travel as 60-bit
     longs; the duplicated-span set comes from one groupBy(span_hash)
     with a distinct-doc count, and rejoining it to the span stream is an
     equi-join on the hash. Cost ~ O(total tokens), never all-pairs.

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import track_cache
+
 # Fixed-round loops on linear lineage (pagerank_integer,
 # label_propagation) localCheckpoint their state every this many rounds:
 # short loops run as one action, long ones keep a bounded plan depth.
@@ -62,6 +64,17 @@ def _both_directions(edges: DataFrame, src: str, dst: str) -> DataFrame:
     ).select("__e.__u", "__e.__v")
 
 
+def _cached_adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The static both-directions distinct ``(__u, __v)`` edge list of
+    an iterative graph loop, cached pre-partitioned on the per-round
+    join key ``__v``. Persisting keeps that partitioning visible to
+    Catalyst (localCheckpoint's LogicalRDD drops it), so when the
+    joined per-round frame is too large to broadcast the sort-merge
+    join reads the cached edges with NO exchange — the edge list never
+    re-shuffles, round after round. One repartition at init buys it."""
+    return track_cache(_both_directions(edges, src, dst).distinct().repartition("__v"))
+
+
 def connected_components(
     edges: DataFrame,
     src: str,
@@ -80,17 +93,7 @@ def connected_components(
     fixpoint (one-hop hash-min needs O(diameter) rounds, so a component
     with diameter > max_iter would otherwise be silently mislabeled).
     """
-    from ..session import track_cache
-
-    # The edge list is the BIG static table of the loop; persisting it
-    # pre-partitioned on the per-round join key keeps its partitioning
-    # visible to Catalyst (localCheckpoint's LogicalRDD drops it), so
-    # when the frontier is too large to broadcast the sort-merge join
-    # reads the cached edges with NO exchange — the edge list never
-    # re-shuffles, round after round. One repartition at init buys it.
-    und = track_cache(
-        _both_directions(edges, src, dst).distinct().repartition("__v")
-    )
+    und = _cached_adjacency(edges, src, dst)
 
     # initial label: min over self and direct neighbors — equivalently
     # the result of round 0 with every vertex in the frontier
@@ -179,8 +182,6 @@ def pagerank_integer(
     mass, so there are no dangling-mass corrections. Returns
     ``(vertex, pr_q)`` with ``pr_q`` in mass units.
     """
-    from ..session import track_cache
-
     from pyspark.sql.window import Window as W
 
     und = _both_directions(edges, src, dst).distinct()
@@ -235,8 +236,6 @@ def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Cached canonical (u < v) distinct edge set — the shared base the
     triangle operators reuse so the upstream edge pipeline (often LSH
     pair generation) is evaluated exactly once."""
-    from ..session import track_cache
-
     return track_cache(
         edges.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v"))
         .filter(F.col("u") < F.col("v"))  # drops self-loops
@@ -413,10 +412,9 @@ def kcore_onion(
     Montresor et al., synchronous-peel variant.
 
     Scale posture: mirrors ``connected_components`` — the static
-    both-directions edge list is cached pre-partitioned on the join
-    key (its partitioning stays visible to Catalyst, so the per-round
-    degree join never re-shuffles the edges), and the alive set
-    SHRINKS monotonically (broadcast-sized long before the edge list
+    both-directions edge list is ``_cached_adjacency`` (pre-partitioned
+    on the join key, so the per-round degree join never re-shuffles
+    the edges), and the alive set SHRINKS monotonically (broadcast-sized long before the edge list
     is). Per-round work is ONE equi-join + one map-side-combinable
     count: the u-side aliveness filter the textbook formulation also
     joins is REDUNDANT — a vertex peeled at round r had alive-degree
@@ -438,17 +436,11 @@ def kcore_onion(
     about coreness and would inflate the degree), ``layer`` int
     (0 = core, else peel round).
     """
-    from ..session import track_cache
-
     # drop self-loops up front: a (u,u) edge would inflate u's degree
     # by one and shift its peel layer vs the textbook semantics (a
     # self-loop says nothing about coreness); CC tolerates them, the
     # degree-based peel does not
-    und = track_cache(
-        _both_directions(edges.filter(F.col(src) != F.col(dst)), src, dst)
-        .distinct()
-        .repartition("__v")
-    )
+    und = _cached_adjacency(edges.filter(F.col(src) != F.col(dst)), src, dst)
     alive = und.select("__u").distinct().localCheckpoint(eager=True)
     n_alive = alive.count()
     rounds = [alive]  # alive after 0, 1, ... peels
@@ -531,8 +523,6 @@ def tree_descend(
     Returns one row per reached node: ``(node, depth, *payload)`` with
     roots at ``depth`` 0.
     """
-    from ..session import track_cache
-
     payload = [c for c in roots.columns if c != node]
     reserved = {"depth", "__n", "__c", "__p"}
     bad = sorted(reserved & set(payload))
@@ -595,10 +585,10 @@ def label_propagation(
     No reference counterpart (the reference delegates to a warehouse
     with no iterative operator).
 
-    Scale posture: the static both-directions edge list is cached
-    pre-partitioned on the neighbor key (never re-shuffles across
-    rounds); per-round work is one edge-label equi-join + a two-level
-    aggregation — (vertex, label) plurality counts, then a HashAggregate
+    Scale posture: the static both-directions edge list is
+    ``_cached_adjacency``, pre-partitioned on the neighbor key (never
+    re-shuffles across rounds); per-round work is one edge-label
+    equi-join + a two-level aggregation — (vertex, label) plurality counts, then a HashAggregate
     argmax via max(struct(count, -label)) (no sort window; the
     tie-break rides the struct's positional comparison). State is one
     row per vertex per round and each round's labels frame is consumed
@@ -615,13 +605,7 @@ def label_propagation(
     id) the vertex holds after ``rounds`` updates. Self-loops dropped
     (a vertex voting for its own label distorts plurality).
     """
-    from ..session import track_cache
-
-    und = track_cache(
-        _both_directions(edges.filter(F.col(src) != F.col(dst)), src, dst)
-        .distinct()
-        .repartition("__v")
-    )
+    und = _cached_adjacency(edges.filter(F.col(src) != F.col(dst)), src, dst)
     labels = (
         und.select("__u")
         .distinct()

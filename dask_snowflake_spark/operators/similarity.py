@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .analytics import array_pairs
 from .dedup import portable_hash
 from ..session import track_cache
 
@@ -72,10 +73,6 @@ def norm(a: Column) -> Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def with_normalized(
@@ -382,8 +379,6 @@ def kmeans_fit(
 
     This is the training half of a real IVF index: cells come from the
     data's own geometry instead of a pre-existing label column."""
-    from .dedup import portable_hash
-
     if normalized:
         base = embeddings.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("nv")
@@ -492,8 +487,6 @@ def pq_fit(
     ``kmeans_fit``. Pass ``dim`` when the caller already knows the
     vector width (e.g. from the coarse centroids it just trained) to
     skip the probing ``first()`` action."""
-    from .dedup import portable_hash
-
     if dim is None:
         dim_row = embeddings.select(F.size(F.col(vec_col)).alias("d")).first()
         if dim_row is None:
@@ -1027,8 +1020,6 @@ def knn_graph_descent(
     # sort each bucket by (hash, id), lag-pair consecutive members.
     # Each node gets <= 2 pseudo-random partners, cross-cell almost
     # surely, and both engines derive the identical edge set.
-    from .dedup import portable_hash
-
     h = portable_hash(F.col("id").cast("string"), F.lit("knn"))
     ring = vq.select("id", "v", h.alias("__h"))
     wr = W.partitionBy(F.expr("__h % 64")).orderBy("__h", "id")
@@ -1089,16 +1080,7 @@ def knn_graph_descent(
             .groupBy("c")
             .agg(F.sort_array(F.collect_list(F.struct("x", "vx"))).alias("nb"))
         )
-        pair_arr = F.flatten(
-            F.transform(
-                F.col("nb"),
-                lambda s, i: F.transform(
-                    F.slice(F.col("nb"), i + F.lit(2), F.size(F.col("nb"))),
-                    lambda v2: F.array(s, v2),
-                ),
-            )
-        )
-        cand = nbhd.select(F.explode(pair_arr).alias("p")).select(
+        cand = nbhd.select(F.explode(array_pairs(F.col("nb"))).alias("p")).select(
             F.col("p")[0]["x"].alias("u"),
             F.col("p")[1]["x"].alias("w"),
             F.col("p")[0]["vx"].alias("va"),

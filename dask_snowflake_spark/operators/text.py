@@ -509,19 +509,7 @@ def bpe_encode(
     merges), keeping the operator a total function like the oracle
     chain — a corpus whose training split carries no adjacent pairs
     degrades to char tokens on both engines."""
-    vocab = (
-        docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
-        .filter(F.length("w") >= min_word_len)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    state = vocab.select(
-        "w",
-        "cnt",
-        F.posexplode(
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        ).alias("pos", "sym"),
-    )
+    state = _bpe_char_state(docs, text_col, min_word_len)
     for a, b in merges:
         state = _merge_pass(state, a, b)
     wt = state.groupBy("w").agg(
@@ -560,6 +548,25 @@ def bpe_encode(
     )
 
 
+def _bpe_char_state(docs: DataFrame, text_col: str, min_word_len: int) -> DataFrame:
+    """The BPE starting state: the corpus-weighted vocabulary of words
+    of at least ``min_word_len`` characters, exploded to one
+    ``(w, cnt, pos, sym)`` row per character."""
+    vocab = (
+        docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
+        .filter(F.length("w") >= min_word_len)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    return vocab.select(
+        "w",
+        "cnt",
+        F.posexplode(
+            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+        ).alias("pos", "sym"),
+    )
+
+
 def _bpe_iterate(
     docs: DataFrame,
     text_col: str,
@@ -588,21 +595,8 @@ def _bpe_iterate(
 
     if min_word_len < 1:
         raise ValueError(f"min_word_len must be >= 1, got {min_word_len}")
-    vocab = (
-        docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
-        .filter(F.length("w") >= min_word_len)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    state = vocab.select(
-        "w",
-        "cnt",
-        F.posexplode(
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        ).alias("pos", "sym"),
-    ).localCheckpoint(eager=True)
+    state = _bpe_char_state(docs, text_col, min_word_len).localCheckpoint(eager=True)
     wo = W.partitionBy("w").orderBy("pos")
-    wcum = wo.rowsBetween(W.unboundedPreceding, W.currentRow)
     merges: list[tuple] = []
     max_rounds = max(0, int(rounds))
     for r in range(1, max_rounds + 1):

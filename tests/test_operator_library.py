@@ -7,7 +7,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dask_snowflake_spark.operators.dedup import exact_dedup, shingle_array, shingles
+from dask_snowflake_spark.operators.dedup import (
+    exact_dedup,
+    hashed_shingles,
+    portable_hash,
+    shingle_array,
+    shingles,
+    span_stream,
+)
 from dask_snowflake_spark.operators.similarity import (
     embedding_near_dup_pairs,
     srp_lsh_near_dup,
@@ -54,17 +61,34 @@ def test_exact_dedup_keeps_min_key(spark, sf_oracle):
 
 
 def test_shingle_array_agrees_with_fast_shingles(spark, sf_oracle):
-    """The HOF-array baseline and the posexplode+lead fast path must
-    produce the same (doc, shingle) set."""
+    """The HOF-array baseline and the word-window fast path must produce
+    the same (doc, shingle) set; the hashed shingles must be the hashes
+    of those shingles, and on docs of at least n words the span stream's
+    full-window hashes must be the same set."""
+    n = 3
     docs = _t(spark, sf_oracle)["documents"].filter(F.col("doc_id") < 60)
-    fast = {(r.doc, r.shingle) for r in shingles(docs, "text", "doc_id", n=3).collect()}
-    arr = shingle_array(docs, "text", "doc_id", n=3)
+    sh = shingles(docs, "text", "doc_id", n=n)
+    fast = {(r.doc, r.shingle) for r in sh.collect()}
+    arr = shingle_array(docs, "text", "doc_id", n=n)
     slow = {
         (r.doc, s)
         for r in arr.select("doc", F.explode(F.array_distinct("shingles")).alias("s")).collect()
         for s in [r.s]
     }
     assert fast == slow
+
+    hashed = {(r.doc, r.shingle) for r in hashed_shingles(docs, "text", "doc_id", n=n).collect()}
+    rehashed = sh.select("doc", portable_hash(F.col("shingle")).alias("h")).collect()
+    assert hashed == {(r.doc, r.h) for r in rehashed}
+
+    long_docs = {
+        r.doc_id
+        for r in docs.filter(F.size(F.split("text", r"\s+")) >= n).select("doc_id").collect()
+    }
+    assert long_docs
+    spans = span_stream(docs, "text", "doc_id", span_words=n).collect()
+    assert {r.doc for r in spans} == long_docs
+    assert {(r.doc, r.span_h) for r in spans} == {p for p in hashed if p[0] in long_docs}
 
 
 # --- operators/analytics.py ------------------------------------------------
