@@ -160,29 +160,43 @@ def _calibration_sec(spark) -> list[float]:
     return out
 
 
+def compile_count(spark) -> int:
+    """Whole-stage codegen classes Janino has compiled in this JVM so
+    far (``CodegenMetrics``); a cache hit does not count."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 def timed_passes(spark, sf_dir: str, queries, n_passes: int):
     """Run ``queries`` (``[(name, spark_fn)]``) in ``n_passes``
     interleaved passes into the ``noop`` sink. Returns ``(runs,
-    job_runs)``: per pass, ``{name: wall seconds}`` and ``{name: Spark
-    jobs}``. The scheduler's job-id counter delta is NOISE-FREE
-    (deterministic per plan), so fixed-overhead regressions stay
-    attributable even when the shared host's ±2x wall-clock variance
-    masks them."""
+    job_runs, compile_runs)``: per pass, ``{name: wall seconds}``,
+    ``{name: Spark jobs}`` and ``{name: generated classes compiled}``.
+    The scheduler's job-id counter delta is NOISE-FREE (deterministic
+    per plan), so fixed-overhead regressions stay attributable even when
+    the shared host's ±2x wall-clock variance masks them. A query that
+    still compiles after its first pass misses the codegen cache every
+    time it runs (a plan hazard: new generated code per run)."""
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     runs: list[dict[str, float]] = []
     job_runs: list[dict[str, int]] = []
+    compile_runs: list[dict[str, int]] = []
     for _ in range(max(1, n_passes)):
         pass_times: dict[str, float] = {}
         pass_jobs: dict[str, int] = {}
+        pass_compiles: dict[str, int] = {}
         for name, spark_fn in queries:
+            c0 = compile_count(spark)
             t0 = time.perf_counter()
             j0 = sched.nextJobId()
             spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             pass_jobs[name] = sched.nextJobId() - j0
             pass_times[name] = round(time.perf_counter() - t0, 2)
+            pass_compiles[name] = compile_count(spark) - c0
         runs.append(pass_times)
         job_runs.append(pass_jobs)
-    return runs, job_runs
+        compile_runs.append(pass_compiles)
+    return runs, job_runs, compile_runs
 
 
 def main() -> None:
@@ -220,7 +234,7 @@ def main() -> None:
     # codegen first-touch doesn't pollute the calibration)
     calib_start = _calibration_sec(spark)
 
-    runs, job_runs = timed_passes(
+    runs, job_runs, compile_runs = timed_passes(
         spark,
         sf_dir,
         [(name, qd.spark_fn) for name, qd in ordered],
@@ -247,6 +261,9 @@ def main() -> None:
         for name in job_runs[0]
         if max(jr[name] for jr in job_runs) != jobs[name]
     }
+    # minimum over passes, like `jobs`: a nonzero entry compiled new
+    # classes in EVERY pass, so its plan misses the codegen cache
+    compiles = {name: min(cr[name] for cr in compile_runs) for name in compile_runs[0]}
 
     # host-speed sample AFTER the loop: start/end disagreement means the
     # host drifted WITHIN the run (the r8 audit saw 1.17x intra-round)
@@ -271,6 +288,7 @@ def main() -> None:
         "jobs": jobs,
         "job_runs": job_runs,
         "jobs_spread": jobs_spread,
+        "compiles": compiles,
         "calib_start": calib_start,
         "calib_end": calib_end,
         "host_factor": host_factor,

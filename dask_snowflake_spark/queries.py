@@ -18,7 +18,6 @@ Determinism rules (the driver hash-compares values):
 from __future__ import annotations
 
 import os
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .session import register_tables, release_caches
+from .session import registered_tables, release_caches
 
 
 @dataclass
@@ -62,34 +61,20 @@ def registry() -> dict[str, QueryDef]:
     return dict(_REGISTRY)
 
 
-# Keyed on the live session object (weakly — a recycled id() can never
-# alias a new session). Exactly ONE (sf_dir, tables) entry per session:
-# temp-view NAMES are session-global, so a different sf_dir must
-# re-register (rebinding the views) and the cached DataFrames must be
-# the ones built for the currently-bound dir — caching per-dir and
-# re-resolving views by name would silently return another scale
-# factor's data after an alternation.
-_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, tuple[str, dict[str, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load + register the star schema tables, memoized per session for
-    the currently-registered sf_dir — registration reads 10 parquet
-    footers; no reason to redo it per query. Switching sf_dir within a
-    session re-registers (the views rebind to the new dir).
+    """The star schema tables for `sf_dir`, from the session's one table
+    memo (:func:`session.registered_tables`): registration reads 10
+    parquet footers, so it runs once per session and dir, whether a
+    query or the caller's own ``register_tables`` call did it first.
+    Switching sf_dir within a session re-registers (the views rebind to
+    the new dir).
 
     Also the per-query cache boundary: persisted intermediates the
     PREVIOUS query handed back inside its plan (tracked via
     session.track_cache) are released here, so a long-lived session
     sweeping the whole registry doesn't accumulate them."""
     release_caches()
-    cached = _REGISTERED.get(spark)
-    if cached is None or cached[0] != sf_dir:
-        cached = (sf_dir, register_tables(spark, sf_dir))
-        _REGISTERED[spark] = cached
-    return cached[1]
+    return registered_tables(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -84,6 +84,40 @@ def test_whole_stage_codegen_active(spark, sf_oracle):
     assert "*(1)" in p, p[:800]
 
 
+def test_codegen_cache_holds_working_set(spark):
+    """More distinct generated classes than Spark's default codegen
+    cache holds (100) stay compiled across passes: rebuilding the same
+    150 plans compiles nothing. Preparing the physical RDD compiles the
+    whole-stage class without starting a job."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()
+
+    def compile_round() -> int:
+        before = compiled.getCount()
+        for i in range(150):
+            df = spark.range(4).select(F.col("id") * F.lit(i + 7))
+            df._jdf.queryExecution().executedPlan().execute()
+        return compiled.getCount() - before
+
+    compile_round()
+    assert compile_round() == 0
+
+
+def test_register_tables_fills_the_query_table_memo(spark, sf_smoke, sf_oracle):
+    """A caller's full ``register_tables`` call is the memo registry
+    queries read, so the first query after it registers nothing again
+    (each parquet registration starts a schema-inference job)."""
+    from dask_snowflake_spark.session import register_tables
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    _t(spark, sf_smoke)
+    tables = register_tables(spark, sf_oracle)
+    jobs_before = sched.nextJobId()
+    t = _t(spark, sf_oracle)
+    assert sched.nextJobId() - jobs_before == 0
+    assert t is tables
+
+
 def test_partition_pruned_scan(spark, sf_oracle, tmp_path):
     """Scanning a partitioned parquet sink with a partition predicate
     must prune partitions at planning time."""

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Spot-bench a few registry queries: interleaved passes, best-of-N
-wall + deterministic job counts per query — bench.py's timed loop
-(``bench.timed_passes``), scoped to a handful of names for A/B
-adjudication.
+wall + deterministic job counts + codegen compiles per query —
+bench.py's timed loop (``bench.timed_passes``), scoped to a handful of
+names for A/B adjudication.
 
 Usage: python tools/spot_bench.py name [name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -40,7 +40,7 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    runs, job_runs = timed_passes(
+    runs, job_runs, compile_runs = timed_passes(
         spark,
         sf_dir,
         [(n, reg[n].spark_fn) for n in names],
@@ -53,6 +53,7 @@ def main() -> None:
             "jobs": min(jr[n] for jr in job_runs),
             "jobs_spread": max(jr[n] for jr in job_runs)
             - min(jr[n] for jr in job_runs),
+            "compiles": min(cr[n] for cr in compile_runs),
             "raw": [r[n] for r in runs],
         }
         for n in names
