@@ -18,6 +18,7 @@ SPARK_GRAFT_BENCH_PASSES=1 gives a quick single pass while iterating.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -167,36 +168,65 @@ def compile_count(spark) -> int:
     return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
+@contextlib.contextmanager
+def py4j_call_counter():
+    """Count the driver's py4j calls (``send_command``) while open; the
+    yielded one-element list holds the running count."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield calls
+    finally:
+        ClientServerConnection.send_command = send
+
+
 def timed_passes(spark, sf_dir: str, queries, n_passes: int):
     """Run ``queries`` (``[(name, spark_fn)]``) in ``n_passes``
     interleaved passes into the ``noop`` sink. Returns ``(runs,
-    job_runs, compile_runs)``: per pass, ``{name: wall seconds}``,
-    ``{name: Spark jobs}`` and ``{name: generated classes compiled}``.
+    job_runs, compile_runs, py4j_runs)``: per pass, ``{name: wall
+    seconds}``, ``{name: Spark jobs}``, ``{name: generated classes
+    compiled}`` and ``{name: driver py4j calls}``.
     The scheduler's job-id counter delta is NOISE-FREE (deterministic
     per plan), so fixed-overhead regressions stay attributable even when
     the shared host's ±2x wall-clock variance masks them. A query that
     still compiles after its first pass misses the codegen cache every
-    time it runs (a plan hazard: new generated code per run)."""
+    time it runs (a plan hazard: new generated code per run). The py4j
+    count is the driver-side plan-building cost in round trips (one
+    costs about 0.1 ms), counted from the query's build to its write."""
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     runs: list[dict[str, float]] = []
     job_runs: list[dict[str, int]] = []
     compile_runs: list[dict[str, int]] = []
-    for _ in range(max(1, n_passes)):
-        pass_times: dict[str, float] = {}
-        pass_jobs: dict[str, int] = {}
-        pass_compiles: dict[str, int] = {}
-        for name, spark_fn in queries:
-            c0 = compile_count(spark)
-            t0 = time.perf_counter()
-            j0 = sched.nextJobId()
-            spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            pass_jobs[name] = sched.nextJobId() - j0
-            pass_times[name] = round(time.perf_counter() - t0, 2)
-            pass_compiles[name] = compile_count(spark) - c0
-        runs.append(pass_times)
-        job_runs.append(pass_jobs)
-        compile_runs.append(pass_compiles)
-    return runs, job_runs, compile_runs
+    py4j_runs: list[dict[str, int]] = []
+    with py4j_call_counter() as calls:
+        for _ in range(max(1, n_passes)):
+            pass_times: dict[str, float] = {}
+            pass_jobs: dict[str, int] = {}
+            pass_compiles: dict[str, int] = {}
+            pass_py4j: dict[str, int] = {}
+            for name, spark_fn in queries:
+                c0 = compile_count(spark)
+                t0 = time.perf_counter()
+                j0 = sched.nextJobId()
+                p0 = calls[0]
+                spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                pass_py4j[name] = calls[0] - p0
+                pass_jobs[name] = sched.nextJobId() - j0
+                pass_times[name] = round(time.perf_counter() - t0, 2)
+                pass_compiles[name] = compile_count(spark) - c0
+            runs.append(pass_times)
+            job_runs.append(pass_jobs)
+            compile_runs.append(pass_compiles)
+            py4j_runs.append(pass_py4j)
+    return runs, job_runs, compile_runs, py4j_runs
 
 
 def main() -> None:
@@ -234,7 +264,7 @@ def main() -> None:
     # codegen first-touch doesn't pollute the calibration)
     calib_start = _calibration_sec(spark)
 
-    runs, job_runs, compile_runs = timed_passes(
+    runs, job_runs, compile_runs, py4j_runs = timed_passes(
         spark,
         sf_dir,
         [(name, qd.spark_fn) for name, qd in ordered],
@@ -264,6 +294,9 @@ def main() -> None:
     # minimum over passes, like `jobs`: a nonzero entry compiled new
     # classes in EVERY pass, so its plan misses the codegen cache
     compiles = {name: min(cr[name] for cr in compile_runs) for name in compile_runs[0]}
+    # minimum over passes, like `jobs`: the first pass also pays
+    # first-touch calls (table schemas, the executor package)
+    py4j_calls = {name: min(pr[name] for pr in py4j_runs) for name in py4j_runs[0]}
 
     # host-speed sample AFTER the loop: start/end disagreement means the
     # host drifted WITHIN the run (the r8 audit saw 1.17x intra-round)
@@ -289,6 +322,7 @@ def main() -> None:
         "job_runs": job_runs,
         "jobs_spread": jobs_spread,
         "compiles": compiles,
+        "py4j_calls": py4j_calls,
         "calib_start": calib_start,
         "calib_end": calib_end,
         "host_factor": host_factor,

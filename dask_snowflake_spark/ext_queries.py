@@ -12816,6 +12816,55 @@ def _hits_oracle_sql(rounds: int = 4) -> str:
     """
 
 
+def _hits_raw(edges: DataFrame, prev: DataFrame, join_key: str, out_key: str) -> DataFrame:
+    """One HITS half-step's raw scores: ``prev``'s normalized scores
+    ``q`` flow over ``edges`` (join + map-side-combinable sum)."""
+    return (
+        edges.join(prev.select(F.col("q").alias("pq"), join_key), join_key)
+        .groupBy(out_key)
+        .agg(F.sum("pq").cast("long").alias("raw"))
+    )
+
+
+def _hits_renorm(raw: DataFrame, out_key: str, max_raw: int | None) -> DataFrame:
+    """Renormalize ``raw`` by its max ``max_raw`` (None over no rows) to
+    integer scores ``q`` out of 1e6: a projection with that literal."""
+    return (
+        raw.select(
+            out_key,
+            "raw",
+            F.greatest(F.lit(max_raw).cast("long"), F.lit(1)).alias("mx"),
+        )
+        .select(
+            out_key,
+            "raw",
+            "mx",
+            # G-shrink overflow guard: both operands are divided by g first, so raw * 1e6
+            # cannot overflow at any degree.
+            F.greatest(F.expr("mx div 1000000000000"), F.lit(1)).cast("long").alias("g"),
+        )
+        .select(
+            out_key,
+            F.expr("((raw div g) * 1000000) div greatest(mx div g, 1)").cast("long").alias("q"),
+        )
+    )
+
+
+def _hits_half(edges: DataFrame, prev: DataFrame, join_key: str, out_key: str) -> DataFrame:
+    """One HITS half-step: ONE job checkpoints the raw aggregate and
+    observes its max (a partial max per task, merged on the driver); the
+    renorm is a lazy projection of that checkpoint, read by the next
+    half-step and the top-10. An unpartitioned
+    ``max("raw").over(W.partitionBy())`` cost an ``Exchange
+    SinglePartition`` job per half-step and put every node in one task."""
+    from .session import checkpoint_observed
+
+    raw, seen = checkpoint_observed(
+        _hits_raw(edges, prev, join_key, out_key), F.max("raw").alias("mx")
+    )
+    return _hits_renorm(raw, out_key, seen["mx"])
+
+
 @query(
     "hits_bipartite",
     _hits_oracle_sql(),
@@ -12845,58 +12894,13 @@ def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["c", "p"])
     )
 
-    from pyspark.sql.window import Window as W
-
-    def _half(prev, join_key, out_key):
-        # ONE flat action per half-step: join + map-side-combinable sum,
-        # renormalized in place by an unpartitioned window over the
-        # half-step's own aggregate (max/g/q integer expressions are
-        # byte-identical to the r14 broadcast-fold form, so every score
-        # is the same integer). The r14 shape checkpointed the RAW
-        # aggregate and re-derived the renorm from it through a
-        # broadcast max-fold — a per-half-step diamond whose broadcast
-        # subquery cost extra AQE jobs; the window form has no second
-        # consumer at all. The window's single partition holds one row
-        # per node (bounded by the node SET, never the corpus — the
-        # frame any HITS renorm must materialize anyway); the
-        # checkpointed state is that same small frame.
-        return (
-            edges.join(prev.select(F.col("q").alias("pq"), join_key), join_key)
-            .groupBy(out_key)
-            .agg(F.sum("pq").cast("long").alias("raw"))
-            .select(
-                out_key,
-                "raw",
-                F.greatest(F.max("raw").over(W.partitionBy()), F.lit(1))
-                .cast("long")
-                .alias("mx"),
-            )
-            .select(
-                out_key,
-                "raw",
-                "mx",
-                # G-shrink overflow guard: both operands are divided by g first, so raw * 1e6
-                # cannot overflow at any degree.
-                F.greatest(F.expr("mx div 1000000000000"), F.lit(1))
-                .cast("long")
-                .alias("g"),
-            )
-            .select(
-                out_key,
-                F.expr("((raw div g) * 1000000) div greatest(mx div g, 1)")
-                .cast("long")
-                .alias("q"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
     h = edges.select("c").distinct().select(
         "c", F.lit(1_000_000).cast("long").alias("q")
     )
     a = None
     for _ in range(4):
-        a = _half(h, "c", "p")
-        h = _half(a, "p", "c")
+        a = _hits_half(edges, h, "c", "p")
+        h = _hits_half(edges, a, "p", "c")
     tops = (
         a.orderBy(F.col("q").desc(), "p")
         .limit(10)

@@ -24,8 +24,9 @@ hash-min label propagation used by large-scale dedup pipelines, with a
 Scale posture: per-round cost is one shuffle join of the edge list with
 the FRONTIER (not all labels) plus a map-side-combinable min agg and a
 narrow vertex-keyed merge join; per-task state is O(1) per key. The
-only driver-side work is a per-round frontier count (size-independent
-scalar). Lineage is truncated each round with ``localCheckpoint`` so
+driver's per-round control scalar, the frontier size, is observed in
+the job that checkpoints the round (``checkpoint_observed``): no probe
+job. Lineage is truncated each round with ``localCheckpoint`` so
 the plan doesn't grow with iterations. Shuffle width is left to the
 session (AQE coalesces the shrinking per-round shuffles at runtime);
 no session-global conf is mutated.
@@ -36,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import track_cache
+from ..session import checkpoint_observed, track_cache
 
 # Fixed-round loops on linear lineage (pagerank_integer,
 # label_propagation) localCheckpoint their state every this many rounds:
@@ -96,29 +97,30 @@ def connected_components(
     und = _cached_adjacency(edges, src, dst)
 
     # initial label: min over self and direct neighbors — equivalently
-    # the result of round 0 with every vertex in the frontier
-    labels = und.groupBy("__u").agg(
-        F.least(F.min("__v"), F.first("__u")).alias("__lbl")
-    ).localCheckpoint(eager=True)
-    # round-0 information no neighbor has seen yet: every vertex whose
-    # label isn't its own id (a self-labeled vertex u has u < all its
+    # the result of round 0 with every vertex in the frontier. Round-0
+    # information no neighbor has seen yet: every vertex whose label
+    # isn't its own id (a self-labeled vertex u has u < all its
     # neighbors, and each neighbor already took min(self, u) in init).
+    labels, seen = checkpoint_observed(
+        und.groupBy("__u").agg(F.least(F.min("__v"), F.first("__u")).alias("__lbl")),
+        F.count_if(F.col("__lbl") != F.col("__u")).alias("frontier"),
+    )
     # Lazy filter of the checkpointed labels — not worth its own job.
     frontier = labels.filter(F.col("__lbl") != F.col("__u"))
 
-    # One hop per convergence probe — MEASURED as optimal (r8): probe
-    # batching (two hops per isEmpty) looked like it would halve the
-    # probe jobs, but a probe is a limit-1 read of an already-
-    # materialized localCheckpoint RDD (~free), while the extra hop a
-    # batch runs past the fixpoint is a full join+agg+checkpoint
-    # (3-4 AQE stage jobs). Both batching variants benched WORSE on
-    # the whole CC family (+3-4 jobs, +0.3-0.9 s per query); a lazy
-    # first-of-pair checkpoint was worst — its two consumers
-    # (frontier and labels) materialize through separate AQE plan
-    # compilations, so the unmaterialized subtree ran TWICE instead
-    # of deduping through the checkpoint RDD.
+    # One hop per round. Each round's frontier size is observed in the
+    # job that checkpoints the round, so the convergence test costs no
+    # job of its own (an isEmpty() probe was a separate job of
+    # 45-60 ms per round). Probe batching (two hops per probe) benched
+    # WORSE on the whole CC family (+3-4 jobs, +0.3-0.9 s per query, r8):
+    # the extra hop a batch runs past the fixpoint is a full
+    # join+agg+checkpoint (3-4 AQE stage jobs); a lazy first-of-pair
+    # checkpoint was worst — its two consumers (frontier and labels)
+    # materialize through separate AQE plan compilations, so the
+    # unmaterialized subtree ran TWICE instead of deduping through the
+    # checkpoint RDD.
     for _ in range(max_iter):
-        if frontier.isEmpty():
+        if seen["frontier"] == 0:
             break
         # frontier labels flow one hop; each touched vertex's candidate
         # is the min incoming frontier label
@@ -129,7 +131,10 @@ def connected_components(
         )
         # one materialization per round: frontier and labels are cheap
         # narrow projections of the checkpointed merge (lineage depth 1)
-        merged = labels.join(cand, "__u", "left").localCheckpoint(eager=True)
+        merged, seen = checkpoint_observed(
+            labels.join(cand, "__u", "left"),
+            F.count_if(F.col("__cand") < F.col("__lbl")).alias("frontier"),
+        )
         frontier = merged.filter(F.col("__cand") < F.col("__lbl")).select(
             "__u", F.col("__cand").alias("__lbl")
         )
@@ -139,7 +144,7 @@ def connected_components(
     else:
         # all max_iter bodies ran without an early break; the labels are
         # only trustworthy if the LAST round emptied the frontier
-        if not frontier.isEmpty():
+        if seen["frontier"] > 0:
             raise RuntimeError(
                 f"connected_components did not converge in max_iter={max_iter} rounds; "
                 "a component's diameter exceeds the round budget — raise max_iter "
@@ -421,14 +426,17 @@ def kcore_onion(
     < k there, and alive sets only shrink, so its alive-degree can
     never climb back to k; any vertex the degree filter passes is
     therefore still alive (the first rewrite joined alive on both
-    endpoints and benched 75 jobs at sf0.1; this one is 30). The
-    convergence probe is a ``count()`` of the round's checkpointed
-    RDD — a narrow scan, no shuffle — compared against the previous
-    round's count (anti-join ``isEmpty`` probes were full shuffle
-    jobs). Layers fall out of SURVIVAL COUNTS at the end — union the
-    per-round alive sets and count appearances per vertex, exactly the
-    oracle's formulation — one final shuffle instead of one lazy
-    anti-join per round re-evaluated at the output action.
+    endpoints and benched 75 jobs at sf0.1). The convergence test
+    compares each round's alive count with the previous round's; the
+    count is observed in the job that checkpoints the round
+    (``checkpoint_observed``), so it costs no job of its own (a
+    ``count()`` after the checkpoint was a partial aggregate, an
+    exchange and a final aggregate, two jobs of 50-75 ms per round;
+    anti-join ``isEmpty`` probes were full shuffle jobs). Layers fall
+    out of SURVIVAL COUNTS at the end — union the per-round alive sets
+    and count appearances per vertex, exactly the oracle's formulation
+    — one final shuffle instead of one lazy anti-join per round
+    re-evaluated at the output action.
     Deterministic: no RNG, no order dependence, integer degrees only.
 
     Returns ``(vertex, layer)`` for every vertex with at least one
@@ -441,19 +449,20 @@ def kcore_onion(
     # self-loop says nothing about coreness); CC tolerates them, the
     # degree-based peel does not
     und = _cached_adjacency(edges.filter(F.col(src) != F.col(dst)), src, dst)
-    alive = und.select("__u").distinct().localCheckpoint(eager=True)
-    n_alive = alive.count()
+    n_rows = F.count(F.lit(1)).alias("n")
+    alive, seen = checkpoint_observed(und.select("__u").distinct(), n_rows)
+    n_alive = seen["n"]
     rounds = [alive]  # alive after 0, 1, ... peels
     for _ in range(max_rounds):
-        nxt = (
+        nxt, seen = checkpoint_observed(
             und.join(alive.select(F.col("__u").alias("__v")), "__v")
             .groupBy("__u")
             .agg(F.count(F.lit(1)).alias("__d"))
             .filter(F.col("__d") >= k)
-            .select("__u")
-            .localCheckpoint(eager=True)
+            .select("__u"),
+            n_rows,
         )
-        n_nxt = nxt.count()
+        n_nxt = seen["n"]
         if n_nxt == n_alive:
             break  # fixpoint: later rounds peel nothing
         rounds.append(nxt)

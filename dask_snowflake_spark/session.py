@@ -20,6 +20,31 @@ Engine defaults chosen for correctness-vs-oracle and 100 TB posture:
   recompiles every class with Janino, on the driver and in every task;
   with the working set cached a steady-state pass of those operators
   compiles none.
+- Spark 4's DataFrame-debugging wrapper off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``functions.*``/``Column``/``DataFrame`` call captures its Python
+  call site through extra py4j round trips: about twice the calls per
+  operator (the four llm_pipeline benchmark operators made 3,178,
+  1,825, 3,059 and 6,101 calls per run with it on, 1,921, 1,118, 1,367
+  and 2,756 with it off), and those operators spend most of their wall
+  between tiny jobs. What an error message loses is the Python call-site
+  block; the message itself is unchanged. Division by zero, with the
+  wrapper on::
+
+      [DIVIDE_BY_ZERO] Division by zero. ... SQLSTATE: 22012
+      == DataFrame ==
+      "__truediv__" was called from
+      example.py:9
+
+  and off::
+
+      [DIVIDE_BY_ZERO] Division by zero. ... SQLSTATE: 22012
+      == DataFrame ==
+      "divide" was called from
+      java.base/jdk.internal.reflect.NativeMethodAccessorImpl.invoke0(Native Method)
+
+  The conf is static: a session someone else built keeps its own
+  setting.
 
 The TESTDATA tables (TPC-H-ish star schema + events/documents/embeddings,
 see TESTDATA.md) are registered as temp views so the relational layer can
@@ -31,7 +56,7 @@ from __future__ import annotations
 import os
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
@@ -84,6 +109,7 @@ def get_session(app_name: str = "dask_snowflake_spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if SparkSession.getActiveSession() is None:
         builder = builder.master(f"local[{cpus}]").config(
@@ -146,6 +172,21 @@ def release_caches() -> None:
             pass
 
 
+def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``localCheckpoint(eager=True)`` ``df`` and return the named
+    aggregates ``metrics`` over its rows, both from the same job.
+
+    An iterative loop's control scalar (a frontier size, an alive count,
+    a max to renormalize by) would otherwise cost its own action after
+    the checkpoint. Here each task of the checkpoint job folds a partial
+    aggregate and the driver merges them (``df.observe``). The observe
+    node is the top of the checkpointed plan, so it runs in the result
+    stage, where Spark applies each task's update once even when a task
+    is retried. Over no rows a ``count`` reads 0 and a ``max`` None."""
+    obs = Observation()
+    return df.observe(obs, *metrics).localCheckpoint(eager=True), obs.get
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one TESTDATA table. Plain parquet scan: Catalyst pushes
     filters/column pruning into it for free.
@@ -170,8 +211,9 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
     built without our defaults) behave like :func:`get_session`:
 
     - set the runtime-settable confs correctness depends on (static
-      engine defaults such as the codegen cache size cannot be set on a
-      running session, so a session someone else built keeps its own);
+      engine defaults such as the codegen cache size and the
+      DataFrame-debugging wrapper cannot be set on a running session, so
+      a session someone else built keeps its own);
     - ship this package to executors via ``addPyFile`` — module-level
       functions (stateful update fns, batch descriptors, decode
       kernels) pickle BY REFERENCE, so executor Python workers must be

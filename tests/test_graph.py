@@ -3,6 +3,8 @@ convergence, determinism."""
 
 from __future__ import annotations
 
+import pytest
+
 from dask_snowflake_spark.operators.graph import connected_components
 
 
@@ -31,6 +33,14 @@ def test_long_path_converges(spark) -> None:
     got = _cc(spark, edges)
     assert set(got.values()) == {0}
     assert len(got) == 13
+
+
+def test_exhausted_round_budget_raises(spark) -> None:
+    # the path needs more hops than the budget: labels at exhaustion
+    # would be silently split, so the operator raises instead
+    df = spark.createDataFrame([(i, i + 1) for i in range(12)], "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge in max_iter=2"):
+        connected_components(df, "a", "b", max_iter=2)
 
 
 def test_duplicate_and_reversed_edges(spark) -> None:

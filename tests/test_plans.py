@@ -701,3 +701,25 @@ def test_kcore_output_is_one_exchange_no_joins(spark, sf_oracle):
     # partitioning on top — nothing else may shuffle
     assert len(re.findall(r"\(\d+\) Exchange", p)) <= 2, p
     assert "SortAggregate" not in p, p
+
+
+def test_hits_half_step_has_no_single_partition_renorm(spark, sf_oracle):
+    """hits_bipartite: a half-step is the raw join + sum, checkpointed
+    while its max is observed, then a projection renormalizing by that
+    max as a literal. An unpartitioned ``max("raw").over(...)`` window
+    put every node of the half-step through one task (``Exchange
+    SinglePartition``) in all 8 half-steps; neither that exchange nor
+    any Window may come back."""
+    from dask_snowflake_spark.ext_queries import _hits_raw, _hits_renorm
+
+    t = _t(spark, sf_oracle)
+    edges = (
+        t["orders"]
+        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+        .dropDuplicates(["c", "p"])
+    )
+    hubs = edges.select("c").distinct().select("c", F.lit(1_000_000).cast("long").alias("q"))
+    p = plan(_hits_renorm(_hits_raw(edges, hubs, "c", "p"), "p", 123_456_789))
+    assert "SinglePartition" not in p, p
+    assert "Window" not in p, p

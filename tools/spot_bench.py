@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Spot-bench a few registry queries: interleaved passes, best-of-N
-wall + deterministic job counts + codegen compiles per query —
+wall + deterministic job counts + codegen compiles + driver py4j
+calls per query —
 bench.py's timed loop (``bench.timed_passes``), scoped to a handful of
 names for A/B adjudication.
 
@@ -40,7 +41,7 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    runs, job_runs, compile_runs = timed_passes(
+    runs, job_runs, compile_runs, py4j_runs = timed_passes(
         spark,
         sf_dir,
         [(n, reg[n].spark_fn) for n in names],
@@ -54,6 +55,7 @@ def main() -> None:
             "jobs_spread": max(jr[n] for jr in job_runs)
             - min(jr[n] for jr in job_runs),
             "compiles": min(cr[n] for cr in compile_runs),
+            "py4j_calls": min(pr[n] for pr in py4j_runs),
             "raw": [r[n] for r in runs],
         }
         for n in names
