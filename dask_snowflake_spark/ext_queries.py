@@ -27,6 +27,7 @@ from .operators import multimodal as mm_ops
 from .operators import similarity as sim_ops
 from .operators import text as text_ops
 from .queries import _t, query
+from .session import scratch_root
 from .streaming import windows as stream_ops
 
 
@@ -34,9 +35,7 @@ def _scratch_db(prefix: str) -> str:
     """Unique duckdb scratch-database path under the repo's .tmp dir
     (shared by every warehouse-stub query; unique names keep parallel
     runs from colliding, and each query removes its file when done)."""
-    tmp_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".tmp")
-    os.makedirs(tmp_dir, exist_ok=True)
-    return os.path.join(tmp_dir, f"{prefix}-{uuid.uuid4().hex}.duckdb")
+    return os.path.join(scratch_root(), f"{prefix}-{uuid.uuid4().hex}.duckdb")
 
 
 # ---------------------------------------------------------------------------
@@ -8641,23 +8640,30 @@ def _copurchase_support2_edges(t: dict) -> DataFrame:
     )
 
 
-def _kcore_oracle_sql(k: int = 2, rounds: int = 8) -> str:
+# graph_kcore_onion's degree bound and round budget, read by the Spark
+# body and by its unrolled oracle.
+_KCORE_K = 2
+_KCORE_ROUNDS = 8
+
+
+def _kcore_oracle_sql() -> str:
     """Unrolled bounded-peel oracle for ``graph_kcore_onion``: alive sets
-    alive0..alive{rounds}, each round keeping vertices whose degree
-    among the previous round's alive vertices is >= k. The alive sets
-    are NESTED (peeling only removes), so a vertex's layer falls out of
-    how many rounds it survived: n_surv = rounds means core (layer 0),
-    else layer = n_surv + 1. Unrolling to a FIXED depth makes the SQL a
-    total function identical to the Spark operator's bounded semantics
-    on any fixture, converged or not — no recursive CTE (peeling needs
-    an aggregate over the recursive term, which recursive SQL forbids).
+    alive0..alive{_KCORE_ROUNDS}, each round keeping vertices whose
+    degree among the previous round's alive vertices is >= _KCORE_K. The
+    alive sets are NESTED (peeling only removes), so a vertex's layer
+    falls out of how many rounds it survived: n_surv = _KCORE_ROUNDS
+    means core (layer 0), else layer = n_surv + 1. Unrolling to a FIXED
+    depth makes the SQL a total function identical to the Spark
+    operator's bounded semantics on any fixture, converged or not — no
+    recursive CTE (peeling needs an aggregate over the recursive term,
+    which recursive SQL forbids).
 
     Every alive CTE is ``AS MATERIALIZED``: each round references the
     previous alive set TWICE (one join per endpoint), and DuckDB
     inlines plain CTEs, so without materialization the unrolled plan
-    doubles per round — 2^rounds subtree copies. Materialization makes
-    the oracle linear in rounds, mirroring the Spark loop's per-round
-    checkpoint.
+    doubles per round — 2^_KCORE_ROUNDS subtree copies. Materialization
+    makes the oracle linear in rounds, mirroring the Spark loop's
+    per-round checkpoint.
     """
     ctes = [
         "items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
@@ -8670,16 +8676,16 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 8) -> str:
         "und AS MATERIALIZED (SELECT u, v FROM edges UNION ALL SELECT v, u FROM edges)",
         "alive0 AS MATERIALIZED (SELECT DISTINCT u AS p FROM und)",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _KCORE_ROUNDS + 1):
         ctes.append(
             f"""alive{r} AS MATERIALIZED (
         SELECT e.u AS p FROM und e
         JOIN alive{r - 1} au ON e.u = au.p
         JOIN alive{r - 1} av ON e.v = av.p
-        GROUP BY e.u HAVING count(*) >= {k}
+        GROUP BY e.u HAVING count(*) >= {_KCORE_K}
     )"""
         )
-    surv = " UNION ALL ".join(f"SELECT p FROM alive{r}" for r in range(1, rounds + 1))
+    surv = " UNION ALL ".join(f"SELECT p FROM alive{r}" for r in range(1, _KCORE_ROUNDS + 1))
     cte_sql = ",\n    ".join(ctes)
     return f"""
     WITH {cte_sql},
@@ -8690,7 +8696,7 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 8) -> str:
         GROUP BY a0.p
     )
     SELECT CAST(p AS BIGINT) AS part_key,
-           CAST(CASE WHEN n_surv = {rounds} THEN 0 ELSE n_surv + 1 END AS INTEGER) AS layer
+           CAST(CASE WHEN n_surv = {_KCORE_ROUNDS} THEN 0 ELSE n_surv + 1 END AS INTEGER) AS layer
     FROM agg ORDER BY part_key
     """
 
@@ -8709,7 +8715,7 @@ def graph_kcore_onion(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     edges = _copurchase_support2_edges(t)
     return (
-        kcore_onion(edges, "u", "v", k=2, max_rounds=8)
+        kcore_onion(edges, "u", "v", k=_KCORE_K, max_rounds=_KCORE_ROUNDS)
         .select(F.col("vertex").cast("long").alias("part_key"), "layer")
         .orderBy("part_key")
     )
@@ -10823,10 +10829,16 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-def _lpa_oracle_sql(rounds: int = 4) -> str:
+# graph_lpa_communities' round count, read by the Spark body and by its
+# unrolled oracle.
+_LPA_ROUNDS = 4
+
+
+def _lpa_oracle_sql() -> str:
     """Unrolled bounded-LPA oracle for ``graph_lpa_communities``:
-    label states l0..l{rounds}, each round the plurality-label argmax
-    (count DESC, label ASC) over the previous state joined one hop out.
+    label states l0..l{_LPA_ROUNDS}, each round the plurality-label
+    argmax (count DESC, label ASC) over the previous state joined one hop
+    out.
     Every per-round CTE is ``AS MATERIALIZED`` (the kcore rule: DuckDB
     inlines plain CTEs, so an unrolled chain would otherwise compile
     exponential subtree copies). Synchronous semantics + deterministic
@@ -10843,7 +10855,7 @@ def _lpa_oracle_sql(rounds: int = 4) -> str:
         "und AS MATERIALIZED (SELECT u, v FROM edges UNION ALL SELECT v, u FROM edges)",
         "l0 AS MATERIALIZED (SELECT DISTINCT u AS p, u AS lbl FROM und)",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _LPA_ROUNDS + 1):
         ctes.append(
             f"""c{r} AS MATERIALIZED (
         SELECT e.u, l.lbl, count(*) AS c
@@ -10865,7 +10877,7 @@ def _lpa_oracle_sql(rounds: int = 4) -> str:
     WITH {cte_sql}
     SELECT CAST(lbl AS BIGINT) AS community,
            CAST(count(*) AS BIGINT) AS n_members
-    FROM l{rounds} GROUP BY lbl ORDER BY community
+    FROM l{_LPA_ROUNDS} GROUP BY lbl ORDER BY community
     """
 
 
@@ -10883,7 +10895,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     edges = _copurchase_support2_edges(t)
     return (
-        label_propagation(edges, "u", "v", rounds=4)
+        label_propagation(edges, "u", "v", rounds=_LPA_ROUNDS)
         .groupBy(F.col("community").cast("long").alias("community"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_members"))
         .orderBy("community")
@@ -11474,15 +11486,17 @@ def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MARKOV_CHANNELS = ("click", "error", "signup", "view")
 _MARKOV_SCALE = 1_000_000_000  # p vector in integer nano-probabilities
+_MARKOV_ROUNDS = 8  # absorption rounds, Spark fold and oracle alike
 
 
-def _markov_oracle_sql(rounds: int = 8) -> str:
+def _markov_oracle_sql() -> str:
     """Unrolled bounded-absorption oracle for
-    ``xe2_markov_removal_attribution``: journeys -> transition counts,
-    a variant fan (base + one per removed channel), then p0..p{rounds}
-    one-row-per-variant MATERIALIZED CTEs computing the within-k-steps
-    conversion probability from every state in integer
-    nano-probabilities (one truncating division per state per round:
+    ``attribution_markov``: journeys -> transition counts,
+    a variant fan (base + one per removed channel), then
+    p0..p{_MARKOV_ROUNDS} one-row-per-variant MATERIALIZED CTEs
+    computing the within-k-steps conversion probability from every
+    state in integer nano-probabilities (one truncating division per
+    state per round:
     p'(s) = sum_t cnt_st * p(t) div tot_s, with the REMOVED channel's
     rows dropped but tot_s kept at the base total — redirected mass
     converts never, the standard removal-effect semantics)."""
@@ -11502,7 +11516,7 @@ def _markov_oracle_sql(rounds: int = 8) -> str:
         for s in base_states
     )
     rounds_sql = []
-    for r in range(1, rounds + 1):
+    for r in range(1, _MARKOV_ROUNDS + 1):
         rounds_sql.append(
             f"""p{r} AS MATERIALIZED (
         SELECT variant, {upd}
@@ -11564,10 +11578,10 @@ def _markov_oracle_sql(rounds: int = 8) -> str:
     ),
     p0 AS MATERIALIZED (SELECT removed AS variant, {p_cols0} FROM variants),
     {chain},
-    base AS (SELECT p_START AS p_base FROM p{rounds} WHERE variant = '__BASE__'),
+    base AS (SELECT p_START AS p_base FROM p{_MARKOV_ROUNDS} WHERE variant = '__BASE__'),
     rem AS (
         SELECT variant AS channel, p_START AS p_removed
-        FROM p{rounds} WHERE variant <> '__BASE__'
+        FROM p{_MARKOV_ROUNDS} WHERE variant <> '__BASE__'
     ),
     eff AS (
         SELECT r.channel, b.p_base, r.p_removed,
@@ -11691,7 +11705,7 @@ def attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_vec = {
         v: {s: 0 for s in base_states} for v in ("__BASE__",) + tuple(chans)
     }
-    for _ in range(8):
+    for _ in range(_MARKOV_ROUNDS):
         for v, cur in p_vec.items():
             new = {s: 0 for s in base_states}
             for r in by_variant.get(v, ()):
@@ -12755,7 +12769,12 @@ def chi2_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_oracle_sql(rounds: int = 4) -> str:
+# hits_bipartite's round count (one authority and one hub half-step
+# each), read by the Spark body and by its unrolled oracle.
+_HITS_ROUNDS = 4
+
+
+def _hits_oracle_sql() -> str:
     """Unrolled HITS oracle: alternating authority/hub halves, each
     renormalized by its max via pure integer division with the xdp
     G-shrink overflow guard; every CTE MATERIALIZED (the kcore rule)."""
@@ -12767,7 +12786,7 @@ def _hits_oracle_sql(rounds: int = 4) -> str:
         "h0 AS MATERIALIZED (SELECT DISTINCT c, CAST(1000000 AS BIGINT) AS hq"
         " FROM edges)",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _HITS_ROUNDS + 1):
         parts.append(
             f"""ar{r} AS MATERIALIZED (
         SELECT e.p, CAST(sum(h.hq) AS BIGINT) AS raw
@@ -12803,11 +12822,11 @@ def _hits_oracle_sql(rounds: int = 4) -> str:
     WITH {ctes},
     tops AS (
         SELECT 'authority' AS side, p AS node_key, aq AS score_q
-        FROM a{rounds} ORDER BY aq DESC, p LIMIT 10
+        FROM a{_HITS_ROUNDS} ORDER BY aq DESC, p LIMIT 10
     ),
     toph AS (
         SELECT 'hub' AS side, c AS node_key, hq AS score_q
-        FROM h{rounds} ORDER BY hq DESC, c LIMIT 10
+        FROM h{_HITS_ROUNDS} ORDER BY hq DESC, c LIMIT 10
     )
     SELECT side, CAST(node_key AS BIGINT) AS node_key,
            CAST(score_q AS BIGINT) / 1e6 AS score
@@ -12898,7 +12917,7 @@ def hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c", F.lit(1_000_000).cast("long").alias("q")
     )
     a = None
-    for _ in range(4):
+    for _ in range(_HITS_ROUNDS):
         a = _hits_half(edges, h, "c", "p")
         h = _hits_half(edges, a, "p", "c")
     tops = (

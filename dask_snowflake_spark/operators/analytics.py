@@ -320,21 +320,19 @@ def bh_select(
     key_cols: Sequence[str] = ("key",),
     q_num: int = 1,
     q_den: int = 10,
-    p_scale: int = 1_000_000_000,
 ) -> DataFrame:
     """Benjamini-Hochberg step-up FDR selection over integer-quantized
     p-values: rank ascending under the unique (p, keys) order, find the
     LARGEST rank k with ``p_(k) <= k * q / m`` (pure integer
-    cross-multiplication — ``p_q * m * q_den <= rank * q_num *
-    p_scale``), reject ranks 1..k.
+    cross-multiplication — ``p_q * m * q_den <= rank * q_num * 1e9``),
+    reject ranks 1..k.
 
-    ``p_scale`` is the quantization unit of ``p_col``: a quantized
-    p-value of ``p_scale`` means p = 1.0. The default (1e9, nano-units)
-    matches the erfc-table consumers (bh_fdr_control); a caller with
-    micro- or milli-quantized p-values MUST pass ``p_scale=1_000_000``
-    / ``1_000`` or the step-up inequality compares against the wrong
-    unit and k* is silently wrong. Same family as ``q_num``/``q_den``:
-    all three keep the inequality integer-exact on both engines.
+    ``p_col`` holds nano-quantized p-values (1e9 means p = 1.0), the
+    unit of the erfc-table consumers (bh_fdr_control); p-values in
+    another unit must be rescaled to nano-units first, or the step-up
+    inequality compares against the wrong unit and k* is silently
+    wrong. With ``q_num``/``q_den`` that keeps the inequality
+    integer-exact on both engines.
 
     Adds ``bh_rank``, ``bh_kstar`` and ``bh_rejected`` to the frame.
     The hypothesis count m is the frame's own row count (one window —
@@ -352,7 +350,7 @@ def bh_select(
     )
     sat = F.when(
         F.col(p_col) * F.col("__m") * q_den
-        <= F.col("bh_rank") * q_num * F.lit(int(p_scale)),
+        <= F.col("bh_rank") * q_num * F.lit(1_000_000_000),
         F.col("bh_rank"),
     )
     return (

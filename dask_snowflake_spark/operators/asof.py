@@ -30,7 +30,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: list[str] | None = None,
-    suffix: str = "_asof",
     direction: str = "backward",
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
@@ -73,7 +72,7 @@ def asof_join(
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in (on, right_ts)]
     else:
-        # right_ts is always appended as {right_ts}{suffix}; a caller
+        # right_ts is always appended as {right_ts}_asof; a caller
         # listing it in right_cols would otherwise build a struct with
         # duplicate fields and fail extraction with an ambiguous-
         # reference error
@@ -152,6 +151,6 @@ def asof_join(
             "__match", F.when(delta <= F.lit(float(tolerance_seconds)), F.col("__match"))
         )
     out_cols = [F.col("__left")[c].alias(c) for c in left.columns]
-    out_cols += [F.col("__match")[c].alias(f"{c}{suffix}") for c in right_cols]
-    out_cols.append(F.col("__match")[right_ts].alias(f"{right_ts}{suffix}"))
+    out_cols += [F.col("__match")[c].alias(f"{c}_asof") for c in right_cols]
+    out_cols.append(F.col("__match")[right_ts].alias(f"{right_ts}_asof"))
     return merged.select(*out_cols)

@@ -155,15 +155,13 @@ def hll_build(
     return regs.unionByName(meta)
 
 
-def hll_merge(sketch: DataFrame, *, by: list[str] | None = None) -> DataFrame:
+def hll_merge(sketch: DataFrame) -> DataFrame:
     """Merge sketches by bucket-wise MAX — the family's one
-    associative-idempotent merge law. With ``by`` the merge keeps those
-    grouping columns; without it all shards collapse into one sketch.
-    Fingerprint rows ride the law: identical parameters merge to
-    themselves, mismatched parameters corrupt the (-1, -2) pair into a
-    nonzero sum that ``hll_estimate`` traps loudly."""
-    group = (by or []) + ["bucket"]
-    return sketch.groupBy(*group).agg(F.max("reg").cast("long").alias("reg"))
+    associative-idempotent merge law; all shards collapse into one
+    sketch. Fingerprint rows ride the law: identical parameters merge
+    to themselves, mismatched parameters corrupt the (-1, -2) pair into
+    a nonzero sum that ``hll_estimate`` traps loudly."""
+    return sketch.groupBy("bucket").agg(F.max("reg").cast("long").alias("reg"))
 
 
 def hll_estimate(

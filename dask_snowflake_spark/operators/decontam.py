@@ -27,8 +27,6 @@ def ngram_overlap(
     train: DataFrame,
     evalset: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
 ) -> DataFrame:
     """Per-training-doc contamination stats vs the eval set's n-grams.
@@ -51,8 +49,8 @@ def ngram_overlap(
     with ultra-short documents should length-filter first if they want
     strictly-n-gram evidence.
     """
-    tr = shingles(train, text_col, id_col, n)
-    ev = shingles(evalset, text_col, id_col, n).select("shingle").distinct()
+    tr = shingles(train, "text", "doc_id", n)
+    ev = shingles(evalset, "text", "doc_id", n).select("shingle").distinct()
     return (
         tr.join(F.broadcast(ev.withColumn("__hit", F.lit(1))), "shingle", "left")
         .groupBy("doc")

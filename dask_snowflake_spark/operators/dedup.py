@@ -348,8 +348,6 @@ def jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def minhash_near_dup(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     shingle_n: int = 3,
     num_hashes: int = 16,
@@ -364,7 +362,7 @@ def minhash_near_dup(
     strings. Returns (doc_a, doc_b, jaccard >= threshold)."""
     # cached: the shingle set feeds the signature path AND the verify
     # path — without it Spark re-parses every document per subtree
-    sh = track_cache(hashed_shingles(docs, text_col, id_col, shingle_n))
+    sh = track_cache(hashed_shingles(docs, "text", "doc_id", shingle_n))
     sig = minhash_signatures(sh, num_hashes)
     # the band self-join reads both sides; caching the (tiny, one row
     # per doc x bands) band keys stops the k-min signature aggregation
@@ -376,8 +374,6 @@ def minhash_near_dup(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     shingle_n: int = 3,
     threshold: float = 0.85,
@@ -386,7 +382,7 @@ def ngram_jaccard_pairs(
     equi-join (no LSH). Quadratic in docs sharing a shingle — the
     correctness baseline MinHash is verified against; prefer
     ``minhash_near_dup`` beyond ~10^6 docs."""
-    sh = track_cache(hashed_shingles(docs, text_col, id_col, shingle_n))
+    sh = track_cache(hashed_shingles(docs, "text", "doc_id", shingle_n))
     a = sh.select(F.col("doc").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc").alias("doc_b"), "shingle")
     # intersection counts straight off the shared-shingle join — no
@@ -402,8 +398,6 @@ def ngram_jaccard_pairs(
 
 def jaccard_prefix_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     shingle_n: int = 3,
     threshold: tuple[int, int] = (4, 5),
@@ -452,7 +446,7 @@ def jaccard_prefix_pairs(
     tn, td = threshold
     if not (0 < tn <= td):
         raise ValueError(f"threshold must be a rational in (0, 1], got {tn}/{td}")
-    sh = hashed_shingles(docs, text_col, id_col, shingle_n)
+    sh = hashed_shingles(docs, "text", "doc_id", shingle_n)
     # document frequency as a window over the shingle key (reuses the
     # one exchange; no df-table join), then per-doc prefix selection as
     # an in-memory array sort+slice (state O(doc shingles) — a bound
@@ -544,15 +538,12 @@ def simhash(
 
 def simhash_near_dup(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
-    bits: int = 60,
     max_hamming: int = 3,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance <= ``max_hamming``.
 
-    Banded candidate generation (pigeonhole): the ``bits``-bit
+    Banded candidate generation (pigeonhole): the 60-bit
     fingerprint splits into ``max_hamming + 1`` equal bands, and any
     pair within the hamming budget must agree EXACTLY on at least one
     band — so candidates come from an equi-join on (band_index,
@@ -564,9 +555,9 @@ def simhash_near_dup(
     # self-join references them on BOTH sides and Spark recomputes
     # shared subtrees — without this the word-explode + 60-counter
     # aggregation runs twice
-    fp = track_cache(simhash(docs, text_col, id_col, bits=bits))
+    fp = track_cache(simhash(docs, "text", "doc_id", bits=60))
     return banded_hamming_pairs(
-        fp, "simhash", "doc_id", bits=bits, max_hamming=max_hamming
+        fp, "simhash", "doc_id", bits=60, max_hamming=max_hamming
     )
 
 
@@ -650,8 +641,6 @@ def span_stream(
 
 def dup_span_runs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     span_words: int = 8,
     min_docs: int = 2,
@@ -681,7 +670,7 @@ def dup_span_runs(
     rollup reuses that partitioning exchange-free. O(total tokens),
     never all-pairs, no iteration — region merging is a single window,
     not a fixpoint loop."""
-    spans = track_cache(span_stream(df, text_col, id_col, span_words=span_words))
+    spans = track_cache(span_stream(df, "text", "doc_id", span_words=span_words))
     dup = (
         spans.groupBy("span_h")
         .agg(F.countDistinct("doc").alias("__nd"))
@@ -720,8 +709,6 @@ def dup_span_runs(
 
 def dup_span_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     span_words: int = 8,
     dup_num: int = 3,
@@ -747,7 +734,7 @@ def dup_span_stats(
     report n_spans = 0, flagged = false.
     """
     spans = track_cache(
-        span_stream(df, text_col, id_col, span_words=span_words).select("doc", "span_h")
+        span_stream(df, "text", "doc_id", span_words=span_words).select("doc", "span_h")
     )
     dup = (
         spans.groupBy("span_h")
@@ -764,10 +751,10 @@ def dup_span_stats(
         )
     )
     return (
-        df.select(F.col(id_col).alias("doc"))
+        df.select(F.col("doc_id").alias("doc"))
         .join(per_doc, "doc", "left")
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
             F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
             (
@@ -788,12 +775,7 @@ def dup_span_stats(
 def incremental_near_dup(
     docs: DataFrame,
     incoming_filter: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    rows_per_band: int = 2,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Incremental dedup: near-dup matches of an INCOMING batch against
@@ -810,10 +792,10 @@ def incremental_near_dup(
     incoming doc that duplicates corpus content, with the smallest
     matching corpus id as the canonical target.
     """
-    sh = track_cache(hashed_shingles(docs, text_col, id_col, shingle_n))
-    sig = minhash_signatures(sh, num_hashes)
-    bands = track_cache(lsh_bands(sig, rows_per_band))
-    mem = docs.select(F.col(id_col).alias("doc"), incoming_filter.alias("__inc"))
+    sh = track_cache(hashed_shingles(docs, "text", "doc_id", 3))
+    sig = minhash_signatures(sh, 16)
+    bands = track_cache(lsh_bands(sig, 2))
+    mem = docs.select(F.col("doc_id").alias("doc"), incoming_filter.alias("__inc"))
     b_inc = bands.join(mem.filter(F.col("__inc")), "doc").select("doc", "band", "band_sig")
     b_cor = bands.join(mem.filter(~F.col("__inc")), "doc").select("doc", "band", "band_sig")
     cand = (
@@ -835,6 +817,6 @@ def incremental_near_dup(
             F.max("jaccard").alias("best_jaccard"),
         )
         .select(
-            F.col("doc_a").alias(id_col), "dup_of", "n_matches", "best_jaccard"
+            F.col("doc_a").alias("doc_id"), "dup_of", "n_matches", "best_jaccard"
         )
     )

@@ -40,19 +40,15 @@ except ImportError:  # pragma: no cover - sandbox has no Pillow
     _PILImage = None
     DECODE_AVAILABLE = False
 
-META_SCHEMA = (
-    "width int, height int, n_frames int, duration_ms double, codec string"
-)
 
-
-def attach_binary_assets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_binary_assets(df: DataFrame) -> DataFrame:
     """Materialize a binary asset column group from a text column —
     stands in for reading real image bytes; exercises the exact schema/
     partitioning path real assets would take."""
     return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "utf-8").alias("asset"),
-        F.concat(F.lit("synthetic://asset/"), F.col(id_col)).alias("asset_uri"),
+        F.col("doc_id"),
+        F.encode(F.col("text"), "utf-8").alias("asset"),
+        F.concat(F.lit("synthetic://asset/"), F.col("doc_id")).alias("asset_uri"),
         F.lit("application/octet-stream").alias("asset_mime"),
     )
 
@@ -96,9 +92,7 @@ def _pil_decode(payload: bytes) -> dict:
         }
 
 
-def decode_metadata(
-    df: DataFrame, asset_col: str = "asset", id_col: str = "doc_id", kernel: str = "stub"
-) -> DataFrame:
+def decode_metadata(df: DataFrame, kernel: str = "stub") -> DataFrame:
     """Arrow-batched metadata extraction over the binary column.
 
     ``kernel="stub"`` (default) keeps the deterministic SQL-replicable
@@ -110,18 +104,18 @@ def decode_metadata(
     if kernel == "real" and not DECODE_AVAILABLE:
         _pil_decode(b"")  # raises the descriptive NotImplementedError
     decode = _pil_decode if kernel == "real" else _fake_decode
-    out_schema = f"{id_col} long, n_bytes long, width int, height int, n_frames int, duration_ms double, codec string"
+    out_schema = "doc_id long, n_bytes long, width int, height int, n_frames int, duration_ms double, codec string"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             # NULL asset bytes are a legal state (external-URI rows in
             # the module's schema convention): metadata columns go NULL
             # instead of the kernel crashing the task on len(None)
-            metas = [decode(b) if b is not None else None for b in pdf[asset_col]]
+            metas = [decode(b) if b is not None else None for b in pdf["asset"]]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
-                    "n_bytes": [len(b) if b is not None else None for b in pdf[asset_col]],
+                    "doc_id": pdf["doc_id"].values,
+                    "n_bytes": [len(b) if b is not None else None for b in pdf["asset"]],
                     "width": [m["width"] if m else None for m in metas],
                     "height": [m["height"] if m else None for m in metas],
                     "n_frames": [m["n_frames"] if m else None for m in metas],
@@ -130,24 +124,22 @@ def decode_metadata(
                 }
             )
 
-    return df.select(id_col, asset_col).mapInPandas(batches, out_schema)
+    return df.select("doc_id", "asset").mapInPandas(batches, out_schema)
 
 
-def frame_sample(
-    df: DataFrame, asset_col: str = "asset", id_col: str = "doc_id", every_n: int = 2
-) -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
     """Frame-sampling plumbing: one output row per sampled frame (here:
     fake frames from the stub decoder). Shows the 1->N mapInPandas
     shape a real video pipeline uses. NULL assets contribute no
     frames."""
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    out_schema = f"{id_col} long, frame_idx int, frame_bytes binary"
+    out_schema = "doc_id long, frame_idx int, frame_bytes binary"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, idxs, blobs = [], [], []
-            for doc, payload in zip(pdf[id_col], pdf[asset_col]):
+            for doc, payload in zip(pdf["doc_id"], pdf["asset"]):
                 if payload is None:
                     continue
                 meta = _fake_decode(payload)
@@ -156,30 +148,28 @@ def frame_sample(
                     idxs.append(i)
                     # slice of the payload stands in for a decoded frame
                     blobs.append(payload[i::8][:32])
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame_bytes": blobs})
+            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_bytes": blobs})
 
-    return df.select(id_col, asset_col).mapInPandas(batches, out_schema)
+    return df.select("doc_id", "asset").mapInPandas(batches, out_schema)
 
 
 def resize(
     df: DataFrame,
     width: int = 32,
     height: int = 32,
-    asset_col: str = "asset",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Resize plumbing: 1->1 mapInPandas producing a fixed-size payload
     per asset (STUB kernel: strided byte sampling cycled/truncated to
     width*height bytes — deterministic; a real deployment swaps in
     PIL.Image.resize). Output schema mirrors the input asset group with
     updated dimensions so downstream stages are size-bounded."""
-    out_schema = f"{id_col} long, asset binary, width int, height int"
+    out_schema = "doc_id long, asset binary, width int, height int"
     target = width * height
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             resized = []
-            for payload in pdf[asset_col]:
+            for payload in pdf["asset"]:
                 # NULL assets (e.g. external-URI rows with no inlined
                 # bytes) resize to an all-zero canvas instead of
                 # failing the whole task
@@ -190,31 +180,29 @@ def resize(
                 resized.append((bytes(payload) * reps)[:target])
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "asset": resized,
                     "width": width,
                     "height": height,
                 }
             )
 
-    return df.select(id_col, asset_col).mapInPandas(batches, out_schema)
+    return df.select("doc_id", "asset").mapInPandas(batches, out_schema)
 
 
-def extract_features(
-    df: DataFrame, dim: int = 16, asset_col: str = "asset", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
     """Feature extraction plumbing: binary asset -> dense array<double>
     embedding via an Arrow-batched kernel (STUB: normalized codepoint
     histogram mod ``dim`` — deterministic AND replicable in SQL, so the
     full Python-UDF path is value-checked by the oracle; a real
     deployment swaps in a vision encoder). The output column feeds the
     similarity operators directly (brute-force / IVF top-k)."""
-    out_schema = f"{id_col} long, n_chars long, features array<double>"
+    out_schema = "doc_id long, n_chars long, features array<double>"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, lens, feats = [], [], []
-            for doc, payload in zip(pdf[id_col], pdf[asset_col]):
+            for doc, payload in zip(pdf["doc_id"], pdf["asset"]):
                 # NULL asset -> zero-vector features, not a task failure
                 s = "" if payload is None else bytes(payload).decode("utf-8", errors="replace")
                 counts = [0] * dim
@@ -229,9 +217,9 @@ def extract_features(
                 # SQL's round-half-away disagree; c*1e6//n is pure
                 # integer arithmetic, bit-identical everywhere
                 feats.append([(c * 1_000_000 // n) / 1e6 for c in counts])
-            yield pd.DataFrame({id_col: ids, "n_chars": lens, "features": feats})
+            yield pd.DataFrame({"doc_id": ids, "n_chars": lens, "features": feats})
 
-    return df.select(id_col, asset_col).mapInPandas(batches, out_schema)
+    return df.select("doc_id", "asset").mapInPandas(batches, out_schema)
 
 
 def ahash60(

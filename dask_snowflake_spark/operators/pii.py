@@ -46,12 +46,12 @@ def redact_text(text: Column) -> Column:
     return out
 
 
-def redact(df: DataFrame, text_col: str = "text", *, out_col: str = "redacted") -> DataFrame:
-    """Add per-class counts and a redacted text column."""
+def redact(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Add per-class counts and a ``redacted`` text column."""
     text = F.col(text_col)
     counts = pii_counts(text)
     return df.select(
         "*",
         *[c.alias(f"n_{name}") for name, c in counts.items()],
-        redact_text(text).alias(out_col),
+        redact_text(text).alias("redacted"),
     )

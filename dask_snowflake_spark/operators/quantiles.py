@@ -50,9 +50,10 @@ the sub-cell histogram, and only the landing sub-cell is rank-sorted.
 The re-split ITERATES: a sub-cell that is still both non-constant and
 over the bound (intra-cell mass concentrated in a narrow sub-span) is
 re-split again against its own tighter [min, max], so the per-task
-sort bound holds under arbitrary skew up to ``max_refine_levels``
-levels (each level tightens the span strictly; 8 levels of >=256-way
-splits exhaust double precision for any realistic distribution). A
+sort bound holds under arbitrary skew up to 8 levels
+(``_MAX_REFINE_LEVELS``; each level tightens the span strictly, and 8
+levels of >=256-way splits exhaust double precision for any realistic
+distribution). A
 cell still hot past the cap falls back to the spillable single-task
 window sort — exactness is never affected, only the bound claim, and
 only in that adversarial corner. Refinement is gated on ``isEmpty``
@@ -322,14 +323,16 @@ def exact_group_quantiles(
 
 _DBL_MAX = 1.7976931348623157e308
 
+# Refinement levels before a still-hot cell falls back to the spillable
+# single-task window sort.
+_MAX_REFINE_LEVELS = 8
+
 
 def _refined_hot_picks(
     vals: DataFrame,
     group_cols: list[str],
     hot_cand: DataFrame,
     max_cell_rows: int,
-    *,
-    max_refine_levels: int = 8,
 ) -> DataFrame:
     """Iterated adaptive re-split of hot candidate cells (count >
     max_cell_rows).
@@ -346,7 +349,7 @@ def _refined_hot_picks(
     loops: it becomes the next level's cell, re-split against its own
     strictly tighter [min, max]. Each level is gated on an ``isEmpty``
     probe of the tiny target table, so extra levels only run when the
-    data demands them; after ``max_refine_levels`` a still-hot cell
+    data demands them; after ``_MAX_REFINE_LEVELS`` a still-hot cell
     falls back to the spillable single-task window sort (exact, just
     not bound-limited — an adversarial corner documented in SCALE.md).
 
@@ -379,7 +382,7 @@ def _refined_hot_picks(
         nonlocal picks
         picks = p if picks is None else picks.unionByName(p)
 
-    for level in range(1, max_refine_levels + 1):
+    for level in range(1, _MAX_REFINE_LEVELS + 1):
         cells = (
             targets.select(*group_cols, "__cell", "__cmin", "__cmax", "__cc")
             .distinct()
@@ -447,7 +450,7 @@ def _refined_hot_picks(
         still_hot = t2.filter(
             (F.col("__bmin2") != F.col("__bmax2")) & (F.col("__c2") > max_cell_rows)
         )
-        last = level == max_refine_levels or still_hot.isEmpty()
+        last = level == _MAX_REFINE_LEVELS or still_hot.isEmpty()
         # Small sub-cells sort here; on the final level the still-hot
         # remainder (if any) joins them — spillable fallback.
         sortable = t2.filter(

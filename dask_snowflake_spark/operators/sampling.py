@@ -59,7 +59,6 @@ def split_assign(
     weights: dict[str, float],
     *,
     salt: str = "split",
-    col_name: str = "split",
 ) -> DataFrame:
     """Add a ``split`` column ('train'/'val'/... by ``weights``) decided
     by hash(key). Weights must sum to 1; split names are assigned to
@@ -83,7 +82,7 @@ def split_assign(
     # float-truncation slack: anything past the last boundary joins the
     # (sorted-)last split
     expr = expr.otherwise(sorted(weights)[-1])
-    return df.withColumn(col_name, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_deterministic_sample(
@@ -91,8 +90,6 @@ def stratified_deterministic_sample(
     key: str,
     strata: str,
     fractions: dict,
-    *,
-    salt: str = "stratified",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (``df.sampleBy`` without the
     RNG): each value of the ``strata`` column gets its own
@@ -104,7 +101,7 @@ def stratified_deterministic_sample(
     if bad:
         raise ValueError(f"fractions must be in [0, 1], got {bad}")
     strata_col = F.col(strata)
-    b = _bucket(F.col(key), salt)
+    b = _bucket(F.col(key), "stratified")
     keep = None
     for value, frac in sorted(fractions.items(), key=lambda kv: str(kv[0])):
         cond = (strata_col == value) & (b < round(frac * _BUCKETS))

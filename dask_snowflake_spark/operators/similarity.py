@@ -32,6 +32,9 @@ from weakref import WeakKeyDictionary
 
 _LIT_MATRIX_CACHE: WeakKeyDictionary = WeakKeyDictionary()
 
+# Decimal places of every rounded cosine: the cross-engine compare idiom.
+_ROUND_DIGITS = 6
+
 
 def lit_matrix(rows: "list[list[float]]") -> Column:
     """One ``array<array<double>>`` literal Column for a small python
@@ -96,9 +99,6 @@ def topk_bruteforce(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -107,14 +107,20 @@ def topk_bruteforce(
     so each pair costs one dot product. At 100 TB this is the
     scan-everything baseline an ANN index is judged against."""
     q = with_normalized(
-        queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col, "query_vec", ["query_id"]
+        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
+        "embedding",
+        "query_vec",
+        ["query_id"],
     )
     c = with_normalized(
-        embeddings.select(F.col(id_col).alias("neighbor_id"), vec_col), vec_col, "vec", ["neighbor_id"]
+        embeddings.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+        "embedding",
+        "vec",
+        ["neighbor_id"],
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("query_vec"), F.col("vec")), round_digits))
+        .withColumn("sim", F.round(dot(F.col("query_vec"), F.col("vec")), _ROUND_DIGITS))
         .select("query_id", "neighbor_id", "sim")
     )
     w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -130,10 +136,6 @@ def ivf_topk(
     queries: DataFrame,
     *,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    partition_col: str = "label",
-    round_digits: int = 6,
 ) -> DataFrame:
     """IVF-style pruned top-k: candidates restricted to the query's
     coarse partition (centroid cell). Join key = partition id, so the
@@ -141,24 +143,24 @@ def ivf_topk(
     the classic inverted-file trade of recall for a ~|cells|× scan cut."""
     q = with_normalized(
         queries.select(
-            F.col(id_col).alias("query_id"), vec_col, F.col(partition_col).alias("cell")
+            F.col("vec_id").alias("query_id"), "embedding", F.col("label").alias("cell")
         ),
-        vec_col,
+        "embedding",
         "query_vec",
         ["query_id", "cell"],
     )
     c = with_normalized(
         embeddings.select(
-            F.col(id_col).alias("neighbor_id"), vec_col, F.col(partition_col).alias("cell")
+            F.col("vec_id").alias("neighbor_id"), "embedding", F.col("label").alias("cell")
         ),
-        vec_col,
+        "embedding",
         "vec",
         ["neighbor_id", "cell"],
     )
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("query_vec"), F.col("vec")), round_digits))
+        .withColumn("sim", F.round(dot(F.col("query_vec"), F.col("vec")), _ROUND_DIGITS))
         .select("query_id", "neighbor_id", "sim")
     )
     w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -173,9 +175,6 @@ def embedding_near_dup_pairs(
     embeddings: DataFrame,
     *,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Vector pairs with cosine >= threshold (embedding-space near-
     duplicate detection), exact all-pairs: the small-scale correctness
@@ -186,14 +185,17 @@ def embedding_near_dup_pairs(
     # uncached it runs twice over the corpus
     v = track_cache(
         with_normalized(
-            embeddings.select(F.col(id_col).alias("id"), F.col(vec_col)), vec_col, "vec", ["id"]
+            embeddings.select(F.col("vec_id").alias("id"), F.col("embedding")),
+            "embedding",
+            "vec",
+            ["id"],
         )
     )
     a = v.select(*[F.col(c).alias(f"{c}_a") for c in v.columns])
     b = v.select(*[F.col(c).alias(f"{c}_b") for c in v.columns])
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", F.round(dot(F.col("vec_a"), F.col("vec_b")), round_digits))
+        .withColumn("sim", F.round(dot(F.col("vec_a"), F.col("vec_b")), _ROUND_DIGITS))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
         .orderBy("id_a", "id_b")
@@ -204,10 +206,6 @@ def embedding_near_dup_pairs_bucketed(
     embeddings: DataFrame,
     *,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "label",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Bucketed near-dup pairs with a vectorized kernel: per bucket, an
     Arrow-batched ``applyInPandas`` computes the pair matrix with BLAS
@@ -232,13 +230,13 @@ def embedding_near_dup_pairs_bucketed(
     # half a rounding quantum for the threshold prefilter, plus float
     # headroom: the BLAS pairwise sum differs from the exact sequential
     # dot by ~1e-14, which a bare half-quantum margin would not absorb
-    margin = 10.0 ** (-round_digits) / 2 + 1e-9
+    margin = 10.0 ** (-_ROUND_DIGITS) / 2 + 1e-9
 
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].iloc[order]])
+        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"].iloc[order]])
         # exact sequential norms (match JVM aggregate / duckdb list_sum)
         norms = np.empty(len(ids))
         for i, row in enumerate(mat):
@@ -262,13 +260,13 @@ def embedding_near_dup_pairs_bucketed(
                 out_s.append(acc)
         return pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": out_s})
 
-    id_t = embeddings.schema[id_col].dataType.simpleString()
+    id_t = embeddings.schema["vec_id"].dataType.simpleString()
     return (
-        embeddings.select(F.col(id_col), F.col(vec_col), F.col(bucket_col))
-        .filter(F.col(bucket_col).isNotNull())
-        .groupBy(bucket_col)
+        embeddings.select(F.col("vec_id"), F.col("embedding"), F.col("label"))
+        .filter(F.col("label").isNotNull())
+        .groupBy("label")
         .applyInPandas(per_bucket, f"id_a {id_t}, id_b {id_t}, sim double")
-        .select("id_a", "id_b", F.round("sim", round_digits).alias("sim"))
+        .select("id_a", "id_b", F.round("sim", _ROUND_DIGITS).alias("sim"))
         .filter(F.col("sim") >= threshold)
         .orderBy("id_a", "id_b")
     )
@@ -317,27 +315,21 @@ def srp_lsh_near_dup(
     embeddings: DataFrame,
     *,
     threshold: float = 0.99,
-    num_planes: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Scale path for embedding near-dup: bucket on the SRP signature,
     compare only within buckets, verify with exact cosine. Near-
     identical vectors agree on all sign bits with high probability, so
     the cross product collapses to per-bucket blocks."""
     # persist: the bucket self-join reads both sides, and the SRP
-    # signature (num_planes dot products per row, interpreted lambdas)
-    # is far too expensive to compute twice
+    # signature (16 dot products per row, interpreted lambdas) is far
+    # too expensive to compute twice
     sig = with_normalized(
         embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col),
-            srp_signature(F.col(vec_col), num_planes=num_planes, dim=dim).alias(
-                "bucket"
-            ),
+            F.col("vec_id").alias("id"),
+            F.col("embedding"),
+            srp_signature(F.col("embedding"), num_planes=16, dim=64).alias("bucket"),
         ),
-        vec_col,
+        "embedding",
         "vec",
         ["id", "bucket"],
     )
@@ -350,7 +342,7 @@ def srp_lsh_near_dup(
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", F.round(dot(F.col("vec_a"), F.col("vec_b")), 6))
+        .withColumn("sim", F.round(dot(F.col("vec_a"), F.col("vec_b")), _ROUND_DIGITS))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -361,7 +353,6 @@ def kmeans_fit(
     *,
     k: int = 8,
     iters: int = 5,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     normalized: bool = False,
 ) -> list[list[float]]:
@@ -381,11 +372,11 @@ def kmeans_fit(
     data's own geometry instead of a pre-existing label column."""
     if normalized:
         base = embeddings.select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("nv")
+            F.col("vec_id").alias("vid"), F.col(vec_col).alias("nv")
         ).persist()
     else:
         base = with_normalized(
-            embeddings.select(F.col(id_col).alias("vid"), vec_col), vec_col, "nv", ["vid"]
+            embeddings.select(F.col("vec_id").alias("vid"), vec_col), vec_col, "nv", ["vid"]
         ).persist()  # iterated over once per Lloyd step — don't re-normalize per job
     try:
         seeds = (
@@ -428,10 +419,9 @@ def assign_cells(
     centroids: list[list[float]],
     *,
     vec_col: str = "nv",
-    out_col: str = "cell",
     nprobe: int = 1,
 ) -> DataFrame:
-    """Add the argmax-cosine centroid index as ``out_col``. Centroids
+    """Add the argmax-cosine centroid index as ``cell``. Centroids
     ride along as a literal array (broadcast with the plan); assignment
     is a pure projection — scan-speed, no shuffle, no Python.
 
@@ -444,11 +434,11 @@ def assign_cells(
         lambda c, i: F.struct((-dot(F.col(vec_col), c)).alias("nd"), i.alias("idx")),
     )
     if nprobe <= 1:
-        return df.withColumn(out_col, F.array_min(scored)["idx"])
+        return df.withColumn("cell", F.array_min(scored)["idx"])
     probes = F.transform(
         F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["idx"]
     )
-    return df.withColumn(out_col, F.explode(probes))
+    return df.withColumn("cell", F.explode(probes))
 
 
 # ---------------------------------------------------------------------------
@@ -471,9 +461,6 @@ def pq_fit(
     m: int = 4,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> list[list[list[float]]]:
     """Per-subspace PQ codebooks: the vector splits into ``m``
     contiguous slices and each subspace trains its own k-means
@@ -484,21 +471,19 @@ def pq_fit(
     m bytes per vector (e.g. 64-dim -> 4 codes = 64x); the codebooks
     (m * k * dim/m floats) are driver/broadcast-sized by construction.
     Only per-(cell, dim) means ever reach the driver, same contract as
-    ``kmeans_fit``. Pass ``dim`` when the caller already knows the
-    vector width (e.g. from the coarse centroids it just trained) to
-    skip the probing ``first()`` action."""
-    if dim is None:
-        dim_row = embeddings.select(F.size(F.col(vec_col)).alias("d")).first()
-        if dim_row is None:
-            raise ValueError("pq_fit needs a non-empty training set")
-        dim = int(dim_row["d"])
+    ``kmeans_fit``. The vector width comes from one probing ``first()``
+    action."""
+    dim_row = embeddings.select(F.size(F.col("embedding")).alias("d")).first()
+    if dim_row is None:
+        raise ValueError("pq_fit needs a non-empty training set")
+    dim = int(dim_row["d"])
     if dim % m:
         raise ValueError(f"dim={dim} must divide into m={m} subspaces")
     d_m = dim // m
 
     base = embeddings.select(
-        F.col(id_col).alias("vid"),
-        *[F.slice(F.col(vec_col), s * d_m + 1, d_m).alias(f"s{s}") for s in range(m)],
+        F.col("vec_id").alias("vid"),
+        *[F.slice(F.col("embedding"), s * d_m + 1, d_m).alias(f"s{s}") for s in range(m)],
     ).persist()
     try:
         seeds = (
@@ -558,11 +543,8 @@ def pq_fit(
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
-    *,
-    vec_col: str = "embedding",
-    out_col: str = "codes",
 ) -> DataFrame:
-    """Append the PQ code array (m small ints per vector): per
+    """Append the PQ code array ``codes`` (m small ints per vector): per
     subspace, the index of the closest codebook centroid. Pure
     projection against codebook literals — scan-speed, no shuffle, no
     Python; the full-precision vector can be dropped afterwards (the
@@ -571,13 +553,13 @@ def pq_encode(
     d_m = len(codebooks[0][0])
     codes = []
     for s in range(m):
-        sl = F.slice(F.col(vec_col), s * d_m + 1, d_m)
+        sl = F.slice(F.col("embedding"), s * d_m + 1, d_m)
         cents = lit_matrix(codebooks[s])
         scored = F.transform(
             cents, lambda c, i: F.struct(_l2sq(sl, c).alias("d2"), i.alias("idx"))
         )
         codes.append(F.array_min(scored)["idx"])
-    return df.withColumn(out_col, F.array(*codes))
+    return df.withColumn("codes", F.array(*codes))
 
 
 def pq_adc_topk(
@@ -586,10 +568,6 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     *,
     k: int = 10,
-    q_id: str = "q_id",
-    q_vec: str = "q_vec",
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each query
     precomputes one lookup table of squared distances to every codebook
@@ -604,31 +582,28 @@ def pq_adc_topk(
     d_m = len(codebooks[0][0])
     luts = []
     for s in range(m):
-        sl = F.slice(F.col(q_vec), s * d_m + 1, d_m)
+        sl = F.slice(F.col("q_vec"), s * d_m + 1, d_m)
         cents = lit_matrix(codebooks[s])
         luts.append(F.transform(cents, lambda c: _l2sq(sl, c)).alias(f"lut{s}"))
-    q = queries.select(F.col(q_id), *luts)
+    q = queries.select(F.col("q_id"), *luts)
     dist = sum(
-        F.element_at(F.col(f"lut{s}"), F.element_at(F.col(codes_col), s + 1) + 1)
+        F.element_at(F.col(f"lut{s}"), F.element_at(F.col("codes"), s + 1) + 1)
         for s in range(m)
     )
     scored = codes.join(F.broadcast(q)).select(
-        q_id, id_col, dist.alias("adc_d2")
+        "q_id", "vec_id", dist.alias("adc_d2")
     )
-    w = W.partitionBy(q_id).orderBy(F.col("adc_d2"), F.col(id_col))
+    w = W.partitionBy("q_id").orderBy(F.col("adc_d2"), F.col("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select(q_id, id_col, F.col("rnk"), F.round("adc_d2", 6).alias("adc_d2"))
+        .select("q_id", "vec_id", F.col("rnk"), F.round("adc_d2", 6).alias("adc_d2"))
     )
 
 
 def cluster_prune(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    cell_col: str = "label",
-    vec_col: str = "embedding",
     cap: int = 50,
     dense_sqd: int = 500_000,
 ) -> DataFrame:
@@ -668,9 +643,9 @@ def cluster_prune(
     the replica); the collapse branch is pinned by a constructed-
     cluster unit test."""
     q = emb.select(
-        F.col(id_col).alias("__id"),
-        F.col(cell_col).alias("__cell"),
-        F.posexplode(vec_col).alias("__pos", "__x"),
+        F.col("vec_id").alias("__id"),
+        F.col("label").alias("__cell"),
+        F.posexplode("embedding").alias("__pos", "__x"),
     ).select(
         "__id",
         "__cell",
@@ -753,10 +728,6 @@ def mine_contrastive_pairs(
     *,
     k_pos: int = 3,
     k_neg: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Contrastive training-pair mining (the embedding-model data op:
     per anchor, the top same-cell neighbors become POSITIVES and the
@@ -772,17 +743,17 @@ def mine_contrastive_pairs(
     round(6) (the pinned cross-engine compare idiom)."""
     q = with_normalized(
         queries.select(
-            F.col(id_col).alias("query_id"), vec_col, F.col(cell_col).alias("q_cell")
+            F.col("vec_id").alias("query_id"), "embedding", F.col("label").alias("q_cell")
         ),
-        vec_col,
+        "embedding",
         "query_vec",
         ["query_id", "q_cell"],
     )
     c = with_normalized(
         embeddings.select(
-            F.col(id_col).alias("neighbor_id"), vec_col, F.col(cell_col).alias("c_cell")
+            F.col("vec_id").alias("neighbor_id"), "embedding", F.col("label").alias("c_cell")
         ),
-        vec_col,
+        "embedding",
         "vec",
         ["neighbor_id", "c_cell"],
     )
@@ -795,7 +766,7 @@ def mine_contrastive_pairs(
             F.when(F.col("c_cell") == F.col("q_cell"), "pos")
             .otherwise("neg")
             .alias("role"),
-            F.round(dot(F.col("query_vec"), F.col("vec")), round_digits).alias("sim"),
+            F.round(dot(F.col("query_vec"), F.col("vec")), _ROUND_DIGITS).alias("sim"),
         )
     )
     w = W.partitionBy("query_id", "role").orderBy(
@@ -1107,13 +1078,7 @@ _PQ_TOP = 10
 _PQ_SHORTLIST = 20
 
 
-def ivfpq_det_recall(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def ivfpq_det_recall(emb: DataFrame) -> DataFrame:
     """DETERMINISTIC integer IVF-PQ (the faiss IndexIVFPQ shape made
     fully value-oracle-able — the graph_knn_descent recipe applied to
     the r13 verdict's #5: exact integer distances, unique tie-breaks,
@@ -1161,10 +1126,10 @@ def ivfpq_det_recall(
 
     dim = _PQ_M * _PQ_SUB_DIM
     ev = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("label"),
+        F.col("vec_id").alias("id"),
+        F.col("label"),
         F.transform(
-            F.col(emb_col),
+            F.col("embedding"),
             lambda x: F.floor(x.cast("double") * 1000).cast("long"),
         ).alias("v"),
     )

@@ -70,13 +70,13 @@ def char_classes(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-document quality features + a deterministic composite score.
 
     Features mirror common pretraining-corpus filters: length, mean word
     length, punctuation/digit ratios, stopword ratio, distinct-word
     ratio (repetition detector)."""
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
     cc = char_classes(text)
     n_words = F.size(words)
@@ -121,7 +121,7 @@ GOPHER_RULES: tuple[str, ...] = (
 )
 
 
-def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """Rule-based corpus filter in the style of the Gopher / C4 quality
     heuristics: per-document pass/fail per rule, a composite ``passes``
     flag, and a ``reasons`` string naming every failed rule (the
@@ -139,7 +139,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     document can flip sides on a float rounding ulp (the failure class
     CLAUDE.md's ratio-quantization rule exists for). Pure codegen
     column expressions; scan-speed, no shuffle."""
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
     cc = char_classes(text)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -186,11 +186,11 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: per-language stopword-hit score, argmax
     with lexicographic tie-break. Deterministic and oracle-replicable;
     swap the profiles for character-n-gram frequencies on real data."""
-    words = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda w: w != "")
+    words = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda w: w != "")
     out = df
     for lang, profile in sorted(LANG_PROFILES.items()):
         arr = F.array(*[F.lit(w) for w in profile])
@@ -209,7 +209,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("detected_lang", winner)
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", stride: int = 4) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints: exact content hash over normalized text +
     a 60-bit rolling-window fingerprint (min hash of strided character
     8-grams — winnowing-style, robust to small edits; the stride cuts
@@ -218,7 +218,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", stride: int = 4) -> DataF
     # lambda would re-run the regexp_replace once per gram (no CSE
     # inside HOF lambdas)
     with_norm = df.withColumn(
-        "__norm", F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+        "__norm", F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     )
     norm = F.col("__norm")
     # one fused transform (hash straight off the substring) — a second
@@ -226,7 +226,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", stride: int = 4) -> DataF
     # interpreted-lambda traversals
     min_gram_hash = F.array_min(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(norm) - 7, F.lit(1)), F.lit(stride)),
+            F.sequence(F.lit(1), F.greatest(F.length(norm) - 7, F.lit(1)), F.lit(4)),
             lambda i: portable_hash(norm.substr(i, F.lit(8))),
         )
     )
@@ -240,9 +240,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", stride: int = 4) -> DataF
     )
 
 
-def tfidf(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf(docs: DataFrame) -> DataFrame:
     """Sparse TF-IDF over whitespace unigrams: one row per (doc, term).
 
     tf = term count / doc token count; idf = ln((N+1)/(df+1)) + 1
@@ -257,21 +255,21 @@ def tfidf(
     from pyspark.sql.window import Window as W
 
     terms = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
     # persist the (doc, term) counts: they feed the per-doc length
     # window, the document-frequency aggregate, AND the final join —
     # uncached, the raw-text explode would run three times
-    tc = track_cache(terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("n_t")))
-    tc = tc.withColumn("n_doc", F.sum("n_t").over(W.partitionBy(id_col)))
+    tc = track_cache(terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("n_t")))
+    tc = tc.withColumn("n_doc", F.sum("n_t").over(W.partitionBy("doc_id")))
     dfreq = tc.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         tc.join(dfreq, "term")
         .join(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             "n_t",
             "df",
@@ -284,9 +282,7 @@ def tfidf(
     )
 
 
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition metrics per document — the quality
     filters that catch boilerplate and degenerate (looping) text:
     duplicate-word fraction, top-word fraction, mean word length.
@@ -296,8 +292,8 @@ def repetition_stats(
     All ratios integer-quantized to 6 decimals (floor) so the values
     are engine-portable (CLAUDE.md rounding rules)."""
     words = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("w"),
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w"),
     ).filter(F.col("w") != "")
     wc = words.groupBy("doc", "w").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -321,9 +317,7 @@ def repetition_stats(
     )
 
 
-def word_profile(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def word_profile(docs: DataFrame) -> DataFrame:
     """Fused word-level profile: n_words, n_distinct, n_stop and one
     stopword-hit score per language, via ONE explode + two cascaded
     map-side-combinable aggregations.
@@ -337,12 +331,12 @@ def word_profile(
     no Expand row replication (see x04's lesson). Measured ~3× faster
     than the lambda path on sf0.1 documents."""
     words = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
+            F.array_remove(F.split(F.trim(F.col("text")), r"\s+"), "")
         ).alias("w"),
     )
-    wc = words.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("c"))
+    wc = words.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
     lw = F.lower(F.col("w"))
     aggs = [
         F.sum("c").alias("n_words"),
@@ -355,12 +349,11 @@ def word_profile(
                 f"score_{lang}"
             )
         )
-    return wc.groupBy(id_col).agg(*aggs)
+    return wc.groupBy("doc_id").agg(*aggs)
 
 
 def bpe_learn(
     docs: DataFrame,
-    text_col: str = "text",
     *,
     rounds: int = 5,
     min_word_len: int = 2,
@@ -407,15 +400,13 @@ def bpe_learn(
         "n_occurrences long, symbols_after long"
     )
     merges, _state = _bpe_iterate(
-        docs, text_col, rounds=rounds, min_word_len=min_word_len
+        docs, "text", rounds=rounds, min_word_len=min_word_len
     )
     return spark.createDataFrame(merges, schema)
 
 
 def bpe_segment(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     rounds: int = 5,
     min_word_len: int = 1,
@@ -437,16 +428,16 @@ def bpe_segment(
     corpus-stream aggregation beyond the vocabulary-bounded learn loop;
     empty-text documents report zeros."""
     _merges, state = _bpe_iterate(
-        docs, text_col, rounds=rounds, min_word_len=min_word_len,
+        docs, "text", rounds=rounds, min_word_len=min_word_len,
         need_sizes=False,
     )
     wt = state.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("n_tok"))
     words = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("w")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), r"\s+")).alias("w")
     ).filter(F.length("w") >= min_word_len)
     per = (
         words.join(wt, "w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
             F.sum(F.length("w")).cast("long").alias("n_chars"),
@@ -454,10 +445,10 @@ def bpe_segment(
         )
     )
     return (
-        docs.select(id_col)
-        .join(per, id_col, "left")
+        docs.select("doc_id")
+        .join(per, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce("n_words", F.lit(0)).alias("n_words"),
             F.coalesce("n_chars", F.lit(0)).alias("n_chars"),
             F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
@@ -474,10 +465,6 @@ def bpe_segment(
 def bpe_encode(
     docs: DataFrame,
     merges: "list[tuple[str, str]]",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    min_word_len: int = 1,
 ) -> DataFrame:
     """Encode text under a FROZEN, priority-ranked BPE merge table —
     the production tokenizer path: ``bpe_learn`` induces the table
@@ -509,7 +496,7 @@ def bpe_encode(
     merges), keeping the operator a total function like the oracle
     chain — a corpus whose training split carries no adjacent pairs
     degrades to char tokens on both engines."""
-    state = _bpe_char_state(docs, text_col, min_word_len)
+    state = _bpe_char_state(docs, "text", 1)
     for a, b in merges:
         state = _merge_pass(state, a, b)
     wt = state.groupBy("w").agg(
@@ -519,11 +506,11 @@ def bpe_encode(
         .alias("n_merged"),
     )
     words = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("w")
-    ).filter(F.length("w") >= min_word_len)
+        F.col("doc_id"), F.explode(F.split(F.col("text"), r"\s+")).alias("w")
+    ).filter(F.length("w") >= 1)
     per = (
         words.join(wt, "w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
             F.sum("n_tok").cast("long").alias("n_bpe_tokens"),
@@ -531,10 +518,10 @@ def bpe_encode(
         )
     )
     return (
-        docs.select(id_col)
-        .join(per, id_col, "left")
+        docs.select("doc_id")
+        .join(per, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce("n_words", F.lit(0)).alias("n_words"),
             F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
             F.coalesce("n_merged_tokens", F.lit(0)).alias("n_merged_tokens"),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .session import registered_tables, release_caches
+from .session import registered_tables, release_caches, scratch_root
 
 
 @dataclass
@@ -1291,8 +1291,7 @@ def _scratch_dir(name: str, sf_dir: str | None = None) -> str:
     listed -> FILE_NOT_EXIST). Same-fixture concurrent sessions remain
     unsupported for the file-sink queries, as for the bucketed-table
     family (x99 namespaces per application instead and GC-probes)."""
-    base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-    os.makedirs(base, exist_ok=True)
+    base = scratch_root()
     if sf_dir is not None:
         import hashlib as _hashlib
         import re as _re

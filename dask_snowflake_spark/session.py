@@ -79,10 +79,6 @@ TESTDATA_TABLES = (
 # generated classes. Each entry holds its class's full generated source.
 CODEGEN_CACHE_ENTRIES = 8192
 
-# Dimension tables small enough to broadcast at ANY scale factor (region
-# has 5 rows, nation 25 — fixed size in TPC-H regardless of SF).
-ALWAYS_BROADCAST = ("region", "nation")
-
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -241,6 +237,15 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
     _ensure_executor_package(spark)
 
 
+def scratch_root() -> str:
+    """The repo's ``.tmp`` directory, created on first use: the one home
+    of the executor package zip, the warehouse-stub databases and the
+    file-sink queries' output."""
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
 def _ensure_executor_package(spark: SparkSession) -> None:
     """``addPyFile`` a zip of this package, rebuilt whenever a source
     file is newer than it — otherwise executors silently import stale
@@ -252,9 +257,7 @@ def _ensure_executor_package(spark: SparkSession) -> None:
     if getattr(sc, "_dss_pyfile_added", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    tmp_dir = os.path.join(os.path.dirname(pkg_dir), ".tmp")
-    os.makedirs(tmp_dir, exist_ok=True)
-    zip_path = os.path.join(tmp_dir, "dask_snowflake_spark_pkg.zip")
+    zip_path = os.path.join(scratch_root(), "dask_snowflake_spark_pkg.zip")
     newest_src = max(
         (
             os.path.getmtime(os.path.join(root, f))
@@ -298,7 +301,7 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
 
 
 # One (sf_dir, tables) entry per live session (weakly keyed, so a
-# recycled id() can never alias a new session): the tables a full
+# recycled id() can never alias a new session): the tables the last
 # :func:`register_tables` call bound. Temp-view NAMES are session-global,
 # so there is exactly one bound dir per session; a different sf_dir must
 # re-register, and the cached DataFrames must be the ones built for the
@@ -308,31 +311,28 @@ _REGISTERED: "weakref.WeakKeyDictionary[SparkSession, tuple[str, dict[str, DataF
 )
 
 
-def register_tables(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
+def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every TESTDATA table at `sf_dir` as a temp view.
 
     Returns the name -> DataFrame mapping. Views are lazy; nothing is
-    scanned until a query runs. A full call (all of ``TESTDATA_TABLES``)
-    is what :func:`registered_tables` hands out afterwards.
+    scanned until a query runs. The mapping is what
+    :func:`registered_tables` hands out afterwards.
     """
     out: dict[str, DataFrame] = {}
-    for name in tables:
+    for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
-    if tables == TESTDATA_TABLES:
-        _REGISTERED[spark] = (sf_dir, out)
+    _REGISTERED[spark] = (sf_dir, out)
     return out
 
 
 def registered_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The tables bound for `sf_dir` in this session, registering them
-    first unless a full :func:`register_tables` call already did."""
+    first unless :func:`register_tables` already did."""
     cached = _REGISTERED.get(spark)
     if cached is None or cached[0] != sf_dir:
         return register_tables(spark, sf_dir)

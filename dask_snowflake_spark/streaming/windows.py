@@ -99,11 +99,12 @@ def run_stream_to_table(stream_df: DataFrame, name: str, output_mode: str = "com
     return run_streams_to_tables([(stream_df, name)], output_mode)[0]
 
 
-def tumbling_counts(events: DataFrame, duration: str = "6 hours") -> DataFrame:
-    """Tumbling-window counts/sums per event_type with a watermark."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """6-hour tumbling-window counts/sums per event_type with a
+    watermark."""
     return (
         events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", duration).alias("win"), "event_type")
+        .groupBy(F.window("ts", "6 hours").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -117,21 +118,22 @@ def tumbling_counts(events: DataFrame, duration: str = "6 hours") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, duration: str = "12 hours", slide: str = "6 hours") -> DataFrame:
-    """Sliding-window event counts (each event lands in duration/slide
-    windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding-window event counts: 12-hour windows every 6 hours, so
+    each event lands in two windows."""
     return (
         events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", duration, slide).alias("win"), "event_type")
+        .groupBy(F.window("ts", "12 hours", "6 hours").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("win.start").alias("window_start"), "event_type", "n")
     )
 
 
-def streaming_dedup(events: DataFrame, within: str = "1 hour") -> DataFrame:
-    """Streaming dedup on (user_id, event_type) within the watermark
-    horizon (``dropDuplicatesWithinWatermark`` keeps bounded state)."""
-    return events.withWatermark("ts", within).dropDuplicatesWithinWatermark(
+def streaming_dedup(events: DataFrame) -> DataFrame:
+    """Streaming dedup on (user_id, event_type) within a 1-hour
+    watermark horizon (``dropDuplicatesWithinWatermark`` keeps bounded
+    state)."""
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
 

@@ -317,3 +317,71 @@ def test_package_reads_only_deployment_env_vars():
                 k = key(up.left)
             found.add(k) if k else odd.append(f"{where} os.environ use that is not a keyed read")
     assert not odd and found <= allowed, (odd, sorted(found - allowed))
+
+
+def test_every_defaulted_parameter_is_passed_somewhere():
+    """A parameter with a default that no call ever passes is a constant
+    in disguise: every caller gets the same value, and the branches it
+    guards never run. For each function of the package whose name is
+    unique there, each defaulted parameter must be passed by keyword, by
+    position, or through ``*args``/``**kwargs`` by at least one call in
+    the package, the tests, the tools, ``bench.py`` or ``perfbench/``.
+    Calls are matched by name (``f(...)`` or ``x.f(...)``); a method's
+    positions count from after ``self``/``cls`` on attribute calls.
+    Dunder methods are exempt."""
+    import ast
+    import collections
+    import pathlib
+
+    root = pathlib.Path(__file__).parent.parent
+
+    def sources(*names):
+        for name in names:
+            path = root / name
+            if path.is_file():
+                yield path
+            else:
+                yield from sorted(p for p in path.rglob("*.py") if ".work" not in p.parts)
+
+    defs = collections.defaultdict(list)
+    for path in sources("dask_snowflake_spark"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[node.name].append((path, node))
+
+    calls = collections.defaultdict(list)
+    for path in sources("dask_snowflake_spark", "tests", "tools", "bench.py", "perfbench"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                calls[f.id].append((node, False))
+            elif isinstance(f, ast.Attribute):
+                calls[f.attr].append((node, True))
+
+    def passes(call, on_attr, name, index, method):
+        keywords = {k.arg for k in call.keywords}
+        if name in keywords or None in keywords:
+            return True
+        if index is None:
+            return False
+        if any(isinstance(a, ast.Starred) for a in call.args):
+            return True
+        return len(call.args) > index - (1 if method and on_attr else 0)
+
+    unpassed = []
+    for name, found in defs.items():
+        if len(found) != 1 or (name.startswith("__") and name.endswith("__")):
+            continue
+        path, fn = found[0]
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        method = bool(positional) and positional[0].arg in ("self", "cls")
+        first = len(positional) - len(a.defaults)
+        params = [(p.arg, i) for i, p in enumerate(positional) if i >= first]
+        params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for param, index in params:
+            if not any(passes(c, attr, param, index, method) for c, attr in calls[name]):
+                unpassed.append(f"{path.relative_to(root)}:{fn.lineno} {name}({param})")
+    assert not unpassed, f"{len(unpassed)} defaulted parameters no call passes: {unpassed}"
