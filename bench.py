@@ -171,14 +171,20 @@ def compile_count(spark) -> int:
 @contextlib.contextmanager
 def py4j_call_counter():
     """Count the driver's py4j calls (``send_command``) while open; the
-    yielded one-element list holds the running count."""
+    yielded one-element list holds the running count. py4j's release of
+    a collected ``JavaObject`` (``m\\nd\\n<id>``) goes through the same
+    ``send_command`` but is not counted: when it runs depends on when
+    Python's cycle collector runs, which differs between sessions."""
+    from py4j import protocol
     from py4j.clientserver import ClientServerConnection
 
     send = ClientServerConnection.send_command
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
     calls = [0]
 
     def counted(self, command):
-        calls[0] += 1
+        if not command.startswith(release):
+            calls[0] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counted

@@ -125,10 +125,6 @@ def get_session(app_name: str = "dask_snowflake_spark") -> SparkSession:
 # long-lived session (the grading driver's 78-query sweep) from
 # accumulating every query's cache in storage memory.
 _LIVE_CACHES: list[DataFrame] = []
-# Broadcast variables with the same lifecycle problem (read_snowflake's
-# batch-descriptor broadcast outlives the call that made it; with the
-# duckdb stub the descriptors embed the staged payload bytes).
-_LIVE_BROADCASTS: list = []
 
 
 def track_cache(df: DataFrame) -> DataFrame:
@@ -143,15 +139,6 @@ def track_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-def track_broadcast(bc):
-    """Register a Broadcast for :func:`release_caches` — same lifecycle
-    discipline as :func:`track_cache` (the variable outlives the call
-    that created it; a long-lived session sweeping many reads would
-    otherwise pin every result's descriptors in memory)."""
-    _LIVE_BROADCASTS.append(bc)
-    return bc
-
-
 def release_caches() -> None:
     """Unpersist every tracked intermediate from prior queries."""
     while _LIVE_CACHES:
@@ -160,12 +147,6 @@ def release_caches() -> None:
             df.unpersist()
         except Exception:
             pass  # session already stopped; nothing to free
-    while _LIVE_BROADCASTS:
-        bc = _LIVE_BROADCASTS.pop()
-        try:
-            bc.unpersist()
-        except Exception:
-            pass
 
 
 def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:

@@ -15,9 +15,9 @@ against:
   (connection counts, partner-ID kwarg, partition bounds) run
   warehouse-free (SURVEY.md §5).
 
-Batch descriptors must be picklable: they travel driver -> executor
-inside Spark partitions; data is materialized only on executors
-(mirroring Snowflake's presigned-URL result batches).
+Batch descriptors are small picklable references (a presigned URL, or
+the stub's byte range of a staged file) that travel driver -> executor
+in the ``read_snowflake`` task closure; only executors read the data.
 
 Connection logging: because Spark executors are separate processes, the
 reference's monkeypatch-count-connections test pattern
@@ -28,16 +28,19 @@ appends one JSON line (kwargs minus secrets) wherever it runs.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import glob
-import io
 import json
 import os
+import tempfile
 import time
 import uuid
 from dataclasses import dataclass
 from typing import Any, Protocol
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 
 class ResultBatch(Protocol):
@@ -69,23 +72,40 @@ def read_connection_log(path: str) -> list[dict[str, Any]]:
 
 @dataclass
 class LocalArrowBatch:
-    """Picklable Arrow result-batch descriptor.
+    """Picklable reference to one staged Arrow result batch.
 
-    Carries serialized Arrow IPC bytes; ``to_arrow`` deserializes on the
-    executor. (A real warehouse batch carries a presigned URL, not bytes —
-    the indirection point is identical.)
+    Names a byte range of the result file ``DuckDBBackend`` staged: one
+    Arrow IPC stream holding this batch. ``to_arrow`` reads and decodes
+    it on the executor, as a real warehouse batch downloads its presigned
+    URL there.
     """
 
     rowcount: int
-    payload: bytes
+    path: str
+    offset: int
+    length: int
+
+    @property
+    def payload(self) -> bytes:
+        with open(self.path, "rb") as f:
+            f.seek(self.offset)
+            return f.read(self.length)
 
     def to_arrow(self) -> pa.Table:
-        with pa.ipc.open_stream(io.BytesIO(self.payload)) as reader:
-            return reader.read_all()
+        return pa.ipc.open_stream(self.payload).read_all()
+
+
+def _remove_staged(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 class DuckDBBackend:
     """Local warehouse with the Snowflake-connector call shape.
+
+    Same-host only: a read stages its result as one Arrow IPC file in the
+    process temp dir (removed at interpreter exit), and writes stage
+    parquet next to the database file, so driver and executors share a disk.
 
     Writes mimic write_pandas's PUT+COPY: each partition stages a parquet
     file next to the database (PUT), and ``finalize_write`` COPYs staged
@@ -100,8 +120,6 @@ class DuckDBBackend:
 
     name = "duckdb"
     writes_need_database = True
-
-    _DUCK_KWARGS = ("database", "read_only")
 
     def connect(self, **kwargs: Any):
         import duckdb
@@ -124,18 +142,21 @@ class DuckDBBackend:
             cur = conn.execute(query, params)
         else:
             cur = conn.execute(query)
-        table = cur.fetch_arrow_table()
+        # ~8k-row batches exercise the bin-packing path the way
+        # Snowflake's small (<1 MiB) result batches do
+        reader = cur.fetch_record_batch(8192)
+        fd, path = tempfile.mkstemp(suffix=".arrow")
+        atexit.register(_remove_staged, path)
         batches: list[ResultBatch] = []
-        # split into ~8k-row batches to exercise the bin-packing path the
-        # way Snowflake's small (<1 MiB) result batches do
-        for rb in table.to_batches(max_chunksize=8192):
-            if rb.num_rows == 0:
-                continue
-            sink = io.BytesIO()
-            with pa.ipc.new_stream(sink, rb.schema) as writer:
-                writer.write_batch(rb)
-            batches.append(LocalArrowBatch(rb.num_rows, sink.getvalue()))
-        return table.schema, batches
+        with os.fdopen(fd, "wb") as f:
+            for rb in reader:
+                if rb.num_rows == 0:
+                    continue
+                offset = f.tell()
+                with pa.ipc.new_stream(f, rb.schema) as writer:
+                    writer.write_batch(rb)
+                batches.append(LocalArrowBatch(rb.num_rows, path, offset, f.tell() - offset))
+        return reader.schema, batches
 
     # -- write side ---------------------------------------------------------
 
@@ -144,14 +165,14 @@ class DuckDBBackend:
         # always a file to stage next to
         return f"{database}.stage.{table}"
 
-    def write_pandas(self, conn: Any, df: Any, name: str, **kwargs: Any) -> None:
+    def write_arrow(self, conn: Any, table: pa.Table, name: str, **kwargs: Any) -> None:
         # PUT step: stage the partition as parquet; COPY happens in
         # finalize_write. `conn` is unused here by design — the lock-free
         # stage write is what makes parallel partitions safe locally.
         database = kwargs.pop("_database")
         stage = self._stage_dir(database, name)
         os.makedirs(stage, exist_ok=True)
-        df.to_parquet(os.path.join(stage, f"part-{uuid.uuid4().hex}.parquet"), index=False)
+        pq.write_table(table, os.path.join(stage, f"part-{uuid.uuid4().hex}.parquet"))
 
     def create_table_if_absent(self, conn: Any, name: str, schema_ddl: str) -> None:
         conn.execute(f'CREATE TABLE IF NOT EXISTS "{name}" ({schema_ddl})')
@@ -284,10 +305,13 @@ class SnowflakeBackend:
         # the empty case
         return (schema if not kept else None), kept
 
-    def write_pandas(self, conn: Any, df: Any, name: str, **kwargs: Any) -> None:
+    def write_arrow(self, conn: Any, table: pa.Table, name: str, **kwargs: Any) -> None:
         from snowflake.connector.pandas_tools import write_pandas
 
         kwargs.pop("_database", None)
+        # integer columns holding a null stay exact Python ints (object
+        # dtype) instead of going through float64
+        df = table.to_pandas(integer_object_nulls=True)
         write_pandas(conn, df, name, quote_identifiers=False, **kwargs)
 
     def create_table_if_absent(self, conn: Any, name: str, schema_ddl: str) -> None:

@@ -8,8 +8,8 @@ Faithful re-expression of the reference's surface
   Planning (execute + batch descriptors + schema-from-first-batch +
   greedy bin-packing) happens once on the driver; executors download and
   decode only their own batch group — the reference's deferred-fetch
-  split, here a broadcast of the descriptor groups plus a ``mapInArrow``
-  over one seed row per group.
+  split, here a ``mapInArrow`` over one seed row per group whose closure
+  carries the descriptor groups.
 - ``to_snowflake`` (core.py:70-124): CREATE TABLE IF NOT EXISTS from the
   DataFrame schema first (sequenced before the fan-out to avoid the
   CREATE race, core.py:110-116), then one warehouse connection per
@@ -17,12 +17,13 @@ Faithful re-expression of the reference's surface
   an unexecuted ``LazyWrite`` (parity with the reference's Delayed list,
   core.py:123-124).
 
-Why the driver plans and broadcasts, rather than a Spark Python Data
-Source: planning in the driver process takes ``execute_params`` of any
-Python type (Data Source options are strings, so no ``date`` or
-``Decimal``), and keeps the descriptors out of the JVM (a Data Source
-plans in a JVM-launched Python worker that pickles the whole source back
-to the JVM, and the DuckDB stub's descriptors carry the result bytes).
+Why the driver plans, rather than a Spark Python Data Source: planning
+in the driver process takes ``execute_params`` of any Python type (Data
+Source options are strings, so no ``date`` or ``Decimal``). Descriptors
+are references (a presigned URL, or the stub's byte range of a staged
+file), so the closure stays small; PySpark broadcasts a task command
+only above ``spark.broadcast.UDFCompressionThreshold`` (1 MiB), and the
+context cleaner frees it with its DataFrame.
 
 Semantics kept: exactly-one-of npartitions/partition_size with default
 "100MiB" (core.py:258-260), parameterized queries (core.py:143),
@@ -98,7 +99,7 @@ def read_snowflake(
     if npartitions is not None and partition_size is not None:
         raise ValueError("Specify either npartitions or partition_size, not both")
     spark = spark or SparkSession.active()
-    from ..session import _ensure_runtime_confs, track_broadcast
+    from ..session import _ensure_runtime_confs
 
     _ensure_runtime_confs(spark)  # executor import of batch descriptors
 
@@ -147,18 +148,16 @@ def read_snowflake(
     if not groups:
         return apply_cast(spark.createDataFrame([], spark_schema))
 
-    # Distribute descriptor groups via a broadcast + a partition-index
-    # seed DataFrame; executors decode only their own batches and emit
-    # Arrow directly (mapInArrow) — no pandas hop, no per-row Python
-    # conversion. (Real warehouse descriptors are presigned URLs, so the
-    # broadcast is small; the duckdb stub embeds payload bytes.)
-    groups_bc = track_broadcast(spark.sparkContext.broadcast(groups))
+    # One seed row per descriptor group; the closure carries the groups
+    # (references, not bytes), and executors decode only their own
+    # batches and emit Arrow directly (mapInArrow) — no pandas hop, no
+    # per-row Python conversion.
     seed = spark.range(0, len(groups), numPartitions=len(groups))
 
     def fetch(seeds: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in seeds:
             for pid in rb.column(0).to_pylist():
-                for descriptor in groups_bc.value[pid]:
+                for descriptor in groups[pid]:
                     table = descriptor.to_arrow()
                     if table.schema != arrow_schema:
                         table = table.cast(arrow_schema)
@@ -317,20 +316,16 @@ def to_snowflake(
         # duckdb stub stages partition files next to the database (PUT step)
         part_kwargs["_database"] = kwargs.get("database")
 
-        # 2. per-partition bulk load (reference core.py:20-40), Arrow in
+        # 2. per-partition bulk load (reference core.py:20-40), one Arrow
+        #    table per partition
         def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             be = resolve_backend(backend_name)
-            rows = 0
-            pdfs = []
-            for rb in batches:
-                rows += rb.num_rows
-                pdfs.append(rb.to_pandas())
+            kept = [rb for rb in batches if rb.num_rows]
+            rows = sum(rb.num_rows for rb in kept)
             if rows:
-                import pandas as pd
-
                 conn = be.connect(**kwargs)
                 try:
-                    be.write_pandas(conn, pd.concat(pdfs, ignore_index=True), table, **part_kwargs)
+                    be.write_arrow(conn, pa.Table.from_batches(kept), table, **part_kwargs)
                 finally:
                     be.close(conn)
             yield pa.RecordBatch.from_pydict({"rows_written": [rows]})

@@ -15,20 +15,33 @@ warehouse stub:
   planning connection)
 - partner-ID injection: default from conf, explicit wins
   (test_core.py:198-261)
+- result references: stub descriptors name byte ranges of a staged file,
+  stay small, outlive later reads, pin no storage memory, and the staged
+  file is gone when the process exits
+- exact writes: partitions reach the warehouse as Arrow, so a nullable
+  BIGINT never goes through float64
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+import pickle
+import subprocess
+import sys
+import textwrap
+import types
 import uuid
 
 import duckdb
+import pyarrow as pa
 import pytest
 
-from dask_snowflake_spark.sources.backends import read_connection_log
+from dask_snowflake_spark.sources.backends import DuckDBBackend, read_connection_log
 from dask_snowflake_spark.sources.snowflake import read_snowflake, to_snowflake
 from dask_snowflake_spark.plans.partitioning import parse_bytes, plan_partitions
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture
@@ -368,3 +381,160 @@ def test_snowflake_backend_fixed_type_uses_description_scale():
     assert b._arrow_type_for(("n", 0)) == pa.decimal128(38, 0)
     # non-FIXED codes unaffected
     assert b._arrow_type_for(("s", 2, None, None, None, None, True)) == pa.string()
+
+
+# bigints float64 rounds (to 9007199254740992 and -(2**62)) next to a
+# null, which is what sends a pandas conversion through float64
+EXACT_BIGINTS = [2**53 + 1, None, -(2**62) + 7]
+
+
+def test_write_bigint_with_null_is_exact(spark, warehouse):
+    sdf = spark.createDataFrame([(v,) for v in EXACT_BIGINTS], "v long").coalesce(1)
+    assert to_snowflake(sdf, "t_exact", connection_kwargs=warehouse, backend="duckdb") == 3
+    con = duckdb.connect(warehouse["database"])
+    try:
+        rows = con.execute('SELECT V FROM "T_EXACT"').fetchall()
+    finally:
+        con.close()
+    assert sorted(rows, key=str) == sorted([(v,) for v in EXACT_BIGINTS], key=str)
+
+
+def test_snowflake_backend_write_arrow_keeps_int64(monkeypatch):
+    """The real backend hands write_pandas a frame whose nullable integer
+    column still holds the exact values (object dtype, not float64)."""
+    from dask_snowflake_spark.sources.backends import SnowflakeBackend
+
+    seen = {}
+
+    def write_pandas(conn, df, name, **kwargs):
+        seen.update(conn=conn, df=df, name=name, kwargs=kwargs)
+
+    fake = types.ModuleType("snowflake.connector.pandas_tools")
+    fake.write_pandas = write_pandas
+    monkeypatch.setitem(sys.modules, "snowflake.connector.pandas_tools", fake)
+    table = pa.table({"V": pa.array(EXACT_BIGINTS, pa.int64()), "S": ["a", None, "c"]})
+    SnowflakeBackend().write_arrow("conn", table, "T", _database=None, chunk_size=7)
+    assert seen["name"] == "T" and seen["conn"] == "conn"
+    assert seen["kwargs"] == {"quote_identifiers": False, "chunk_size": 7}
+    back = pa.Table.from_pandas(seen["df"], preserve_index=False)
+    assert back.column("V").type == pa.int64()
+    assert back.column("V").to_pylist() == EXACT_BIGINTS
+    assert back.column("S").to_pylist() == ["a", None, "c"]
+
+
+def _stub_read(database, query):
+    be = DuckDBBackend()
+    conn = be.connect(database=database)
+    try:
+        return be.execute_batches(conn, query, None)[1]
+    finally:
+        be.close(conn)
+
+
+def test_read_descriptors_are_small_references(warehouse):
+    """A stub descriptor names a byte range of one staged IPC file; the
+    descriptor list of a 100k-row read pickles to a few KB, not the data."""
+    batches = _stub_read(warehouse["database"], "SELECT * FROM big")
+    assert len(batches) > 1
+    assert len(pickle.dumps(batches)) < 64 * 1024
+    assert {b.path for b in batches} == {batches[0].path}
+    assert sum(b.length for b in batches) == os.path.getsize(batches[0].path)
+    table = pa.concat_tables(b.to_arrow() for b in batches)
+    assert table.num_rows == sum(b.rowcount for b in batches) == 100000
+    assert table.column("id").to_pylist() == list(range(100000))
+
+
+def test_earlier_read_survives_later_reads(spark, warehouse):
+    from dask_snowflake_spark.session import release_caches
+
+    first = read_snowflake("SELECT * FROM ab", spark=spark, connection_kwargs=warehouse, backend="duckdb")
+    for i in range(5):
+        later = read_snowflake(
+            "SELECT * FROM big WHERE id < ?",
+            spark=spark,
+            connection_kwargs=warehouse,
+            execute_params=[1000 * (i + 1)],
+            npartitions=2,
+            backend="duckdb",
+        )
+        assert later.count() == 1000 * (i + 1)
+        release_caches()  # what each registry table lookup does
+    assert sorted(tuple(r) for r in first.collect()) == [(i, i + 10) for i in range(10)]
+
+
+def _storage_used(spark) -> int:
+    status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().valuesIterator()
+    used = 0
+    while status.hasNext():
+        max_and_remaining = status.next()
+        used += max_and_remaining._1() - max_and_remaining._2()
+    return used
+
+
+def test_repeated_reads_do_not_pin_storage_memory(spark, warehouse):
+    """Ten reads of the 100k-row table leave storage memory where one
+    read left it: no read pins its result bytes in the block manager."""
+
+    def read():
+        df = read_snowflake(
+            "SELECT * FROM big", spark=spark, connection_kwargs=warehouse, npartitions=4, backend="duckdb"
+        )
+        assert df.count() == 100000
+
+    read()
+    used_after_one = _storage_used(spark)
+    for _ in range(9):
+        read()
+    assert _storage_used(spark) - used_after_one < 5 * 2**20
+
+
+def test_staged_results_removed_at_exit(tmp_path, warehouse):
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {REPO!r})
+        from tests.test_connector import _stub_read
+        batches = _stub_read({warehouse["database"]!r}, "SELECT * FROM big")
+        assert os.path.getsize(batches[0].path) > 0
+        print(batches[0].path)
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env={**os.environ, "TMPDIR": str(tmp)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    staged = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(staged) == str(tmp)
+    assert os.listdir(tmp) == []
+
+
+def test_layer_probe_counts_stub_batches(spark, warehouse, monkeypatch):
+    """perfbench's traced run reads the stub's descriptors through
+    ``LayerProbe``: its batch count and payload bytes must match what the
+    stub staged."""
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    from tracing import LayerProbe
+
+    staged = []
+    execute = DuckDBBackend.execute_batches
+
+    def recording(self, conn, query, params):
+        schema, batches = execute(self, conn, query, params)
+        staged.extend(batches)
+        return schema, batches
+
+    monkeypatch.setattr(DuckDBBackend, "execute_batches", recording)
+    with LayerProbe() as probe:
+        df = read_snowflake(
+            "SELECT * FROM big", spark=spark, connection_kwargs=warehouse, npartitions=4, backend="duckdb"
+        )
+    assert df.count() == 100000
+    assert probe.totals["warehouse.batches"] == len(staged) > 1
+    assert probe.totals["warehouse.payload_mb"] == sum(b.length for b in staged) / 2**20
+    assert sum(b.length for b in staged) == os.path.getsize(staged[0].path)
+    assert probe.totals["partitioning.groups"] == df.rdd.getNumPartitions()
